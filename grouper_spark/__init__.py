@@ -16,7 +16,10 @@ Layout
 - ``queries``    : the registered query inventory (name → callable +
                    DuckDB oracle SQL) consumed by ``__spark_entry__.py``.
 - ``streaming``  : the Grouper micro-batch layer (reference semantics on
-                   Structured Streaming / Spark batches).
+                   Structured Streaming / Spark batches). The in-process
+                   engine needs only the stdlib; pyspark is imported when
+                   a stream helper is first accessed, or used through the
+                   caller's session with ``dataframe_fn=True``.
 """
 
 __version__ = "0.1.0"

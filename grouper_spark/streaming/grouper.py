@@ -45,6 +45,11 @@ the batch as ``(idx: long, value)`` rows and returning ``(idx, result)``
 — the scalable path, where the batch function is a real Spark plan.
 For continuous sources use ``grouper_process_stream`` (Structured
 Streaming foreachBatch with the same normalization semantics).
+
+This module needs only the standard library: importing it, or the
+``grouper_spark.streaming`` package, does not import pyspark. Spark is
+touched only through the caller's own session when
+``dataframe_fn=True``, or when a stream helper is first accessed.
 """
 
 from __future__ import annotations
@@ -52,20 +57,29 @@ from __future__ import annotations
 import queue as _queue
 import threading
 from concurrent.futures import Future, ThreadPoolExecutor
-from dataclasses import dataclass, field
 from typing import Any, Callable
 
 __all__ = ["Grouper", "Request", "start", "submit", "shutdown"]
 
 
-@dataclass
 class Request:
-    """One submitted item (reference: deftype Request, core.clj:13-17)."""
+    """One submitted item (reference: deftype Request, core.clj:13-17).
 
-    obj: Any
-    future: Future = field(default_factory=Future)
-    callback: Callable[[Any], Any] | None = None
-    errback: Callable[[BaseException], Any] | None = None
+    ``future=None`` gives the request a fresh ``Future`` of its own."""
+
+    __slots__ = ("obj", "future", "callback", "errback")
+
+    def __init__(
+        self,
+        obj: Any,
+        future: Future | None = None,
+        callback: Callable[[Any], Any] | None = None,
+        errback: Callable[[BaseException], Any] | None = None,
+    ) -> None:
+        self.obj = obj
+        self.future = Future() if future is None else future
+        self.callback = callback
+        self.errback = errback
 
 
 class _BoundedFifo:

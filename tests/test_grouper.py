@@ -9,6 +9,9 @@ reference's own FIXME-flagged timing-sensitive test
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
 import threading
 import time
 
@@ -412,3 +415,55 @@ def test_rejected_user_executor_delivers_error_not_hang():
         assert isinstance(fut2.result(5), RuntimeError)
     finally:
         g.shutdown()
+
+
+# -- Request: the reference's deftype, slotted -----------------------------
+
+
+def test_request_construction_compat():
+    from concurrent.futures import Future
+
+    from grouper_spark.streaming import Request
+
+    a, b = Request(1), Request(2)
+    assert isinstance(a.future, Future) and not a.future.done()
+    assert a.future is not b.future
+    cb, eb, fut = print, repr, Future()
+    pos = Request("x", fut, cb, eb)
+    kw = Request(obj="x", future=fut, callback=cb, errback=eb)
+    for r in (pos, kw):
+        assert (r.obj, r.future, r.callback, r.errback) == ("x", fut, cb, eb)
+    assert (Request(0).callback, Request(0).errback) == (None, None)
+    assert not hasattr(a, "__dict__")
+
+
+# -- package surface: the in-process engine never imports pyspark ----------
+
+
+def test_streaming_import_is_spark_free():
+    code = """
+import sys
+from grouper_spark.streaming import Grouper, Request, start, submit, shutdown
+g = start(lambda xs: [x + 1 for x in xs], capacity=10, interval=5)
+assert submit(g, 1).result(5) == 2
+shutdown(g)
+assert "pyspark" not in sys.modules, "pyspark imported by the Grouper"
+import grouper_spark.streaming as m
+assert set(m.__all__) <= set(dir(m))
+try:
+    m.no_such_attribute
+except AttributeError:
+    pass
+else:
+    raise AssertionError("unknown attribute did not raise AttributeError")
+assert m.stream is sys.modules["grouper_spark.streaming.stream"]
+import grouper_spark.streaming.stream as s
+assert m.grouper_process_stream is s.grouper_process_stream
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root}
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, env=env,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr

@@ -123,6 +123,27 @@ def test_collect_vector_panel_guards(spark):
     assert collect_vector_panel(nan, "id", "v", 10) is None
 
 
+@pytest.mark.parametrize("id_type", ["int", "bigint", "double"])
+def test_collect_vector_panel_id_types(spark, id_type):
+    """Integer ids of any width come back unchanged as int64; float ids
+    return None (they would truncate, 1.5 → 1) so the caller falls back
+    to its distributed plan."""
+    from grouper_spark.operators.core import collect_vector_panel
+
+    ids = [1.5, 2.0] if id_type == "double" else [1, 2]
+    df = spark.createDataFrame(
+        [(ids[0], [1.0, 2.0]), (ids[1], [3.0, 4.0])],
+        f"id {id_type}, v array<double>",
+    )
+    got = collect_vector_panel(df, "id", "v", 10)
+    if id_type == "double":
+        assert got is None
+        return
+    got_ids, X = got
+    assert got_ids.dtype == "int64" and got_ids.tolist() == [1, 2]
+    assert X.tolist() == [[1.0, 2.0], [3.0, 4.0]]
+
+
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001",
                                     "/root/testdata/sf0.01"])
 def test_a459_driver_path_bitmatches_sweeps(spark, sf_dir, monkeypatch):
