@@ -64,6 +64,24 @@ def literal_frame(spark, rows: list[tuple], schema: str) -> DataFrame:
         return spark.createDataFrame(rows, schema)
 
 
+def collect_bounded(df: DataFrame, cap: int, what: str) -> list:
+    """Collect a panel that is bounded by construction to the driver.
+
+    Runs ``df.limit(cap + 1).collect()``, so at most ``cap + 1`` rows
+    ever cross the JVM boundary, and raises ``ValueError`` naming
+    ``what`` and ``cap`` when more than ``cap`` rows come back. There is
+    no fallback: a panel over its cap means the input is not the one
+    the driver-side replay was sized for, and the query fails loudly
+    instead of switching algorithm. The limit costs no extra job over a
+    bare ``collect()`` on an aggregated panel."""
+    rows = df.limit(cap + 1).collect()
+    if len(rows) > cap:
+        raise ValueError(
+            f"{what}: panel exceeds the driver cap of {cap} rows"
+        )
+    return rows
+
+
 def collect_vector_panel(df, id_col: str, vec_col: str, max_rows: int):
     """Collect a bounded (id, vector) panel to the driver via Arrow.
 

@@ -25,7 +25,7 @@ from ..functions.text import (
 )
 from ..sources import table
 from . import query
-from ..operators.core import literal_frame
+from ..operators.core import collect_bounded, literal_frame
 
 _TOKS_SQL = "string_split_regex(trim(text), '\\s+')"
 
@@ -3098,115 +3098,52 @@ def a448_ipf_raking(spark, sf_dir):
     here), so the 20 half-steps run as exact driver-side scalar
     arithmetic (Python ints + the functions.exact HALF_UP replica of
     F.round(double, 0)) instead of 20 checkpoint+broadcast Spark jobs
-    — bit-identical weights, ~20 fewer jobs. A cardinality guard
-    keeps the distributed half-step loop as the fallback for a
-    pathological margin vocabulary (>100k cells).
+    — bit-identical weights, ~20 fewer jobs. The table comes to the
+    driver through ``collect_bounded``; a margin vocabulary over 100k
+    cells raises.
     Zero-count cells never exist (only observed cells carry weight),
     so no scaling step can divide by zero. The output weight-to-count
     ratio per cell is the sampling rate a downstream mixer applies."""
     from ..functions.exact import round0_half_up
 
     d = table(spark, sf_dir, "documents")
-    cells = (
-        d.groupBy("source", "lang")
-        .agg(F.count("*").cast("bigint").alias("n"))
-        .limit(100_001)
-        .collect()
+    cells = collect_bounded(
+        d.groupBy("source", "lang").agg(
+            F.count("*").cast("bigint").alias("n")
+        ),
+        100_000,
+        "a448_ipf_raking source x lang table",
     )
-    if len(cells) <= 100_000:
-        # driver-exact path: same arithmetic, zero per-iteration jobs
-        rows = [
-            [r["source"], r["lang"], r["n"], r["n"] * 1_000_000]
-            for r in cells
-        ]
-        sum_n = sum(r[2] for r in rows)
-        n_src = len({r[0] for r in rows})
-        # F.round(sum(n)·1e6/countDistinct(source)) — double ratio of
-        # exact ints, HALF_UP
-        t_row = round0_half_up(float(sum_n) * 1000000.0 / float(n_src))
-        t_lang: dict[str, int] = {}
-        for r in rows:
-            t_lang[r[1]] = t_lang.get(r[1], 0) + r[2]
-        t_lang = {k: v * 1_000_000 for k, v in t_lang.items()}
-        for _ in range(10):
-            s_src: dict[str, int] = {}
-            for r in rows:
-                s_src[r[0]] = s_src.get(r[0], 0) + r[3]
-            for r in rows:
-                r[3] = round0_half_up(
-                    float(r[3]) * float(t_row) / float(s_src[r[0]])
-                )
-            s_lang: dict[str, int] = {}
-            for r in rows:
-                s_lang[r[1]] = s_lang.get(r[1], 0) + r[3]
-            for r in rows:
-                r[3] = round0_half_up(
-                    float(r[3]) * float(t_lang[r[1]]) / float(s_lang[r[1]])
-                )
-        return literal_frame(
-        spark,
-            [tuple(r) for r in rows],
-            "source string, lang string, n bigint, w_micro bigint",
-        ).orderBy("source", "lang")
-
-    w = (
-        d.groupBy("source", "lang")
-        .agg(F.count("*").cast("bigint").alias("n"))
-        .select(
-            "source", "lang", "n", (F.col("n") * 1000000).alias("w")
-        )
-        .localCheckpoint(eager=False)
-    )
-    tgt = w.agg(
-        F.round(
-            F.sum("n").cast("double")
-            * 1000000.0
-            / F.countDistinct("source"),
-            0,
-        )
-        .cast("bigint")
-        .alias("t_row")
-    )
-    langt = w.groupBy("lang").agg(
-        (F.sum("n") * 1000000).cast("bigint").alias("t_lang")
-    )
+    rows = [
+        [r["source"], r["lang"], r["n"], r["n"] * 1_000_000]
+        for r in cells
+    ]
+    sum_n = sum(r[2] for r in rows)
+    n_src = len({r[0] for r in rows})
+    # F.round(sum(n)·1e6/countDistinct(source)) — double ratio of
+    # exact ints, HALF_UP
+    t_row = round0_half_up(float(sum_n) * 1000000.0 / float(n_src))
+    t_lang: dict[str, int] = {}
+    for r in rows:
+        t_lang[r[1]] = t_lang.get(r[1], 0) + r[2]
+    t_lang = {k: v * 1_000_000 for k, v in t_lang.items()}
     for _ in range(10):
-        # each step references w twice (margin sum + scale join):
-        # checkpoint per half-step or the logical plan doubles per round
-        r = w.groupBy("source").agg(F.sum("w").cast("bigint").alias("s"))
-        w = (
-            w.join(F.broadcast(r), "source")
-            .crossJoin(F.broadcast(tgt))
-            .select(
-                "source",
-                "lang",
-                "n",
-                F.round(
-                    F.col("w").cast("double") * F.col("t_row") / F.col("s"),
-                    0,
-                )
-                .cast("bigint")
-                .alias("w"),
+        s_src: dict[str, int] = {}
+        for r in rows:
+            s_src[r[0]] = s_src.get(r[0], 0) + r[3]
+        for r in rows:
+            r[3] = round0_half_up(
+                float(r[3]) * float(t_row) / float(s_src[r[0]])
             )
-            .localCheckpoint(eager=False)
-        )
-        c = w.groupBy("lang").agg(F.sum("w").cast("bigint").alias("s"))
-        w = (
-            w.join(F.broadcast(c), "lang")
-            .join(F.broadcast(langt), "lang")
-            .select(
-                "source",
-                "lang",
-                "n",
-                F.round(
-                    F.col("w").cast("double") * F.col("t_lang") / F.col("s"),
-                    0,
-                )
-                .cast("bigint")
-                .alias("w"),
+        s_lang: dict[str, int] = {}
+        for r in rows:
+            s_lang[r[1]] = s_lang.get(r[1], 0) + r[3]
+        for r in rows:
+            r[3] = round0_half_up(
+                float(r[3]) * float(t_lang[r[1]]) / float(s_lang[r[1]])
             )
-            .localCheckpoint(eager=False)
-        )
-    return w.select(
-        "source", "lang", "n", F.col("w").alias("w_micro")
+    return literal_frame(
+        spark,
+        [tuple(r) for r in rows],
+        "source string, lang string, n bigint, w_micro bigint",
     ).orderBy("source", "lang")

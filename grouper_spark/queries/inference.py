@@ -35,7 +35,7 @@ from pyspark.sql import Window, functions as F
 
 from ..sources import table
 from . import query
-from ..operators.core import literal_frame
+from ..operators.core import collect_bounded, literal_frame
 
 
 @query(
@@ -3210,16 +3210,17 @@ def a493_hits(spark, sf_dir):
     division raw div (total div 10⁹) — so no float summation order
     exists anywhere. The weighted edge list is bounded by the
     event-type vocabulary SQUARED (≤25 cells here), so after the one
-    corpus-sized aggregate it comes to the driver (the IVF-centroid /
-    q249 bounded-collect pattern) and the 16 half-steps run as exact
+    corpus-sized aggregate it comes to the driver through
+    ``collect_bounded`` (the IVF-centroid / q249 bounded-collect
+    pattern) and the 16 half-steps run as exact
     Python integer arithmetic — identical values to the former
     16-eager-checkpoint Spark loop (every op is an integer + / * /
     floor-div on nonnegative operands, where Python ``//`` IS SQL
     ``div``), with the final ÷10⁹ + round staying engine-side on the
     literal frame so double formation and HALF_UP rounding are
     Spark's own. A >100k-edge vocabulary (not a plausible event-type
-    set) falls back to the distributed loop unchanged. At 100 TB only
-    the lag window and first count see data."""
+    set) raises. At 100 TB only the lag window and first count see
+    data."""
     ev = table(spark, sf_dir, "events")
     trans = (
         ev.select(
@@ -3234,111 +3235,35 @@ def a493_hits(spark, sf_dir):
         .agg(F.count("*").cast("bigint").alias("w"))
     )
     node_names = ["click", "error", "purchase", "signup", "view"]
-    raw_edges = trans.collect()
-    if len(raw_edges) <= 100_000:
-        tw = sum(r["w"] for r in raw_edges)
-        edges = [
-            (r["src"], r["dst"], (2_000_000 * r["w"] + tw) // (2 * tw))
-            for r in raw_edges
-        ]
-        h = {n: 1_000_000_000 for n in node_names}
-        a: dict[str, int] = {}
-        for _ in range(_HITS_ITERS):
-            # authority half-step: only edges whose src carries a hub
-            # score join; ALL surviving dsts (in-node-set or not) feed
-            # the normalizing total, exactly like the SQL aggregate
-            araw: dict[str, int] = {}
-            for src, dst, w_fp in edges:
-                if src in h:
-                    araw[dst] = araw.get(dst, 0) + w_fp * h[src]
-            atot = sum(araw.values())
-            a = {n: araw.get(n, 0) // (atot // 1_000_000_000) for n in node_names}
-            hraw: dict[str, int] = {}
-            for src, dst, w_fp in edges:
-                if dst in a:
-                    hraw[src] = hraw.get(src, 0) + w_fp * a[dst]
-            htot = sum(hraw.values())
-            h = {n: hraw.get(n, 0) // (htot // 1_000_000_000) for n in node_names}
-        lit = literal_frame(
+    raw_edges = collect_bounded(trans, 100_000, "a493_hits transition table")
+    tw = sum(r["w"] for r in raw_edges)
+    edges = [
+        (r["src"], r["dst"], (2_000_000 * r["w"] + tw) // (2 * tw))
+        for r in raw_edges
+    ]
+    h = {n: 1_000_000_000 for n in node_names}
+    a: dict[str, int] = {}
+    for _ in range(_HITS_ITERS):
+        # authority half-step: only edges whose src carries a hub
+        # score join; ALL surviving dsts (in-node-set or not) feed
+        # the normalizing total, exactly like the SQL aggregate
+        araw: dict[str, int] = {}
+        for src, dst, w_fp in edges:
+            if src in h:
+                araw[dst] = araw.get(dst, 0) + w_fp * h[src]
+        atot = sum(araw.values())
+        a = {n: araw.get(n, 0) // (atot // 1_000_000_000) for n in node_names}
+        hraw: dict[str, int] = {}
+        for src, dst, w_fp in edges:
+            if dst in a:
+                hraw[src] = hraw.get(src, 0) + w_fp * a[dst]
+        htot = sum(hraw.values())
+        h = {n: hraw.get(n, 0) // (htot // 1_000_000_000) for n in node_names}
+    return literal_frame(
         spark,
-            [(n, h[n], a[n]) for n in node_names],
-            "node string, hs bigint, as_ bigint",
-        )
-    else:  # pragma: no cover - vocabulary beyond any plausible event mix
-        wall = Window.orderBy(F.lit(1)).rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        edges_df = (
-            trans.withColumn("tw", F.sum("w").over(wall).cast("bigint"))
-            .select(
-                "src",
-                "dst",
-                F.expr("(2000000 * w + tw) div (2 * tw)").alias("w_fp"),
-            )
-            .coalesce(1)
-            .localCheckpoint(eager=True)
-        )
-        nodes = literal_frame(spark, [(n,) for n in node_names], "node string")
-        h_df = nodes.select(
-            "node", F.lit(1000000000).cast("bigint").alias("s")
-        )
-        a_df = None
-        for _ in range(_HITS_ITERS):
-            araw_df = (
-                edges_df.join(h_df.withColumnRenamed("node", "src"), "src")
-                .groupBy("dst")
-                .agg(
-                    F.sum(F.col("w_fp") * F.col("s"))
-                    .cast("bigint")
-                    .alias("raw")
-                )
-                .withColumnRenamed("dst", "node")
-            )
-            atot_df = araw_df.agg(F.sum("raw").cast("bigint").alias("tot"))
-            a_df = (
-                nodes.join(araw_df, "node", "left")
-                .crossJoin(F.broadcast(atot_df))
-                .select(
-                    "node",
-                    F.expr(
-                        "COALESCE(raw, 0) div (tot div 1000000000)"
-                    ).alias("s"),
-                )
-                .coalesce(1)
-                .localCheckpoint(eager=True)
-            )
-            hraw_df = (
-                edges_df.join(
-                    a_df.withColumnRenamed("node", "dst").withColumnRenamed(
-                        "s", "sa"
-                    ),
-                    "dst",
-                )
-                .groupBy("src")
-                .agg(
-                    F.sum(F.col("w_fp") * F.col("sa"))
-                    .cast("bigint")
-                    .alias("raw")
-                )
-                .withColumnRenamed("src", "node")
-            )
-            htot_df = hraw_df.agg(F.sum("raw").cast("bigint").alias("tot"))
-            h_df = (
-                nodes.join(hraw_df, "node", "left")
-                .crossJoin(F.broadcast(htot_df))
-                .select(
-                    "node",
-                    F.expr(
-                        "COALESCE(raw, 0) div (tot div 1000000000)"
-                    ).alias("s"),
-                )
-                .coalesce(1)
-                .localCheckpoint(eager=True)
-            )
-        lit = h_df.withColumnRenamed("s", "hs").join(
-            a_df.withColumnRenamed("s", "as_"), "node"
-        )
-    return lit.select(
+        [(n, h[n], a[n]) for n in node_names],
+        "node string, hs bigint, as_ bigint",
+    ).select(
         F.col("node").alias("event_type"),
         F.round(F.col("hs").cast("double") / 1000000000.0, 6).alias("hub_r"),
         F.round(F.col("as_").cast("double") / 1000000000.0, 6).alias(
@@ -3857,14 +3782,14 @@ def a498_absorbing_markov(spark, sf_dir):
     At 100 TB only the lag window and the (src,dst) count see the
     corpus. The transient transition table is bounded by the
     event-type vocabulary squared (≤16 transient cells here), so it
-    comes to the driver after the one corpus aggregate (the q249 /
-    a493 bounded-collect pattern) and the 24 value-iteration rounds
+    comes to the driver through ``collect_bounded`` after the one
+    corpus aggregate (the q249 / a493 bounded-collect pattern) and the
+    24 value-iteration rounds
     run as exact Python integers — every op is + / * / floor-div on
     nonnegative BIGINTs, where Python ``//`` IS SQL ``div``, so the
     trajectory is bit-identical to the former 6-checkpoint Spark
     loop; the final ÷10⁶ + round stays engine-side on the literal
-    frame. A >100k-cell vocabulary falls back to the distributed
-    loop unchanged."""
+    frame. A >100k-cell vocabulary raises."""
     ev = table(spark, sf_dir, "events")
     trans = (
         ev.select(
@@ -3877,84 +3802,35 @@ def a498_absorbing_markov(spark, sf_dir):
         .groupBy("src", "dst")
         .agg(F.count("*").cast("bigint").alias("w"))
     )
-    raw_rows = trans.collect()
-    if len(raw_rows) <= 100_000:
-        tot_by_src: dict[str, int] = {}
-        for r in raw_rows:
-            tot_by_src[r["src"]] = tot_by_src.get(r["src"], 0) + r["w"]
-        q_entries = [
-            (
-                r["src"],
-                r["dst"],
-                (2_000_000 * r["w"] + tot_by_src[r["src"]])
-                // (2 * tot_by_src[r["src"]]),
-            )
-            for r in raw_rows
-            if r["dst"] != "purchase"
-        ]
-        v = {s: 0 for s in _ABS_STATES}
-        for _ in range(_ABS_ITERS):
-            inc: dict[str, int] = {}
-            for src, dst, p_fp in q_entries:
-                if dst in v:
-                    inc[src] = inc.get(src, 0) + p_fp * v[dst]
-            v = {
-                s: 1_000_000 + inc.get(s, 0) // 1_000_000
-                for s in _ABS_STATES
-            }
-        lit = literal_frame(
-        spark,
-            [(s, v[s]) for s in _ABS_STATES], "s string, v bigint"
+    raw_rows = collect_bounded(
+        trans, 100_000, "a498_absorbing_markov transition table"
+    )
+    tot_by_src: dict[str, int] = {}
+    for r in raw_rows:
+        tot_by_src[r["src"]] = tot_by_src.get(r["src"], 0) + r["w"]
+    q_entries = [
+        (
+            r["src"],
+            r["dst"],
+            (2_000_000 * r["w"] + tot_by_src[r["src"]])
+            // (2 * tot_by_src[r["src"]]),
         )
-    else:  # pragma: no cover - vocabulary beyond any plausible event mix
-        rows_ = trans.groupBy("src").agg(
-            F.sum("w").cast("bigint").alias("tot")
-        )
-        q = (
-            trans.filter(F.col("dst") != "purchase")
-            .join(F.broadcast(rows_), "src")
-            .select(
-                "src",
-                "dst",
-                F.expr("(2000000 * w + tot) div (2 * tot)").alias("p_fp"),
-            )
-            .coalesce(1)
-            .localCheckpoint(eager=True)
-        )
-        tstates = literal_frame(
-        spark,
-            [(s,) for s in _ABS_STATES], "s string"
-        )
-        v_df = tstates.select("s", F.lit(0).cast("bigint").alias("v"))
-        for it in range(_ABS_ITERS):
-            stepped = (
-                q.join(
-                    v_df.withColumnRenamed("s", "dst").withColumnRenamed(
-                        "v", "pv"
-                    ),
-                    "dst",
-                )
-                .groupBy("src")
-                .agg(
-                    F.expr(
-                        "CAST(SUM(p_fp * pv) AS BIGINT) div 1000000"
-                    ).alias("inc")
-                )
-                .withColumnRenamed("src", "s")
-            )
-            v_df = tstates.join(stepped, "s", "left").select(
-                "s",
-                (
-                    F.lit(1000000).cast("bigint")
-                    + F.coalesce("inc", F.lit(0).cast("bigint"))
-                ).alias("v"),
-            )
-            # eager checkpoint every 4th step: bounds the replanned
-            # chain at depth 4 while paying 6 jobs instead of 24
-            if (it + 1) % 4 == 0:
-                v_df = v_df.coalesce(1).localCheckpoint(eager=True)
-        lit = v_df
-    return lit.select(
+        for r in raw_rows
+        if r["dst"] != "purchase"
+    ]
+    v = {s: 0 for s in _ABS_STATES}
+    for _ in range(_ABS_ITERS):
+        inc: dict[str, int] = {}
+        for src, dst, p_fp in q_entries:
+            if dst in v:
+                inc[src] = inc.get(src, 0) + p_fp * v[dst]
+        v = {
+            s: 1_000_000 + inc.get(s, 0) // 1_000_000
+            for s in _ABS_STATES
+        }
+    return literal_frame(
+        spark, [(s, v[s]) for s in _ABS_STATES], "s string, v bigint"
+    ).select(
         F.col("s").alias("start_state"),
         F.round(F.col("v").cast("double") / 1000000.0, 6).alias(
             "exp_steps_r"

@@ -28,7 +28,7 @@ from pyspark.sql import Window, functions as F
 
 from ..sources import table
 from . import query
-from ..operators.core import literal_frame
+from ..operators.core import collect_bounded, literal_frame
 
 # Daily order volume + whole-dollar revenue — both exact BIGINTs.
 # Shared by the filter/dependence/model-selection ops. The day panel is
@@ -1791,46 +1791,45 @@ def a191_passing_bablok(spark, sf_dir):
     b*x). The panel is calendar-bounded (<= ~2404 (d, v, yk) rows at
     ANY corpus scale -- the one groupBy over orders is the only stage
     that touches facts), so after that aggregate the whole estimator
-    runs DRIVER-SIDE on the collected panel (the q249/a448/a493
-    bounded-state recipe): the C(n,2) slopes, the shifted-median rank
-    picks and the residual median are numpy float64 ops that replicate
-    the engine expressions operation-for-operation (int64 subtraction,
-    int->double conversion, one IEEE division per pair, (lo+hi)/2.0 --
-    all exact, no transcendental), and VALUES at rank positions depend
-    only on the sorted slope order, so s-ties need no (i, j)
-    tie-breaking. Terminal round(_, 6) stays engine-side on the
-    literal frame. The former distributed pipeline (theta-join pair
-    stage + parallel global rank) remains as the fallback for a panel
-    that ever exceeds the driver bound, and for the degenerate
-    rank-out-of-range cases whose NULL flow the relational plan
-    defines."""
-    daily = _dailyv(spark, sf_dir)
-    rows = (
-        daily.select(
-            "d", "v", F.expr("CAST(y div 1000 AS BIGINT)").alias("yk")
-        )
-        .collect()
-    )
-    if 0 < len(rows) <= _PB_MAX_PANEL:
-        import numpy as np
+    runs DRIVER-SIDE on the panel collected through ``collect_bounded``
+    (the q249/a448/a493 bounded-state recipe): the C(n,2) slopes, the
+    shifted-median rank picks and the residual median are numpy
+    float64 ops that replicate the oracle's expressions
+    operation-for-operation (int64 subtraction, int->double
+    conversion, one IEEE division per pair, (lo+hi)/2.0 -- all exact,
+    no transcendental), and VALUES at rank positions depend only on
+    the sorted slope order, so s-ties need no (i, j) tie-breaking.
+    Terminal round(_, 6) stays engine-side on the literal frame. A
+    panel over ``_PB_MAX_PANEL`` days raises. The degenerate panels
+    follow the oracle's NULL flow: with no valid pair (empty or
+    one-day panel) or a rank pick outside the slopes, the one row is
+    (n_pairs, k_neg, NULL, NULL), and k_neg is NULL when n_pairs = 0."""
+    import numpy as np
 
-        rows.sort(key=lambda r: r["d"])
-        v = np.array([r["v"] for r in rows], dtype=np.int64)
-        yk = np.array([r["yk"] for r in rows], dtype=np.int64)
-        n = len(rows)
-        iu = np.triu_indices(n, 1)
-        den = (v[None, :] - v[:, None])[iu]
-        num = (yk[None, :] - yk[:, None])[iu]
-        keep = (den != 0) & (num != -den)
-        s = num[keep].astype(np.float64) / den[keep].astype(np.float64)
-        n_pairs = int(s.size)
+    rows = collect_bounded(
+        _dailyv(spark, sf_dir).select(
+            "d", "v", F.expr("CAST(y div 1000 AS BIGINT)").alias("yk")
+        ),
+        _PB_MAX_PANEL,
+        "a191_passing_bablok day panel",
+    )
+    rows.sort(key=lambda r: r["d"])
+    v = np.array([r["v"] for r in rows], dtype=np.int64)
+    yk = np.array([r["yk"] for r in rows], dtype=np.int64)
+    n = len(rows)
+    iu = np.triu_indices(n, 1)
+    den = (v[None, :] - v[:, None])[iu]
+    num = (yk[None, :] - yk[:, None])[iu]
+    keep = (den != 0) & (num != -den)
+    s = num[keep].astype(np.float64) / den[keep].astype(np.float64)
+    n_pairs = int(s.size)
+    k_neg = b = a_val = None
+    if n_pairs:
         k_neg = int((s < -1.0).sum())
-        ss = np.sort(s)
-        if n_pairs % 2 == 1:
-            ranks = ((n_pairs + 1) // 2 + k_neg,)
-        else:
-            ranks = (n_pairs // 2 + k_neg, n_pairs // 2 + 1 + k_neg)
+        half = n_pairs // 2 + k_neg
+        ranks = (half + 1,) if n_pairs % 2 == 1 else (half, half + 1)
         if all(1 <= rk <= n_pairs for rk in ranks):
+            ss = np.sort(s)
             if n_pairs % 2 == 1:
                 b = float(ss[ranks[0] - 1])
             else:
@@ -1841,155 +1840,22 @@ def a191_passing_bablok(spark, sf_dir):
                 a_val = float(rs[(n + 1) // 2 - 1])
             else:
                 a_val = float((rs[n // 2 - 1] + rs[n // 2]) / 2.0)
-            out = literal_frame(
+    return literal_frame(
         spark,
-                [(n_pairs, k_neg, b, a_val)],
-                "n_pairs bigint, k_neg bigint, b double, a double",
-            )
-            return out.select(
-                "n_pairs",
-                "k_neg",
-                F.round("b", 6).alias("slope_r"),
-                F.round("a", 6).alias("intercept_r"),
-            )
-    return _a191_distributed(spark, daily)
+        [(n_pairs, k_neg, b, a_val)],
+        "n_pairs bigint, k_neg bigint, b double, a double",
+    ).select(
+        "n_pairs",
+        "k_neg",
+        F.round("b", 6).alias("slope_r"),
+        F.round("a", 6).alias("intercept_r"),
+    )
 
 
 # driver-side panel bound for a191: 8000 days ≈ 32M pair slopes ≈ a few
 # hundred MB of transient numpy state; the fixture calendar is ~2404
-# days at every sf, so the fallback only guards a different fixture
+# days at every sf, and a longer panel raises
 _PB_MAX_PANEL = 8000
-
-
-def _a191_distributed(spark, daily):
-    """The distributed Passing-Bablok pipeline (theta-join pair stage,
-    parallel global rank): fallback when the daily panel exceeds the
-    driver bound or a rank pick falls out of range."""
-    from ..operators.core import global_row_number
-
-    w_d = Window.orderBy("d")
-    pan = daily.select(
-        "d",
-        "v",
-        F.expr("CAST(y div 1000 AS BIGINT)").alias("yk"),
-        F.row_number().over(w_d).alias("i"),
-    ).localCheckpoint(eager=False)
-    a = pan.alias("a")
-    b = pan.alias("b")
-    sl = (
-        a.join(b, F.col("a.i") < F.col("b.i"))
-        .filter(
-            (F.col("b.v") != F.col("a.v"))
-            & ((F.col("b.yk") - F.col("a.yk"))
-               != -(F.col("b.v") - F.col("a.v")))
-        )
-        .select(
-            F.col("a.i").alias("i"),
-            F.col("b.i").alias("j"),
-            (F.col("b.yk") - F.col("a.yk")).cast("bigint").alias("num"),
-            (F.col("b.v") - F.col("a.v")).cast("bigint").alias("den"),
-        )
-    )
-    valid = sl.select(
-        (F.col("num").cast("double") / F.col("den")).alias("s"), "i", "j"
-    ).localCheckpoint(eager=False)
-    scal = valid.agg(
-        F.count("*").cast("bigint").alias("n_pairs"),
-        F.sum(F.when(F.col("s") < -1.0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("k_neg"),
-    )
-    # the 2.5M-pair slope rank is the one corpus-independent hotspot:
-    # a bare Window.orderBy would sort it in ONE task (~3.4 s of the
-    # query's 6 s); the range-partitioned exact global rank runs the
-    # sort across the session's cores with bit-identical ranks
-    ranked = global_row_number(valid, ["s", "i", "j"]).select("s", "rn")
-    picks = (
-        ranked.crossJoin(F.broadcast(scal))
-        .filter(
-            (F.col("rn") == F.expr("(n_pairs + 1) div 2 + k_neg"))
-            | (F.col("rn") == F.expr("n_pairs div 2 + k_neg"))
-            | (F.col("rn") == F.expr("n_pairs div 2 + 1 + k_neg"))
-        )
-        .groupBy("n_pairs", "k_neg")
-        .agg(
-            F.max(
-                F.when(
-                    F.col("rn") == F.expr("(n_pairs + 1) div 2 + k_neg"),
-                    F.col("s"),
-                )
-            ).alias("s_mid"),
-            F.max(
-                F.when(
-                    F.col("rn") == F.expr("n_pairs div 2 + k_neg"), F.col("s")
-                )
-            ).alias("s_lo"),
-            F.max(
-                F.when(
-                    F.col("rn") == F.expr("n_pairs div 2 + 1 + k_neg"),
-                    F.col("s"),
-                )
-            ).alias("s_hi"),
-        )
-    )
-    bsel = picks.select(
-        "n_pairs",
-        "k_neg",
-        F.when(F.expr("n_pairs % 2 = 1"), F.col("s_mid"))
-        .otherwise((F.col("s_lo") + F.col("s_hi")) / F.lit(2.0))
-        .alias("b"),
-    )
-    resid = pan.crossJoin(F.broadcast(bsel)).select(
-        (F.col("yk").cast("double") - F.col("b") * F.col("v")).alias("r"),
-        "d",
-        "n_pairs",
-        "k_neg",
-        F.col("b").alias("bb"),
-    )
-    w_r = Window.orderBy("r", "d")
-    rr = resid.select(
-        "r",
-        "n_pairs",
-        "k_neg",
-        "bb",
-        F.row_number().over(w_r).alias("rn"),
-        F.count("*").over(
-            Window.partitionBy().rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).cast("bigint").alias("n"),
-    )
-    asel = (
-        rr.filter(
-            (F.col("rn") == F.expr("(n + 1) div 2"))
-            | (F.col("rn") == F.expr("n div 2"))
-            | (F.col("rn") == F.expr("n div 2 + 1"))
-        )
-        .groupBy("n_pairs", "k_neg", "bb")
-        .agg(
-            F.max("n").alias("n"),
-            F.max(
-                F.when(F.col("rn") == F.expr("(n + 1) div 2"), F.col("r"))
-            ).alias("r_mid"),
-            F.max(
-                F.when(F.col("rn") == F.expr("n div 2"), F.col("r"))
-            ).alias("r_lo"),
-            F.max(
-                F.when(F.col("rn") == F.expr("n div 2 + 1"), F.col("r"))
-            ).alias("r_hi"),
-        )
-    )
-    return asel.select(
-        "n_pairs",
-        "k_neg",
-        F.round("bb", 6).alias("slope_r"),
-        F.round(
-            F.when(F.expr("n % 2 = 1"), F.col("r_mid")).otherwise(
-                (F.col("r_lo") + F.col("r_hi")) / F.lit(2.0)
-            ),
-            6,
-        ).alias("intercept_r"),
-    )
 
 
 @query(

@@ -34,7 +34,7 @@ from pyspark.sql import Window, functions as F
 from ..sources import table
 from . import query
 from .inference4 import _DAILYV_SQL, _DAILYVK_SQL, _dailyv, _dailyvk
-from ..operators.core import literal_frame
+from ..operators.core import collect_bounded, literal_frame
 
 
 @query(
@@ -95,28 +95,33 @@ def a208_siegel_repeated_medians(spark, sf_dir):
     slope = median_i( median_{j != i} (v_j - v_i)/(j - i) ), intercept =
     median_i(v_i - b*i) — the 50%-breakdown-point robust line (Theil–Sen
     a565 breaks down at 29%). The pair stage lives on the
-    calendar-bounded day panel (<= 2404² rows at ANY corpus scale); each
-    pairwise slope is one exact-integer-ratio double; all medians are
-    explicit row_number order statistics (never an engine median), with
-    deterministic (value, index) tie-breaks so both engines pick the
-    identical element. Because the panel is calendar-bounded, the whole
-    estimator after the one orders groupBy runs DRIVER-SIDE on the
-    collected panel (the a191 recipe): the (n×n) slope matrix, the
-    per-row and global median picks and the residual median are numpy
-    float64 ops replicating the engine expressions op-for-op (int64
-    subtraction, int→double conversion, one IEEE division per pair,
-    (lo+hi)/2.0), and VALUES at rank positions depend only on sorted
-    order, so ties need no (s, j) tie-breaking. Terminal round(_, 6)
-    stays engine-side on the literal frame. The distributed pipeline
-    remains as the fallback for an oversized panel."""
-    daily = _dailyv(spark, sf_dir)
-    rows = daily.select("d", "v").collect()
-    if 2 <= len(rows) <= _SIEGEL_MAX_PANEL:
-        import numpy as np
+    calendar-bounded day panel (<= 2404² pairs at ANY corpus scale);
+    each pairwise slope is one exact-integer-ratio double; all medians
+    are explicit order statistics (never an engine median), so both
+    engines pick the identical element. Because the panel is
+    calendar-bounded, the whole estimator after the one orders groupBy
+    runs DRIVER-SIDE on the panel collected through ``collect_bounded``
+    (the a191 recipe): the (n×n) slope matrix, the per-row and global
+    median picks and the residual median are numpy float64 ops
+    replicating the oracle's expressions op-for-op (int64 subtraction,
+    int→double conversion, one IEEE division per pair, (lo+hi)/2.0),
+    and VALUES at rank positions depend only on sorted order, so ties
+    need no (s, j) tie-breaking. Terminal round(_, 6) stays
+    engine-side on the literal frame. A panel over
+    ``_SIEGEL_MAX_PANEL`` days raises; a panel of fewer than 2 days
+    has no slope and gives 0 rows, as in the oracle."""
+    import numpy as np
 
+    rows = collect_bounded(
+        _dailyv(spark, sf_dir).select("d", "v"),
+        _SIEGEL_MAX_PANEL,
+        "a208_siegel_repeated_medians day panel",
+    )
+    out_rows = []
+    n = len(rows)
+    if n >= 2:
         rows.sort(key=lambda r: r["d"])
         v = np.array([r["v"] for r in rows], dtype=np.int64)
-        n = len(rows)
         idx = np.arange(1, n + 1, dtype=np.int64)
         num = (v[None, :] - v[:, None]).astype(np.float64)
         den = (idx[None, :] - idx[:, None]).astype(np.float64)
@@ -140,104 +145,22 @@ def a208_siegel_repeated_medians(spark, sf_dir):
             a_val = float(rs[(n + 1) // 2 - 1])
         else:
             a_val = float((rs[n // 2 - 1] + rs[n // 2]) / 2.0)
-        out = literal_frame(
-        spark,
-            [(n, b, a_val)], "n bigint, b double, a double"
-        )
-        return out.select(
-            "n",
-            F.round("b", 6).alias("slope_r"),
-            F.round("a", 6).alias("intercept_r"),
-        )
-    return _a208_distributed(spark, daily)
+        out_rows.append((n, b, a_val))
+    return literal_frame(
+        spark, out_rows, "n bigint, b double, a double"
+    ).select(
+        "n",
+        F.round("b", 6).alias("slope_r"),
+        F.round("a", 6).alias("intercept_r"),
+    )
 
 
 # driver-side panel bound for a208: 4000 days ≈ 128 MB per (n×n)
 # float64 matrix, and num/den/s plus the np.sort copy are live
 # simultaneously, so peak transient memory at the bound is ~4 matrices
 # ≈ 0.5 GB — comfortably inside the driver. The fixture calendar is
-# ~2404 days at every sf, so the fallback only guards a different
-# fixture
+# ~2404 days at every sf, and a longer panel raises
 _SIEGEL_MAX_PANEL = 4000
-
-
-def _a208_distributed(spark, daily):
-    """The distributed Siegel pipeline (i≠j theta-join pair stage,
-    per-i rank windows): fallback when the daily panel exceeds the
-    driver bound."""
-    pan = daily.select(
-        "v",
-        F.row_number().over(Window.orderBy("d")).cast("bigint").alias("i"),
-    ).localCheckpoint(eager=False)
-    scal = pan.agg(F.count("*").cast("bigint").alias("n"))
-    a = pan.alias("a")
-    b = pan.alias("b")
-    sl = a.join(b, F.col("a.i") != F.col("b.i")).select(
-        F.col("a.i").alias("i"),
-        F.col("b.i").alias("j"),
-        (
-            (F.col("b.v") - F.col("a.v")).cast("double")
-            / (F.col("b.i") - F.col("a.i"))
-        ).alias("s"),
-    )
-    ranked = sl.select(
-        "i",
-        "s",
-        F.row_number()
-        .over(Window.partitionBy("i").orderBy("s", "j"))
-        .alias("rn"),
-    )
-    med_i = (
-        ranked.crossJoin(F.broadcast(scal))
-        .groupBy("i", "n")
-        .agg(
-            F.expr(
-                "CASE WHEN (n - 1) % 2 = 1"
-                " THEN MAX(CASE WHEN rn = n div 2 THEN s END)"
-                " ELSE (MAX(CASE WHEN rn = (n - 1) div 2 THEN s END)"
-                " + MAX(CASE WHEN rn = (n - 1) div 2 + 1 THEN s END))"
-                " / 2.0 END"
-            ).alias("m")
-        )
-    )
-    mr = med_i.select(
-        "m", "i", "n", F.row_number().over(Window.orderBy("m", "i")).alias("rn")
-    )
-    slope = mr.groupBy("n").agg(
-        F.expr(
-            "CASE WHEN n % 2 = 1"
-            " THEN MAX(CASE WHEN rn = (n + 1) div 2 THEN m END)"
-            " ELSE (MAX(CASE WHEN rn = n div 2 THEN m END)"
-            " + MAX(CASE WHEN rn = n div 2 + 1 THEN m END)) / 2.0 END"
-        ).alias("b")
-    )
-    resid = (
-        pan.crossJoin(F.broadcast(slope))
-        .select(
-            "n",
-            "b",
-            (F.col("v") - F.col("b") * F.col("i")).alias("r"),
-            "i",
-        )
-        .select(
-            "n",
-            "b",
-            "r",
-            F.row_number().over(Window.orderBy("r", "i")).alias("rn"),
-        )
-    )
-    return resid.groupBy("n", "b").agg(
-        F.round(F.col("b"), 6).alias("slope_r"),
-        F.round(
-            F.expr(
-                "CASE WHEN n % 2 = 1"
-                " THEN MAX(CASE WHEN rn = (n + 1) div 2 THEN r END)"
-                " ELSE (MAX(CASE WHEN rn = n div 2 THEN r END)"
-                " + MAX(CASE WHEN rn = n div 2 + 1 THEN r END)) / 2.0 END"
-            ),
-            6,
-        ).alias("intercept_r"),
-    ).select("n", "slope_r", "intercept_r")
 
 
 @query(

@@ -23,7 +23,15 @@ Spark world. Preserved invariants (SURVEY.md §2.B):
     than aborting delivery to the remaining requests — the reference
     would leave their promises undelivered forever.)
 7.  Two flush triggers: interval timer OR queue-full.
-8.  Producer backpressure: submit blocks while the queue is full.
+8.  Producer backpressure: submit blocks while the queue is full. A
+    blocked submit wakes the dispatcher first, and the drain takes the
+    queue atomically, so the blocked item lands at the head of the
+    NEXT batch — as with the reference's atomic
+    ``ArrayBlockingQueue.drainTo``. Under size-only flushing
+    (``interval=None``) it waits for the next queue-full, flush or
+    shutdown. A second wake after the put would split size-only
+    batches (30 → 57 batches at 1k items/s and capacity 100, measured
+    on a 4-core host), so none is made.
 9.  Closed-state rejection: submit after close raises
     RuntimeError("Grouper is closed").
 10. Drain-on-shutdown: close() flushes everything already queued.

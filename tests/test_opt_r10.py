@@ -1,6 +1,7 @@
 """Round-10 optimization-round tests: the new parallel global rank
-operator and the driver-side HALF_UP rounding replica that the q249 /
-a448 / a440 iteration tails rely on for bit-identical results."""
+operator, the driver-side HALF_UP rounding replica that the q249 /
+a448 / a440 iteration tails rely on for bit-identical results, and the
+a191/a208 driver-exact paths checked against their DuckDB oracles."""
 
 from __future__ import annotations
 
@@ -242,57 +243,93 @@ def test_a404_class_decomposition_matches_doc_level_truth(spark, tmp_path):
     assert row["n_tp"] == len(pred & truth)
 
 
-def test_a191_driver_path_matches_distributed_fallback(spark, tmp_path):
-    """a191's driver-exact numpy path must reproduce the distributed
-    pipeline bit-for-bit. Synthetic 12-day panel engineered to hit the
-    estimator's branches: duplicate v values (den = 0 pairs dropped),
-    a slope exactly -1 (excluded), slopes < -1 (k_neg > 0), slope
-    ties, and an even residual count (mean-of-two intercept)."""
+def _write_orders(spark, path, day_prices):
+    """One orders parquet directory with a day per entry of
+    ``day_prices`` (a list of that day's order prices); returns the
+    sf_dir to pass to a query."""
     import datetime
 
-    from grouper_spark.queries.inference4 import (
-        _a191_distributed,
-        _dailyv,
-    )
-    from grouper_spark.queries import load_all
-
     base = datetime.date(2024, 1, 1)
-    # (v, y-kilodollars): v repeats (5 twice), one pair with slope -1
-    # ((v,yk) (1,10) vs (2,9)), steep negative slopes via (3,40)->(4,2)
-    panel = [
-        (1, 10),
-        (2, 9),
-        (3, 40),
-        (4, 2),
-        (5, 12),
-        (5, 30),
-        (6, 18),
-        (7, 18),
-        (8, 25),
-        (9, 60),
-        (10, 33),
-        (12, 41),
-    ]
     rows = []
-    oid = 0
-    for day, (v, yk) in enumerate(panel):
+    for day, prices in enumerate(day_prices):
         d = base + datetime.timedelta(days=day)
-        # v orders summing to ~yk*1000 dollars: v-1 orders of 1000.00
-        # plus one order carrying the remainder
-        for k in range(v):
-            price = 1000.0 if k < v - 1 else float(yk * 1000 - (v - 1) * 1000)
-            rows.append((oid, d, price))
-            oid += 1
+        for price in prices:
+            rows.append((len(rows), d, price))
     spark.createDataFrame(
         rows, "o_orderkey bigint, o_orderdate date, o_totalprice double"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{tmp_path}/orders.parquet"
-    )
-    sf_dir = str(tmp_path)
-    got = load_all()["a191_passing_bablok"].fn(spark, sf_dir).collect()
-    want = _a191_distributed(spark, _dailyv(spark, sf_dir)).collect()
-    assert len(got) == len(want) == 1
-    assert got[0].asDict() == want[0].asDict()
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/orders.parquet")
+    return str(path)
+
+
+def _vy_panel(panel):
+    """Day prices for (v, y-kilodollars) pairs: v-1 orders of 1000.00
+    plus one order carrying the remainder."""
+    return [
+        [1000.0] * (v - 1) + [float(yk * 1000 - (v - 1) * 1000)]
+        for v, yk in panel
+    ]
+
+
+def _query_matches_oracle(spark, name, sf_dir):
+    """Run the registered query and its DuckDB oracle over the same
+    synthetic orders directory and assert identical rows."""
+    import duckdb
+
+    from grouper_spark.queries import load_all
+
+    qdef = load_all()[name]
+    got = [r.asDict() for r in qdef.fn(spark, sf_dir).collect()]
+    with duckdb.connect() as con:
+        con.execute(
+            "CREATE VIEW orders AS SELECT * FROM"
+            f" '{sf_dir}/orders.parquet/*.parquet'"
+        )
+        res = con.execute(qdef.oracle)
+        cols = [c[0] for c in res.description]
+        want = [dict(zip(cols, r)) for r in res.fetchall()]
+    assert got == want
+    return got
+
+
+# a191 panel of (v, y-kilodollars) engineered to hit the estimator's
+# branches: v repeats (5 twice, den = 0 pairs dropped), one pair with
+# slope exactly -1 ((1,10) vs (2,9), excluded), steep negative slopes
+# via (3,40)->(4,2) (k_neg > 0), slope ties, and an even residual count
+# (mean-of-two intercept).
+_A191_PANEL = [
+    (1, 10), (2, 9), (3, 40), (4, 2), (5, 12), (5, 30),
+    (6, 18), (7, 18), (8, 25), (9, 60), (10, 33), (12, 41),
+]
+
+
+def test_a191_driver_path_matches_oracle(spark, tmp_path):
+    """a191's driver-exact numpy path must reproduce its DuckDB oracle
+    bit-for-bit."""
+    sf_dir = _write_orders(spark, tmp_path, _vy_panel(_A191_PANEL))
+    got = _query_matches_oracle(spark, "a191_passing_bablok", sf_dir)
+    assert len(got) == 1 and got[0]["k_neg"] > 0
+
+
+@pytest.mark.parametrize(
+    "panel",
+    [
+        [],  # no day: n_pairs = 0, k_neg NULL
+        [(5, 12)],  # one day: n_pairs = 0, k_neg NULL
+        # anti-correlated: every slope < -1, so the rank pick shifted
+        # by k_neg = n_pairs falls past the slopes
+        [(1, 100), (2, 80), (3, 50)],  # n_pairs = 3
+        [(1, 100), (2, 80), (3, 50), (4, 20)],  # n_pairs = 6
+    ],
+    ids=["empty", "one_day", "anti_odd", "anti_even"],
+)
+def test_a191_degenerate_panels_match_oracle(spark, tmp_path, panel):
+    """With no rank pick the oracle still gives one row, (n_pairs,
+    k_neg, NULL, NULL), and k_neg is NULL when n_pairs = 0."""
+    sf_dir = _write_orders(spark, tmp_path, _vy_panel(panel))
+    got = _query_matches_oracle(spark, "a191_passing_bablok", sf_dir)
+    n_pairs = len(panel) * (len(panel) - 1) // 2
+    k_neg = n_pairs if n_pairs else None
+    assert [tuple(r.values()) for r in got] == [(n_pairs, k_neg, None, None)]
 
 
 def test_a361_intersection_triangles_match_bruteforce(spark, tmp_path):
@@ -362,41 +399,38 @@ def test_a361_intersection_triangles_match_bruteforce(spark, tmp_path):
     assert got == want
 
 
-def test_a208_driver_path_matches_distributed_fallback(spark, tmp_path):
-    """a208's driver-exact numpy path must reproduce the distributed
-    pipeline bit-for-bit. Two synthetic panels: even n with repeated v
-    values (slope ties across pairs, mean-of-two medians at every
-    level) and odd n (middle-element picks)."""
-    import datetime
+# a208 daily order volumes: even n with repeated v values (slope ties
+# across pairs, mean-of-two medians at every level) and odd n
+# (middle-element picks)
+_A208_PANELS = (
+    [3, 7, 7, 2, 9, 9, 4, 11, 3, 8, 10, 5],  # n=12, ties
+    [5, 1, 6, 6, 2, 8, 4, 9, 7, 3, 12],      # n=11
+)
 
-    from grouper_spark.queries import load_all
-    from grouper_spark.queries.inference4 import _dailyv
-    from grouper_spark.queries.inference5 import _a208_distributed
 
-    base = datetime.date(2024, 3, 1)
-    for panel in (
-        [3, 7, 7, 2, 9, 9, 4, 11, 3, 8, 10, 5],  # n=12, ties
-        [5, 1, 6, 6, 2, 8, 4, 9, 7, 3, 12],      # n=11
-    ):
-        rows = []
-        oid = 0
-        for day, v in enumerate(panel):
-            d = base + datetime.timedelta(days=day)
-            for _ in range(v):
-                rows.append((oid, d, 100.0))
-                oid += 1
-        spark.createDataFrame(
-            rows, "o_orderkey bigint, o_orderdate date, o_totalprice double"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{tmp_path}/orders.parquet"
+def test_a208_driver_path_matches_oracle(spark, tmp_path):
+    """a208's driver-exact numpy path must reproduce its DuckDB oracle
+    bit-for-bit."""
+    for k, panel in enumerate(_A208_PANELS):
+        sf_dir = _write_orders(
+            spark, tmp_path / str(k), [[100.0] * v for v in panel]
         )
-        sf_dir = str(tmp_path)
-        got = load_all()["a208_siegel_repeated_medians"].fn(
-            spark, sf_dir
-        ).collect()
-        want = _a208_distributed(spark, _dailyv(spark, sf_dir)).collect()
-        assert len(got) == len(want) == 1
-        assert got[0].asDict() == want[0].asDict()
+        got = _query_matches_oracle(
+            spark, "a208_siegel_repeated_medians", sf_dir
+        )
+        assert len(got) == 1 and got[0]["n"] == len(panel)
+
+
+def test_a208_over_cap_panel_raises(spark, tmp_path, monkeypatch):
+    """Above its day cap a208 raises instead of switching algorithm."""
+    from grouper_spark.queries import inference5, load_all
+
+    monkeypatch.setattr(inference5, "_SIEGEL_MAX_PANEL", 5)
+    sf_dir = _write_orders(
+        spark, tmp_path, [[100.0] * v for v in _A208_PANELS[0]]
+    )
+    with pytest.raises(ValueError, match="a208_siegel_repeated_medians.*5"):
+        load_all()["a208_siegel_repeated_medians"].fn(spark, sf_dir)
 
 
 def test_literal_frame_matches_tuple_path(spark):

@@ -144,6 +144,23 @@ def test_collect_vector_panel_id_types(spark, id_type):
     assert X.tolist() == [[1.0, 2.0], [3.0, 4.0]]
 
 
+@pytest.mark.parametrize("cap", [5, 6, 100])
+def test_collect_bounded_at_or_under_cap_is_complete(spark, cap):
+    """A panel of at most ``cap`` rows comes back whole."""
+    from grouper_spark.operators.core import collect_bounded
+
+    rows = collect_bounded(spark.range(5), cap, "five-row panel")
+    assert sorted(r["id"] for r in rows) == [0, 1, 2, 3, 4]
+
+
+def test_collect_bounded_over_cap_raises(spark):
+    """``cap + 1`` rows raise a ValueError naming the site and the cap."""
+    from grouper_spark.operators.core import collect_bounded
+
+    with pytest.raises(ValueError, match="five-row panel.*cap of 4 rows"):
+        collect_bounded(spark.range(5), 4, "five-row panel")
+
+
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001",
                                     "/root/testdata/sf0.01"])
 def test_a459_driver_path_bitmatches_sweeps(spark, sf_dir, monkeypatch):
