@@ -1,8 +1,10 @@
-from .vector import cosine_similarity, dot, l2_norm, l2_normalize
+from .vector import cosine_similarity, dot, l2_norm, l2_normalize, unit_fixed
 from .text import (
+    md5_bits,
     money,
     tokens,
     token_count,
+    word_ngrams,
     word_shingles,
     normalized_text,
 )
@@ -12,9 +14,12 @@ __all__ = [
     "dot",
     "l2_norm",
     "l2_normalize",
+    "md5_bits",
     "money",
     "tokens",
     "token_count",
+    "unit_fixed",
+    "word_ngrams",
     "word_shingles",
     "normalized_text",
 ]

@@ -35,7 +35,7 @@ def money_avg(col: Column | str, alias: str, scale: int = 4) -> Column:
 def tokens(col: Column | str) -> Column:
     """Whitespace tokenization; empty string → empty array (not [''])."""
     col = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(F.trim(col), r"\s+"), lambda t: t != "")
+    return F.array_remove(F.split(F.trim(col), r"\s+"), "")
 
 
 def token_count(col: Column | str) -> Column:
@@ -48,20 +48,46 @@ def normalized_text(col: Column | str) -> Column:
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 
+def word_ngrams(toks: Column | str, n: int) -> Column:
+    """All n-word grams of a token-array column, in order, repeats kept.
+
+    For w tokens this yields max(w-n+1, 0) grams. The token array is
+    bound ONCE to a lambda variable (``transform`` over a one-element
+    array): HOF lambdas are interpreted with no common-subexpression
+    cache, so a lambda body that referenced the outer token expression
+    would re-run ``split`` per gram — O(w²) per row. Inside the binding
+    the grams are ``arrays_zip`` of n offset ``slice``s and one
+    ``concat_ws`` per position: O(w·n).
+    """
+    toks = F.col(toks) if isinstance(toks, str) else toks
+
+    def grams(t: Column) -> Column:
+        k = F.size(t) - F.lit(n - 1)
+        zipped = F.arrays_zip(*[F.slice(t, i + 1, k) for i in range(n)])
+        # slice rejects a negative length; guard k < 1 explicitly.
+        return F.when(k < 1, F.array().cast("array<string>")).otherwise(
+            F.transform(
+                zipped, lambda g: F.concat_ws(" ", *[g[str(i)] for i in range(n)])
+            )
+        )
+
+    return F.transform(F.array(toks), grams)[0]
+
+
 def word_shingles(col: Column | str, n: int = 3) -> Column:
     """Distinct n-word shingles of a text column, as an array<string>.
 
-    Built from sequence/transform/slice — stays in codegen. For a text of
-    w words this yields max(w-n+1, 0) shingles, deduplicated.
+    ``word_ngrams`` over ``tokens`` — linear in the word count. The
+    array HOFs run interpreted (CodegenFallback), not in whole-stage
+    codegen. For a text of w words this yields max(w-n+1, 0) shingles,
+    deduplicated.
     """
-    toks = tokens(col)
-    k = F.size(toks) - F.lit(n - 1)
-    # sequence(1, k) with k < 1 would count DOWN in Spark; guard explicitly.
-    return F.when(k < 1, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), k),
-                lambda i: F.array_join(F.slice(toks, i, n), " "),
-            )
-        )
-    )
+    return F.array_distinct(word_ngrams(tokens(col), n))
+
+
+def md5_bits(col: Column | str, digits: int, start: int = 1) -> Column:
+    """``digits`` hex digits of md5(col) from position ``start``, as a
+    bigint — the cross-engine hash contract. The DuckDB oracles spell
+    the same value ``CAST(conv(substring(md5(x), start, digits), 16,
+    10) AS BIGINT)``; up to 15 digits (60 bits) fit a signed bigint."""
+    return F.conv(F.substring(F.md5(col), start, digits), 16, 10).cast("bigint")

@@ -68,3 +68,18 @@ def l2_normalize(a: Column | str) -> Column:
     return F.zip_with(
         a, F.array_repeat(safe, F.size(a)), lambda x, nn: x.cast("double") / nn
     )
+
+
+def unit_fixed(a: Column | str, scale: float) -> Column:
+    """Fixed-point unit vector: ``round(scale·x / ‖a‖)`` per element, as
+    bigint. The norm is materialized once per row through
+    ``array_repeat`` — O(d), the ``l2_normalize`` shape — and each
+    element computes ``(scale·x)/n`` in that order, so the integers are
+    bit-identical to the inline per-element formula. No zero-norm guard:
+    callers quantize non-zero embeddings."""
+    a = F.col(a) if isinstance(a, str) else a
+    return F.zip_with(
+        a,
+        F.array_repeat(l2_norm(a), F.size(a)),
+        lambda x, n: F.round(scale * x / n, 0).cast("bigint"),
+    )

@@ -79,17 +79,23 @@ def random_hyperplanes(dim: int, num_planes: int, seed: int = 42) -> list[list[f
     return planes
 
 
-def _bucket_col(vec_sql: str, planes: list[list[float]]):
+def _bucket_col(vec_col: str, planes: list[list[float]]):
     """Sign-pattern bucket id of a vector against fixed hyperplanes.
 
     ONE F.expr SQL string instead of planes × dim ``F.lit`` py4j calls
     (the a381/q240 plan-construction lesson): each plane dot parses to
     the identical aggregate/zip_with tree ``dot()`` built — same
     double literals via round-trip repr, same fold order, identical
-    sign bits. ``vec_sql`` is the vector column NAME."""
+    sign bits. ``vec_col`` is the vector column NAME (backtick-quoted,
+    so any legal name parses). A vector whose width differs from the
+    planes' raises: ``zip_with`` would NULL-pad the shorter side, every
+    dot would fold to NULL and the whole corpus would land in one
+    bucket."""
+    v = "`" + vec_col.replace("`", "``") + "`"
+    dim = len(planes[0])
     terms = " + ".join(
         "(CASE WHEN aggregate(zip_with("
-        + vec_sql
+        + v
         + ", array("
         + ", ".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in p)
         + "), (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
@@ -97,7 +103,11 @@ def _bucket_col(vec_sql: str, planes: list[list[float]]):
         f" THEN {2 ** i} ELSE 0 END)"
         for i, p in enumerate(planes)
     )
-    return F.expr(f"CAST(0 AS BIGINT) + {terms}")
+    return F.expr(
+        f"CASE WHEN size({v}) != {dim} THEN raise_error(concat("
+        f"'lsh bucket: vector width ', size({v}), ' != plane width {dim}'))"
+        f" ELSE CAST(0 AS BIGINT) + {terms} END"
+    )
 
 
 def ivf_ann(

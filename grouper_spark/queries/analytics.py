@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from ..operators import cooccurrence_pairs
+from ..functions.text import md5_bits
 from ..sources import table
 from . import query
 from ..operators.core import literal_frame
@@ -1874,20 +1875,7 @@ def q283_capture_recapture(spark, sf_dir):
     def coin(prefix):
         return (
             (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit(prefix),
-                                F.col("o_orderkey").cast("string"),
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint")
+                md5_bits(F.concat(F.lit(prefix), F.col("o_orderkey").cast("string")), 8)
                 % 100
             )
             < 30
@@ -3095,15 +3083,7 @@ def q333_qq_comparison(spark, sf_dir):
     that tests IF distributions differ, this table shows HOW."""
     ev = table(spark, sf_dir, "events")
     arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("qq|"), F.col("user_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_bits(F.concat(F.lit("qq|"), F.col("user_id").cast("string")), 8)
         % 2
     ).cast("int")
     subj = ev.filter(

@@ -14,13 +14,15 @@ posting key (decontamination) or a broadcast of a tiny stats side
 
 from __future__ import annotations
 
-from pyspark.sql import Column, Window, functions as F
+from pyspark.sql import Window, functions as F
 
 from ..operators.core import ensure_parallelism
 from ..functions.text import (
+    md5_bits,
     normalized_text,
     token_count,
     tokens,
+    word_ngrams,
     word_shingles,
 )
 from ..sources import table
@@ -28,20 +30,6 @@ from . import query
 from ..operators.core import collect_bounded, literal_frame
 
 _TOKS_SQL = "string_split_regex(trim(text), '\\s+')"
-
-
-def _word_ngrams_all(col: Column | str, n: int) -> Column:
-    """ALL n-word grams (non-distinct, in order) — unlike
-    functions.text.word_shingles, repeats are kept so per-gram counts
-    measure repetition."""
-    toks = tokens(col)
-    k = F.size(toks) - F.lit(n - 1)
-    return F.when(k < 1, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), k),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        )
-    )
 
 
 @query(
@@ -172,7 +160,7 @@ def q85_repetition_quality(spark, sf_dir):
         F.count("*").cast("bigint").alias("n_distinct"),
         F.max("c").alias("top_tok"),
     )
-    bg = d.select("doc_id", F.explode(_word_ngrams_all("text", 2)).alias("bigram"))
+    bg = d.select("doc_id", F.explode(word_ngrams(tokens("text"), 2)).alias("bigram"))
     bc = bg.groupBy("doc_id", "bigram").agg(F.count("*").alias("c"))
     bstats = bc.groupBy("doc_id").agg(
         F.sum("c").alias("n_bigrams"), F.max("c").alias("top_bigram")
@@ -757,11 +745,7 @@ def q141_temperature_sample(spark, sf_dir):
             / (F.col("z_fp") * F.col("n_docs")),
         ).alias("keep_prob"),
     )
-    u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        / 4294967296.0
-    )
+    u = (md5_bits(F.col("doc_id").cast("string"), 8) / 4294967296.0)
     coin = d.select("source", u.alias("u"))
     return (
         coin.join(F.broadcast(fences), "source")
@@ -1036,8 +1020,7 @@ def q181_dp_noisy_counts(spark, sf_dir):
         F.count("*").cast("bigint").alias("true_count")
     )
     u = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("dp-seed-"), F.col("event_type"))), 1, 8), 16, 10)
-        .cast("bigint")
+        md5_bits(F.concat(F.lit("dp-seed-"), F.col("event_type")), 8)
         .cast("double")
         / F.lit(4294967296.0)
     )
@@ -1093,15 +1076,7 @@ def q183_weighted_sample(spark, sf_dir):
     sampling."""
     d = table(spark, sf_dir, "documents")
     u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ws-"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_bits(F.concat(F.lit("ws-"), F.col("doc_id").cast("string")), 8)
         + F.lit(1.0)
     ) / F.lit(4294967297.0)
     key_nano = F.round(
@@ -1241,22 +1216,15 @@ def q255_negative_sampling(spark, sf_dir):
             "k",
             "n_docs",
             (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                F.lit("neg"),
-                                F.col("doc_id").cast("string"),
-                                F.col("k").cast("string"),
-                            )
-                        ),
-                        1,
-                        8,
+                md5_bits(
+                    F.concat_ws(
+                        "|",
+                        F.lit("neg"),
+                        F.col("doc_id").cast("string"),
+                        F.col("k").cast("string"),
                     ),
-                    16,
-                    10,
-                ).cast("bigint")
+                    8,
+                )
                 % F.col("n_docs")
             ).alias("raw_neg"),
         )
@@ -1640,16 +1608,7 @@ def q270_hierarchical_sampling(spark, sf_dir):
 
     def coin(prefix, col):
         return (
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit(prefix), col)), 1, 8
-                    ),
-                    16,
-                    10,
-                ).cast("bigint")
-                % 100
-            )
+            (md5_bits(F.concat(F.lit(prefix), col), 8) % 100)
             < 50
         ).cast("int")
 
@@ -1814,15 +1773,7 @@ def q302_qini_uplift(spark, sf_dir):
 
     ev = table(spark, sf_dir, "events")
     treated = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("up|"), F.col("user_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_bits(F.concat(F.lit("up|"), F.col("user_id").cast("string")), 8)
         % 2
     ).cast("int")
     subj = ev.groupBy("user_id").agg(
@@ -1932,22 +1883,7 @@ def q313_ips_offpolicy_eval(spark, sf_dir):
         .cast("bigint")
         .alias("reward_cents"),
     ).select(
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("beh|"), F.col("user_id").cast("string")
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 2
-        )
+        (md5_bits(F.concat(F.lit("beh|"), F.col("user_id").cast("string")), 8) % 2)
         .cast("int")
         .alias("logged_arm"),
         "score",

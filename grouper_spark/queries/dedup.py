@@ -15,6 +15,7 @@ from ..operators import (
     shingle_jaccard_pairs,
     simhash,
 )
+from ..functions.text import md5_bits
 from ..sources import table
 from . import query
 from ..operators.core import literal_frame
@@ -787,10 +788,9 @@ def _minhash_components(spark, sf_dir, sh=None):
     from ..operators import cooccurrence_pairs
     from ..operators.core import ensure_parallelism
 
-    d = table(spark, sf_dir, "documents")
     if sh is None:
         sh = (
-            ensure_parallelism(d)
+            ensure_parallelism(table(spark, sf_dir, "documents"))
             .select(
                 "doc_id",
                 F.explode_outer(word_shingles("text", 3)).alias("sh"),
@@ -800,13 +800,7 @@ def _minhash_components(spark, sf_dir, sh=None):
         )
 
     def perm_hash(p: int):
-        return F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"mh{p}|"), F.col("sh"))), 1, _MH_HEX
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        return md5_bits(F.concat(F.lit(f"mh{p}|"), F.col("sh")), _MH_HEX)
 
     # sigs feeds the band explode and both pair-side joins; checkpoint
     # the doc-level signature table so the shingle+md5 pipeline runs once.
@@ -990,13 +984,7 @@ def q239_simhash_oracled(spark, sf_dir):
         )
         .filter(F.col("token").isNotNull())
     )
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("sh|"), F.col("token"))), 1, _MH_HEX
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = md5_bits(F.concat(F.lit("sh|"), F.col("token")), _MH_HEX)
     hashed = tok.select("doc_id", h.alias("h"))
     sums = hashed.groupBy("doc_id").agg(
         *[

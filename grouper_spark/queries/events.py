@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from ..functions.text import money_sum
+from ..functions.text import md5_bits, money_sum
 from ..operators import sessionize
 from ..sources import table
 from . import query
@@ -1153,15 +1153,7 @@ def q268_funnel_step_significance(spark, sf_dir):
     log size."""
     ev = table(spark, sf_dir, "events")
     variant = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("fz|"), F.col("user_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_bits(F.concat(F.lit("fz|"), F.col("user_id").cast("string")), 8)
         % 2
     ).cast("int")
     # engagement-depth step flags (>= N events of the type): the flat
@@ -1523,15 +1515,7 @@ def q301_logrank_test(spark, sf_dir):
 
     ev = table(spark, sf_dir, "events")
     arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("lr|"), F.col("user_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_bits(F.concat(F.lit("lr|"), F.col("user_id").cast("string")), 8)
         % 2
     ).cast("int")
     base = ev.groupBy("user_id").agg(

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.text import md5_bits
 from ..sources import table
 from . import query
 
@@ -1192,19 +1193,7 @@ def a369_csv_escape_roundtrip(spark, sf_dir):
         .schema("doc_id bigint, payload string")
         .csv(path)
     )
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("doc_id").cast("string"), F.lit("|"), "payload"
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = md5_bits(F.concat(F.col("doc_id").cast("string"), F.lit("|"), "payload"), 15)
     return back.agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.sum(F.length("payload")).cast("bigint").alias("total_chars"),
@@ -1339,9 +1328,7 @@ def a392_binary_codec_battery(spark, sf_dir):
         .cast("int")
         .alias("ok"),
     )
-    h = F.conv(
-        F.substring(F.md5(F.concat("b64", F.lit("|"), "hx")), 1, 15), 16, 10
-    ).cast("bigint")
+    h = md5_bits(F.concat("b64", F.lit("|"), "hx"), 15)
     return verified.agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum("ok").cast("bigint").alias("n_roundtrip_ok"),

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from ..functions.text import tokens
+from ..functions.text import md5_bits, tokens
 from ..sources import table
 from . import query
 from ..operators.core import literal_frame
@@ -283,16 +283,7 @@ def q161_countmin_sketch(spark, sf_dir):
         F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("token")
     )
     rs = spark.range(4).select(F.col("id").cast("int").alias("r"))
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("#", F.col("token"), F.col("r"))), 1, 4
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 64
-    )
+    bucket = (md5_bits(F.concat_ws("#", F.col("token"), F.col("r")), 4) % 64)
     hashed = tok.crossJoin(F.broadcast(rs)).select(
         "token", "r", bucket.alias("bucket")
     )
@@ -537,15 +528,7 @@ def q330_bottomk_distinct_sketch(spark, sf_dir):
         .filter(F.col("shingle").isNotNull())
         .select(
             "source",
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("kmv|"), F.col("shingle"))), 1, 15
-                ),
-                16,
-                10,
-            )
-            .cast("bigint")
-            .alias("h"),
+            md5_bits(F.concat(F.lit("kmv|"), F.col("shingle")), 15).alias("h"),
         )
         .distinct()
         .localCheckpoint(eager=False)
@@ -708,13 +691,7 @@ def a567_hll_oracled(spark, sf_dir):
     is part of the output."""
     li = table(spark, sf_dir, "lineitem")
     vals = li.select(F.col("l_orderkey").alias("v")).distinct()
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("hll|"), F.col("v").cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = md5_bits(F.concat(F.lit("hll|"), F.col("v").cast("string")), 15)
     hashed = vals.select(h.alias("h")).localCheckpoint(eager=False)
     reg = hashed.select(
         (F.col("h") % _HLL_M).alias("bucket"),

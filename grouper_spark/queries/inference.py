@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from ..functions.text import md5_bits
 from ..sources import table
 from . import query
 from ..operators.core import collect_bounded, literal_frame
@@ -3689,7 +3690,7 @@ def a497_weighted_reservoir(spark, sf_dir):
     per-partition heap serves it)."""
     d = table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
     uni = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("wr|"), F.col("doc_id").cast("string"))), 1, 13), 16, 10).cast("bigint")
+        md5_bits(F.concat(F.lit("wr|"), F.col("doc_id").cast("string")), 13)
         + 1.0
     ) / 4503599627370497.0
     keyed = d.select(

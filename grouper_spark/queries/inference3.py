@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from ..functions.text import md5_bits
 from ..sources import table
 from . import query
 from ..operators.core import literal_frame
@@ -2591,22 +2592,15 @@ def a168_hash_bootstrap_se(spark, sf_dir):
     )
     reps = spark.range(32).select(F.col("id").alias("b"))
     u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("bs|"),
-                        F.col("user_id").cast("string"),
-                        F.lit("|"),
-                        F.col("b").cast("string"),
-                    )
-                ),
-                1,
-                6,
+        md5_bits(
+            F.concat(
+                F.lit("bs|"),
+                F.col("user_id").cast("string"),
+                F.lit("|"),
+                F.col("b").cast("string"),
             ),
-            16,
-            10,
-        ).cast("bigint")
+            6,
+        )
         % 1000000
     )
     drawn = peruser.crossJoin(F.broadcast(reps)).select(

@@ -26,6 +26,7 @@ import math
 
 from pyspark.sql import Window, functions as F
 
+from ..functions.text import md5_bits
 from ..sources import table
 from . import query
 from ..operators.core import collect_bounded, literal_frame
@@ -2230,19 +2231,7 @@ def a196_partition_balance_audit(spark, sf_dir):
     o = table(spark, sf_dir, "orders")
     h = o.select(
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("pb|"), F.col("o_orderkey").cast("string")
-                        )
-                    ),
-                    1,
-                    13,
-                ),
-                16,
-                10,
-            ).cast("bigint")
+            md5_bits(F.concat(F.lit("pb|"), F.col("o_orderkey").cast("string")), 13)
             % 32
         ).alias("bucket")
     )

@@ -2717,7 +2717,7 @@ def a216_twin_alignment_audit(spark, sf_dir):
     (zip_with + integer aggregate — no explode, no order-sensitive
     double sum); the panel is rank-bounded at 256 so the pair stage is
     a fixed 32640 comparisons at ANY corpus scale."""
-    from ..functions.vector import l2_norm
+    from ..functions.vector import unit_fixed
 
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -2741,16 +2741,10 @@ def a216_twin_alignment_audit(spark, sf_dir):
             F.array(F.element_at("v", 1) + delta), F.slice("v", 2, 63)
         ).alias("tv"),
     )
-    nv = l2_norm(F.col("v"))
-    nt = l2_norm(F.col("tv"))
     uf = tw.select(
         "vec_id",
-        F.transform(
-            "v", lambda x: F.round(1000.0 * x / nv, 0).cast("bigint")
-        ).alias("uf"),
-        F.transform(
-            "tv", lambda x: F.round(1000.0 * x / nt, 0).cast("bigint")
-        ).alias("tuf"),
+        unit_fixed("v", 1000.0).alias("uf"),
+        unit_fixed("tv", 1000.0).alias("tuf"),
     ).localCheckpoint(eager=False)
     d2_twin = F.expr(
         "aggregate(zip_with(uf, tuf, (x, y) -> (x - y) * (x - y)),"
@@ -2877,7 +2871,7 @@ def a229_cka_quantization_audit(spark, sf_dir):
     order-insensitive integer arithmetic, with three scalar doubles at
     the end. The dim-pair fan-out is 256 x 64 x 64 = 1M rows at ANY
     corpus scale."""
-    from ..functions.vector import l2_norm
+    from ..functions.vector import unit_fixed
 
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -2888,13 +2882,7 @@ def a229_cka_quantization_audit(spark, sf_dir):
         ).alias("hv"),
     )
     panel = e.orderBy("hv", "vec_id").limit(256).select("vec_id", "v")
-    nv = l2_norm(F.col("v"))
-    uf = panel.select(
-        "vec_id",
-        F.transform(
-            "v", lambda x: F.round(1000.0 * x / nv, 0).cast("bigint")
-        ).alias("uf"),
-    )
+    uf = panel.select("vec_id", unit_fixed("v", 1000.0).alias("uf"))
     comp = uf.select(
         "vec_id", F.posexplode("uf").alias("d0", "x")
     ).select(

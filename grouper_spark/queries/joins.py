@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.text import money_sum
+from ..functions.text import md5_bits, money_sum
 from ..sources import table
 from . import query
 from ._sqlgen import sql_money_sum
@@ -664,10 +664,7 @@ def q222_grid_spatial_join(spark, sf_dir):
     implicit: each unordered pair meets exactly once per shared cell,
     and .distinct() collapses multi-cell meets."""
     s = table(spark, sf_dir, "supplier")
-    h = lambda a, b: (  # noqa: E731
-        F.conv(F.substring(F.md5(F.col("id").cast("string")), a, b), 16, 10)
-        .cast("bigint")
-    )
+    h = lambda a, b: md5_bits(F.col("id").cast("string"), b, a)  # noqa: E731
     pts = s.select(F.col("s_suppkey").alias("id")).select(
         "id", (h(1, 6) % 1000).alias("x"), (h(7, 6) % 1000).alias("y")
     ).localCheckpoint(eager=False)
@@ -958,19 +955,7 @@ def q262_bloom_fpr_audit(spark, sf_dir):
 
     def pos(col, s):
         return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit(f"bfa{s}|"), F.col(col).cast("string")
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("bigint")
+            md5_bits(F.concat(F.lit(f"bfa{s}|"), F.col(col).cast("string")), 15)
             % _BF_BITS
         )
 
@@ -1183,13 +1168,7 @@ def q294_hotspot_analysis(spark, sf_dir):
     expression stays engine-side on the literal (cell × moments)
     frame, so its IEEE sequence is unchanged."""
     c = table(spark, sf_dir, "customer")
-    h = lambda a, b: (  # noqa: E731
-        F.conv(
-            F.substring(F.md5(F.col("c_custkey").cast("string")), a, b),
-            16,
-            10,
-        ).cast("bigint")
-    )
+    h = lambda a, b: md5_bits(F.col("c_custkey").cast("string"), b, a)  # noqa: E731
     pts = c.select(
         (h(1, 6) % 1000).alias("x"), (h(7, 6) % 1000).alias("y")
     )

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import md5_bits, tokens
 from ..sources import table
 from . import query
 from ..operators.core import literal_frame
@@ -267,9 +267,7 @@ def q152_dsir_importance(spark, sf_dir):
     ).select(
         "doc_id",
         "source",
-        F.conv(F.substring(F.md5("token"), 1, 2), 16, 10)
-        .cast("bigint")
-        .alias("bucket"),
+        md5_bits("token", 2).alias("bucket"),
     )
     tgt = (
         feat.filter(F.col("source") == "src18")
@@ -356,11 +354,7 @@ def q162_span_corruption(spark, sf_dir):
         "doc_id", F.split(F.trim("text"), r"\s+").alias("toks")
     ).withColumn("n", F.size("toks"))
     sized = t.filter(F.col("n") >= 8)
-    s = 2 + (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("bigint")
-        % (F.col("n") - 4)
-    )
+    s = 2 + (md5_bits(F.col("doc_id").cast("string"), 4) % (F.col("n") - 4))
     pick = sized.withColumn("s", s)
     prefix = F.array_join(
         F.slice(F.col("toks"), 1, (F.col("s") - 1).cast("int")), " "
@@ -488,8 +482,8 @@ def q196_feature_hashing(spark, sf_dir):
 
     d = ensure_parallelism(table(spark, sf_dir, "documents"))
     tok = d.select("doc_id", F.explode(tokens("text")).alias("tok"))
-    h8 = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint")
-    h1 = F.conv(F.substring(F.md5("tok"), 9, 1), 16, 10).cast("bigint")
+    h8 = md5_bits("tok", 8)
+    h1 = md5_bits("tok", 1, 9)
     hashed = tok.select(
         "doc_id",
         (h8 % 64).alias("bucket"),
@@ -1524,13 +1518,7 @@ def a409_hash_collision_audit(spark, sf_dir):
         .distinct()
     )
     hashed = vocab.select(
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("fh|"), "token")), 1, 8),
-            16,
-            10,
-        )
-        .cast("bigint")
-        .alias("h")
+        md5_bits(F.concat(F.lit("fh|"), "token"), 8).alias("h")
     ).select(F.pmod("h", F.lit(_FH_BUCKETS)).alias("bucket"))
     m = hashed.agg(
         F.count("*").cast("bigint").alias("n_tokens"),

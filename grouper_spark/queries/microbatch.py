@@ -9,6 +9,7 @@ import uuid
 
 from pyspark.sql import functions as F
 
+from ..functions.text import md5_bits
 from ..sources import table
 from ..streaming import (
     grouper_process_stream,
@@ -826,26 +827,12 @@ def a465_join_view_maintenance(spark, sf_dir):
         F.round(F.col("o_totalprice") * 100.0, 0)
         .cast("bigint")
         .alias("cents"),
-        (
-            F.conv(
-                F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 4),
-                16,
-                10,
-            ).cast("bigint")
-            % 3
-        ).alias("b"),
+        (md5_bits(F.col("o_orderkey").cast("string"), 4) % 3).alias("b"),
     ).localCheckpoint(eager=False)
     c = table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_mktsegment",
-        (
-            F.conv(
-                F.substring(F.md5(F.col("c_custkey").cast("string")), 1, 4),
-                16,
-                10,
-            ).cast("bigint")
-            % 3
-        ).alias("b"),
+        (md5_bits(F.col("c_custkey").cast("string"), 4) % 3).alias("b"),
     ).localCheckpoint(eager=False)
 
     def agg_join(orders_df, cust_df):

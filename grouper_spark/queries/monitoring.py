@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from ..functions.text import md5_bits
 from ..sources import table
 from . import query
 from ..operators.core import literal_frame
@@ -1046,8 +1047,7 @@ def q219_ab_test_ztest(spark, sf_dir):
     corpus-sized shuffle."""
     ev = table(spark, sf_dir, "events")
     variant = F.when(
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
+        md5_bits(F.col("user_id").cast("string"), 8)
         % 2
         == 0,
         "A",
@@ -1510,18 +1510,7 @@ def q259_cuped_adjustment(spark, sf_dir):
         .cast("bigint")
         .alias("post_cents"),
     ).select(
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("cuped|"), F.col("user_id").cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 2
-        )
+        (md5_bits(F.concat(F.lit("cuped|"), F.col("user_id").cast("string")), 8) % 2)
         .cast("int")
         .alias("variant"),
         "pre_cents",
@@ -1970,22 +1959,7 @@ def q282_delta_method_ratio(spark, sf_dir):
         .cast("bigint")
         .alias("y"),
     ).select(
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("dm|"), F.col("user_id").cast("string")
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 2
-        )
+        (md5_bits(F.concat(F.lit("dm|"), F.col("user_id").cast("string")), 8) % 2)
         .cast("int")
         .alias("variant"),
         "x",
@@ -2255,15 +2229,7 @@ def q308_sprt_monitor(spark, sf_dir):
 
     ev = table(spark, sf_dir, "events")
     arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("sp|"), F.col("user_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_bits(F.concat(F.lit("sp|"), F.col("user_id").cast("string")), 8)
         % 2
     ).cast("int")
     subj = ev.groupBy("user_id").agg(
@@ -2507,15 +2473,7 @@ def q318_srm_check(spark, sf_dir):
     test are the arms the other readouts use."""
     ev = table(spark, sf_dir, "events")
     variant = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("fz|"), F.col("user_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_bits(F.concat(F.lit("fz|"), F.col("user_id").cast("string")), 8)
         % 2
     ).cast("int")
     arms = ev.select("user_id").distinct().select(variant.alias("variant"))
@@ -2714,22 +2672,7 @@ def q323_difference_in_differences(spark, sf_dir):
         .cast("bigint")
         .alias("post_cents"),
     ).select(
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("did|"), F.col("user_id").cast("string")
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 2
-        )
+        (md5_bits(F.concat(F.lit("did|"), F.col("user_id").cast("string")), 8) % 2)
         .cast("int")
         .alias("treated"),
         (F.col("post_cents") - F.col("pre_cents")).alias("delta"),
@@ -5325,22 +5268,15 @@ def a414_bootstrap_ci(spark, sf_dir):
     picks = grid.select(
         "b",
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("bs|"),
-                            F.col("b").cast("string"),
-                            F.lit("|"),
-                            F.col("slot").cast("string"),
-                        )
-                    ),
-                    1,
-                    15,
+            md5_bits(
+                F.concat(
+                    F.lit("bs|"),
+                    F.col("b").cast("string"),
+                    F.lit("|"),
+                    F.col("slot").cast("string"),
                 ),
-                16,
-                10,
-            ).cast("bigint")
+                15,
+            )
             % F.col("n_days")
             + 1
         ).alias("idx"),

@@ -20,6 +20,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.text import md5_bits
 from ..sources import table
 from . import query
 
@@ -365,11 +366,7 @@ def q199_phash_neardup(spark, sf_dir):
     banding join. The oracle brute-forces all pairs; the Spark plan is
     the posting-list band join — never corpus x corpus."""
     d = table(spark, sf_dir, "documents")
-    base = F.conv(
-        F.substring(F.md5(F.concat("lang", F.lit("|"), "source")), 1, 15),
-        16,
-        10,
-    ).cast("bigint")
+    base = md5_bits(F.concat("lang", F.lit("|"), "source"), 15)
     p1 = F.expr("shiftleft(1L, CAST(doc_id % 60 AS INT))")
     p2 = F.expr("shiftleft(1L, CAST((doc_id DIV 60) % 60 AS INT))")
     ph = d.select(

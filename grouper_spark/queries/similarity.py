@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from ..functions.text import md5_bits
 from ..functions.vector import cosine_similarity, dot, l2_norm
 from ..operators import ann_topk_bruteforce, ivf_ann, lsh_bucket_ann, lsh_neardup_pairs
 from ..sources import table
@@ -250,13 +251,7 @@ def q83_neardup_lsh_rerank(spark, sf_dir):
         F.count(F.when(F.col("vec_id") % 2 == 0, 1)).alias("n_even"),
         F.first(F.size("embedding")).alias("d"),
     ).first()
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("tw|"), F.col("vec_id").cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = md5_bits(F.concat(F.lit("tw|"), F.col("vec_id").cast("string")), 15)
     delta = F.lit(0.02) + (h % F.lit(60001)).cast("double") / F.lit(1e6)
     # One scan emits original + planted twin together (explode of a 1-
     # or 2-element struct array) instead of the former base.unionAll(
@@ -529,7 +524,7 @@ def q144_semantic_dedup(spark, sf_dir):
     def d_fp_to(cv: list):
         arr = ", ".join(f"CAST('{x!r}' AS DOUBLE)" for x in cv)
         return F.expr(
-            f"aggregate(zip_with(v, array({arr}), (x, c) ->"
+            f"aggregate(zip_with(`v`, array({arr}), (x, c) ->"
             " CAST(ROUND((x - c) * (x - c)"
             " * CAST(1000000000000.0 AS DOUBLE), 0) AS BIGINT)),"
             " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
@@ -1683,19 +1678,15 @@ def a570_isotropy_audit(spark, sf_dir):
     (|S_d| ≤ 1000·n so S² fits 2⁶³ through sf10) and the two output
     ratios closed-form doubles. At 100 TB this is one pass and a
     64-row reduction."""
-    from ..functions.vector import l2_norm
+    from ..functions.vector import unit_fixed
     from ..operators.core import ensure_parallelism
 
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    norm = l2_norm(F.col("v"))
     u = ensure_parallelism(e).select(
-        "vec_id",
-        F.transform(
-            "v", lambda x: F.round(1000.0 * x / norm, 0).cast("bigint")
-        ).alias("uf"),
+        "vec_id", unit_fixed("v", 1000.0).alias("uf")
     )
     comp = u.select(
         "vec_id", F.posexplode("uf").alias("dim0", "c")
@@ -2683,21 +2674,14 @@ def a454_hopkins_statistic(spark, sf_dir):
                 F.sequence(F.lit(0), F.lit(63)),
                 lambda p: F.get(F.col("lo"), p)
                 + (
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.col("pid").cast("string"),
-                                    F.lit("_"),
-                                    p.cast("string"),
-                                )
-                            ),
-                            1,
-                            8,
+                    md5_bits(
+                        F.concat(
+                            F.col("pid").cast("string"),
+                            F.lit("_"),
+                            p.cast("string"),
                         ),
-                        16,
-                        10,
-                    ).cast("bigint")
+                        8,
+                    )
                     / 4294967296.0
                 )
                 * (F.get(F.col("hi"), p) - F.get(F.col("lo"), p)),

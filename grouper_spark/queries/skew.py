@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from . import query
+from ..functions.text import md5_bits
 from ..sources import table
 
 _VOCAB = 2000  # content-token vocabulary; df per token ~ 12·0.8·n/2000
@@ -71,22 +72,15 @@ def _derived_corpus(spark, sf_dir):
     ids = table(spark, sf_dir, "documents").select("doc_id")
 
     def content_tok(i):
-        h = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("sk|"),
-                        F.col("doc_id").cast("string"),
-                        F.lit("|"),
-                        i.cast("string"),
-                    )
-                ),
-                1,
-                8,
+        h = md5_bits(
+            F.concat(
+                F.lit("sk|"),
+                F.col("doc_id").cast("string"),
+                F.lit("|"),
+                i.cast("string"),
             ),
-            16,
-            10,
-        ).cast("bigint")
+            8,
+        )
         return F.concat(F.lit("tok"), (h % _VOCAB).cast("string"))
 
     content = F.concat_ws(
@@ -174,7 +168,7 @@ def a547_skew_corpus_audit(spark, sf_dir):
         .when(F.col("doc_id") % 2 == 0, F.lit("hot"))
         .otherwise(F.lit("plain"))
     )
-    sig = F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("bigint")
+    sig = md5_bits("text", 15)
     return (
         d.select(
             cls.alias("doc_class"),
@@ -414,13 +408,7 @@ def a550_skew_minhash_capped(spark, sf_dir):
     )
 
     def perm_hash(p: int):
-        return F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"mh{p}|"), F.col("sh"))), 1, _MH_HEX
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        return md5_bits(F.concat(F.lit(f"mh{p}|"), F.col("sh")), _MH_HEX)
 
     sigs = (
         sh.groupBy("doc_id")

@@ -11,7 +11,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.text import normalized_text, token_count, tokens
+from ..functions.text import (
+    md5_bits,
+    normalized_text,
+    token_count,
+    tokens,
+    word_ngrams,
+)
 from ..sources import table
 from . import query
 
@@ -739,22 +745,11 @@ def a556_winnowing_fingerprint(spark, sf_dir):
     ).filter(F.size("ts") >= _WINNOW_K)
     grams = toks.select(
         "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("ts") - (_WINNOW_K - 1)),
-                lambda i: F.array_join(F.slice("ts", i, _WINNOW_K), " "),
-            )
-        ).alias("p0", "gram"),
+        F.posexplode(word_ngrams(F.col("ts"), _WINNOW_K)).alias("p0", "gram"),
     ).select(
         "doc_id",
         (F.col("p0") + 1).cast("bigint").alias("pos"),
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("wn|"), F.col("gram"))), 1, _WN_HEX),
-            16,
-            10,
-        )
-        .cast("bigint")
-        .alias("h"),
+        md5_bits(F.concat(F.lit("wn|"), F.col("gram")), _WN_HEX).alias("h"),
     )
     frame = (
         W.partitionBy("doc_id")

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from ..functions.text import md5_bits
 from ..sources import table
 from . import query
 from ..operators.core import literal_frame
@@ -204,19 +205,7 @@ def q140_table_checksum(spark, sf_dir):
     aggregate per shard; the 100 TB cost is a single scan, and two
     tables can be compared by exchanging only their checksum rows."""
     d = table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "|", F.col("doc_id").cast("string"), F.md5("text")
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = md5_bits(F.concat_ws("|", F.col("doc_id").cast("string"), F.md5("text")), 15)
     return (
         d.select("source", h.alias("h"))
         .groupBy("source")
@@ -867,25 +856,18 @@ def q252_merkle_range_diff(spark, sf_dir):
     )
 
     def fingerprints(df, n_col, s_col):
-        row_hash = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        F.col("o_orderkey").cast("string"),
-                        F.col("o_custkey").cast("string"),
-                        F.col("o_orderstatus"),
-                        F.round(F.col("o_totalprice") * 100.0, 0)
-                        .cast("bigint")
-                        .cast("string"),
-                    )
-                ),
-                1,
-                15,
+        row_hash = md5_bits(
+            F.concat_ws(
+                "|",
+                F.col("o_orderkey").cast("string"),
+                F.col("o_custkey").cast("string"),
+                F.col("o_orderstatus"),
+                F.round(F.col("o_totalprice") * 100.0, 0)
+                .cast("bigint")
+                .cast("string"),
             ),
-            16,
-            10,
-        ).cast("bigint")
+            15,
+        )
         return df.groupBy(
             (F.col("o_orderkey") % _MERKLE_BUCKETS).alias("bucket")
         ).agg(

@@ -4,10 +4,17 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
-from grouper_spark.functions.text import money, tokens, word_shingles
-from grouper_spark.functions.vector import cosine_similarity
+from grouper_spark.functions.text import (
+    md5_bits,
+    money,
+    tokens,
+    word_ngrams,
+    word_shingles,
+)
+from grouper_spark.functions.vector import cosine_similarity, l2_norm, unit_fixed
 from grouper_spark.operators import (
     ann_topk_bruteforce,
     asof_join,
@@ -413,3 +420,166 @@ def test_asof_join_tolerance_nulls_stale_matches(spark):
     }
     assert got["fresh"] == (ts(2024, 1, 1, 9, 59), 7.0)
     assert got["stale"] == (None, None)
+
+
+# Reference builders: the per-element formulations the shared kernels
+# replaced. Their lambdas re-evaluate the outer token array / norm per
+# element (O(w²) / O(d²)), but their rows are the contract.
+def _ref_tokens(col):
+    return F.filter(F.split(F.trim(F.col(col)), r"\s+"), lambda t: t != "")
+
+
+def _ref_ngrams(col, n):
+    toks = _ref_tokens(col)
+    k = F.size(toks) - F.lit(n - 1)
+    return F.when(k < 1, F.array().cast("array<string>")).otherwise(
+        F.transform(
+            F.sequence(F.lit(1), k),
+            lambda i: F.array_join(F.slice(toks, i, n), " "),
+        )
+    )
+
+
+def _ref_shingles(col, n):
+    toks = _ref_tokens(col)
+    k = F.size(toks) - F.lit(n - 1)
+    return F.when(k < 1, F.array().cast("array<string>")).otherwise(
+        F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(1), k),
+                lambda i: F.array_join(F.slice(toks, i, n), " "),
+            )
+        )
+    )
+
+
+_ADVERSARIAL_TEXTS = [
+    "",
+    None,
+    "   ",
+    "\t\n",
+    "a",
+    "a b",
+    "a b c",
+    "a\tb\nc  d",
+    " lead and trail ",
+    "nbsp\u00a0inside a word",
+    "漢字 かな 漢字 かな 漢字",
+    "a a a a a a b a b a b",
+    " ".join(f"w{i % 17}" for i in range(120)),
+]
+
+
+def test_word_kernels_match_reference_builders(spark):
+    df = spark.createDataFrame(
+        list(enumerate(_ADVERSARIAL_TEXTS)), "id int, text string"
+    )
+
+    def rows(col):
+        return df.select("id", col.alias("x")).orderBy("id").collect()
+
+    assert rows(tokens("text")) == rows(_ref_tokens("text"))
+    for n in (1, 2, 3, 5, 8):
+        assert rows(word_ngrams(tokens("text"), n)) == rows(
+            _ref_ngrams("text", n)
+        ), n
+        assert rows(word_shingles("text", n)) == rows(
+            _ref_shingles("text", n)
+        ), n
+
+
+def test_word_shingles_plan_tokenizes_once(spark):
+    df = spark.createDataFrame([(1, "a b c d")], "id int, text string")
+    plan = (
+        df.select(word_shingles("text", 3).alias("s"))
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    assert plan.count("split(") == 1, plan
+
+
+def test_unit_fixed_matches_inline_quantiser(spark, sf_dir):
+    from grouper_spark.sources import table
+
+    e = table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+    )
+    norm = l2_norm(F.col("v"))
+    ref = F.transform(
+        "v", lambda x: F.round(1000.0 * x / norm, 0).cast("bigint")
+    )
+    got = e.select("vec_id", unit_fixed("v", 1000.0).alias("u"))
+    want = e.select("vec_id", ref.alias("u"))
+    assert got.count() > 0
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+def test_unit_fixed_plan_has_one_norm_outside_the_lambda(spark):
+    df = spark.createDataFrame([(1, [3.0, 4.0])], "id int, v array<double>")
+    plan = (
+        df.select(unit_fixed("v", 1000.0).alias("u"))
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    assert plan.count("aggregate(") == 1, plan
+    assert "array_repeat(SQRT(aggregate(" in plan, plan
+    assert df.select(unit_fixed("v", 1000.0)).first()[0] == [600, 800]
+
+
+def test_md5_bits_is_the_hand_rolled_expression(spark):
+    a, b = 7, 6  # a non-literal (start, digits) pair, as q222 passes them
+    for col, digits, start in [
+        (F.col("c"), 15, 1),
+        ("tok", 1, 9),
+        (F.col("id").cast("string"), b, a),
+    ]:
+        hand = F.conv(F.substring(F.md5(col), start, digits), 16, 10)
+        got = md5_bits(col, digits) if start == 1 else md5_bits(col, digits, start)
+        assert str(got) == str(hand.cast("bigint"))
+
+
+def _fold_sign_bucket(v, planes):
+    bucket = 0
+    for i, p in enumerate(planes):
+        acc = 0.0
+        for x, y in zip(v, p):
+            acc = acc + float(x) * y
+        if acc >= 0:
+            bucket += 2**i
+    return bucket
+
+
+def test_lsh_bucket_matches_python_fold_and_any_column_name(spark, sf_dir):
+    from grouper_spark.operators.similarity import _bucket_col, random_hyperplanes
+    from grouper_spark.sources import table
+
+    planes = random_hyperplanes(64, 6, 42)
+    e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    got = {
+        r["vec_id"]: r["b"]
+        for r in e.select("vec_id", _bucket_col("embedding", planes).alias("b"))
+        .collect()
+    }
+    vecs = {r["vec_id"]: r["embedding"] for r in e.collect()}
+    assert got == {i: _fold_sign_bucket(v, planes) for i, v in vecs.items()}
+    assert len(set(got.values())) > 1
+    spaced = e.withColumnRenamed("embedding", "my `vec")
+    assert {
+        r["vec_id"]: r["b"]
+        for r in spaced.select(
+            "vec_id", _bucket_col("my `vec", planes).alias("b")
+        ).collect()
+    } == got
+
+
+def test_lsh_bucket_width_mismatch_raises(spark):
+    from grouper_spark.operators import lsh_bucket_ann
+
+    rows = [(i, [float((i * 7 + j) % 5) - 2.0 for j in range(32)]) for i in range(6)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(Exception, match="plane width 64"):
+        lsh_bucket_ann(df, df.filter("vec_id < 2"), k=2, dim=64).collect()
