@@ -18,8 +18,8 @@ Layout
 - ``streaming``  : the Grouper micro-batch layer (reference semantics on
                    Structured Streaming / Spark batches). The in-process
                    engine needs only the stdlib; pyspark is imported when
-                   a stream helper is first accessed, or used through the
-                   caller's session with ``dataframe_fn=True``.
+                   a stream helper (such as the ``dataframe_proc_fn``
+                   adapter) is first accessed.
 """
 
 __version__ = "0.1.0"

@@ -109,7 +109,7 @@ ORDER BY window_start
 )
 def q25_tumbling_window(spark, sf_dir):
     """1-hour tumbling event-time window via native window() — identical
-    code works under readStream + withWatermark."""
+    code works on a streaming read + withWatermark."""
     e = table(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "1 hour").alias("w"))

@@ -15,11 +15,11 @@ from .grouper import Grouper, Request, shutdown, start, submit
 _STREAM_EXPORTS = (
     "grouper_process_stream",
     "append_stream_file",
+    "dataframe_proc_fn",
     "stage_stream_source",
     "stateful_extrema",
     "stateful_running_sum",
     "stateful_sessionize",
-    "transform_with_state_extrema",
 )
 
 __all__ = ["Grouper", "Request", "start", "submit", "shutdown", *_STREAM_EXPORTS]

@@ -46,18 +46,19 @@ Spark world. Preserved invariants (SURVEY.md §2.B):
     that executor does, and shutdown() still shuts it down
     (core.clj:64-66 shuts the pool down unconditionally).
 
-Spark integration: ``proc_fn`` may be a plain ``seq -> seq`` function
-(reference-style, runs on the dispatcher/pool thread) or a
-``DataFrame -> DataFrame`` transform (``dataframe_fn=True``) receiving
-the batch as ``(idx: long, value)`` rows and returning ``(idx, result)``
-— the scalable path, where the batch function is a real Spark plan.
-For continuous sources use ``grouper_process_stream`` (Structured
-Streaming foreachBatch with the same normalization semantics).
+Spark integration: ``proc_fn`` is a plain ``seq -> seq`` function
+(reference-style, runs on the dispatcher/pool thread). A
+``DataFrame -> DataFrame`` batch function goes in through
+``grouper_spark.streaming.dataframe_proc_fn(spark, fn)``, which hands
+the batch over as ``(idx: long, value)`` rows and maps the returned
+``(idx, result)`` rows back to positions. For continuous sources use
+``grouper_process_stream`` (Structured Streaming foreachBatch with the
+same normalization semantics).
 
 This module needs only the standard library: importing it, or the
 ``grouper_spark.streaming`` package, does not import pyspark. Spark is
-touched only through the caller's own session when
-``dataframe_fn=True``, or when a stream helper is first accessed.
+imported only when a stream helper, such as ``dataframe_proc_fn``, is
+first accessed.
 """
 
 from __future__ import annotations
@@ -153,8 +154,6 @@ class Grouper:
         capacity: int,
         interval: float | None = None,
         pool: int | None = None,
-        spark=None,
-        dataframe_fn: bool = False,
     ) -> None:
         # Option validation mirroring the reference's :pre asserts
         # (core.clj:111-117), surfaced as Python exceptions.
@@ -173,8 +172,6 @@ class Grouper:
             raise ValueError(
                 "pool must be a positive int, an executor instance, or None"
             )
-        if dataframe_fn and spark is None:
-            raise ValueError("dataframe_fn=True requires a SparkSession")
 
         self._proc_fn = proc_fn
         self._interval_s = None if interval is None else interval / 1000.0
@@ -194,8 +191,6 @@ class Grouper:
         else:
             self._executor = None
             self._slots = None
-        self._spark = spark
-        self._dataframe_fn = dataframe_fn
         self._running = True
         self._wake = threading.Condition()
         self._notified = False
@@ -254,10 +249,6 @@ class Grouper:
 
     def __exit__(self, *exc) -> None:
         self.shutdown()
-
-    @property
-    def running(self) -> bool:
-        return self._running
 
     def is_running(self) -> bool:
         """SPI parity with the reference's IGrouper.isRunning
@@ -325,17 +316,6 @@ class Grouper:
 
     # -- batch apply (body-fn, core.clj:68-83) ------------------------------
 
-    def _apply_proc(self, objs: list[Any]) -> Any:
-        if self._dataframe_fn:
-            df = self._spark.createDataFrame(
-                [(i, o) for i, o in enumerate(objs)], ["idx", "value"]
-            )
-            out = self._proc_fn(df)
-            rows = out.select("idx", "result").collect()
-            by_idx = {r["idx"]: r["result"] for r in rows}
-            return [by_idx.get(i) for i in range(len(objs))]
-        return self._proc_fn(objs)
-
     def _process_release(self, batch: list[Request]) -> None:
         try:
             self._process(batch)
@@ -345,7 +325,7 @@ class Grouper:
     def _process(self, batch: list[Request]) -> None:
         objs = [r.obj for r in batch]
         try:
-            result = self._apply_proc(objs)
+            result = self._proc_fn(objs)
             # Scalar broadcast (core.clj:73): non-sequence → every item.
             if isinstance(result, (str, bytes)) or not hasattr(result, "__iter__"):
                 results = [result] * len(batch)

@@ -10,18 +10,62 @@ batch transform and — crucially — implements the reference's
 function and emitting status/error columns instead of letting Spark's
 task-retry machinery re-run user side effects the reference would never
 re-run.
+
+Every replay reads its staged directory through ``_read_stream`` and
+runs to completion through ``_drain``. ``dataframe_proc_fn`` adapts a
+``DataFrame -> DataFrame`` batch function to the in-process
+``Grouper``.
 """
 
 from __future__ import annotations
 
+import glob
 import os
-from contextlib import contextmanager
+import shutil
 import tempfile
 import uuid
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+
+
+def _read_stream(
+    spark: SparkSession,
+    source_dir: str,
+    schema=None,
+    max_files_per_trigger: int = 1,
+) -> DataFrame:
+    """The one streaming reader: a parquet directory replayed at most
+    ``max_files_per_trigger`` files per micro-batch.
+
+    Pass the schema of the DataFrame that was staged; ``None`` reads it
+    back from the files, which costs one Spark job."""
+    if schema is None:
+        schema = spark.read.parquet(source_dir).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(source_dir)
+    )
+
+
+def _drain(
+    spark: SparkSession, writer: DataStreamWriter, memory: str | None = None
+) -> DataFrame | None:
+    """The one drain: start a configured writer with
+    ``Trigger.AvailableNow`` and wait until every available file is
+    processed (the reference's close/drain, core.clj:58-66).
+
+    ``memory`` names an in-memory sink (the prefix gets a unique
+    suffix); the sink's table is returned."""
+    name = None
+    if memory is not None:
+        name = f"{memory}_{uuid.uuid4().hex[:12]}"
+        writer = writer.format("memory").queryName(name)
+    writer.trigger(availableNow=True).start().awaitTermination()
+    return None if name is None else spark.table(name)
 
 
 def grouper_process_stream(
@@ -43,10 +87,9 @@ def grouper_process_stream(
       columns; a failing batch is recorded, not retried.
 
     Returns the accumulated result as a DataFrame read back from the
-    result sink.
+    result sink. The stream's checkpoint is removed on return: the
+    query is one-shot and its path is never handed out.
     """
-    if schema is None:
-        schema = spark.read.parquet(source_dir).schema
     if result_dir is None:
         result_dir = os.path.join(
             tempfile.gettempdir(), f"grouper-stream-{uuid.uuid4().hex}"
@@ -91,28 +134,30 @@ def grouper_process_stream(
                 F.lit(str(exc)).alias("error"),
             ).write.mode("append").parquet(result_dir + "-errors")
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    ckpt = os.path.join(tempfile.gettempdir(), f"grouper-ckpt-{uuid.uuid4().hex}")
+    writer = (
+        _read_stream(spark, source_dir, schema, max_files_per_trigger)
+        .writeStream.foreachBatch(handle_batch)
+        .option("checkpointLocation", ckpt)
     )
-    writer = stream.writeStream.foreachBatch(handle_batch).option(
-        "checkpointLocation",
-        os.path.join(tempfile.gettempdir(), f"grouper-ckpt-{uuid.uuid4().hex}"),
-    )
-    if interval_ms is None:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-    else:
-        query = writer.trigger(processingTime=f"{interval_ms} milliseconds").start()
-        query.processAllAvailable()
-        query.stop()
-    import glob as _glob
+    try:
+        if interval_ms is None:
+            _drain(spark, writer)
+        else:
+            query = writer.trigger(
+                processingTime=f"{interval_ms} milliseconds"
+            ).start()
+            try:
+                query.processAllAvailable()
+            finally:
+                query.stop()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
     # A batch that failed mid-action leaves result_dir existing but with no
     # committed part files (Spark's commit protocol aborts the task output),
     # so test for committed data, not the directory.
-    if not _glob.glob(os.path.join(result_dir, "*.parquet")):
+    if not glob.glob(os.path.join(result_dir, "*.parquet")):
         if seen["ok_schema"] is not None:
             # every batch succeeded but produced zero rows (empty
             # partitions commit no part files) → typed empty result
@@ -122,6 +167,62 @@ def grouper_process_stream(
             [], "batch_id long, status string, error string"
         )
     return spark.read.parquet(result_dir)
+
+
+def dataframe_proc_fn(
+    spark: SparkSession, proc_fn: Callable[[DataFrame], DataFrame]
+) -> Callable[[list], list]:
+    """Adapt a ``DataFrame -> DataFrame`` batch function to the
+    ``Grouper``'s ``seq -> seq`` ``proc_fn``.
+
+    Each batch goes in as ``(idx: long, value)`` rows, ``idx`` being the
+    item's position in the batch, and ``proc_fn`` returns
+    ``(idx, result)`` rows. Result *i* goes to item *i* whatever order
+    the plan emits rows in; an ``idx`` the output lacks gets ``None``
+    and one the batch does not have is ignored. An error raised while
+    the plan runs fails the whole batch, like any raising ``proc_fn``.
+    """
+
+    def proc(objs: list) -> list:
+        df = spark.createDataFrame(
+            [(i, o) for i, o in enumerate(objs)], ["idx", "value"]
+        )
+        rows = proc_fn(df).select("idx", "result").collect()
+        by_idx = {r["idx"]: r["result"] for r in rows}
+        return [by_idx.get(i) for i in range(len(objs))]
+
+    return proc
+
+
+def _keyed_state(
+    spark: SparkSession,
+    source_dir: str,
+    schema,
+    max_files_per_trigger: int,
+    key_col: str,
+    update: Callable,
+    *,
+    output: str,
+    state: str,
+    mode: str,
+    timeout: str,
+    sink: str,
+    watermark: tuple[str, str] | None = None,
+) -> DataFrame:
+    """Replay ``source_dir`` through ``applyInPandasWithState(update)``
+    keyed on ``key_col`` and return the emissions. Output mode ``mode``
+    applies to the operator and the sink alike."""
+    stream = _read_stream(spark, source_dir, schema, max_files_per_trigger)
+    if watermark is not None:
+        stream = stream.withWatermark(*watermark)
+    emitted = stream.groupBy(key_col).applyInPandasWithState(
+        update,
+        outputStructType=output,
+        stateStructType=state,
+        outputMode=mode,
+        timeoutConf=timeout,
+    )
+    return _drain(spark, emitted.writeStream.outputMode(mode), memory=sink)
 
 
 def stateful_running_sum(
@@ -149,9 +250,6 @@ def stateful_running_sum(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    if schema is None:
-        schema = spark.read.parquet(source_dir).schema
-
     def update(key, pdfs, state):
         n, tot = state.get if state.exists else (0, 0)
         for pdf in pdfs:
@@ -162,27 +260,14 @@ def stateful_running_sum(
             {"key": [key[0]], "n_seen": [n], "total_cents": [tot]}
         )
 
-    name = f"state_{uuid.uuid4().hex[:12]}"
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType="key bigint, n_seen bigint, total_cents bigint",
-            stateStructType="n bigint, tot bigint",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+    return _keyed_state(
+        spark, source_dir, schema, max_files_per_trigger, key_col, update,
+        output="key bigint, n_seen bigint, total_cents bigint",
+        state="n bigint, tot bigint",
+        mode="update",
+        timeout=GroupStateTimeout.NoTimeout,
+        sink="state",
     )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 def stateful_sessionize(
@@ -219,8 +304,6 @@ def stateful_sessionize(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    if schema is None:
-        schema = spark.read.parquet(source_dir).schema
     gap_us = gap_s * 1_000_000
 
     def update(key, pdfs, state):
@@ -266,30 +349,15 @@ def stateful_sessionize(
                 }
             )
 
-    name = f"sess_{uuid.uuid4().hex[:12]}"
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .withWatermark(ts_col, watermark_delay)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=(
-                "key bigint, start_us bigint, last_us bigint, n_events bigint"
-            ),
-            stateStructType="start_us bigint, last_us bigint, n bigint",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+    return _keyed_state(
+        spark, source_dir, schema, max_files_per_trigger, key_col, update,
+        output="key bigint, start_us bigint, last_us bigint, n_events bigint",
+        state="start_us bigint, last_us bigint, n bigint",
+        mode="append",
+        timeout=GroupStateTimeout.EventTimeTimeout,
+        sink="sess",
+        watermark=(ts_col, watermark_delay),
     )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 def stage_stream_source(
@@ -308,7 +376,6 @@ def stage_stream_source(
     file→micro-batch assignment, so with ``maxFilesPerTrigger=1`` the
     stream replays the same N batches in the same order every run.
     """
-    import glob
     import time
 
     if source_dir is None:
@@ -346,9 +413,6 @@ def append_stream_file(source_dir: str, df: DataFrame) -> None:
     trailing batches after the real data (an unbounded production stream
     gets them for free from ongoing traffic).
     """
-    import glob
-    import shutil
-
     existing = glob.glob(os.path.join(source_dir, "*.parquet"))
     latest = max(os.path.getmtime(f) for f in existing)
     tmp = os.path.join(tempfile.gettempdir(), f"grouper-app-{uuid.uuid4().hex}")
@@ -360,129 +424,6 @@ def append_stream_file(source_dir: str, df: DataFrame) -> None:
     os.utime(dest, (latest + 10, latest + 10))
 
 
-@contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Temporarily lower spark.sql.shuffle.partitions for a streaming
-    query that executes eagerly (availableNow + awaitTermination).
-
-    Stateful streaming disables AQE, so every state-store operator runs
-    with the full static shuffle width — 32 partitions × N micro-batches
-    of task overhead for state that fits in a handful. At scale you size
-    this to the state volume; for the fixture replays a narrow width is
-    the right plan. The conf is restored before the caller's batch
-    queries run."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
-def transform_with_state_extrema(
-    spark: SparkSession,
-    source_dir: str,
-    *,
-    key_col: str,
-    cents_col: str,
-    schema=None,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """Per-key running (count, min, max) via ``transformWithStateInPandas``
-    — Spark 4's arbitrary-state API (SPARK-49564), the successor to
-    ``applyInPandasWithState``: state lives in named, typed variables on
-    a ``StatefulProcessorHandle`` (ValueState here; ListState/MapState and
-    per-key timers are the same surface), so an operator can evolve its
-    state schema and register event-time timers without re-encoding a
-    monolithic state tuple.
-
-    The processor keeps one BIGINT triple per key in a ValueState and
-    re-emits the running triple every micro-batch (update mode). State
-    shuffles once on the key and lives in the per-partition state store;
-    the Arrow batch path keeps the Python hop vectorized. Integer cents
-    make the fold order-independent, so the final emission per key is
-    exactly the batch ``groupBy`` answer.
-
-    ENVIRONMENT GATE: the transformWithState state-server protocol
-    speaks protobuf from the Python side; without the ``protobuf``
-    package the TWS driver worker crashes at init. This operator raises
-    a clear ImportError up front instead (tests skip on it), and the
-    equivalent contract stays driver-checked through q57's
-    applyInPandasWithState path, which has no such dependency.
-    """
-    import pandas as pd
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise ImportError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(its state-server protocol); not available in this "
-            "environment — use stateful_running_sum "
-            "(applyInPandasWithState) instead"
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    if schema is None:
-        schema = spark.read.parquet(source_dir).schema
-
-    class ExtremaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState(
-                "agg", "n BIGINT, mn BIGINT, mx BIGINT"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            prev = self._agg.get() if self._agg.exists() else None
-            n, mn, mx = prev if prev is not None else (0, None, None)
-            for pdf in rows:
-                c = pdf[cents_col]
-                if len(c) == 0:
-                    continue
-                n += int(len(c))
-                bmn, bmx = int(c.min()), int(c.max())
-                mn = bmn if mn is None else min(mn, bmn)
-                mx = bmx if mx is None else max(mx, bmx)
-            self._agg.update((n, mn, mx))
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]],
-                    "n_seen": [n],
-                    "min_cents": [mn],
-                    "max_cents": [mx],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    name = f"tws_{uuid.uuid4().hex[:12]}"
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .groupBy(key_col)
-        .transformWithStateInPandas(
-            statefulProcessor=ExtremaProcessor(),
-            outputStructType=(
-                "key BIGINT, n_seen BIGINT, min_cents BIGINT, max_cents BIGINT"
-            ),
-            outputMode="Update",
-            timeMode="None",
-        )
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
-
-
 def stateful_extrema(
     spark: SparkSession,
     source_dir: str,
@@ -492,18 +433,13 @@ def stateful_extrema(
     schema=None,
     max_files_per_trigger: int = 1,
 ) -> DataFrame:
-    """Per-key running (count, min, max) via ``applyInPandasWithState`` —
-    the dependency-free twin of ``transform_with_state_extrema`` with the
-    IDENTICAL emission contract (``key, n_seen, min_cents, max_cents``
-    re-emitted every micro-batch, update mode), so callers can fall back
-    to it when the TWS protobuf gate fails and downstream reductions /
-    oracles are unaffected.
+    """Per-key running (count, min, max) via ``applyInPandasWithState``:
+    ``key, n_seen, min_cents, max_cents`` re-emitted every micro-batch
+    (update mode). Integer cents make the fold order-independent, so the
+    final emission per key is exactly the batch ``groupBy`` answer.
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    if schema is None:
-        schema = spark.read.parquet(source_dir).schema
 
     def update(key, pdfs, state):
         n, mn, mx = state.get if state.exists else (0, None, None)
@@ -525,27 +461,11 @@ def stateful_extrema(
             }
         )
 
-    name = f"extrema_{uuid.uuid4().hex[:12]}"
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=(
-                "key bigint, n_seen bigint, min_cents bigint, "
-                "max_cents bigint"
-            ),
-            stateStructType="n bigint, mn bigint, mx bigint",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+    return _keyed_state(
+        spark, source_dir, schema, max_files_per_trigger, key_col, update,
+        output="key bigint, n_seen bigint, min_cents bigint, max_cents bigint",
+        state="n bigint, mn bigint, mx bigint",
+        mode="update",
+        timeout=GroupStateTimeout.NoTimeout,
+        sink="extrema",
     )
-    q.awaitTermination()
-    return spark.table(name)

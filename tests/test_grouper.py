@@ -252,7 +252,21 @@ def test_proc_fn_must_be_callable():
         Grouper("not a function", capacity=5)
 
 
-# -- Spark DataFrame batch mode -------------------------------------------
+def test_grouper_options_are_the_reference_ones():
+    import inspect
+
+    assert list(inspect.signature(Grouper.__init__).parameters) == [
+        "self", "proc_fn", "capacity", "interval", "pool",
+    ]
+
+
+# -- Spark DataFrame batch functions through the adapter ------------------
+
+
+def _df_grouper(spark, df_fn, **kw):
+    from grouper_spark.streaming import dataframe_proc_fn
+
+    return make(dataframe_proc_fn(spark, df_fn), capacity=50, **kw)
 
 
 def test_dataframe_proc_fn(spark):
@@ -261,12 +275,68 @@ def test_dataframe_proc_fn(spark):
     def proc(df):
         return df.select("idx", (F.col("value") * 10).alias("result"))
 
-    with Grouper(
-        proc, capacity=50, interval=None, spark=spark, dataframe_fn=True
-    ) as g:
+    with _df_grouper(spark, proc) as g:
         futs = [g.submit(i) for i in range(5)]
         g.flush()
         assert [f.result(30) for f in futs] == [0, 10, 20, 30, 40]
+
+
+def test_dataframe_proc_fn_reordered_rows_keep_positions(spark):
+    """A plan that emits rows in another order still delivers result i
+    to submitter i: the hand-off is keyed on idx, not on row order."""
+    from pyspark.sql import functions as F
+
+    def proc(df):
+        return df.select(
+            "idx", (F.col("value") + 100).alias("result")
+        ).orderBy(F.col("idx").desc())
+
+    with _df_grouper(spark, proc) as g:
+        futs = [g.submit(i) for i in range(6)]
+        g.flush()
+        assert [f.result(30) for f in futs] == [100, 101, 102, 103, 104, 105]
+
+
+def test_dataframe_proc_fn_missing_idx_is_none_extra_ignored(spark):
+    from pyspark.sql import functions as F
+
+    def proc(df):
+        kept = df.filter(F.col("idx") != 1).select(
+            "idx", F.col("value").alias("result")
+        )
+        extra = df.limit(1).select(
+            F.lit(99).cast("long").alias("idx"), F.lit(-1).cast("long").alias("result")
+        )
+        return kept.unionByName(extra)
+
+    with _df_grouper(spark, proc) as g:
+        futs = [g.submit(i) for i in (10, 11, 12)]
+        g.flush()
+        assert [f.result(30) for f in futs] == [10, None, 12]
+
+
+def test_dataframe_proc_fn_execution_failure_fails_the_batch(spark):
+    """An error raised while the plan runs (not while it is built)
+    arrives as the value of every future in the batch and at every
+    errback."""
+    from pyspark.sql import functions as F
+
+    def proc(df):
+        return df.select(
+            "idx",
+            F.when(F.col("value") == 2, F.raise_error(F.lit("df-boom")))
+            .otherwise(F.col("value"))
+            .alias("result"),
+        )
+
+    errs = []
+    with _df_grouper(spark, proc) as g:
+        futs = [g.submit(i, errback=errs.append) for i in range(4)]
+        g.flush()
+        got = [f.result(30) for f in futs]
+    assert all(isinstance(r, Exception) and "df-boom" in str(r) for r in got)
+    assert len({id(r) for r in got}) == 1
+    assert len(errs) == 4 and all(e is got[0] for e in errs)
 
 
 # --- property-based invariants (hypothesis) ---------------------------------

@@ -144,6 +144,24 @@ def test_collect_vector_panel_id_types(spark, id_type):
     assert X.tolist() == [[1.0, 2.0], [3.0, 4.0]]
 
 
+def test_collect_vector_panel_raises_on_plan_error(spark):
+    """A panel whose plan fails while it runs raises out of the collect
+    instead of returning None, which would switch the caller to its
+    distributed algorithm and hide the error."""
+    from pyspark.sql import functions as F
+
+    from grouper_spark.operators.core import collect_vector_panel
+
+    df = spark.range(3).select(
+        "id",
+        F.when(F.col("id") == 1, F.raise_error(F.lit("panel-boom")))
+        .otherwise(F.array(F.col("id").cast("double"), F.lit(1.0)))
+        .alias("v"),
+    )
+    with pytest.raises(Exception, match="panel-boom"):
+        collect_vector_panel(df, "id", "v", 10)
+
+
 @pytest.mark.parametrize("cap", [5, 6, 100])
 def test_collect_bounded_at_or_under_cap_is_complete(spark, cap):
     """A panel of at most ``cap`` rows comes back whole."""

@@ -284,52 +284,54 @@ def test_stateful_sessionize_timeout_evicts_abandoned_keys(spark, tmp_path):
     assert got == [(1, 2), (2, 1), (2, 2)]
 
 
-def test_transform_with_state_extrema_or_env_gate(spark, sf_dir):
-    """transformWithStateInPandas path: runs the per-key extrema
-    processor end-to-end when protobuf is available; otherwise asserts
-    the operator fails fast with the documented ImportError instead of
-    crashing the TWS driver worker mid-stream."""
-    import pytest
-
+def test_stateful_extrema_matches_batch_groupby(spark, sf_dir):
+    """The final (count, min, max) emission per key of the streaming
+    extrema operator equals the batch groupBy over the same events."""
     from grouper_spark.functions.text import money
-    from grouper_spark.queries.microbatch import stage_stream_source
     from grouper_spark.sources import table
-    from grouper_spark.streaming.stream import transform_with_state_extrema
+    from grouper_spark.streaming import stage_stream_source, stateful_extrema
 
-    src = stage_stream_source(
-        table(spark, sf_dir, "events").select(
-            "user_id", money("value").alias("cents")
-        ),
-        2,
+    cents = table(spark, sf_dir, "events").select(
+        "user_id", money("value").alias("cents")
     )
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError, match="protobuf"):
-            transform_with_state_extrema(
-                spark, src, key_col="user_id", cents_col="cents"
-            )
-        return
-    log = transform_with_state_extrema(
-        spark, src, key_col="user_id", cents_col="cents"
+    log = stateful_extrema(
+        spark,
+        stage_stream_source(cents, 2),
+        key_col="user_id",
+        cents_col="cents",
+        schema=cents.schema,
     )
-    from pyspark.sql import functions as F
-
     final = (
         log.groupBy("key")
         .agg(F.max(F.struct("n_seen", "min_cents", "max_cents")).alias("s"))
         .select("key", "s.n_seen", "s.min_cents", "s.max_cents")
     )
-    batch = (
-        table(spark, sf_dir, "events")
-        .select("user_id", money("value").alias("cents"))
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_seen"),
-            F.min("cents").alias("min_cents"),
-            F.max("cents").alias("max_cents"),
-        )
+    batch = cents.groupBy("user_id").agg(
+        F.count("*").alias("n_seen"),
+        F.min("cents").alias("min_cents"),
+        F.max("cents").alias("max_cents"),
     )
-    assert sorted(map(tuple, final.collect())) == sorted(
-        map(tuple, batch.collect())
+    got = sorted(map(tuple, final.collect()))
+    assert got and got == sorted(map(tuple, batch.collect()))
+    # state spanned micro-batches: some key was emitted more than once
+    assert log.count() > len(got)
+
+
+@pytest.mark.parametrize("interval_ms", [None, 200])
+def test_stream_removes_its_checkpoint(spark, source_dir, interval_ms):
+    """grouper_process_stream's checkpoint is one-shot and never handed
+    out, so no grouper-ckpt-* directory outlives the call; the result
+    it returns stays readable."""
+    import glob
+
+    pattern = os.path.join(tempfile.gettempdir(), "grouper-ckpt-*")
+    before = set(glob.glob(pattern))
+    out = grouper_process_stream(
+        spark,
+        source_dir,
+        lambda df: df.select("id"),
+        interval_ms=interval_ms,
+        max_files_per_trigger=2,
     )
+    assert set(glob.glob(pattern)) - before == set()
+    assert out.count() == 20
