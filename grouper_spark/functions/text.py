@@ -16,20 +16,27 @@ from pyspark.sql import functions as F
 
 
 def money(col: Column | str, scale: int = 2) -> Column:
-    """Exact fixed-point representation: round(col * 10^scale) as bigint."""
+    """Exact fixed-point representation: round(col * 10^scale) as bigint.
+
+    The single Spark-side fixed-point kernel, for any power of ten: cents
+    at ``scale=2``, the micro/nano/pico terms at 6/9/12. Quantise through
+    it, never inline. Its oracle half is ``queries._sqlgen.sql_money_*``.
+    The scale is a plain float operand, not ``F.lit``: same plan, one
+    py4j call fewer per site.
+    """
     col = F.col(col) if isinstance(col, str) else col
-    return F.round(col * F.lit(float(10**scale)), 0).cast("bigint")
+    return F.round(col * float(10**scale), 0).cast("bigint")
 
 
 def money_sum(col: Column | str, alias: str, scale: int = 2) -> Column:
     """Order-independent double SUM: sum integer units, divide once."""
-    return (F.sum(money(col, scale)) / F.lit(float(10**scale))).alias(alias)
+    return (F.sum(money(col, scale)) / float(10**scale)).alias(alias)
 
 
 def money_avg(col: Column | str, alias: str, scale: int = 4) -> Column:
     """Order-independent AVG derived from the integer-unit sum."""
     c = money(col, scale)
-    return (F.sum(c) / F.lit(float(10**scale)) / F.count(c)).alias(alias)
+    return (F.sum(c) / float(10**scale) / F.count(c)).alias(alias)
 
 
 def tokens(col: Column | str) -> Column:

@@ -83,3 +83,13 @@ def unit_fixed(a: Column | str, scale: float) -> Column:
         F.array_repeat(l2_norm(a), F.size(a)),
         lambda x, n: F.round(scale * x / n, 0).cast("bigint"),
     )
+
+
+def sql_double(x: float) -> str:
+    """Spark SQL text for the exact double ``x``: ``CAST('<repr>' AS DOUBLE)``.
+
+    For the ``F.expr`` builders that embed plane/centroid constants: the
+    shortest round-trip repr parses back to the same double, and going
+    through ``float()`` first keeps a numpy scalar from rendering as
+    ``np.float64(...)``."""
+    return f"CAST('{float(x)!r}' AS DOUBLE)"

@@ -29,7 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_similarity, dot, l2_normalize
+from ..functions.text import money
+from ..functions.vector import cosine_similarity, dot, l2_normalize, sql_double
 from .core import ensure_parallelism
 
 
@@ -97,7 +98,7 @@ def _bucket_col(vec_col: str, planes: list[list[float]]):
         "(CASE WHEN aggregate(zip_with("
         + v
         + ", array("
-        + ", ".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in p)
+        + ", ".join(sql_double(x) for x in p)
         + "), (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
         " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) >= 0"
         f" THEN {2 ** i} ELSE 0 END)"
@@ -480,11 +481,7 @@ def tfidf_knn(
         .select(
             "tok",
             "df",
-            F.round(
-                F.log(F.col("__nd") / F.col("df").cast("double")) * 1000000.0,
-                0,
-            )
-            .cast("bigint")
+            money(F.log(F.col("__nd") / F.col("df").cast("double")), 6)
             .alias("idf_micro"),
         )
     )

@@ -3,8 +3,9 @@
 Float SUM/AVG accumulate in engine-specific order, so raw double
 aggregates don't hash-match across engines. Both sides therefore sum
 integer fixed-point units (order-independent, exact) and divide once at
-the end — see ``grouper_spark.functions.text.money``. These helpers emit
-the SQL half of that contract.
+the end. ``grouper_spark.functions.text.money(x, k)`` is the Spark half,
+``round(x * 10^k)`` as BIGINT at any power of ten; these helpers emit
+the SQL half of that contract, ``CAST(ROUND(x * 10^k.0, 0) AS BIGINT)``.
 """
 
 from __future__ import annotations

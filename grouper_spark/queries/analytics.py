@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from ..operators import cooccurrence_pairs
-from ..functions.text import md5_bits
+from ..functions.text import md5_bits, money
 from ..sources import table
 from . import query
 from ..operators.core import literal_frame
@@ -50,9 +50,7 @@ def q109_ranking_stats(spark, sf_dir):
             F.ntile(4).over(w).cast("int").alias("price_quartile"),
             F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
             F.round(F.cume_dist().over(w), 6).alias("cume"),
-            F.round(F.col("o_totalprice") * 100.0, 0)
-            .cast("bigint")
-            .alias("total_cents"),
+            money("o_totalprice").alias("total_cents"),
         )
         .orderBy("o_orderkey")
     )
@@ -296,7 +294,6 @@ def q139_share_of_total(spark, sf_dir):
     100 TB); here the detail table is touched once by a map-side-combined
     aggregate and the only join is against a broadcast single row.
     Fixed-point cents make the shares exact-integer divisions."""
-    from ..functions.text import money
 
     li = table(spark, sf_dir, "lineitem")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -624,9 +621,7 @@ def q160_weighted_median(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem")
     rows_ = li.select(
         F.col("l_returnflag").alias("flag"),
-        F.round(F.col("l_extendedprice") * 100.0, 0)
-        .cast("bigint")
-        .alias("price_cents"),
+        money("l_extendedprice").alias("price_cents"),
         F.round("l_quantity", 0).cast("bigint").alias("w"),
     )
     g = rows_.groupBy("flag", "price_cents").agg(F.sum("w").alias("w"))
@@ -780,9 +775,7 @@ def q176_revenue_proration(spark, sf_dir):
         .filter(F.col("l_orderkey") < 2000)
         .select(
             "l_orderkey",
-            F.round(F.col("l_extendedprice") * 100.0, 0)
-            .cast("bigint")
-            .alias("w"),
+            money("l_extendedprice").alias("w"),
             F.row_number()
             .over(
                 Window.partitionBy("l_orderkey").orderBy(
@@ -797,7 +790,7 @@ def q176_revenue_proration(spark, sf_dir):
         .filter(F.col("o_orderkey") < 2000)
         .select(
             F.col("o_orderkey").alias("l_orderkey"),
-            F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint").alias("t"),
+            money("o_totalprice").alias("t"),
         )
     )
     wo = Window.partitionBy("l_orderkey")
@@ -1003,11 +996,7 @@ def q214_percent_of_parent(spark, sf_dir):
         c.join(n, c.c_nationkey == n.n_nationkey)
         .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy("r_name", "n_name")
-        .agg(
-            F.sum(F.round(F.col("c_acctbal") * 100.0, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("bal_cents")
-        )
+        .agg(F.sum(money("c_acctbal")).cast("bigint").alias("bal_cents"))
     )
     wr = Window.partitionBy("r_name")
     wt = Window.partitionBy()
@@ -1063,9 +1052,7 @@ def q217_pareto_skyline(spark, sf_dir):
     pts = p.select(
         "p_partkey",
         "p_size",
-        F.round(F.col("p_retailprice") * 100.0, 0).cast("bigint").alias(
-            "price_cents"
-        ),
+        money("p_retailprice").alias("price_cents"),
     )
     w = (
         Window.orderBy(F.col("p_size").desc(), "price_cents")
@@ -1112,7 +1099,7 @@ def q218_benford_digit_audit(spark, sf_dir):
     probabilities are closed-form on literals."""
     o = table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
     digit = F.substring(
-        F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint").cast("string"),
+        money("o_totalprice").cast("string"),
         1,
         1,
     ).cast("bigint")
@@ -1182,7 +1169,7 @@ def q220_rfm_segmentation(spark, sf_dir):
     rfm = o.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_order"),
         F.count("*").alias("frequency"),
-        F.sum(F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint"))
+        F.sum(money("o_totalprice"))
         .cast("bigint")
         .alias("monetary_cents"),
     )
@@ -1269,7 +1256,7 @@ def q221_cohort_ltv_curve(spark, sf_dir):
     rev = o.join(first, "o_custkey").select(
         "cohort",
         (mi(F.col("o_orderdate")) - mi(F.col("cohort"))).alias("month_idx"),
-        F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint").alias("cents"),
+        money("o_totalprice").alias("cents"),
     )
     m = rev.groupBy("cohort", "month_idx").agg(F.sum("cents").alias("rev_cents"))
     w = (
@@ -1326,7 +1313,7 @@ def q225_period_over_period(spark, sf_dir):
     weekly = o.groupBy(
         F.date_trunc("week", "o_orderdate").cast("date").alias("week")
     ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint"))
+        F.sum(money("o_totalprice"))
         .cast("bigint")
         .alias("rev_cents"),
         F.count("*").cast("bigint").alias("n_orders"),
@@ -1572,10 +1559,10 @@ def q264_ranking_overlap(spark, sf_dir):
 
     li = table(spark, sf_dir, "lineitem")
     per_part = li.groupBy("l_partkey").agg(
-        F.sum(F.round(F.col("l_extendedprice") * 100.0, 0).cast("bigint"))
+        F.sum(money("l_extendedprice"))
         .cast("bigint")
         .alias("rev_cents"),
-        F.sum(F.round(F.col("l_quantity") * 100.0, 0).cast("bigint"))
+        F.sum(money("l_quantity"))
         .cast("bigint")
         .alias("qty_cents"),
     )
@@ -1652,7 +1639,7 @@ def q269_median_confidence_interval(spark, sf_dir):
     from pyspark.sql import Window
 
     o = table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
+    cents = money("o_totalprice")
     w = Window.partitionBy("grp").orderBy("cents")
     wn = Window.partitionBy("grp")
     pts = o.select(
@@ -1755,9 +1742,7 @@ def q277_kendall_tau(spark, sf_dir):
     from pyspark.sql import Window
 
     o = table(spark, sf_dir, "orders")
-    rev = F.sum(
-        F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
-    ).cast("bigint")
+    rev = F.sum(money("o_totalprice")).cast("bigint")
     per_cust = o.groupBy("o_custkey").agg(
         F.count("*").cast("bigint").alias("x"), rev.alias("rev")
     )
@@ -2093,12 +2078,8 @@ def q285_brier_decomposition(spark, sf_dir):
     terms = bins.crossJoin(F.broadcast(tot)).select(
         "n",
         "o",
-        F.round((p_hat - o_rate) * (p_hat - o_rate) * F.col("nk") * 1e6, 0)
-        .cast("bigint")
-        .alias("rel_micro"),
-        F.round((o_rate - base) * (o_rate - base) * F.col("nk") * 1e6, 0)
-        .cast("bigint")
-        .alias("res_micro"),
+        money((p_hat - o_rate) * (p_hat - o_rate) * F.col("nk"), 6).alias("rel_micro"),
+        money((o_rate - base) * (o_rate - base) * F.col("nk"), 6).alias("res_micro"),
     )
     return terms.agg(
         F.min("n").cast("bigint").alias("n_users"),
@@ -2289,10 +2270,10 @@ def q288_ndcg_at_k(spark, sf_dir):
 
     li = table(spark, sf_dir, "lineitem")
     per_part = li.groupBy("l_partkey").agg(
-        F.sum(F.round(F.col("l_extendedprice") * 100.0, 0).cast("bigint"))
+        F.sum(money("l_extendedprice"))
         .cast("bigint")
         .alias("rev_cents"),
-        F.sum(F.round(F.col("l_quantity") * 100.0, 0).cast("bigint"))
+        F.sum(money("l_quantity"))
         .cast("bigint")
         .alias("qty_cents"),
     )
@@ -2306,14 +2287,12 @@ def q288_ndcg_at_k(spark, sf_dir):
 
     def dcg_micro(rank_col):
         return (
-            F.round(
+            money(
                 F.col("rel").cast("double")
                 / F.log(F.col(rank_col) + 1.0)
-                * float(__import__("math").log(2.0))
-                * 1000000.0,
-                0,
+                * float(__import__("math").log(2.0)),
+                6,
             )
-            .cast("bigint")
         )
 
     dcg = graded.filter(F.col("pred_rank") <= 20).agg(
@@ -2500,7 +2479,7 @@ def q299_lorenz_concentration(spark, sf_dir):
 
     o = table(spark, sf_dir, "orders")
     per_cust = o.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint"))
+        F.sum(money("o_totalprice"))
         .cast("bigint")
         .alias("cents")
     )
@@ -2691,7 +2670,7 @@ def q321_jackknife_variance(spark, sf_dir):
     them in one final expression. One grouped pass + a groups-sized
     summary, however many rows."""
     c = table(spark, sf_dir, "customer")
-    cents = F.round(F.col("c_acctbal") * 100.0, 0).cast("bigint")
+    cents = money("c_acctbal")
     seg = c.groupBy(F.col("c_nationkey").alias("segment")).agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum(cents).cast("bigint").alias("cents"),
@@ -2703,13 +2682,10 @@ def q321_jackknife_variance(spark, sf_dir):
     )
     # centi fixed point: micro-scaled pseudo-values square past BIGINT
     pseudo = seg.crossJoin(F.broadcast(tot)).select(
-        F.round(
+        money(
             (F.col("cents_all") - F.col("cents")).cast("double")
-            / (F.col("n_all") - F.col("n"))
-            * 100.0,
-            0,
+            / (F.col("n_all") - F.col("n")),
         )
-        .cast("bigint")
         .alias("loo_mean_centi")
     )
     jk = pseudo.agg(
@@ -2793,7 +2769,7 @@ def q322_shift_share(spark, sf_dir):
     the total by construction."""
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    cents = F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
+    cents = money("o_totalprice")
     is0 = F.col("o_orderdate").cast("date") < F.lit("1998-01-01").cast("date")
     seg = (
         o.join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
@@ -2872,7 +2848,7 @@ def q326_hhi_concentration(spark, sf_dir):
     Two grouped passes (customer-month, month), calendar-sized
     output."""
     o = table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
+    cents = money("o_totalprice")
     monthly = o.groupBy(
         F.date_trunc("month", "o_orderdate").cast("date").alias("month"),
         "o_custkey",
@@ -2882,11 +2858,7 @@ def q326_hhi_concentration(spark, sf_dir):
     )
     shares = monthly.join(tot, "month").select(
         "month",
-        F.round(
-            F.col("cents").cast("double") / F.col("all_cents") * 1000000.0,
-            0,
-        )
-        .cast("bigint")
+        money(F.col("cents").cast("double") / F.col("all_cents"), 6)
         .alias("share_micro"),
     )
     return (
@@ -3090,7 +3062,7 @@ def q333_qq_comparison(spark, sf_dir):
         (F.col("event_type") == "purchase") & F.col("value").isNotNull()
     ).select(
         arm.alias("arm"),
-        F.round(F.col("value") * 100.0, 0).cast("bigint").alias("v"),
+        money("value").alias("v"),
     )
     va = F.when(F.col("arm") == 0, F.col("v"))
     vb = F.when(F.col("arm") == 1, F.col("v"))
@@ -3173,11 +3145,7 @@ def q335_trending_scores(spark, sf_dir):
             "l_partkey", F.datediff(ref, F.col("od")).cast("bigint").alias("age_days")
         )
     )
-    w = F.round(
-        F.exp(-F.col("age_days").cast("double") / 14.0 * 0.693147)
-        * 1000000.0,
-        0,
-    ).cast("bigint")
+    w = money(F.exp(-F.col("age_days").cast("double") / 14.0 * 0.693147), 6)
     scored = hits.groupBy("l_partkey").agg(
         F.count("*").cast("bigint").alias("n_hits"),
         F.sum(w).cast("bigint").alias("score_micro"),
@@ -3248,11 +3216,7 @@ def q336_decile_migration(spark, sf_dir):
             "o_custkey",
             F.date_trunc("month", "o_orderdate").cast("date").alias("month"),
         )
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
+        .agg(F.sum(money("o_totalprice")).cast("bigint").alias("cents"))
     )
     w = Window.partitionBy("month").orderBy("cents", "o_custkey")
     tiered = monthly.select(
@@ -3328,11 +3292,7 @@ def q339_budget_pacing(spark, sf_dir):
             >= F.lit("2001-01-01").cast("date")
         )
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
+        .agg(F.sum(money("o_totalprice")).cast("bigint").alias("cents"))
     )
     w = Window.orderBy("day")
     wc = w.rowsBetween(Window.unboundedPreceding, 0)
@@ -3416,9 +3376,7 @@ def a346_spearman_corr(spark, sf_dir):
         o.join(li, o.o_orderkey == li.l_orderkey, "left")
         .groupBy(
             "o_orderkey",
-            F.round(F.col("o_totalprice") * 100.0, 0)
-            .cast("bigint")
-            .alias("x"),
+            money("o_totalprice").alias("x"),
         )
         .agg(F.count("l_orderkey").cast("bigint").alias("y"))
     )
@@ -3504,7 +3462,7 @@ def a347_rrf_fusion(spark, sf_dir):
     is bounded at any scale."""
     o = table(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint"))
+        F.sum(money("o_totalprice"))
         .cast("bigint")
         .alias("spend_cents"),
         F.count("*").cast("bigint").alias("n_orders"),
@@ -3778,13 +3736,12 @@ def a361_clustering_coefficient(spark, sf_dir):
         F.coalesce(F.col("t"), F.lit(0)).cast("bigint").alias("t"),
         F.when(
             F.col("d") >= 2,
-            F.round(
+            money(
                 2.0
                 * F.coalesce(F.col("t"), F.lit(0))
-                / (F.col("d") * (F.col("d") - 1))
-                * 1000000.0,
-                0,
-            ).cast("bigint"),
+                / (F.col("d") * (F.col("d") - 1)),
+                6,
+            ),
         ).alias("c_micro"),
     )
     return (
@@ -3859,7 +3816,7 @@ def a372_water_filling(spark, sf_dir):
     pre_k + (n−k)·c = B exactly."""
     o = table(spark, sf_dir, "orders")
     demand = o.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint"))
+        F.sum(money("o_totalprice"))
         .cast("bigint")
         .alias("d")
     )
@@ -3977,13 +3934,11 @@ def a385_markov_entropy_rate(spark, sf_dir):
             "s",
             "cs",
             "n",
-            F.round(
+            money(
                 -(F.col("c").cast("double") / F.col("cs"))
-                * F.log(F.col("c").cast("double") / F.col("cs"))
-                * 1e9,
-                0,
+                * F.log(F.col("c").cast("double") / F.col("cs")),
+                9,
             )
-            .cast("bigint")
             .alias("h_nano"),
         )
     )
@@ -4166,7 +4121,7 @@ def a397_abc_classification(spark, sf_dir):
     Bounded 3-row output."""
     li = table(spark, sf_dir, "lineitem")
     rev = li.groupBy("l_partkey").agg(
-        F.sum(F.round(F.col("l_extendedprice") * 100.0, 0).cast("bigint"))
+        F.sum(money("l_extendedprice"))
         .cast("bigint")
         .alias("cents")
     ).localCheckpoint(eager=False)  # summary feeds window + share total
@@ -4350,10 +4305,7 @@ def a407_simpsons_paradox(spark, sf_dir):
         .isin("1-URGENT", "2-HIGH")
         .cast("int")
         .alias("grp"),
-        (
-            F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
-            > 20_000_000
-        )
+        (money("o_totalprice") > 20_000_000)
         .cast("int")
         .alias("y"),
     )
@@ -4469,13 +4421,7 @@ def a410_theil_decomposition(spark, sf_dir):
     cust = (
         o.join(c, c.c_custkey == o.o_custkey)
         .groupBy("o_custkey", F.col("c_mktsegment").alias("seg"))
-        .agg(
-            F.sum(
-                F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
-            )
-            .cast("bigint")
-            .alias("x")
-        )
+        .agg(F.sum(money("o_totalprice")).cast("bigint").alias("x"))
         .localCheckpoint(eager=False)  # feeds totals + terms + within
     )
     tot = cust.agg(
@@ -4485,7 +4431,7 @@ def a410_theil_decomposition(spark, sf_dir):
 
     def nano_term(n_col, s_col):
         ratio = F.col("x").cast("double") * F.col(n_col) / F.col(s_col)
-        return F.round(ratio * F.log(ratio) * 1e9, 0).cast("bigint")
+        return money(ratio * F.log(ratio), 9)
 
     terms = cust.crossJoin(F.broadcast(tot)).select(
         "seg", "x", nano_term("n", "s").alias("t_nano")
@@ -4784,7 +4730,7 @@ def a564_kendall_tau_b(spark, sf_dir):
     exact BIGINTs; tau-b is one closed-form double at the end.
     Customers with no orders enter at spend 0 (a real tie mass the
     correction must handle, not a dropped row)."""
-    cents = lambda c: F.round(F.col(c) * 100.0, 0).cast("bigint")  # noqa: E731
+    cents = lambda c: money(F.col(c))  # noqa: E731
     cust = table(spark, sf_dir, "customer")
     orders = table(spark, sf_dir, "orders")
     samp = cust.filter(F.col("c_custkey") < 200).select(
@@ -5141,12 +5087,8 @@ def a426_powerlaw_fit(spark, sf_dir):
     )
     hist = deg.groupBy("d").agg(F.count("*").cast("bigint").alias("n_d"))
     pts = hist.select(
-        F.round(F.log(F.col("d").cast("double")) * 1000000.0, 0)
-        .cast("bigint")
-        .alias("x"),
-        F.round(F.log(F.col("n_d").cast("double")) * 1000000.0, 0)
-        .cast("bigint")
-        .alias("y"),
+        money(F.log(F.col("d").cast("double")), 6).alias("x"),
+        money(F.log(F.col("n_d").cast("double")), 6).alias("y"),
     )
     sums = pts.agg(
         F.count("*").cast("bigint").alias("n"),

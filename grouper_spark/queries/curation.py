@@ -19,6 +19,7 @@ from pyspark.sql import Window, functions as F
 from ..operators.core import ensure_parallelism
 from ..functions.text import (
     md5_bits,
+    money,
     normalized_text,
     token_count,
     tokens,
@@ -407,7 +408,7 @@ def q89_embedding_quantize(spark, sf_dir):
         deq = F.col("lo") + F.round((x - F.col("lo")) / F.col("scale"), 0) * F.col(
             "scale"
         )
-        return F.round((x - deq) * (x - deq) * 1000000000000.0, 0).cast("bigint")
+        return money((x - deq) * (x - deq), 12)
 
     sse = F.when(F.col("scale") == 0, F.lit(0).cast("bigint")).otherwise(
         F.aggregate(
@@ -642,9 +643,7 @@ def q95_kmeans_iter(spark, sf_dir):
         F.zip_with(
             "v",
             "cv",
-            lambda x, c: F.round((x - c) * (x - c) * 1000000000000.0, 0).cast(
-                "bigint"
-            ),
+            lambda x, c: money((x - c) * (x - c), 12),
         ),
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
@@ -664,7 +663,7 @@ def q95_kmeans_iter(spark, sf_dir):
             F.count("*").cast("bigint").alias("n_members"),
             (
                 F.round(
-                    F.sum(F.round(F.col("x") * 1000000000.0, 0).cast("bigint"))
+                    F.sum(money("x", 9))
                     / F.count("*"),
                     0,
                 ).cast("bigint")
@@ -730,9 +729,7 @@ def q141_temperature_sample(spark, sf_dir):
     per_src = d.groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_docs")
     )
-    ps = per_src.withColumn(
-        "sqrt_fp", F.round(F.sqrt("n_docs") * 1000000.0, 0).cast("bigint")
-    )
+    ps = per_src.withColumn("sqrt_fp", money(F.sqrt("n_docs"), 6))
     tot = ps.agg(
         F.sum("sqrt_fp").alias("z_fp"), F.sum("n_docs").alias("total_docs")
     )
@@ -1079,9 +1076,7 @@ def q183_weighted_sample(spark, sf_dir):
         md5_bits(F.concat(F.lit("ws-"), F.col("doc_id").cast("string")), 8)
         + F.lit(1.0)
     ) / F.lit(4294967297.0)
-    key_nano = F.round(
-        -F.log(u) / F.col("n_chars") * 1000000000.0, 0
-    ).cast("bigint")
+    key_nano = money(-F.log(u) / F.col("n_chars"), 9)
     w = Window.partitionBy("source").orderBy("key_nano", "doc_id")
     return (
         d.select("doc_id", "source", "n_chars", key_nano.alias("key_nano"))
@@ -1132,7 +1127,7 @@ def q197_target_encoding(spark, sf_dir):
     performed once per row on integer inputs and rounded, so the
     encoding is engine-stable."""
     orders = table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
+    cents = money("o_totalprice")
     fact = orders.select("o_orderkey", "o_orderpriority", cents.alias("price_cents"))
     stats = fact.groupBy("o_orderpriority").agg(
         F.sum("price_cents").alias("seg_sum"),
@@ -1301,9 +1296,7 @@ def q260_k_anonymity_audit(spark, sf_dir):
     c = table(spark, sf_dir, "customer")
     classes = c.groupBy("c_nationkey", "c_mktsegment").agg(
         F.count("*").cast("bigint").alias("class_size"),
-        F.count_distinct(
-            F.round(F.col("c_acctbal") * 100.0, 0).cast("bigint")
-        )
+        F.count_distinct(money("c_acctbal"))
         .cast("bigint")
         .alias("n_sensitive"),
     )
@@ -1416,9 +1409,7 @@ def q265_dataset_datasheet(spark, sf_dir):
         lc.withColumn("tot", tot)
         .select(
             "source",
-            F.round(-1.0 * share * F.log(share) * 1000000.0, 0)
-            .cast("bigint")
-            .alias("term_micro"),
+            money(-1.0 * share * F.log(share), 6).alias("term_micro"),
         )
         .groupBy("source")
         .agg(F.sum("term_micro").cast("bigint").alias("ent_micro"))
@@ -1868,7 +1859,7 @@ def q313_ips_offpolicy_eval(spark, sf_dir):
     go/no-go for deploying the policy into a q308-style sequential
     test. One user-keyed aggregate; rewards in exact cents."""
     ev = table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100.0, 0).cast("bigint")
+    cents = money("value")
     subj = ev.groupBy("user_id").agg(
         F.least(
             F.lit(10).cast("bigint"),
@@ -1958,10 +1949,7 @@ def a368_mutual_information(spark, sf_dir):
     rounding boundary. One fact-table aggregate; everything after is
     contingency-table-sized (|F|×2 cells) at any corpus size."""
     o = table(spark, sf_dir, "orders")
-    y = (
-        F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
-        > _MI_CENTS
-    ).cast("int")
+    y = (money("o_totalprice") > _MI_CENTS).cast("int")
     joint = o.select(
         F.col("o_orderpriority").alias("f"), y.alias("y")
     ).groupBy("f", "y").agg(F.count("*").cast("bigint").alias("c")).localCheckpoint(
@@ -1975,18 +1963,16 @@ def a368_mutual_information(spark, sf_dir):
         .join(F.broadcast(marg_y), "y")
         .crossJoin(F.broadcast(tot))
         .select(
-            F.round(
+            money(
                 F.col("c").cast("double")
                 / F.col("n")
                 * F.log(
                     F.col("c").cast("double")
                     * F.col("n")
                     / (F.col("cf").cast("double") * F.col("cy"))
-                )
-                * 1e9,
-                0,
+                ),
+                9,
             )
-            .cast("bigint")
             .alias("mi_nano")
         )
     )
@@ -2177,9 +2163,7 @@ def a393_woe_information_value(spark, sf_dir):
     fact projection, ten-row output."""
     o = table(spark, sf_dir, "orders")
     base = o.select(
-        F.round(F.col("o_totalprice") * 100.0, 0)
-        .cast("bigint")
-        .alias("cents"),
+        money("o_totalprice").alias("cents"),
         F.col("o_orderpriority")
         .isin("1-URGENT", "2-HIGH")
         .cast("int")
@@ -2268,10 +2252,7 @@ def a395_gain_ratio(spark, sf_dir):
     contingency marginals — everything after the one fact aggregate
     is |F|-sized."""
     o = table(spark, sf_dir, "orders")
-    y = (
-        F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
-        > 20_000_000
-    ).cast("int")
+    y = (money("o_totalprice") > 20_000_000).cast("int")
     joint = (
         o.select(F.col("o_orderpriority").alias("f"), y.alias("y"))
         .groupBy("f", "y")
@@ -2287,17 +2268,16 @@ def a395_gain_ratio(spark, sf_dir):
         .crossJoin(F.broadcast(tot))
         .agg(
             F.sum(
-                F.round(
+                money(
                     F.col("c").cast("double")
                     / F.col("n")
                     * F.log(
                         F.col("c").cast("double")
                         * F.col("n")
                         / (F.col("cf").cast("double") * F.col("cy"))
-                    )
-                    * 1e9,
-                    0,
-                ).cast("bigint")
+                    ),
+                    9,
+                )
             )
             .cast("bigint")
             .alias("mi_nano")
@@ -2305,12 +2285,11 @@ def a395_gain_ratio(spark, sf_dir):
     )
     hf = marg_f.crossJoin(F.broadcast(tot)).agg(
         F.sum(
-            F.round(
+            money(
                 -(F.col("cf").cast("double") / F.col("n"))
-                * F.log(F.col("cf").cast("double") / F.col("n"))
-                * 1e9,
-                0,
-            ).cast("bigint")
+                * F.log(F.col("cf").cast("double") / F.col("n")),
+                9,
+            )
         )
         .cast("bigint")
         .alias("hf_nano")
@@ -2523,15 +2502,14 @@ def a437_silhouette(spark, sf_dir):
         .limit(8)
         .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
     )
-    d_fp = F.round(
+    d_fp = money(
         F.aggregate(
             F.zip_with("v", "cv", lambda x, c: (x - c) * (x - c)),
             F.lit(0.0),
             lambda acc, x: acc + x,
-        )
-        * 1000000000000.0,
-        0,
-    ).cast("bigint")
+        ),
+        12,
+    )
     dist = e.crossJoin(F.broadcast(cent)).select(
         "vec_id", "cid", d_fp.alias("d_fp")
     )
@@ -2550,14 +2528,12 @@ def a437_silhouette(spark, sf_dir):
     b_d = F.sqrt(F.col("b_fp") / 1000000000000.0)
     sil = ab.select(
         "cell",
-        F.round(
+        money(
             F.when(F.col("b_fp") == 0, F.lit(0.0)).otherwise(
                 (b_d - a_d) / F.greatest(a_d, b_d)
-            )
-            * 1000000000.0,
-            0,
+            ),
+            9,
         )
-        .cast("bigint")
         .alias("s_fp"),
     )
     return (
@@ -2965,7 +2941,7 @@ def a445_decision_stump(spark, sf_dir):
             F.col("pos_r").alias("pos_right"),
             F.round(g, 6).alias("gini_split_r"),
             F.round(g_root, 6).alias("gini_root_r"),
-            F.round(g * 1000000000000.0, 0).cast("bigint").alias("_g_fp"),
+            money(g, 12).alias("_g_fp"),
             F.col("bin").alias("_bin"),
         )
         .orderBy("_g_fp", "_bin")

@@ -15,7 +15,7 @@ from ..operators import (
     shingle_jaccard_pairs,
     simhash,
 )
-from ..functions.text import md5_bits
+from ..functions.text import md5_bits, money
 from ..sources import table
 from . import query
 from ..operators.core import literal_frame
@@ -686,7 +686,7 @@ def q208_sorted_neighborhood(spark, sf_dir):
     from pyspark.sql import Window
 
     c = table(spark, sf_dir, "customer")
-    bal = F.round(F.col("c_acctbal") * 100.0, 0).cast("bigint")
+    bal = money("c_acctbal")
     s = c.select("c_custkey", "c_nationkey", bal.alias("bal_cents"))
     w = Window.partitionBy("c_nationkey").orderBy("bal_cents", "c_custkey")
     s = s.select(
@@ -1135,9 +1135,7 @@ def q246_minhash_accuracy_audit(spark, sf_dir):
             "doc_b",
             F.round(F.col("est"), 6).alias("est_jaccard"),
             F.round(true_j, 6).alias("true_jaccard"),
-            F.round((F.col("est") - true_j) * 1000000.0, 0)
-            .cast("bigint")
-            .alias("err_micro"),
+            money(F.col("est") - true_j, 6).alias("err_micro"),
         )
         .orderBy("doc_a", "doc_b")
     )

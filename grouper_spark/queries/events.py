@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from ..functions.text import md5_bits, money_sum
+from ..functions.text import md5_bits, money, money_sum
 from ..operators import sessionize
 from ..sources import table
 from . import query
@@ -780,9 +780,7 @@ def q236_multitouch_attribution(spark, sf_dir):
         "event_type",
         F.when(is_p, F.col("event_id")).alias("p_eid"),
         F.when(is_p, F.col("ts")).alias("p_ts"),
-        F.when(is_p, F.round(F.col("value") * 100.0, 0).cast("bigint")).alias(
-            "p_cents"
-        ),
+        F.when(is_p, money("value")).alias("p_cents"),
     )
     wf = (
         Window.partitionBy("user_id")
@@ -974,14 +972,13 @@ def q245_kaplan_meier(spark, sf_dir):
         F.when(
             (F.col("n_events") > 0)
             & (F.col("n_events") < F.col("n_at_risk")),
-            F.round(
+            money(
                 F.log(
                     1.0
                     - F.col("n_events").cast("double") / F.col("n_at_risk")
-                )
-                * 1000000.0,
-                0,
-            ).cast("bigint"),
+                ),
+                6,
+            ),
         )
         .when(F.col("n_events") > 0, F.lit(-99000000).cast("bigint"))
         .otherwise(F.lit(0).cast("bigint"))
@@ -1258,7 +1255,7 @@ def q278_seasonal_index(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
     cents = F.when(
         F.col("event_type") == "purchase",
-        F.round(F.col("value") * 100.0, 0).cast("bigint"),
+        money("value"),
     ).otherwise(0)
     daily = ev.groupBy(
         F.col("ts").cast("date").alias("day"),
@@ -1589,19 +1586,18 @@ def q301_logrank_test(spark, sf_dir):
     e1 = F.col("d").cast("double") * F.col("n1") / nd
     v = F.when(
         F.col("n") > 1,
-        F.round(
+        money(
             e1
             * (F.col("n") - F.col("n1"))
             / nd
             * (F.col("n") - F.col("d"))
-            / (F.col("n") - 1)
-            * 1000000.0,
-            0,
-        ).cast("bigint"),
+            / (F.col("n") - 1),
+            6,
+        ),
     ).otherwise(F.lit(0).cast("bigint"))
     terms = risk.select(
         "d1",
-        F.round(e1 * 1000000.0, 0).cast("bigint").alias("e1_micro"),
+        money(e1, 6).alias("e1_micro"),
         v.alias("v_micro"),
     )
     o1 = F.sum("d1").cast("double")

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.text import md5_bits
+from ..functions.text import md5_bits, money
 from ..sources import table
 from . import query
 
@@ -541,7 +541,7 @@ def q203_xml_roundtrip(spark, sf_dir):
         F.lit("</key><status>"),
         F.col("o_orderstatus"),
         F.lit("</status><cents>"),
-        F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint").cast("string"),
+        money("o_totalprice").cast("string"),
         F.lit("</cents></order>"),
     )
     doc = o.select(xml.alias("doc"))
@@ -720,7 +720,7 @@ def q226_struct_array_battery(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
     per = ev.groupBy("user_id", "event_type").agg(
         F.count("*").alias("cnt"),
-        F.sum(F.round(F.col("value") * 100.0, 0).cast("bigint"))
+        F.sum(money("value"))
         .cast("bigint")
         .alias("v_cents"),
     )
@@ -929,7 +929,7 @@ def q257_python_datasink(spark, sf_dir):
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
-        F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint").alias("cents"),
+        money("o_totalprice").alias("cents"),
     )
     o.write.format("jsonl_commit").option("path", out_dir).mode(
         "append"
@@ -992,9 +992,7 @@ def q271_orc_roundtrip(spark, sf_dir):
             .select(
                 "o_orderpriority",
                 "o_totalprice",
-                F.round(F.col("o_totalprice") * 100.0, 0)
-                .cast("bigint")
-                .alias("cents"),
+                money("o_totalprice").alias("cents"),
             )
             .write.mode("overwrite")
             .orc(path)
@@ -1245,9 +1243,7 @@ def a384_json_group_export(spark, sf_dir):
         .agg(
             F.count("s_suppkey").cast("bigint").alias("n_supp"),
             F.coalesce(
-                F.sum(
-                    F.round(F.col("s_acctbal") * 100.0, 0).cast("bigint")
-                ),
+                F.sum(money("s_acctbal")),
                 F.lit(0),
             )
             .cast("bigint")

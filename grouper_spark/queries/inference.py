@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from ..functions.text import md5_bits
+from ..functions.text import md5_bits, money
 from ..sources import table
 from . import query
 from ..operators.core import collect_bounded, literal_frame
@@ -111,11 +111,7 @@ def a472_cliffs_delta(spark, sf_dir):
             .otherwise("ctrl")
             .alias("arm"),
         )
-        .agg(
-            F.sum(F.round(F.col("value") * 100.0, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("xc")
-        )
+        .agg(F.sum(money("value")).cast("bigint").alias("xc"))
     )
     vals = obs.groupBy("xc").agg(
         F.coalesce(
@@ -509,11 +505,7 @@ def a475_bartlett_test(spark, sf_dir):
     daily = ev.groupBy(
         F.col("event_type").alias("grp"),
         F.date_trunc("day", "ts").cast("date").alias("d"),
-    ).agg(
-        F.sum(F.round(F.col("value") * 100.0, 0).cast("bigint"))
-        .cast("bigint")
-        .alias("sc")
-    )
+    ).agg(F.sum(money("value")).cast("bigint").alias("sc"))
     g = daily.groupBy("grp").agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("sc").cast("bigint").alias("s1"),
@@ -623,9 +615,7 @@ def a476_moods_median(spark, sf_dir):
     o = table(spark, sf_dir, "orders")
     base = o.select(
         F.col("o_orderpriority").alias("grp"),
-        F.round(F.col("o_totalprice") * 100.0, 0)
-        .cast("bigint")
-        .alias("xc"),
+        money("o_totalprice").alias("xc"),
     )
     med = base.agg(
         F.round(2.0 * F.expr("percentile(xc, 0.5)"), 0)
@@ -666,12 +656,8 @@ def a476_moods_median(spark, sf_dir):
         cls.crossJoin(F.broadcast(tot))
         .select(
             (
-                F.round(
-                    (F.col("na") - ea) * (F.col("na") - ea) / ea * 1e9, 0
-                ).cast("bigint")
-                + F.round(
-                    (F.col("nb") - eb) * (F.col("nb") - eb) / eb * 1e9, 0
-                ).cast("bigint")
+                money((F.col("na") - ea) * (F.col("na") - ea) / ea, 9)
+                + money((F.col("nb") - eb) * (F.col("nb") - eb) / eb, 9)
             ).alias("t")
         )
         .agg(F.sum("t").cast("bigint").alias("chi_nano"))
@@ -956,18 +942,16 @@ def a478_g_test(spark, sf_dir):
         .join(cw, "w")
         .crossJoin(F.broadcast(tot))
         .select(
-            F.round(
+            money(
                 2.0
                 * F.col("c")
                 * F.log(
                     F.col("c").cast("double")
                     * F.col("nn")
                     / (F.col("nx").cast("double") * F.col("nw"))
-                )
-                * 1e9,
-                0,
+                ),
+                9,
             )
-            .cast("bigint")
             .alias("g_nano")
         )
         .agg(F.sum("g_nano").cast("bigint").alias("g_nano"))
@@ -1455,8 +1439,8 @@ def a482_vif(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem")
     x = li.select(
         F.round("l_quantity", 0).cast("bigint").alias("x1"),
-        F.round(F.col("l_discount") * 100.0, 0).cast("bigint").alias("x2"),
-        F.round(F.col("l_tax") * 100.0, 0).cast("bigint").alias("x3"),
+        money("l_discount").alias("x2"),
+        money("l_tax").alias("x3"),
     )
     s = x.agg(
         F.count("*").cast("bigint").alias("n"),
@@ -1865,9 +1849,7 @@ def a485_permutation_entropy(spark, sf_dir):
         + F.when(F.col("b") <= F.col("c"), 1).otherwise(0)
     )
     pat = tri.groupBy(code.alias("code")).agg(F.count("*").alias("cnt"))
-    ln_cnt_micro = F.round(
-        F.log(F.col("cnt").cast("double")) * 1000000.0, 0
-    ).cast("bigint")
+    ln_cnt_micro = money(F.log(F.col("cnt").cast("double")), 6)
     return pat.agg(
         F.count("*").cast("bigint").alias("n_patterns"),
         F.sum("cnt").cast("bigint").alias("n_windows"),
@@ -2133,9 +2115,7 @@ def a487_ece_calibration(spark, sf_dir):
             6,
         ).alias("ece_r"),
         F.round(
-            F.sum(
-                F.round(hl_term * 1000000000.0, 0).cast("bigint")
-            ).cast("double")
+            F.sum(money(hl_term, 9)).cast("double")
             / 1000000000.0,
             6,
         ).alias("hl_chi2_r"),
@@ -2300,13 +2280,7 @@ def a488_nelson_aalen_rmst(spark, sf_dir):
         "t_days",
         "ch_micro",
         "nt",
-        F.round(
-            F.exp(-F.col("ch_micro").cast("double") / 1000000.0)
-            * 1000000.0,
-            0,
-        )
-        .cast("bigint")
-        .alias("s_micro"),
+        money(F.exp(-F.col("ch_micro").cast("double") / 1000000.0), 6).alias("s_micro"),
     )
     n_subjects = subj.agg(
         F.count("*").cast("bigint").alias("n_subjects")
@@ -2711,17 +2685,16 @@ def a491_adjusted_rand(spark, sf_dir):
         .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
         .limit(8)
     )
-    d_fp = F.round(
+    d_fp = money(
         F.aggregate(
             F.zip_with(
                 "v", "cv", lambda a, b: (a - b) * (a - b)
             ),
             F.lit(0.0),
             lambda acc, x: acc + x,
-        )
-        * 1000000000000.0,
-        0,
-    ).cast("bigint")
+        ),
+        12,
+    )
     dist = e.crossJoin(F.broadcast(cent)).select(
         "vec_id", "label", "cid", d_fp.alias("d_fp")
     )
@@ -2906,9 +2879,7 @@ def a492_davies_bouldin_ch(spark, sf_dir):
     dist = e.crossJoin(F.broadcast(cent)).select(
         "vec_id",
         "cid",
-        F.round(sqd(F.col("v"), F.col("cv")) * 1000000000000.0, 0)
-        .cast("bigint")
-        .alias("d_fp"),
+        money(sqd(F.col("v"), F.col("cv")), 12).alias("d_fp"),
     )
     own = (
         dist.withColumn(
@@ -2944,7 +2915,7 @@ def a492_davies_bouldin_ch(spark, sf_dir):
         cent.crossJoin(F.broadcast(cbar))
         .select(
             "cid",
-            F.round(
+            money(
                 F.aggregate(
                     F.zip_with(
                         "cv",
@@ -2956,11 +2927,9 @@ def a492_davies_bouldin_ch(spark, sf_dir):
                     ),
                     F.lit(0.0),
                     lambda acc, x: acc + x,
-                )
-                * 1000000000000.0,
-                0,
+                ),
+                12,
             )
-            .cast("bigint")
             .alias("d_fp"),
         )
         .join(F.broadcast(clus), "cid")
@@ -2985,9 +2954,7 @@ def a492_davies_bouldin_ch(spark, sf_dir):
             "i",
             "j",
             F.sqrt(
-                F.round(
-                    sqd(F.col("va"), F.col("vb")) * 1000000000000.0, 0
-                ).cast("bigint")
+                money(sqd(F.col("va"), F.col("vb")), 12)
                 / 1000000000000.0
             ).alias("m"),
         )
@@ -3013,14 +2980,7 @@ def a492_davies_bouldin_ch(spark, sf_dir):
         )
         .groupBy("cid")
         .agg(
-            F.max(
-                F.round(
-                    (F.col("s1") + F.col("s2"))
-                    / F.col("m")
-                    * 1000000000.0,
-                    0,
-                ).cast("bigint")
-            )
+            F.max(money((F.col("s1") + F.col("s2")) / F.col("m"), 9))
             .cast("bigint")
             .alias("r_fp")
         )
@@ -3566,19 +3526,8 @@ def a496_dersimonian_laird(spark, sf_dir):
     h = lambda c: F.col(c).cast("double") + 0.5  # noqa: E731
     eff = cells.select(
         "seg",
-        F.round(
-            F.log((h("a") * h("dd")) / (h("b") * h("cc")))
-            * 1000000000.0,
-            0,
-        )
-        .cast("bigint")
-        .alias("y_fp"),
-        F.round(
-            (1.0 / h("a") + 1.0 / h("b") + 1.0 / h("cc") + 1.0 / h("dd"))
-            * 1000000000.0,
-            0,
-        )
-        .cast("bigint")
+        money(F.log((h("a") * h("dd")) / (h("b") * h("cc"))), 9).alias("y_fp"),
+        money(1.0 / h("a") + 1.0 / h("b") + 1.0 / h("cc") + 1.0 / h("dd"), 9)
         .alias("v_fp"),
     ).localCheckpoint(eager=False)
     vd = F.col("v_fp").cast("double") / 1000000000.0
@@ -4019,7 +3968,7 @@ def a500_decay_weighted_engagement(spark, sf_dir):
             ),
             F.lit(30).cast("bigint"),
         ).alias("age"),
-        F.round(F.col("value") * 100.0, 0).cast("bigint").alias("vc"),
+        money("value").alias("vc"),
     )
     decay = literal_frame(spark, _DECAY_ROWS, "age bigint, w_fp bigint")
     scored = (
@@ -4546,15 +4495,14 @@ def a504_cox_stuart(spark, sf_dir):
             F.sequence(F.lit(0).cast("bigint"), F.col("tt"))
         ).alias("k"),
     )
-    p_fp = F.round(
+    p_fp = money(
         F.expr(
             f"exp({_lf('nn')} - {_lf('k')} - {_lf('(nn - k)')}"
             " - CAST(nn AS DOUBLE)"
             " * CAST(0.6931471805599453 AS DOUBLE))"
-        )
-        * 1000000000000.0,
-        0,
-    ).cast("bigint")
+        ),
+        12,
+    )
     return terms.select("pos", "neg", p_fp.alias("p_fp")).agg(
         F.max("pos").alias("n_up"),
         F.max("neg").alias("n_down"),
@@ -5679,12 +5627,8 @@ def a512_conover_squared_ranks(spark, sf_dir):
         "c1",
         "c2",
         "nn",
-        F.round(u * u * 1000000000000.0, 0)
-        .cast("bigint")
-        .alias("u2_fp"),
-        F.round(u * u * u * u * 1000000000000.0, 0)
-        .cast("bigint")
-        .alias("u4_fp"),
+        money(u * u, 12).alias("u2_fp"),
+        money(u * u * u * u, 12).alias("u4_fp"),
     )
     s = terms.agg(
         F.max("nn").alias("nn"),
@@ -5848,13 +5792,12 @@ def a513_bowker_symmetry(spark, sf_dir):
     )
     t_fp = F.when(
         F.col("nij") + F.col("nji") > 0,
-        F.round(
+        money(
             ((F.col("nij") - F.col("nji")) * (F.col("nij") - F.col("nji")))
             .cast("double")
-            / (F.col("nij") + F.col("nji"))
-            * 1000000000.0,
-            0,
-        ).cast("bigint"),
+            / (F.col("nij") + F.col("nji")),
+            9,
+        ),
     )
     return pairs.select("nij", "nji", t_fp.alias("t_fp")).agg(
         F.count("t_fp").cast("bigint").alias("df_used"),
@@ -6161,14 +6104,7 @@ def a515_anderson_darling_ksample(spark, sf_dir):
         F.col("b2") * (2 * F.col("nn") - F.col("b2"))
         - F.col("nn") * F.col("l")
         > 0,
-        F.round(
-            (F.col("l").cast("double") / F.col("nn"))
-            * dev
-            * dev
-            / den
-            * 1000000.0,
-            0,
-        ).cast("bigint"),
+        money((F.col("l").cast("double") / F.col("nn")) * dev * dev / den, 6),
     )
     terms = mcum.select("g", "n_i", "nn", t_fp.alias("t_fp"))
     gterm = terms.groupBy("g").agg(
@@ -6659,9 +6595,7 @@ def a519_uncertainty_coefficient(spark, sf_dir):
     ).agg(F.count("*").cast("bigint").alias("n"))
 
     def ln_micro(c):
-        return F.round(
-            F.log(F.col(c).cast("double")) * 1000000.0, 0
-        ).cast("bigint")
+        return money(F.log(F.col(c).cast("double")), 6)
 
     lnn = ct.agg(
         F.sum(F.col("n") * ln_micro("n")).cast("bigint").alias("s_xy"),
@@ -6795,11 +6729,7 @@ def a520_cramer_von_mises(spark, sf_dir):
     terms = cum.select(
         "n1",
         "n2",
-        F.round(
-            (F.col("c1") + F.col("c2")) * diff * diff * 1000000000.0, 0
-        )
-        .cast("bigint")
-        .alias("t_fp"),
+        money((F.col("c1") + F.col("c2")) * diff * diff, 9).alias("t_fp"),
     )
     n1d = F.max("n1").cast("double")
     return terms.agg(
@@ -7065,12 +6995,7 @@ def a522_map_mrr(spark, sf_dir):
             F.sum(
                 F.when(
                     F.col("rel") == 1,
-                    F.round(
-                        F.col("cumrel").cast("double")
-                        / F.col("rk")
-                        * 1000000000.0,
-                        0,
-                    ).cast("bigint"),
+                    money(F.col("cumrel").cast("double") / F.col("rk"), 9),
                 )
             ),
             F.lit(0),
@@ -7177,10 +7102,10 @@ def a523_rank_biased_overlap(spark, sf_dir):
     rows."""
     li = table(spark, sf_dir, "lineitem")
     per_part = li.groupBy("l_partkey").agg(
-        F.sum(F.round(F.col("l_extendedprice") * 100.0, 0).cast("bigint"))
+        F.sum(money("l_extendedprice"))
         .cast("bigint")
         .alias("rev_cents"),
-        F.sum(F.round(F.col("l_quantity") * 100.0, 0).cast("bigint"))
+        F.sum(money("l_quantity"))
         .cast("bigint")
         .alias("qty_cents"),
     )
@@ -7581,14 +7506,7 @@ def a526_bland_altman(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem")
     o = table(spark, sf_dir, "orders")
     liagg = li.groupBy("l_orderkey").agg(
-        F.sum(
-            F.round(
-                F.col("l_extendedprice")
-                * (1.0 - F.col("l_discount"))
-                * 100.0,
-                0,
-            ).cast("bigint")
-        )
+        F.sum(money(F.col("l_extendedprice") * (1.0 - F.col("l_discount"))))
         .cast("bigint")
         .alias("net_cents")
     )

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from ..functions.text import money
 from ..sources import table
 from . import query
 from ..operators.core import literal_frame
@@ -713,9 +714,7 @@ def a532_aalen_johansen(spark, sf_dir):
         "ln_micro",
         F.when(
             (d_tot > 0) & (d_tot < F.col("n")),
-            F.round(
-                F.log(1.0 - d_tot.cast("double") / F.col("n")) * 1e6, 0
-            ).cast("bigint"),
+            money(F.log(1.0 - d_tot.cast("double") / F.col("n")), 6),
         )
         .when(d_tot > 0, F.lit(-99000000).cast("bigint"))
         .otherwise(F.lit(0).cast("bigint")),
@@ -900,7 +899,7 @@ def a533_km_greenwood_ci(spark, sf_dir):
         "n",
         F.when(
             (F.col("d") > 0) & (F.col("d") < F.col("n")),
-            F.round(F.log(1.0 - dd / F.col("n")) * 1e6, 0).cast("bigint"),
+            money(F.log(1.0 - dd / F.col("n")), 6),
         )
         .when(F.col("d") > 0, F.lit(-99000000).cast("bigint"))
         .otherwise(F.lit(0).cast("bigint"))
@@ -1478,7 +1477,7 @@ def a538_dixon_q_outlier(spark, sf_dir):
     c = table(spark, sf_dir, "customer")
     vals = c.select(
         F.col("c_nationkey").cast("bigint").alias("nationkey"),
-        F.round(F.col("c_acctbal") * 100.0, 0).cast("bigint").alias("x"),
+        money("c_acctbal").alias("x"),
         "c_custkey",
     )
     wa = Window.partitionBy("nationkey").orderBy(
@@ -1734,7 +1733,7 @@ def a540_herfindahl_concentration(spark, sf_dir):
         "p_type",
         "n_suppliers",
         F.round(hhi, 6).alias("hhi_r"),
-        F.round(hhi * 10000.0, 0).cast("bigint").alias("hhi_points"),
+        money(hhi, 4).alias("hhi_points"),
         F.round(
             (F.col("tot").cast("double") * F.col("tot"))
             / F.col("sq").cast("double"),
@@ -1810,8 +1809,7 @@ def a541_inequality_panel(spark, sf_dir):
     lns = binned.select(
         "x",
         "cnt",
-        F.round(F.log(F.col("x").cast("double")) * 1e6, 0)
-        .cast("bigint").alias("lnx_micro"),
+        money(F.log(F.col("x").cast("double")), 6).alias("lnx_micro"),
     )
     agg = lns.agg(
         F.sum("cnt").cast("bigint").alias("n"),
@@ -2500,8 +2498,7 @@ def a079_hill_tail_index(spark, sf_dir):
     top = vals.filter(F.col("rk") <= max(_HILL_KS) + 1).select(
         "x",
         "rk",
-        F.round(F.log(F.col("x").cast("double")) * 1e6, 0)
-        .cast("bigint").alias("lnx_micro"),
+        money(F.log(F.col("x").cast("double")), 6).alias("lnx_micro"),
     )
     ks = literal_frame(spark, [(k,) for k in _HILL_KS], "k bigint")
     per_k = (
@@ -2591,7 +2588,7 @@ def a080_diff_in_diff(spark, sf_dir):
             F.to_date("ts") < F.lit("2024-01-16").cast("date"), 0
         ).otherwise(1).alias("post"),
         "user_id",
-        F.round(F.col("value") * 100.0, 0).cast("bigint").alias("v"),
+        money("value").alias("v"),
     )
     per_user = cell.groupBy("treat", "post", "user_id").agg(
         F.sum("v").cast("bigint").alias("y")
@@ -3000,12 +2997,7 @@ def a083_weibull_plot_fit(spark, sf_dir):
         "t_days",
         F.when(
             (F.col("d") > 0) & (F.col("d") < F.col("n")),
-            F.round(
-                F.log(
-                    1.0 - F.col("d").cast("double") / F.col("n")
-                ) * 1e6,
-                0,
-            ).cast("bigint"),
+            money(F.log(1.0 - F.col("d").cast("double") / F.col("n")), 6),
         )
         .when(F.col("d") > 0, F.lit(-99000000).cast("bigint"))
         .otherwise(F.lit(0).cast("bigint"))
@@ -3020,11 +3012,8 @@ def a083_weibull_plot_fit(spark, sf_dir):
         & (F.col("lsum") < 0)
         & (F.col("lsum") > -99000000)
     ).select(
-        F.round(F.log(F.col("t_days").cast("double")) * 1e6, 0)
-        .cast("bigint").alias("x_fp"),
-        F.round(
-            F.log(-(F.col("lsum").cast("double") / 1e6)) * 1e6, 0
-        ).cast("bigint").alias("y_fp"),
+        money(F.log(F.col("t_days").cast("double")), 6).alias("x_fp"),
+        money(F.log(-(F.col("lsum").cast("double") / 1e6)), 6).alias("y_fp"),
     )
     m2 = pts.agg(
         F.count("*").cast("bigint").alias("n"),
@@ -3492,10 +3481,7 @@ def a086_tost_equivalence(spark, sf_dir):
     per_user = (
         ev.filter(F.col("event_type") == "purchase")
         .groupBy("user_id")
-        .agg(
-            F.sum(F.round(F.col("value") * 100.0, 0).cast("bigint"))
-            .cast("bigint").alias("y")
-        )
+        .agg(F.sum(money("value")).cast("bigint").alias("y"))
         .select((F.col("user_id") % 2).cast("bigint").alias("arm"), "y")
     )
     grp = per_user.groupBy("arm").agg(
@@ -3660,9 +3646,7 @@ def a087_hellinger_bhattacharyya(spark, sf_dir):
     terms = cells.select(
         "c0",
         "c1",
-        F.round(
-            F.sqrt((F.col("c0") * F.col("c1")).cast("double")) * 1e6, 0
-        ).cast("bigint").alias("rt_fp"),
+        money(F.sqrt((F.col("c0") * F.col("c1")).cast("double")), 6).alias("rt_fp"),
     )
     agg = terms.agg(
         F.sum("c0").cast("bigint").alias("n0"),
@@ -4044,8 +4028,7 @@ def a091_price_elasticity_within(spark, sf_dir):
         .distinct()
         .select(
             "p",
-            F.round(F.log(F.col("p").cast("double")) * 1e4, 0)
-            .cast("bigint").alias("lnp"),
+            money(F.log(F.col("p").cast("double")), 4).alias("lnp"),
         )
     )
     qv = (
@@ -4053,8 +4036,7 @@ def a091_price_elasticity_within(spark, sf_dir):
         .distinct()
         .select(
             "q",
-            F.round(F.log(F.col("q").cast("double")) * 1e4, 0)
-            .cast("bigint").alias("lnq"),
+            money(F.log(F.col("q").cast("double")), 4).alias("lnq"),
         )
     )
     obs = (
@@ -4580,8 +4562,7 @@ def a095_burrows_delta(spark, sf_dir):
         .groupBy("src_a", "src_b")
         .agg(
             F.sum(
-                F.round(F.abs(F.col("za") - F.col("zb")) * 1e6, 0)
-                .cast("bigint")
+                money(F.abs(F.col("za") - F.col("zb")), 6)
             ).cast("bigint").alias("sum_fp"),
             F.count("*").cast("bigint").alias("nw"),
         )
@@ -4824,10 +4805,8 @@ def a097_taylor_power_law(spark, sf_dir):
         (F.col("s") > 0)
         & (F.col("ss") * F.col("n") > F.col("s") * F.col("s"))
     ).select(
-        F.round(
-            F.log(F.col("s").cast("double") / F.col("n")) * 1e6, 0
-        ).cast("bigint").alias("x_fp"),
-        F.round(F.log(var) * 1e6, 0).cast("bigint").alias("y_fp"),
+        money(F.log(F.col("s").cast("double") / F.col("n")), 6).alias("x_fp"),
+        money(F.log(var), 6).alias("y_fp"),
     )
     ols = pts.agg(
         F.count("*").cast("bigint").alias("n"),
@@ -4948,7 +4927,7 @@ def a098_ohlc_technical(spark, sf_dir):
         F.expr(
             "CAST(unix_micros(ts) * 4096 + event_id % 4096 AS BIGINT)"
         ).alias("tk"),
-        F.round(F.col("value") * 100.0, 0).cast("bigint").alias("px"),
+        money("value").alias("px"),
     )
     bars = ticks.groupBy("h").agg(
         F.expr("CAST(MIN_BY(px, tk) AS BIGINT)").alias("open"),
@@ -5192,11 +5171,10 @@ def a100_jackknife_se(spark, sf_dir):
         F.count("*").cast("bigint").alias("k"),
     )
     loo = grp.crossJoin(F.broadcast(tot)).select(
-        F.round(
+        money(
             (F.col("st") - F.col("s")).cast("double")
-            / (F.col("nt") - F.col("n")) * 100.0,
-            0,
-        ).cast("bigint").alias("theta_fp"),
+            / (F.col("nt") - F.col("n")),
+        ).alias("theta_fp"),
         "k",
         "nt",
         "st",
@@ -5299,8 +5277,7 @@ def a126_lognormal_fit_gof(spark, sf_dir):
         F.count("*").cast("bigint").alias("cnt")
     ).select(
         "v",
-        F.round(F.log(F.col("v").cast("double")) * 1e6, 0)
-        .cast("bigint").alias("lnv"),
+        money(F.log(F.col("v").cast("double")), 6).alias("lnv"),
         "cnt",
     ).localCheckpoint(eager=False)
     m = lv.agg(
@@ -5765,11 +5742,7 @@ def a130_twonn_intrinsic_dim(spark, sf_dir):
             F.max(F.when(F.col("rn") == 2, F.col("dd"))).alias("d2"),
         )
         .filter(F.col("d1") > 0)
-        .select(
-            F.round(
-                0.5 * F.log(F.col("d2") / F.col("d1")) * 1e6, 0
-            ).cast("bigint").alias("lnmu_fp")
-        )
+        .select(money(0.5 * F.log(F.col("d2") / F.col("d1")), 6).alias("lnmu_fp"))
     )
     agg = mu.agg(
         F.count("*").cast("bigint").alias("n"),
@@ -6104,7 +6077,7 @@ def a133_group_sequential_obf(spark, sf_dir):
         "user_id",
         (F.col("user_id") % 2).cast("bigint").alias("arm"),
         F.to_date("ts").alias("d"),
-        F.round(F.col("value") * 100.0, 0).cast("bigint").alias("v"),
+        money("value").alias("v"),
     )
     cells = (
         per_user.join(
@@ -6256,9 +6229,7 @@ def a134_crps_ensemble(spark, sf_dir):
             - 0.5 * F.col("s2").cast("double") / F.col("mm")
         ).alias("crps"),
     )
-    qd = per_day.select(
-        F.round(F.col("crps") * 1e6, 0).cast("bigint").alias("crps_fp")
-    )
+    qd = per_day.select(money("crps", 6).alias("crps_fp"))
     return qd.agg(
         F.count("*").cast("bigint").alias("n_days"),
         F.round(
@@ -6529,14 +6500,10 @@ def a137_tail_dependence(spark, sf_dir):
     xy = (
         c.join(o, c.c_custkey == o.o_custkey)
         .groupBy("c_custkey", "c_acctbal")
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint"))
-            .cast("bigint").alias("y")
-        )
+        .agg(F.sum(money("o_totalprice")).cast("bigint").alias("y"))
         .select(
             "c_custkey",
-            F.round(F.col("c_acctbal") * 100.0, 0)
-            .cast("bigint").alias("x"),
+            money("c_acctbal").alias("x"),
             "y",
         )
     )
@@ -6640,14 +6607,10 @@ def a138_chatterjee_xi(spark, sf_dir):
     xy = (
         c.join(o, c.c_custkey == o.o_custkey)
         .groupBy("c_custkey", "c_acctbal")
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint"))
-            .cast("bigint").alias("y")
-        )
+        .agg(F.sum(money("o_totalprice")).cast("bigint").alias("y"))
         .select(
             "c_custkey",
-            F.round(F.col("c_acctbal") * 100.0, 0)
-            .cast("bigint").alias("x"),
+            money("c_acctbal").alias("x"),
             "y",
         )
         .localCheckpoint(eager=False)
@@ -6917,7 +6880,7 @@ def a140_price_indexes(spark, sf_dir):
         F.col("l_partkey").cast("bigint").alias("part"),
         F.date_trunc("month", "l_shipdate").alias("mo"),
     ).agg(
-        F.sum(F.round(F.col("l_extendedprice") * 100.0, 0).cast("bigint"))
+        F.sum(money("l_extendedprice"))
         .cast("bigint").alias("rev_cents"),
         F.sum(F.round("l_quantity", 0).cast("bigint"))
         .cast("bigint").alias("q"),
@@ -6947,7 +6910,7 @@ def a140_price_indexes(spark, sf_dir):
         F.round(p0 * F.col("q1"), 0).cast("bigint").alias("p_den"),
         "r0",
         "r1",
-        F.round(F.log(p1 / p0) * 1e6, 0).cast("bigint").alias("lnr_fp"),
+        money(F.log(p1 / p0), 6).alias("lnr_fp"),
     ).localCheckpoint(eager=False)
     tot = terms.agg(
         F.count("*").cast("bigint").alias("n_parts"),
@@ -7009,13 +6972,12 @@ def _rets(spark, sf_dir):
     o = table(spark, sf_dir, "orders")
     wd = Window.orderBy("d")
     daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint"))
+        F.sum(money("o_totalprice"))
         .cast("bigint").alias("cents")
     )
     lnd = daily.select(
         "d",
-        F.round(F.log(F.col("cents").cast("double")) * 1e4, 0)
-        .cast("bigint").alias("lnx"),
+        money(F.log(F.col("cents").cast("double")), 4).alias("lnx"),
     )
     return lnd.select(
         "d", (F.col("lnx") - F.lag("lnx").over(wd)).cast("bigint").alias("r")

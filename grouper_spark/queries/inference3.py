@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from ..functions.text import md5_bits
+from ..functions.text import md5_bits, money
 from ..sources import table
 from . import query
 from ..operators.core import literal_frame
@@ -391,7 +391,7 @@ def a149_boxcox_grid(spark, sf_dir):
         "m",
         "w",
         q.alias("q"),
-        F.round(F.log(mD) * 1e8, 0).cast("bigint").alias("lnm_q"),
+        money(F.log(mD), 8).alias("lnm_q"),
     )
     qc = F.expr("q div 1000000")
     s = tr.groupBy("lambda").agg(
@@ -560,9 +560,7 @@ def _ranked(spark, sf_dir):
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_custkey", "c_nationkey")
         .agg(
-            F.sum(
-                F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
-            ).cast("bigint").alias("spend_cents"),
+            F.sum(money("o_totalprice")).cast("bigint").alias("spend_cents"),
             F.count("*").cast("bigint").alias("n_orders"),
         )
     )
@@ -657,7 +655,7 @@ def a151_expected_reciprocal_rank(spark, sf_dir):
     )
     terms = cum.select(
         "nation",
-        F.round(
+        money(
             (
                 F.col("nr")
                 * F.expr(_pow_case("a7", 7))
@@ -665,11 +663,9 @@ def a151_expected_reciprocal_rank(spark, sf_dir):
             ).cast("double")
             / (
                 F.expr(_pow_case("a7 + b5 + z1", 8)) * 8 * F.col("r")
-            ).cast("double")
-            * 1e15,
-            0,
+            ).cast("double"),
+            15,
         )
-        .cast("bigint")
         .alias("tq"),
     )
     return (
@@ -1077,9 +1073,7 @@ def a155_spectral_entropy(spark, sf_dir):
         power_q.crossJoin(F.broadcast(tot))
         .filter(F.col("pq") > 0)
         .agg(
-            F.sum(
-                F.round(-share * F.log(share) * 1e9, 0).cast("bigint")
-            )
+            F.sum(money(-share * F.log(share), 9))
             .cast("bigint")
             .alias("e_q"),
             F.max("k").alias("k"),
@@ -1251,11 +1245,7 @@ def _drank(spark, sf_dir):
         F.when(F.col("event_type") == "purchase", "treat")
         .otherwise("ctrl")
         .alias("arm"),
-    ).agg(
-        F.sum(F.round(F.col("value") * 100.0, 0).cast("bigint"))
-        .cast("bigint")
-        .alias("xc")
-    )
+    ).agg(F.sum(money("value")).cast("bigint").alias("xc"))
     vals = obs.groupBy("xc").agg(
         F.coalesce(
             F.sum(F.when(F.col("arm") == "treat", 1)), F.lit(0)
@@ -1963,9 +1953,7 @@ def a162_eoq_safety_stock(spark, sf_dir):
     lineitem fold for the top-25, one (part, day) fold for the
     variance — both map-side combinable."""
     li = table(spark, sf_dir, "lineitem")
-    qcq = F.sum(
-        F.round(F.col("l_quantity") * 100.0, 0).cast("bigint")
-    ).cast("bigint")
+    qcq = F.sum(money("l_quantity")).cast("bigint")
     span = li.agg(
         (
             F.datediff(
@@ -2065,7 +2053,7 @@ def a163_kelly_criterion(spark, sf_dir):
     broadcast against one per-group fold."""
     t = table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),
-        F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint").alias("xc"),
+        money("o_totalprice").alias("xc"),
     )
     g = t.agg(
         F.count("*").cast("bigint").alias("n_all"),
@@ -2252,7 +2240,7 @@ def a165_dunn_posthoc(spark, sf_dir):
     (value, group) fold + one value window."""
     t = table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),
-        F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint").alias("xc"),
+        money("o_totalprice").alias("xc"),
     )
     vals = t.groupBy("xc", "grp").agg(
         F.count("*").cast("bigint").alias("cg")
@@ -2495,7 +2483,7 @@ def a167_lorenz_asymmetry(spark, sf_dir):
     divisions. At 100 TB: two grouped folds over orders, no sort."""
     t = table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),
-        F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint").alias("xc"),
+        money("o_totalprice").alias("xc"),
     )
     g = t.groupBy("grp").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -2586,7 +2574,7 @@ def a168_hash_bootstrap_se(spark, sf_dir):
     means). At 100 TB: one per-user fold, a ×32 literal fan-out, one
     grouped sum per replicate — no data ever leaves the executors."""
     peruser = table(spark, sf_dir, "events").groupBy("user_id").agg(
-        F.sum(F.round(F.col("value") * 100.0, 0).cast("bigint"))
+        F.sum(money("value"))
         .cast("bigint")
         .alias("xc")
     )
@@ -2612,11 +2600,7 @@ def a168_hash_bootstrap_se(spark, sf_dir):
         F.sum(w).cast("bigint").alias("sw"),
     )
     means = weighted.select(
-        F.round(
-            F.col("sx").cast("double") / F.col("sw") / 100.0 * 1e3, 0
-        )
-        .cast("bigint")
-        .alias("mq")
+        money(F.col("sx").cast("double") / F.col("sw") / 100.0, 3).alias("mq")
     )
     boot = means.agg(
         F.count("*").cast("bigint").alias("bb"),
@@ -2789,7 +2773,7 @@ def a170_approx_percentile_audit(spark, sf_dir):
     quantile sketch. At 100 TB: the sketch is one pass + constant
     memory; the audit adds one rank window."""
     t = table(spark, sf_dir, "orders").select(
-        F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint").alias("xc")
+        money("o_totalprice").alias("xc")
     ).localCheckpoint(eager=False)
     n_all = t.agg(F.count("*").cast("bigint").alias("n"))
     approx = t.agg(
@@ -3009,7 +2993,7 @@ def a172_logistic_irls(spark, sf_dir):
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
-                F.round(F.col("value") * 100.0, 0).cast("bigint"),
+                money("value"),
             ).otherwise(0)
         )
         .cast("bigint")
@@ -3046,8 +3030,8 @@ def a172_logistic_irls(spark, sf_dir):
             "sy",
             "b0",
             "b1",
-            F.round(sig * 1e8, 0).cast("bigint").alias("pq"),
-            F.round(sig * (1.0 - sig) * 1e8, 0).cast("bigint").alias("wq"),
+            money(sig, 8).alias("pq"),
+            money(sig * (1.0 - sig), 8).alias("wq"),
         )
         s = terms.groupBy("b0", "b1").agg(
             F.sum(F.col("n") * F.col("wq")).cast("bigint").alias("s0"),
@@ -3240,12 +3224,8 @@ def a173_cox_ph(spark, sf_dir):
         m1 = F.col("s1").cast("double") / s0D
         m2 = F.col("s2").cast("double") / s0D
         terms = r.join(dayagg, "t").select(
-            F.round((F.col("sx_t") - F.col("d_t") * m1) * 1e6, 0)
-            .cast("bigint")
-            .alias("uq"),
-            F.round(F.col("d_t") * (m2 - m1 * m1) * 1e6, 0)
-            .cast("bigint")
-            .alias("iq"),
+            money(F.col("sx_t") - F.col("d_t") * m1, 6).alias("uq"),
+            money(F.col("d_t") * (m2 - m1 * m1), 6).alias("iq"),
         )
         s = terms.agg(
             F.sum("uq").cast("bigint").alias("uq"),

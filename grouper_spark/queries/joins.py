@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.text import md5_bits, money_sum
+from ..functions.text import md5_bits, money, money_sum
 from ..sources import table
 from . import query
 from ._sqlgen import sql_money_sum
@@ -439,7 +439,6 @@ def q165_bucketed_join(spark, sf_dir):
     table design at 100 TB: the shuffle happens at write time, once,
     instead of at every query. The oracle is the plain join — bucketing
     is semantics-preserving."""
-    from ..functions.text import money
     from ..sources.sinks import write_bucketed
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
@@ -623,7 +622,7 @@ def q194_bloom_prefiltered_join(spark, sf_dir):
         .groupBy("l_returnflag")
         .agg(
             F.count("*").cast("bigint").alias("n_lines"),
-            F.sum(F.round(F.col("l_extendedprice") * 100.0, 0).cast("bigint"))
+            F.sum(money("l_extendedprice"))
             .cast("bigint")
             .alias("revenue_cents"),
         )
@@ -851,9 +850,7 @@ def q248_volume_shipping(spark, sf_dir):
     ns = n.filter(F.col("n_nationkey") < 5).select(
         F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
     )
-    rev_cents = F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100.0, 0
-    ).cast("bigint")
+    rev_cents = money(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     joined = (
         li.select("l_orderkey", "l_suppkey", "l_shipdate", rev_cents.alias("rc"))
         .join(o, F.col("l_orderkey") == o.o_orderkey)
@@ -1258,7 +1255,7 @@ def a379_join_hints(spark, sf_dir):
         .groupBy("n_name")
         .agg(
             F.count("*").cast("bigint").alias("n_suppliers"),
-            F.sum(F.round(F.col("s_acctbal") * 100.0, 0).cast("bigint"))
+            F.sum(money("s_acctbal"))
             .cast("bigint")
             .alias("balance_cents"),
         )
@@ -1312,9 +1309,7 @@ def a463_tpch_q5_local_supplier(spark, sf_dir):
     s = table(spark, sf_dir, "supplier")
     n = table(spark, sf_dir, "nation")
     r = table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    rev = F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100.0, 0
-    ).cast("bigint")
+    rev = money(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (
         l.join(o, F.col("o_orderkey") == F.col("l_orderkey"))
         .join(c, F.col("c_custkey") == F.col("o_custkey"))
@@ -1391,9 +1386,7 @@ def a464_tpch_q8_market_share(spark, sf_dir):
     )
     r = table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
     p = table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
-    rev = F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100.0, 0
-    ).cast("bigint")
+    rev = money(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     joined = (
         l.join(o, F.col("o_orderkey") == F.col("l_orderkey"))
         .join(c, F.col("c_custkey") == F.col("o_custkey"))

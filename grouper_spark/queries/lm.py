@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.text import md5_bits, tokens
+from ..functions.text import md5_bits, money, tokens
 from ..sources import table
 from . import query
 from ..operators.core import literal_frame
@@ -187,12 +187,7 @@ def q122_bigram_lm_score(spark, sf_dir):
         .join(ctx, "w1")
         .select(
             "doc_id",
-            F.round(
-                F.log(F.col("c12").cast("double") / F.col("c1").cast("double"))
-                * 1_000_000.0,
-                0,
-            )
-            .cast("bigint")
+            money(F.log(F.col("c12").cast("double") / F.col("c1").cast("double")), 6)
             .alias("logp_micro"),
         )
     )
@@ -284,17 +279,15 @@ def q152_dsir_importance(spark, sf_dir):
         .crossJoin(F.broadcast(tot))
         .select(
             "bucket",
-            F.round(
+            money(
                 F.log(
                     ((F.coalesce(F.col("ct"), F.lit(0)) + 1) * (F.col("r") + 256)).cast(
                         "double"
                     )
                     / ((F.col("cr") + 1) * (F.col("t") + 256)).cast("double")
-                )
-                * 1000000.0,
-                0,
+                ),
+                6,
             )
-            .cast("bigint")
             .alias("lr_micro"),
         )
     )
@@ -549,9 +542,7 @@ def q230_mixture_kl_audit(spark, sf_dir):
     )
     tot = tok.agg(F.sum("n_tokens").alias("t"))
     p = F.col("n_tokens").cast("double") / F.col("t")
-    ln_micro = F.round(F.log(p / F.col("p_target")) * 1000000.0, 0).cast(
-        "bigint"
-    )
+    ln_micro = money(F.log(p / F.col("p_target")), 6)
     return (
         tok.crossJoin(F.broadcast(tot))
         .join(F.broadcast(target), "source")
@@ -632,12 +623,8 @@ def q234_zipf_slope(spark, sf_dir):
     pts = top.select(
         "token",
         "freq",
-        F.round(F.log(rk.cast("double")) * 1000000.0, 0)
-        .cast("bigint")
-        .alias("lx"),
-        F.round(F.log(F.col("freq").cast("double")) * 1000000.0, 0)
-        .cast("bigint")
-        .alias("ly"),
+        money(F.log(rk.cast("double")), 6).alias("lx"),
+        money(F.log(F.col("freq").cast("double")), 6).alias("ly"),
     )
     s = pts.agg(
         F.count("*").cast("bigint").alias("n"),
@@ -861,12 +848,7 @@ def q296_naive_bayes_eval(spark, sf_dir):
         priors.crossJoin(F.broadcast(prior_tot))
         .select(
             F.col("source").alias("cls"),
-            F.round(
-                F.log(F.col("nd").cast("double") / F.col("nd_all"))
-                * 1000000.0,
-                0,
-            )
-            .cast("bigint")
+            money(F.log(F.col("nd").cast("double") / F.col("nd_all")), 6)
             .alias("prior_micro"),
         )
     )
@@ -885,15 +867,13 @@ def q296_naive_bayes_eval(spark, sf_dir):
             "doc_id",
             "true_source",
             "cls",
-            F.round(
+            money(
                 F.log(
                     (F.coalesce(F.col("c"), F.lit(0)) + 1.0)
                     / (F.col("tot") + F.col("v"))
-                )
-                * 1000000.0,
-                0,
+                ),
+                6,
             )
-            .cast("bigint")
             .alias("ll_micro"),
         )
     )
@@ -1036,15 +1016,13 @@ def q300_lm_perplexity_holdout(spark, sf_dir):
         .join(train_uni, "w1", "left")
         .join(train_big, ["w1", "w2"], "left")
         .select(
-            F.round(
+            money(
                 F.log(
                     (F.coalesce(F.col("c12"), F.lit(0)) + 1.0)
                     / (F.coalesce(F.col("c1"), F.lit(0)) + F.col("v"))
-                )
-                * 1000000.0,
-                0,
+                ),
+                6,
             )
-            .cast("bigint")
             .alias("ll_micro")
         )
     )
@@ -1812,11 +1790,7 @@ def a453_huffman_code_audit(spark, sf_dir):
     p = F.col("w").cast("double") / F.col("n")
     ent = (
         freq.crossJoin(F.broadcast(base.select("n")))
-        .select(
-            F.round(-p * F.log2(p) * 1000000000000.0, 0)
-            .cast("bigint")
-            .alias("term_fp")
-        )
+        .select(money(-p * F.log2(p), 12).alias("term_fp"))
         .agg(F.sum("term_fp").cast("bigint").alias("h_fp"))
     )
     return fin.crossJoin(F.broadcast(ent)).select(

@@ -5,13 +5,14 @@ schema are stable)."""
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
-from ..functions.text import md5_bits, money
+from ..functions.text import md5_bits, money, money_sum
 from ..operators.core import literal_frame
 from ..sources import table
 from ..streaming.stream import (
@@ -31,21 +32,42 @@ from . import query
 _STREAM_SHUFFLE = 8
 
 
+class _Replay:
+    """The directories one fixture replay owns: its staged sources and
+    its private checkpoints, removed when the replay ends."""
+
+    def __init__(self):
+        self.paths: list[str] = []
+
+    def stage(self, df, n_files: int, order_by: str | None = None) -> str:
+        return self.private(stage_stream_source(df, n_files, order_by=order_by))
+
+    def private(self, path: str) -> str:
+        self.paths.append(path)
+        return path
+
+
 @contextmanager
-def _replay_shuffle(spark):
-    """Run a fixture replay at ``_STREAM_SHUFFLE`` shuffle partitions.
+def _replay(spark):
+    """Run a fixture replay at ``_STREAM_SHUFFLE`` shuffle partitions and
+    yield the ``_Replay`` that stages its sources.
 
     Stateful streaming disables AQE, so every state-store operator runs
     with the full static shuffle width — 32 partitions × N micro-batches
     of task overhead for state that fits in a handful. At scale you size
     this to the state volume; for the fixture replays a narrow width is
-    the right plan. The conf is restored on exit."""
+    the right plan. On exit the conf is restored and the staged sources
+    and private checkpoints are removed; result directories the returned
+    DataFrame still reads are not the replay's to remove."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(_STREAM_SHUFFLE))
+    r = _Replay()
     try:
-        yield
+        yield r
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+        for path in r.paths:
+            shutil.rmtree(path, ignore_errors=True)
 
 
 @query("q40_grouper_stream", oracle=None, tags=("streaming", "rows_only"))
@@ -65,14 +87,15 @@ def q40_grouper_stream(spark, sf_dir):
     # Stage the table as a 4-file directory (staggered mtimes) so the
     # drain with maxFilesPerTrigger=1 runs exactly 4 micro-batches.
     ev = table(spark, sf_dir, "events")
-    out = grouper_process_stream(
-        spark,
-        stage_stream_source(ev, 4),
-        proc,
-        schema=ev.schema,
-        interval_ms=None,
-        max_files_per_trigger=1,
-    )
+    with _replay(spark) as r:
+        out = grouper_process_stream(
+            spark,
+            r.stage(ev, 4),
+            proc,
+            schema=ev.schema,
+            interval_ms=None,
+            max_files_per_trigger=1,
+        )
     return out.select(
         "event_id", "event_type_upper", "value_doubled", "status"
     ).orderBy("event_id")
@@ -99,18 +122,16 @@ def q52_stream_watermark_window(spark, sf_dir):
     batch aggregation, so this streaming query carries an exact SQL
     oracle."""
     ev = table(spark, sf_dir, "events")
-    stream = (
-        _read_stream(spark, stage_stream_source(ev, 4), ev.schema)
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(
-            F.count("*").alias("n_events"),
-            (
-                F.sum(F.round(F.col("value") * 100.0, 0).cast("bigint")) / 100.0
-            ).alias("total_value"),
+    with _replay(spark) as r:
+        stream = (
+            _read_stream(spark, r.stage(ev, 4), ev.schema)
+            .withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "1 hour").alias("w"))
+            .agg(
+                F.count("*").alias("n_events"),
+                money_sum("value", "total_value"),
+            )
         )
-    )
-    with _replay_shuffle(spark):
         out = _drain(spark, stream.writeStream.outputMode("complete"), "wm")
     return (
         out.select(F.col("w.start").alias("window_start"), "n_events", "total_value")
@@ -140,10 +161,10 @@ def q57_stateful_running_sum(spark, sf_dir):
     staged = table(spark, sf_dir, "events").select(
         "user_id", money("value").alias("cents")
     )
-    with _replay_shuffle(spark):
+    with _replay(spark) as r:
         log = stateful_running_sum(
             spark,
-            stage_stream_source(staged, 4),
+            r.stage(staged, 4),
             key_col="user_id",
             cents_col="cents",
             schema=staged.schema,
@@ -178,13 +199,13 @@ def q59_stream_dedup_watermark(spark, sf_dir):
     the fixture's time span nothing expires, so the distinct key set
     equals batch DISTINCT — the exact SQL oracle."""
     ev = table(spark, sf_dir, "events")
-    deduped = (
-        _read_stream(spark, stage_stream_source(ev, 4), ev.schema)
-        .withWatermark("ts", "365 days")
-        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-        .select("user_id", "event_type")
-    )
-    with _replay_shuffle(spark):
+    with _replay(spark) as r:
+        deduped = (
+            _read_stream(spark, r.stage(ev, 4), ev.schema)
+            .withWatermark("ts", "365 days")
+            .dropDuplicatesWithinWatermark(["user_id", "event_type"])
+            .select("user_id", "event_type")
+        )
         out = _drain(spark, deduped.writeStream.outputMode("append"), "dd")
     return out.orderBy("user_id", "event_type")
 
@@ -212,8 +233,9 @@ def q60_stream_stream_join(spark, sf_dir):
     event-time order (range-staged files) so the watermark never evicts
     state that batch semantics would still match."""
     ev = table(spark, sf_dir, "events")
-    src = stage_stream_source(ev, 4, order_by="ts")
-    out = _purchase_click_join(spark, src, ev.schema, "inner")
+    with _replay(spark) as r:
+        src = r.stage(ev, 4, order_by="ts")
+        out = _purchase_click_join(spark, src, ev.schema, "inner")
     return out.orderBy("purchase_id", "click_id")
 
 
@@ -244,8 +266,7 @@ def _purchase_click_join(spark, src, schema, how):
         how,
     )
     out = joined.select("purchase_id", "click_id", F.col("p_user").alias("user_id"))
-    with _replay_shuffle(spark):
-        return _drain(spark, out.writeStream.outputMode("append"), "ssj")
+    return _drain(spark, out.writeStream.outputMode("append"), "ssj")
 
 
 @query(
@@ -272,7 +293,6 @@ def q71_incremental_matview(spark, sf_dir):
     staged = table(spark, sf_dir, "events").select(
         "event_type", money("value").alias("cents")
     )
-    src = stage_stream_source(staged, 4)
     view_dir = os.path.join(tempfile.gettempdir(), f"mv-{uuid.uuid4().hex}")
 
     def merge(batch_df, batch_id):
@@ -298,12 +318,12 @@ def q71_incremental_matview(spark, sf_dir):
             "overwrite"
         ).parquet(view_dir)
 
-    writer = (
-        _read_stream(spark, src, staged.schema)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", view_dir + "-ckpt")
-    )
-    with _replay_shuffle(spark):
+    with _replay(spark) as r:
+        writer = (
+            _read_stream(spark, r.stage(staged, 4), staged.schema)
+            .writeStream.foreachBatch(merge)
+            .option("checkpointLocation", r.private(view_dir + "-ckpt"))
+        )
         _drain(spark, writer)
     return spark.read.parquet(view_dir).orderBy("event_type")
 
@@ -334,18 +354,16 @@ def q90_stream_static_join(spark, sf_dir):
     dim = table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
-    stream = (
-        _read_stream(spark, stage_stream_source(ev, 4), ev.schema)
-        .join(F.broadcast(dim), "user_id")
-        .groupBy("segment", "event_type")
-        .agg(
-            F.count("*").cast("bigint").alias("n_events"),
-            (
-                F.sum(F.round(F.col("value") * 100.0, 0).cast("bigint")) / 100.0
-            ).alias("total_value"),
+    with _replay(spark) as r:
+        stream = (
+            _read_stream(spark, r.stage(ev, 4), ev.schema)
+            .join(F.broadcast(dim), "user_id")
+            .groupBy("segment", "event_type")
+            .agg(
+                F.count("*").cast("bigint").alias("n_events"),
+                money_sum("value", "total_value"),
+            )
         )
-    )
-    with _replay_shuffle(spark):
         out = _drain(spark, stream.writeStream.outputMode("complete"), "ss")
     return out.orderBy("segment", "event_type")
 
@@ -376,7 +394,6 @@ def q113_stream_outer_join(spark, sf_dir):
     outer rows. Sentinel rows (negative event_id) are filtered from the
     result, which then equals the batch LEFT JOIN — the SQL oracle."""
     ev = table(spark, sf_dir, "events")
-    src = stage_stream_source(ev, 4, order_by="ts")
 
     def sentinels(wave: int, ts_lit: str):
         return spark.range(1).select(
@@ -397,9 +414,11 @@ def q113_stream_outer_join(spark, sf_dir):
             )
         )
 
-    append_stream_file(src, sentinels(0, "2030-01-01 00:00:00").select(*ev.columns))
-    append_stream_file(src, sentinels(1, "2031-01-01 00:00:00").select(*ev.columns))
-    out = _purchase_click_join(spark, src, ev.schema, "leftOuter")
+    with _replay(spark) as r:
+        src = r.stage(ev, 4, order_by="ts")
+        append_stream_file(src, sentinels(0, "2030-01-01 00:00:00").select(*ev.columns))
+        append_stream_file(src, sentinels(1, "2031-01-01 00:00:00").select(*ev.columns))
+        out = _purchase_click_join(spark, src, ev.schema, "leftOuter")
     # Sentinels are filtered AFTER the sink: a right-side predicate above
     # a streaming left-outer join interferes with the null-emission path
     # (observed: watermark-gated outer rows silently dropped), so the
@@ -452,13 +471,13 @@ def q130_stateful_sessions(spark, sf_dir):
     set equals batch gaps-and-islands sessionization — the exact SQL
     oracle."""
     ev = table(spark, sf_dir, "events").select("user_id", "ts")
-    src = stage_stream_source(ev, 6, order_by="ts")
     sentinel = ev.agg(
         F.lit(-1).cast("bigint").alias("user_id"),
         (F.max("ts") + F.expr("INTERVAL 365 DAYS")).alias("ts"),
     )
-    append_stream_file(src, sentinel)
-    with _replay_shuffle(spark):
+    with _replay(spark) as r:
+        src = r.stage(ev, 6, order_by="ts")
+        append_stream_file(src, sentinel)
         out = stateful_sessionize(
             spark, src, key_col="user_id", ts_col="ts", gap_s=300,
             schema=ev.schema,
@@ -501,7 +520,6 @@ def q187_idempotent_sink(spark, sf_dir):
     staged = table(spark, sf_dir, "events").select(
         "event_type", money("value").alias("cents")
     )
-    src = stage_stream_source(staged, 4)
     sink_dir = os.path.join(
         tempfile.gettempdir(), f"idem-{uuid.uuid4().hex}"
     )
@@ -536,10 +554,10 @@ def q187_idempotent_sink(spark, sf_dir):
         apply_batch(batch_df, batch_id)
         apply_batch(batch_df, batch_id)  # simulated post-failure retry
 
-    writer = _read_stream(spark, src, staged.schema).writeStream.foreachBatch(
-        apply_twice
-    )
-    with _replay_shuffle(spark):
+    with _replay(spark) as r:
+        writer = _read_stream(
+            spark, r.stage(staged, 4), staged.schema
+        ).writeStream.foreachBatch(apply_twice)
         _drain(spark, writer)
     return (
         spark.read.parquet(sink_dir)
@@ -583,12 +601,10 @@ def q191_checkpoint_recovery(spark, sf_dir):
     first = keyed.filter(F.col("event_id") % 2 == 0)
     second = keyed.filter(F.col("event_id") % 2 == 1)
 
-    src = stage_stream_source(first, 2)
     run_id = uuid.uuid4().hex
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt-{run_id}")
     sink = os.path.join(tempfile.gettempdir(), f"sink-{run_id}")
 
-    def drain():
+    def drain(src, ckpt):
         writer = (
             _read_stream(spark, src, first.schema)
             .writeStream.format("parquet")
@@ -596,12 +612,14 @@ def q191_checkpoint_recovery(spark, sf_dir):
             .option("checkpointLocation", ckpt)
             .outputMode("append")
         )
-        with _replay_shuffle(spark):
-            _drain(spark, writer)
+        _drain(spark, writer)
 
-    drain()  # run 1: processes the first half, then stops
-    append_stream_file(src, second)  # data lands while "down"
-    drain()  # run 2: SAME checkpoint — resumes at recorded offsets
+    with _replay(spark) as r:
+        src = r.stage(first, 2)
+        ckpt = r.private(os.path.join(tempfile.gettempdir(), f"ckpt-{run_id}"))
+        drain(src, ckpt)  # run 1: processes the first half, then stops
+        append_stream_file(src, second)  # data lands while "down"
+        drain(src, ckpt)  # run 2: SAME checkpoint — resumes at recorded offsets
 
     return (
         spark.read.parquet(sink)
@@ -643,10 +661,10 @@ def a343_tws_extrema(spark, sf_dir):
     staged = table(spark, sf_dir, "events").select(
         "user_id", money("value").alias("cents")
     )
-    with _replay_shuffle(spark):
+    with _replay(spark) as r:
         log = stateful_extrema(
             spark,
-            stage_stream_source(staged, 4),
+            r.stage(staged, 4),
             key_col="user_id",
             cents_col="cents",
             schema=staged.schema,
@@ -693,9 +711,7 @@ def a465_join_view_maintenance(spark, sf_dir):
     integer cents, so merge order across batches cannot matter."""
     o = table(spark, sf_dir, "orders").select(
         "o_custkey",
-        F.round(F.col("o_totalprice") * 100.0, 0)
-        .cast("bigint")
-        .alias("cents"),
+        money("o_totalprice").alias("cents"),
         (md5_bits(F.col("o_orderkey").cast("string"), 4) % 3).alias("b"),
     ).localCheckpoint(eager=False)
     c = table(spark, sf_dir, "customer").select(

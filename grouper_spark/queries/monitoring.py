@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from ..functions.text import md5_bits
+from ..functions.text import md5_bits, money, money_sum
 from ..sources import table
 from . import query
 from ..operators.core import literal_frame
@@ -346,9 +346,7 @@ def q131_winsorize(spark, sf_dir):
             F.count("*").cast("bigint").alias("n_rows"),
             F.sum("lo").cast("bigint").alias("n_clamped_lo"),
             F.sum("hi").cast("bigint").alias("n_clamped_hi"),
-            (F.sum(F.round(F.col("w") * 100.0, 0).cast("bigint")) / 100.0).alias(
-                "winsorized_sum"
-            ),
+            money_sum("w", "winsorized_sum"),
         )
         .orderBy("l_returnflag")
     )
@@ -437,14 +435,7 @@ def q149_ewma_smoother(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "user_id", F.date_trunc("day", "ts").alias("d")
-    ).agg(
-        (
-            F.sum(F.round(F.col("value") * 100.0, 0).cast("bigint")).cast(
-                "double"
-            )
-            / 100.0
-        ).alias("day_value")
-    )
+    ).agg((F.sum(money("value")).cast("double") / 100.0).alias("day_value"))
     series = daily.groupBy("user_id").agg(
         F.sort_array(F.collect_list(F.struct("d", "day_value"))).alias("s"),
         F.count("*").cast("bigint").alias("n_days"),
@@ -503,7 +494,7 @@ def q157_ks_drift(spark, sf_dir):
 
     ev = table(spark, sf_dir, "events")
     s = ev.filter(F.col("event_type").isin("click", "purchase")).select(
-        F.round(F.col("value") * 100.0, 0).cast("bigint").alias("v"),
+        money("value").alias("v"),
         (F.col("event_type") == "click").cast("bigint").alias("is1"),
     )
     per_v = s.groupBy("v").agg(
@@ -746,13 +737,12 @@ def q168_chi_square_independence(spark, sf_dir):
     cols_ = obs.groupBy("dow").agg(F.sum("o").cast("bigint").alias("c"))
     tot = obs.agg(F.sum("o").cast("bigint").alias("n"))
     num = F.col("o") * F.col("n") - F.col("r") * F.col("c")
-    term = F.round(
+    term = money(
         num.cast("double")
         * num
-        / (F.col("n").cast("double") * F.col("r") * F.col("c"))
-        * 1000000.0,
-        0,
-    ).cast("bigint")
+        / (F.col("n").cast("double") * F.col("r") * F.col("c")),
+        6,
+    )
     cells = (
         obs.join(F.broadcast(rows_), "event_type")
         .join(F.broadcast(cols_), "dow")
@@ -1120,9 +1110,7 @@ def q228_duplicate_payment_detect(spark, sf_dir):
     pairs. Day arithmetic is integer epoch-days; at 100 TB the same
     key pair is also the natural bucketing for a pre-sorted layout."""
     o = table(spark, sf_dir, "orders")
-    band = (
-        F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint") / 1000000
-    ).cast("bigint")
+    band = (money("o_totalprice") / 1000000).cast("bigint")
     pay = o.select(
         "o_orderkey",
         "o_custkey",
@@ -1399,7 +1387,7 @@ def q233_mann_whitney_u(spark, sf_dir):
         F.col("event_type").isin("purchase", "click")
         & F.col("value").isNotNull()
     ).select(
-        F.round(F.col("value") * 100.0, 0).cast("bigint").alias("v"),
+        money("value").alias("v"),
         (F.col("event_type") == "purchase").cast("bigint").alias("grp"),
     )
     vals = pts.groupBy("v").agg(
@@ -1499,7 +1487,7 @@ def q259_cuped_adjustment(spark, sf_dir):
     engine-exact with two shuffles (user, then variant) regardless of
     log size."""
     ev = table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100.0, 0).cast("bigint")
+    cents = money("value")
     is_pre = F.col("ts").cast("date") < F.lit("2024-01-16").cast("date")
     is_purchase = F.col("event_type") == "purchase"
     per_user = ev.groupBy("user_id").agg(
@@ -1807,12 +1795,11 @@ def q274_theil_sen_slope(spark, sf_dir):
         F.col("day").alias("day_b"),
         F.col("x").alias("xb"),
     )
-    slope_micro = F.round(
+    slope_micro = money(
         (F.col("xb") - F.col("xa")).cast("double")
-        / F.datediff("day_b", "day_a")
-        * 1000000.0,
-        0,
-    ).cast("bigint")
+        / F.datediff("day_b", "day_a"),
+        6,
+    )
     slopes = a.join(
         b,
         (F.col("et_b") == F.col("event_type"))
@@ -1868,7 +1855,7 @@ def q275_pinball_loss(spark, sf_dir):
     checks calibration (should be ~0.10). One percentile pass + one
     broadcast-join scoring pass; no per-row floats anywhere."""
     o = table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
+    cents = money("o_totalprice")
     q = o.groupBy(F.col("o_orderpriority").alias("grp")).agg(
         F.round(F.percentile(cents, F.lit(0.9)), 0)
         .cast("bigint")
@@ -1948,7 +1935,7 @@ def q282_delta_method_ratio(spark, sf_dir):
     the experimentation battery: q219 proportions, q259 CUPED means,
     q268 funnel steps, this for ratios."""
     ev = table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100.0, 0).cast("bigint")
+    cents = money("value")
     per_user = ev.groupBy("user_id").agg(
         F.sum(
             F.when(F.col("event_type") == "purchase", cents).otherwise(0)
@@ -2031,7 +2018,7 @@ def q304_percentile_bands(spark, sf_dir):
         (F.col("event_type") == "purchase") & F.col("value").isNotNull()
     ).select(
         F.col("ts").cast("date").alias("day"),
-        F.round(F.col("value") * 100.0, 0).cast("bigint").alias("v"),
+        money("value").alias("v"),
     )
     return (
         daily.groupBy("day")
@@ -2396,13 +2383,7 @@ def q312_seasonal_adjusted_anomaly(spark, sf_dir):
     resid = daily.join(F.broadcast(dows), "iso_dow").select(
         "day",
         "x",
-        F.round(
-            F.col("x").cast("double")
-            / (F.col("sx").cast("double") / F.col("nd"))
-            * 1000000.0,
-            0,
-        )
-        .cast("bigint")
+        money(F.col("x").cast("double") / (F.col("sx").cast("double") / F.col("nd")), 6)
         .alias("ratio_micro"),
     ).localCheckpoint(eager=False)
     stats = resid.agg(
@@ -2661,7 +2642,7 @@ def q323_difference_in_differences(spark, sf_dir):
     effect, DiD identifies an effect when assignment wasn't random
     but trends were parallel)."""
     ev = table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100.0, 0).cast("bigint")
+    cents = money("value")
     is_pre = F.col("ts").cast("date") < F.lit("2024-01-16").cast("date")
     is_purchase = F.col("event_type") == "purchase"
     per_user = ev.groupBy("user_id").agg(
@@ -3124,10 +3105,7 @@ def a352_cohens_kappa(spark, sf_dir):
     pₒ/pₑ/κ evaluate on the 5-integer summary with one rounding each.
     Scales as a single scan at any corpus size."""
     o = table(spark, sf_dir, "orders")
-    a = (
-        F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
-        > _KAPPA_CENTS
-    ).cast("int")
+    a = (money("o_totalprice") > _KAPPA_CENTS).cast("int")
     b = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH").cast("int")
     cm = o.select(a.alias("a"), b.alias("b")).agg(
         F.count("*").cast("bigint").alias("n"),
@@ -3228,7 +3206,7 @@ def a353_permutation_test(spark, sf_dir):
         F.col("event_type").isin("click", "purchase")
     ).select(
         "event_id",
-        F.round(F.col("value") * 100.0, 0).cast("bigint").alias("cents"),
+        money("value").alias("cents"),
         (F.col("event_type") == "click").cast("int").alias("is_a"),
     )
     obs = ev.agg(
@@ -3447,7 +3425,7 @@ def a366_wilcoxon_signed_rank(spark, sf_dir):
     one global rank window over the CUSTOMER summary, one moment
     row."""
     o = table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
+    cents = money("o_totalprice")
     cut = F.lit("1995-01-01").cast("timestamp")
     halves = o.groupBy("o_custkey").agg(
         F.sum(F.when(F.col("o_orderdate") < cut, cents).otherwise(0))
@@ -3538,10 +3516,7 @@ def a367_cochran_armitage(spark, sf_dir):
     engines. One fact-table aggregate, five summary rows, one readout
     row."""
     o = table(spark, sf_dir, "orders")
-    hv = (
-        F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
-        > _CA_CENTS
-    ).cast("int")
+    hv = (money("o_totalprice") > _CA_CENTS).cast("int")
     g = o.groupBy(
         F.substring("o_orderpriority", 1, 1).cast("bigint").alias("s")
     ).agg(
@@ -3821,10 +3796,7 @@ def a388_fleiss_kappa(spark, sf_dir):
     (3-way model/heuristic/human voting) at any corpus size."""
     o = table(spark, sf_dir, "orders")
     pos = (
-        (
-            F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
-            > 25_000_000
-        ).cast("int")
+        (money("o_totalprice") > 25_000_000).cast("int")
         + F.col("o_orderpriority").isin("1-URGENT", "2-HIGH").cast("int")
         + (F.col("o_orderstatus") == "F").cast("int")
     ).cast("bigint")
@@ -4392,7 +4364,7 @@ def a552_kruskal_wallis(spark, sf_dir):
         F.col("event_type").alias("grp"),
         F.date_trunc("day", "ts").cast("date").alias("d"),
     ).agg(
-        F.sum(F.round(F.col("value") * 100.0, 0).cast("bigint"))
+        F.sum(money("value"))
         .cast("bigint")
         .alias("sc"),
         F.count("*").cast("bigint").alias("n"),
@@ -4414,13 +4386,12 @@ def a552_kruskal_wallis(spark, sf_dir):
         )
         .withColumn(
             "term_micro",
-            F.round(
+            money(
                 F.col("rank_sum2").cast("double")
                 * F.col("rank_sum2")
-                / (4.0 * F.col("n_obs"))
-                * 1e6,
-                0,
-            ).cast("bigint"),
+                / (4.0 * F.col("n_obs")),
+                6,
+            ),
         )
     )
     ties = (
@@ -4944,7 +4915,7 @@ def a411_friedman_test(spark, sf_dir):
         F.date_trunc("day", "ts").cast("date").alias("d"),
         F.col("event_type").alias("grp"),
     ).agg(
-        F.sum(F.round(F.col("value") * 100.0, 0).cast("bigint"))
+        F.sum(money("value"))
         .cast("bigint")
         .alias("sc"),
         F.count("*").cast("bigint").alias("n"),
@@ -5249,7 +5220,7 @@ def a414_bootstrap_ci(spark, sf_dir):
     daily = ev.groupBy(
         F.date_trunc("day", "ts").cast("date").alias("d")
     ).agg(
-        F.sum(F.round(F.col("value") * 100.0, 0).cast("bigint"))
+        F.sum(money("value"))
         .cast("bigint")
         .alias("sc"),
         F.count("*").cast("bigint").alias("n"),
@@ -5399,7 +5370,7 @@ def a427_western_electric_rules(spark, sf_dir):
         F.col("event_type").alias("grp"),
         F.date_trunc("day", "ts").cast("date").alias("d"),
     ).agg(
-        F.sum(F.round(F.col("value") * 100.0, 0).cast("bigint"))
+        F.sum(money("value"))
         .cast("bigint")
         .alias("sc"),
         F.count("*").cast("bigint").alias("n"),
@@ -5642,7 +5613,7 @@ def a559_effect_sizes(spark, sf_dir):
         F.when(F.col("event_type") == "purchase", "treat")
         .otherwise("ctrl")
         .alias("arm"),
-        F.round(F.col("value") * 100.0, 0).cast("bigint").alias("xc"),
+        money("value").alias("xc"),
     )
     mom = v.groupBy("arm").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -5749,7 +5720,7 @@ def a432_tukey_hsd(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
     v = ev.select(
         F.col("event_type").alias("grp"),
-        F.round(F.col("value") * 100.0, 0).cast("bigint").alias("xc"),
+        money("value").alias("xc"),
     )
     mom = v.groupBy("grp").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -5856,7 +5827,7 @@ def a433_grubbs_test(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
     v = ev.select(
         F.col("event_type").alias("grp"),
-        F.round(F.col("value") * 100.0, 0).cast("bigint").alias("xc"),
+        money("value").alias("xc"),
     )
     mom = v.groupBy("grp").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -6072,9 +6043,7 @@ def a438_conformal_interval(spark, sf_dir):
     hexc = F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 1)
     split = o.select(
         F.col("o_orderpriority").alias("grp"),
-        F.round(F.col("o_totalprice") * 100.0, 0)
-        .cast("bigint")
-        .alias("y_cents"),
+        money("o_totalprice").alias("y_cents"),
         F.when(hexc.between("0", "5"), F.lit("train"))
         .when(hexc.between("6", "a"), F.lit("cal"))
         .otherwise(F.lit("test"))
@@ -6335,11 +6304,7 @@ def a449_gumbel_block_maxima(spark, sf_dir):
         F.date_trunc("week", F.col("o_orderdate").cast("date"))
         .cast("date")
         .alias("week")
-    ).agg(
-        F.max(F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint"))
-        .cast("bigint")
-        .alias("mx")
-    )
+    ).agg(F.max(money("o_totalprice")).cast("bigint").alias("mx"))
     mom = wk.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("mx").cast("bigint").alias("s1"),
@@ -6577,17 +6542,13 @@ def a466_deming_regression(spark, sf_dir):
         p.join(li, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(
             "p_partkey",
-            F.round(F.col("p_retailprice") * 100.0, 0)
-            .cast("bigint")
-            .alias("x_cents"),
+            money("p_retailprice").alias("x_cents"),
         )
         .agg(
-            F.sum(
-                F.round(F.col("l_extendedprice") * 100.0, 0).cast("bigint")
-            )
+            F.sum(money("l_extendedprice"))
             .cast("bigint")
             .alias("sum_ep"),
-            F.sum(F.round(F.col("l_quantity") * 100.0, 0).cast("bigint"))
+            F.sum(money("l_quantity"))
             .cast("bigint")
             .alias("sum_q"),
         )
@@ -6695,9 +6656,7 @@ def a467_matching_estimator(spark, sf_dir):
         .groupBy(
             F.col("o_orderkey").alias("ok"),
             F.col("o_orderpriority").alias("pri"),
-            F.round(F.col("o_totalprice") * 100.0, 0)
-            .cast("bigint")
-            .alias("price_c"),
+            money("o_totalprice").alias("price_c"),
             F.col("o_orderdate").cast("date").alias("od"),
         )
         .agg(
@@ -6974,9 +6933,7 @@ def a469_covariate_balance_smd(spark, sf_dir):
     ).select(
         F.col("o_orderkey").alias("ok"),
         F.col("o_orderpriority").alias("pri"),
-        F.round(F.col("o_totalprice") * 100.0, 0)
-        .cast("bigint")
-        .alias("price_c"),
+        money("o_totalprice").alias("price_c"),
         F.expr(
             "cast(round(o_totalprice * 100.0, 0) as bigint) div 100000"
         ).alias("bkt"),

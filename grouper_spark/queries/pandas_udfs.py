@@ -227,7 +227,7 @@ def q201_cogroup_reconcile(spark, sf_dir):
     one co-shuffle on the key, Arrow-batched transfer, and the pandas
     body is per-key bounded — the documented pattern for custom
     two-input per-key logic Catalyst can't express."""
-    cents = lambda c: F.round(F.col(c) * 100.0, 0).cast("bigint")  # noqa: E731
+    cents = lambda c: money(F.col(c))  # noqa: E731
     o = (
         table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") < 500)
@@ -308,7 +308,7 @@ def q205_grouped_agg_udf(spark, sf_dir):
         return len(v)
 
     orders = table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
+    cents = money("o_totalprice")
     return (
         orders.select("o_orderpriority", cents.alias("cents"))
         .groupBy("o_orderpriority")
@@ -411,9 +411,7 @@ def a383_apply_in_arrow(spark, sf_dir):
     o = table(spark, sf_dir, "orders")
     cents = o.select(
         "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100.0, 0)
-        .cast("bigint")
-        .alias("cents"),
+        money("o_totalprice").alias("cents"),
     )
 
     # NOTE: no type annotations — pyspark inspects applyInArrow

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.text import token_count
+from ..functions.text import money, token_count
 from ..operators import canonicalize_exact, dedup_clusters
 from ..sources import table
 from . import query
@@ -152,8 +152,6 @@ def q192_multiformat_federation(spark, sf_dir):
     import os
     import tempfile
 
-    from ..functions.text import money
-
     base = table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
@@ -217,7 +215,7 @@ def q237_observation_metrics(spark, sf_dir):
     observed = li.observe(
         obs,
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum(F.round(F.col("l_quantity") * 100.0, 0).cast("bigint"))
+        F.sum(money("l_quantity"))
         .cast("bigint")
         .alias("qty_cents"),
         F.min("l_orderkey").cast("bigint").alias("min_orderkey"),

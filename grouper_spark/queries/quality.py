@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import money, tokens
 from ..sources import table
 from . import query
 
@@ -416,9 +416,7 @@ def q156_token_entropy(spark, sf_dir):
         .groupBy("doc_id", "token")
         .agg(F.count("*").alias("c"))
     )
-    ln_c_micro = F.round(F.log(F.col("c").cast("double")) * 1000000.0, 0).cast(
-        "bigint"
-    )
+    ln_c_micro = money(F.log(F.col("c").cast("double")), 6)
     return (
         tc.groupBy("doc_id")
         .agg(
@@ -697,11 +695,7 @@ def a364_self_bleu(spark, sf_dir):
     )
     scored = overlap.join(totals, "hyp_id").select(
         "ref_id",
-        F.round(
-            F.col("clipped").cast("double") / F.col("n_big") * 1e6, 0
-        )
-        .cast("bigint")
-        .alias("p_micro"),
+        money(F.col("clipped").cast("double") / F.col("n_big"), 6).alias("p_micro"),
     )
     return (
         scored.groupBy("ref_id")
@@ -775,13 +769,11 @@ def a373_positional_entropy(spark, sf_dir):
     tot = cnt.groupBy("pos").agg(F.sum("c").cast("bigint").alias("n"))
     terms = cnt.join(F.broadcast(tot), "pos").select(
         "pos",
-        F.round(
+        money(
             -(F.col("c").cast("double") / F.col("n"))
-            * F.log(F.col("c").cast("double") / F.col("n"))
-            * 1e9,
-            0,
+            * F.log(F.col("c").cast("double") / F.col("n")),
+            9,
         )
-        .cast("bigint")
         .alias("h_nano"),
     )
     return (

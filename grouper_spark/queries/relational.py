@@ -651,7 +651,7 @@ def q223_topn_with_others(spark, sf_dir):
 
     p = table(spark, sf_dir, "part")
     agg = p.groupBy("p_brand", "p_type").agg(
-        F.sum(F.round(F.col("p_retailprice") * 100.0, 0).cast("bigint"))
+        F.sum(money("p_retailprice"))
         .cast("bigint")
         .alias("rev_cents"),
         F.count("*").cast("bigint").alias("n_parts"),
@@ -709,7 +709,7 @@ def q254_rollup_cascade(spark, sf_dir):
         F.col("o_orderdate").cast("date").alias("day")
     ).agg(
         F.count("*").cast("bigint").alias("n"),
-        F.sum(F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint"))
+        F.sum(money("o_totalprice"))
         .cast("bigint")
         .alias("cents"),
     )
@@ -791,7 +791,7 @@ def q256_date_dimension(spark, sf_dir):
     fact = o.select(
         "o_orderkey",
         F.col("o_orderdate").cast("date").alias("day"),
-        F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint").alias("rc"),
+        money("o_totalprice").alias("rc"),
     )
     return (
         F.broadcast(dim)
@@ -863,7 +863,7 @@ def q290_aging_waterfall(spark, sf_dir):
         .when(months < 12, "181-365d")
         .otherwise("365d+")
     )
-    cents = F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
+    cents = money("o_totalprice")
     bucketed = o.select(bucket.alias("age_bucket"), cents.alias("cents"))
     tot = bucketed.agg(F.sum("cents").cast("bigint").alias("all_cents"))
     return (
@@ -919,7 +919,7 @@ def a362_union_by_name(spark, sf_dir):
     mid-history (the file-level twin is the mergeSchema read, q192/
     test_sources). One scan per side, one aggregate shuffle."""
     o = table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
+    cents = money("o_totalprice")
     cut = F.lit("1995-01-01").cast("timestamp")
     new = o.filter(F.col("o_orderdate") >= cut).select(
         "o_orderkey", "o_custkey", cents.alias("cents"), "o_orderpriority"
@@ -992,9 +992,7 @@ def a374_diversified_topk(spark, sf_dir):
             F.row_number().over(wg).cast("bigint").alias("rk"),
             "p_partkey",
             "p_brand",
-            F.round(F.col("p_retailprice") * 100.0, 0)
-            .cast("bigint")
-            .alias("price_cents"),
+            money("p_retailprice").alias("price_cents"),
             F.col("brand_rank").cast("bigint").alias("brand_rank"),
         )
         .orderBy("rk")
@@ -1072,7 +1070,7 @@ def a380_null_ordering(spark, sf_dir):
     c = table(spark, sf_dir, "customer")
     bal = F.when(
         F.col("c_acctbal") >= 0.0,
-        F.round(F.col("c_acctbal") * 100.0, 0).cast("bigint"),
+        money("c_acctbal"),
     ).alias("bal_cents")
     flagged = c.select("c_custkey", "c_mktsegment", bal)
     w1 = Window.orderBy(
@@ -1157,7 +1155,7 @@ def a451_transpose_api(spark, sf_dir):
     5-value priority domain, the documented contract for using it at
     scale (transpose an AGGREGATE, never a fact table)."""
     o = table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
+    cents = money("o_totalprice")
     agg = o.groupBy(F.col("o_orderpriority").alias("grp")).agg(
         F.count("*").cast("bigint").alias("n_orders"),
         F.sum(cents).cast("bigint").alias("sum_cents"),

@@ -9,8 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from ..functions.text import md5_bits
-from ..functions.vector import cosine_similarity, dot, l2_norm
+from ..functions.text import md5_bits, money
+from ..functions.vector import cosine_similarity, dot, l2_norm, sql_double
 from ..operators import ann_topk_bruteforce, ivf_ann, lsh_bucket_ann, lsh_neardup_pairs
 from ..sources import table
 from . import query
@@ -98,7 +98,7 @@ def q39_vector_stats(spark, sf_dir):
     """Array-function battery: per-label vector counts, dimension checks,
     average L2 norm (fixed-point-summed for cross-engine exactness)."""
     e = table(spark, sf_dir, "embeddings")
-    norm_fp = F.round(l2_norm("embedding") * 1000000.0, 0).cast("bigint")
+    norm_fp = money(l2_norm("embedding"), 6)
     v = e.select("label", norm_fp.alias("norm_fp"), F.size("embedding").alias("dim"))
     return (
         v.groupBy("label")
@@ -371,23 +371,14 @@ def q107_centroid_outliers(spark, sf_dir):
         "vec_id", "label", (F.col("i0") + 1).alias("i"), "x"
     )
     cent = ex.groupBy("label", "i").agg(
-        (
-            F.sum(F.round(F.col("x") * 1000000.0, 0).cast("bigint"))
-            / (F.lit(1000000.0) * F.count("*"))
-        ).alias("c")
+        (F.sum(money("x", 6)) / (F.lit(1000000.0) * F.count("*"))).alias("c")
     )
     dist = (
         ex.join(F.broadcast(cent), ["label", "i"])
         .groupBy("vec_id", "label")
         .agg(
             (
-                F.sum(
-                    F.round(
-                        (F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))
-                        * 1000000.0,
-                        0,
-                    ).cast("bigint")
-                )
+                F.sum(money((F.col("x") - F.col("c")) * (F.col("x") - F.col("c")), 6))
                 / F.lit(1000000.0)
             ).alias("dist2")
         )
@@ -522,7 +513,7 @@ def q144_semantic_dedup(spark, sf_dir):
     # the identical aggregate/zip_with tree — same fold order, same
     # doubles via the round-trip repr cast, bit-identical assignment)
     def d_fp_to(cv: list):
-        arr = ", ".join(f"CAST('{x!r}' AS DOUBLE)" for x in cv)
+        arr = ", ".join(sql_double(x) for x in cv)
         return F.expr(
             f"aggregate(zip_with(`v`, array({arr}), (x, c) ->"
             " CAST(ROUND((x - c) * (x - c)"
@@ -674,9 +665,7 @@ def q240_lsh_hyperplane_index(spark, sf_dir):
     # identical aggregate/zip_with tree, so the fold order and the
     # sign bits are unchanged bit-for-bit
     def dot_plane(p: int):
-        plane = ", ".join(
-            f"CAST('{x!r}' AS DOUBLE)" for x in _LSH_PLANES[p]
-        )
+        plane = ", ".join(sql_double(x) for x in _LSH_PLANES[p])
         return F.expr(
             "aggregate(zip_with(CAST(embedding AS ARRAY<DOUBLE>),"
             f" array({plane}), (x, y) -> x * y),"
@@ -825,9 +814,7 @@ def _hyperplane_keys(emb):
     unchanged bit-for-bit."""
 
     def dot_plane(p: int):
-        plane = ", ".join(
-            f"CAST('{x!r}' AS DOUBLE)" for x in _LSH_PLANES[p]
-        )
+        plane = ", ".join(sql_double(x) for x in _LSH_PLANES[p])
         return F.expr(
             "aggregate(zip_with(CAST(embedding AS ARRAY<DOUBLE>),"
             f" array({plane}), (x, y) -> x * y),"
@@ -1046,7 +1033,7 @@ def q280_embedding_drift(spark, sf_dir):
         "label", "half", (F.col("dim0") + 1).alias("dim")
     ).agg(
         F.count("*").cast("bigint").alias("n"),
-        F.sum(F.round(F.col("x") * 1000000.0, 0).cast("bigint"))
+        F.sum(money("x", 6))
         .cast("bigint")
         .alias("s_micro"),
     )
@@ -1412,11 +1399,7 @@ def a355_mrl_truncation_audit(spark, sf_dir):
     per_q = wide.groupBy("qa").agg(
         F.count("*").cast("bigint").alias("n_pairs"),
         *[
-            F.sum(
-                F.round(F.abs(F.col(f"c{d}") - F.col("c64")) * 1e6, 0).cast(
-                    "bigint"
-                )
-            )
+            F.sum(money(F.abs(F.col(f"c{d}") - F.col("c64")), 6))
             .cast("bigint")
             .alias(f"sd{d}")
             for d in _MRL_DIMS
@@ -1568,9 +1551,9 @@ def a381_product_quantization(spark, sf_dir):
         # Column chain it replaces.
         terms = " + ".join(
             f"(CAST(embedding[{m * 16 + i}] AS DOUBLE)"
-            f" - CAST('{book[(m, k)][i]!r}' AS DOUBLE))"
+            f" - {sql_double(book[(m, k)][i])})"
             f" * (CAST(embedding[{m * 16 + i}] AS DOUBLE)"
-            f" - CAST('{book[(m, k)][i]!r}' AS DOUBLE))"
+            f" - {sql_double(book[(m, k)][i])})"
             for i in range(16)
         )
         return F.expr(terms)
@@ -1608,9 +1591,7 @@ def a381_product_quantization(spark, sf_dir):
             F.struct(
                 F.lit(m).alias("m"),
                 F.col(f"k{m}").alias("k"),
-                F.round(F.col(f"best{m}") * 1e6, 0)
-                .cast("bigint")
-                .alias("e_micro"),
+                money(F.col(f"best{m}"), 6).alias("e_micro"),
             )
             for m in range(4)
         ]
@@ -1828,11 +1809,7 @@ def a419_triplet_violations(spark, sf_dir):
             F.sum(viol).cast("double") / F.count("*"), 6
         ).alias("violation_rate_r"),
         F.round(
-            F.sum(
-                F.round(
-                    (F.col("cos_ap") - F.col("cos_an")) * 1000000.0, 0
-                ).cast("bigint")
-            )
+            F.sum(money(F.col("cos_ap") - F.col("cos_an"), 6))
             / 1e6
             / F.count("*"),
             6,
@@ -1905,9 +1882,7 @@ def a420_centroid_classifier(spark, sf_dir):
             F.posexplode(
                 F.transform(
                     "embedding",
-                    lambda x: F.round(x.cast("double") * 1000000.0, 0).cast(
-                        "bigint"
-                    ),
+                    lambda x: money(x.cast("double"), 6),
                 )
             ).alias("pos0", "x_fp"),
         )
@@ -2469,17 +2444,16 @@ def _a450_distributed(spark, src):
     # (min-of-5 interleaved 0.58s vs 0.57s — the sweeps are join/window
     # bound, not distance bound), so the simpler certified expression
     # is kept.
-    r_fp = F.round(
+    r_fp = money(
         F.sqrt(
             F.aggregate(
                 F.zip_with("pv", "v", lambda x, c: (x - c) * (x - c)),
                 F.lit(0.0),
                 lambda acc, t: acc + t,
             )
-        )
-        * 1000000000.0,
-        0,
-    ).cast("bigint")
+        ),
+        9,
+    )
 
     def top5(src, keep_all):
         """src: bounded (id, pv) side, broadcast against the corpus."""
@@ -2689,17 +2663,16 @@ def a454_hopkins_statistic(spark, sf_dir):
         )
         .limit(25)
     )
-    d_fp = F.round(
+    d_fp = money(
         F.sqrt(
             F.aggregate(
                 F.zip_with("pv", "v", lambda x, c: (x - c) * (x - c)),
                 F.lit(0.0),
                 lambda acc, x: acc + x,
             )
-        )
-        * 1000000000.0,
-        0,
-    ).cast("bigint")
+        ),
+        9,
+    )
     udist = (
         e.crossJoin(F.broadcast(probes))
         .select("pid", d_fp.alias("fp"))
@@ -2816,17 +2789,16 @@ def a455_energy_distance(spark, sf_dir):
         F.col("v").alias("vb"),
         F.col("par").alias("pb"),
     )
-    r_fp = F.round(
+    r_fp = money(
         F.sqrt(
             F.aggregate(
                 F.zip_with("va", "vb", lambda x, c: (x - c) * (x - c)),
                 F.lit(0.0),
                 lambda acc, x: acc + x,
             )
-        )
-        * 1000000000.0,
-        0,
-    ).cast("bigint")
+        ),
+        9,
+    )
     pairs = (
         a.join(b, "label")
         .filter(F.col("ida") < F.col("idb"))
@@ -2960,8 +2932,8 @@ def a459_kcenter_seeding(spark, sf_dir):
         # "+" chain left-associates like the zip_with/aggregate fold,
         # CAST('<repr>' AS DOUBLE) round-trips the collected double
         terms = " + ".join(
-            f"(v[{i}] - CAST('{c!r}' AS DOUBLE))"
-            f" * (v[{i}] - CAST('{c!r}' AS DOUBLE))"
+            f"(v[{i}] - {sql_double(c)})"
+            f" * (v[{i}] - {sql_double(c)})"
             for i, c in enumerate(sv)
         )
         return F.expr(
@@ -3119,7 +3091,7 @@ def a462_effective_rank(spark, sf_dir):
     mu = ex.groupBy("p").agg(
         (
             F.round(
-                F.sum(F.round(F.col("x") * 1000000000.0, 0).cast("bigint"))
+                F.sum(money("x", 9))
                 / F.count("*"),
                 0,
             ).cast("bigint")
@@ -3136,13 +3108,7 @@ def a462_effective_rank(spark, sf_dir):
     gram = (
         a.join(b, "vec_id")
         .groupBy("pa", "pb")
-        .agg(
-            F.sum(
-                F.round(F.col("xa") * F.col("xb") * 1000.0, 0).cast("bigint")
-            )
-            .cast("bigint")
-            .alias("c_milli")
-        )
+        .agg(F.sum(money(F.col("xa") * F.col("xb"), 3)).cast("bigint").alias("c_milli"))
     )
     traces = gram.agg(
         F.sum(F.when(F.col("pa") == F.col("pb"), F.col("c_milli")).otherwise(0))

@@ -726,7 +726,7 @@ def q211_time_weighted_average(spark, sf_dir):
     seq = ev.select(
         "event_type",
         d.alias("d"),
-        F.round(F.col("value") * 100.0, 0).cast("bigint").alias("v_cents"),
+        money("value").alias("v_cents"),
         "ts",
         "event_id",
     ).withColumn(
@@ -954,11 +954,7 @@ def q216_linear_interpolation(spark, sf_dir):
         ev.groupBy(
             "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
         )
-        .agg(
-            F.sum(F.round(F.col("value") * 100.0, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("v_cents")
-        )
+        .agg(F.sum(money("value")).cast("bigint").alias("v_cents"))
         .localCheckpoint(eager=False)
     )
     bounds = daily.groupBy("event_type").agg(
@@ -1046,7 +1042,7 @@ def q229_capped_running_balance(spark, sf_dir):
     Per-key state is bounded by the user's event count; streaming-wise
     this is q57's stateful running aggregate with a clamp."""
     ev = table(spark, sf_dir, "events")
-    delta = F.round(F.col("value") * 100.0, 0).cast("bigint") - 5000
+    delta = money("value") - 5000
     packed = (
         ev.select(
             "user_id", F.struct("ts", "event_id", delta.alias("delta")).alias("s")
@@ -1239,12 +1235,11 @@ def q298_backtest_mape(spark, sf_dir):
         )
         .select("horizon", F.col("x").alias("actual"), "forecast")
     )
-    ape = F.round(
+    ape = money(
         F.abs((F.col("forecast") - F.col("actual")).cast("double"))
-        / F.col("actual")
-        * 1000000.0,
-        0,
-    ).cast("bigint")
+        / F.col("actual"),
+        6,
+    )
     scored = joined.groupBy("horizon").agg(
         F.count("*").cast("bigint").alias("n_days"),
         F.sum(ape).cast("bigint").alias("ape_micro"),
@@ -1522,24 +1517,20 @@ def q329_poisson_fit_gof(spark, sf_dir):
         spine.crossJoin(F.broadcast(fit))
         .select(
             "kbin",
-            F.round(
+            money(
                 F.exp(-lam)
                 * F.pow(lam, F.col("kbin").cast("double"))
                 / fact
-                * F.col("n")
-                * 1000000.0,
-                0,
+                * F.col("n"),
+                6,
             )
-            .cast("bigint")
             .alias("e_micro"),
         )
     )
     e_val = F.col("e_micro").cast("double") / 1e6
     o_val = F.coalesce(F.col("o"), F.lit(0)).cast("double")
     terms = expected.join(obs, "kbin", "left").select(
-        F.round((o_val - e_val) * (o_val - e_val) / e_val * 1e6, 0)
-        .cast("bigint")
-        .alias("chi_micro")
+        money((o_val - e_val) * (o_val - e_val) / e_val, 6).alias("chi_micro")
     )
     chi = terms.agg(
         F.round(F.sum("chi_micro").cast("double") / 1e6, 4).alias("chi2_r")
@@ -1976,15 +1967,13 @@ def a402_hurst_exponent(spark, sf_dir):
         (F.col("var_m2") > 0) & (F.col("umax") > F.col("umin"))
     ).select(
         "m",
-        F.round(
+        money(
             F.log(
                 (F.col("umax") - F.col("umin")).cast("double")
                 / F.sqrt(F.col("var_m2").cast("double"))
-            )
-            * 1e9,
-            0,
+            ),
+            9,
         )
-        .cast("bigint")
         .alias("lnrs_nano"),
     )
     per_m = rs.groupBy("m").agg(
@@ -2193,9 +2182,7 @@ def a421_seasonal_decompose(spark, sf_dir):
     det = tr.filter(F.col("k7") == 7).select(
         "d",
         "dow",
-        F.round((F.col("c") - F.col("s7") / 7.0) * 1000000.0, 0)
-        .cast("bigint")
-        .alias("det_micro"),
+        money(F.col("c") - F.col("s7") / 7.0, 6).alias("det_micro"),
     ).localCheckpoint(eager=False)
     sidx = det.groupBy("dow").agg(
         F.count("*").cast("bigint").alias("n_days"),
@@ -2636,7 +2623,7 @@ def a446_isotonic_regression(spark, sf_dir):
         .alias("week")
     ).agg(
         F.count("*").cast("bigint").alias("n_orders"),
-        F.sum(F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint"))
+        F.sum(money("o_totalprice"))
         .cast("bigint")
         .alias("sum_cents"),
     )
@@ -2918,17 +2905,16 @@ def a456_matrix_profile_discords(spark, sf_dir):
     )
     a = zed.select("i", "week", F.col("z").alias("za"))
     b = zed.select(F.col("i").alias("j"), F.col("z").alias("zb"))
-    d_fp = F.round(
+    d_fp = money(
         F.sqrt(
             F.aggregate(
                 F.zip_with("za", "zb", lambda x, c: (x - c) * (x - c)),
                 F.lit(0.0),
                 lambda acc, x: acc + x,
             )
-        )
-        * 1000000000.0,
-        0,
-    ).cast("bigint")
+        ),
+        9,
+    )
     mp = (
         a.join(b, F.abs(F.col("i") - F.col("j")) >= 8)
         .select("i", "week", d_fp.alias("d_fp"))

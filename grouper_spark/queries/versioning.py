@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from ..functions.text import md5_bits
+from ..functions.text import md5_bits, money
 from ..sources import table
 from . import query
 from ..operators.core import literal_frame
@@ -73,7 +73,7 @@ def q128_snapshot_diff(spark, sf_dir):
     o = table(spark, sf_dir, "orders")
 
     def fingerprint(price):
-        cents = F.round(price * 100.0, 0).cast("bigint").cast("string")
+        cents = money(price).cast("string")
         return F.md5(
             F.concat_ws(
                 "|", F.col("o_orderstatus"), cents, F.col("o_orderpriority")
@@ -256,12 +256,8 @@ def q150_skipping_index(spark, sf_dir):
         F.count("*").cast("bigint").alias("n_rows"),
         F.round(F.min("l_quantity"), 0).cast("bigint").alias("qty_min"),
         F.round(F.max("l_quantity"), 0).cast("bigint").alias("qty_max"),
-        F.round(F.min("l_extendedprice") * 100.0, 0)
-        .cast("bigint")
-        .alias("price_min_cents"),
-        F.round(F.max("l_extendedprice") * 100.0, 0)
-        .cast("bigint")
-        .alias("price_max_cents"),
+        money(F.min("l_extendedprice")).alias("price_min_cents"),
+        money(F.max("l_extendedprice")).alias("price_max_cents"),
     )
     return stats.select(
         "shard_month",
@@ -615,7 +611,7 @@ def q195_merge_upsert(spark, sf_dir):
         F.max_by("o_orderkey", tup).alias("last_ord"),
         F.max_by("o_totalprice", tup).alias("last_price"),
     )
-    amount = F.round(F.col("last_price") * 100.0, 0).cast("bigint")
+    amount = money("last_price")
     changes = (
         latest.select(
             F.col("o_custkey").alias("key"),
@@ -641,7 +637,7 @@ def q195_merge_upsert(spark, sf_dir):
             F.when(
                 F.col("op") == "U", F.col("amount_cents")
             )
-            .otherwise(F.round(F.col("c_acctbal") * 100.0, 0).cast("bigint"))
+            .otherwise(money("c_acctbal"))
             .alias("bal_cents"),
         )
         .unionAll(
@@ -719,7 +715,7 @@ def q241_fifo_allocation(spark, sf_dir):
     from pyspark.sql import Window
 
     li = table(spark, sf_dir, "lineitem")
-    qty = F.round(F.col("l_quantity") * 100.0, 0).cast("bigint")
+    qty = money("l_quantity")
     base = li.select(
         "l_partkey",
         "l_shipdate",
@@ -862,9 +858,7 @@ def q252_merkle_range_diff(spark, sf_dir):
                 F.col("o_orderkey").cast("string"),
                 F.col("o_custkey").cast("string"),
                 F.col("o_orderstatus"),
-                F.round(F.col("o_totalprice") * 100.0, 0)
-                .cast("bigint")
-                .cast("string"),
+                money("o_totalprice").cast("string"),
             ),
             15,
         )
@@ -972,9 +966,7 @@ def q261_partition_evolution(spark, sf_dir):
         )
         .agg(
             F.count("*").cast("bigint").alias("n_orders"),
-            F.sum(
-                F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
-            )
+            F.sum(money("o_totalprice"))
             .cast("bigint")
             .alias("revenue_cents"),
         )
@@ -1034,7 +1026,7 @@ def q292_trial_balance(spark, sf_dir):
     a 4-row aggregate. At 100 TB the journal is the fact table and
     this query IS the nightly close control."""
     o = table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
+    cents = money("o_totalprice")
     tax = F.expr(
         "CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT) div 10"
     ).cast("bigint")
@@ -1162,7 +1154,7 @@ def q307_range_boundary_advisor(spark, sf_dir):
     assignment; at lake scale the percentiles come from a sample or
     sketch and the audit shape is unchanged."""
     o = table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
+    cents = money("o_totalprice")
     vals = o.select(cents.alias("v"))
     bounds = vals.agg(
         *[
@@ -1389,7 +1381,7 @@ def a568_cdc_upsert_apply(spark, sf_dir):
     exact cents totals, so the hash certifies precedence, tombstone
     semantics, and arithmetic at once."""
     o = table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100.0, 0).cast("bigint")
+    cents = money("o_totalprice")
     cents110 = F.round(F.col("o_totalprice") * 110.0, 0).cast("bigint")
     base = o.select(
         F.col("o_orderkey").alias("key"),
@@ -1669,17 +1661,13 @@ def a461_voptimal_histogram(spark, sf_dir):
         .select(
             "j",
             "i",
-            F.round(
-                (
-                    (F.col("p2") - F.col("pj2")).cast("double")
-                    - (F.col("p1") - F.col("pj1")).cast("double")
-                    * (F.col("p1") - F.col("pj1"))
-                    / (F.col("i") - F.col("j"))
-                )
-                * 1000000.0,
-                0,
+            money(
+                (F.col("p2") - F.col("pj2")).cast("double")
+                - (F.col("p1") - F.col("pj1")).cast("double")
+                * (F.col("p1") - F.col("pj1"))
+                / (F.col("i") - F.col("j")),
+                6,
             )
-            .cast("bigint")
             .alias("sse_micro"),
         )
         .localCheckpoint(eager=False)

@@ -169,6 +169,91 @@ def test_money_fixed_point(spark):
     assert got == [100, 268, 10]
 
 
+@pytest.mark.parametrize("scale", [2, 6, 9, 12])
+def test_money_is_the_inline_quantiser(spark, scale):
+    for col, expr in [("x", F.col("x")), (F.col("a") - F.col("b"),) * 2]:
+        inline = F.round(expr * float(10**scale), 0).cast("bigint")
+        assert str(money(col, scale)) == str(inline)
+
+
+def _inline_quantisers(root):
+    """``F.round(X * <power-of-ten float>, 0).cast("bigint")`` call sites
+    under ``root``: the quantiser ``money(X, k)`` builds, written out."""
+    import ast
+    import math
+    from pathlib import Path
+
+    def is_f(node, name):
+        return (
+            isinstance(node, ast.Attribute)
+            and node.attr == name
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "F"
+        )
+
+    def power_of_ten(node):
+        if not (isinstance(node, ast.Constant) and isinstance(node.value, float)):
+            return False
+        return node.value >= 10 and node.value == 10.0 ** round(math.log10(node.value))
+
+    sites = []
+    for path in sorted(Path(root).rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "cast"
+                and [getattr(a, "value", None) for a in node.args] == ["bigint"]
+                and isinstance(node.func.value, ast.Call)
+                and is_f(node.func.value.func, "round")
+            ):
+                continue
+            args = node.func.value.args
+            if (
+                len(args) == 2
+                and getattr(args[1], "value", None) == 0
+                and isinstance(args[0], ast.BinOp)
+                and isinstance(args[0].op, ast.Mult)
+                and power_of_ten(args[0].right)
+            ):
+                sites.append(f"{path}:{node.lineno}")
+    return sites
+
+
+def test_no_inline_fixed_point_quantiser():
+    """Fixed-point terms go through ``functions.money``, never a hand-
+    written copy of its expression (Spark-free: an AST scan)."""
+    from pathlib import Path
+
+    import grouper_spark
+
+    assert _inline_quantisers(Path(grouper_spark.__file__).parent) == []
+
+
+def test_inline_quantiser_scan_sees_every_spelling(tmp_path):
+    (tmp_path / "m.py").write_text(
+        "a = F.round(F.col('x') * 100.0, 0).cast('bigint')\n"
+        "b = F.sum(F.round(\n    (x - y) * 1e9,\n    0,\n).cast(\"bigint\"))\n"
+        "c = F.round(x * 1_000_000.0, 0).cast('bigint')\n"
+        "d = F.round(x * 100, 0).cast('bigint')\n"  # int literal: another plan
+        "e = F.round(x * 110.0, 0).cast('bigint')\n"
+        "f = F.round(x, 0).cast('bigint')\n"
+    )
+    lines = sorted(int(s.rsplit(":", 1)[1]) for s in _inline_quantisers(tmp_path))
+    assert lines == [1, 2, 6]
+
+
+def test_sql_double_renders_the_round_trip_literal():
+    import numpy as np
+
+    from grouper_spark.functions.vector import sql_double
+
+    for x in (0.1, -1.5e-07, 0.123456, 3.0):
+        assert sql_double(x) == f"CAST('{x!r}' AS DOUBLE)"
+        assert sql_double(np.float64(x)) == sql_double(x)
+        assert float(sql_double(np.float32(x))[6:-12]) == float(np.float32(x))
+
+
 def test_tokens_empty_and_spaces(spark):
     df = spark.createDataFrame([("",), ("   ",), (" a  b ",)], ["t"])
     got = [r["n"] for r in df.select(F.size(tokens("t")).alias("n")).collect()]

@@ -335,3 +335,37 @@ def test_stream_removes_its_checkpoint(spark, source_dir, interval_ms):
     )
     assert set(glob.glob(pattern)) - before == set()
     assert out.count() == 20
+
+
+_STREAMING_QUERIES = [
+    "q40_grouper_stream",
+    "q52_stream_watermark_window",
+    "q57_stateful_running_sum",
+    "q59_stream_dedup_watermark",
+    "q60_stream_stream_join",
+    "q71_incremental_matview",
+    "q90_stream_static_join",
+    "q113_stream_outer_join",
+    "q130_stateful_sessions",
+    "q187_idempotent_sink",
+    "q191_checkpoint_recovery",
+    "a343_tws_extrema",
+]
+
+
+def test_streaming_queries_remove_staged_sources(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A streaming query's staged replay source and private checkpoint
+    are gone once the query returns; the result it returns stays
+    readable."""
+    import re
+
+    from grouper_spark.queries import load_all
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    left = re.compile(r"grouper-(src|app|ckpt)-|ckpt-|.*-ckpt$")
+    reg = load_all()
+    for name in _STREAMING_QUERIES:
+        assert reg[name].fn(spark, sf_dir).collect(), name
+        assert [p for p in os.listdir(tmp_path) if left.match(p)] == [], name
