@@ -39,29 +39,18 @@ def literal_frame(spark, rows: list[tuple], schema: str) -> DataFrame:
     ``.coalesce(1)`` folds the 32 rounds into one sequential task (the
     q294 finding). A pandas DataFrame converts to Arrow batches on the
     driver, so the scan is JVM-only (measured 0.08 s for the same
-    coalesced frame). Falls back to the tuple path when pandas is
-    unavailable or the Arrow conversion rejects the values — identical
-    rows either way, only the scan changes.
+    coalesced frame). ``schema`` is a DDL string or a StructType.
+    Values Arrow rejects go through Spark's own row conversion
+    (``spark.sql.execution.arrow.pyspark.fallback.enabled``).
     """
-    try:
-        import pandas as pd
+    import pandas as pd
 
-        # DDL string or StructType both resolve to field names (the
-        # StructType call sites — q71/q187 microbatches — previously
-        # fell through to the slow tuple path via AttributeError)
-        if hasattr(schema, "fieldNames"):
-            names = list(schema.fieldNames())
-        else:
-            names = [f.split()[0] for f in schema.split(",")]
-        pdf = pd.DataFrame(
-            [list(r) for r in rows], columns=names, dtype=object
-        )
-        return spark.createDataFrame(pdf, schema)
-    except (ImportError, ValueError, TypeError):
-        # pandas missing or the Arrow conversion rejected the values —
-        # identical rows via the tuple path; anything else is a real
-        # bug and should surface
-        return spark.createDataFrame(rows, schema)
+    if hasattr(schema, "fieldNames"):
+        names = list(schema.fieldNames())
+    else:
+        names = [f.split()[0] for f in schema.split(",")]
+    pdf = pd.DataFrame([list(r) for r in rows], columns=names, dtype=object)
+    return spark.createDataFrame(pdf, schema)
 
 
 def collect_bounded(df: DataFrame, cap: int, what: str) -> list:
@@ -82,50 +71,48 @@ def collect_bounded(df: DataFrame, cap: int, what: str) -> list:
     return rows
 
 
-def collect_vector_panel(df, id_col: str, vec_col: str, max_rows: int):
+def collect_vector_panel(df, id_col: str, vec_col: str, cap: int, what: str):
     """Collect a bounded (id, vector) panel to the driver via Arrow.
 
-    Returns ``(ids, X)`` — int64 and float64 ndarrays — or ``None``
-    when the panel exceeds ``max_rows`` (the caller's distributed
-    fallback then defines the semantics), is empty, or is not a clean
-    fixed-width finite float panel (NULLs, ragged lengths, NaN/inf,
-    non-integer ids). An error while the panel's plan runs propagates:
-    it is a failure, not a shape the fallback handles.
-    ``DataFrame.toArrow()`` moves the rows as Arrow
-    record batches (JVM-side columnar serialization) — measured ~1.7×
-    faster than Row-pickling ``collect()`` on a 20k × 64-double panel,
-    and the numpy view of the value buffer is near-free."""
+    Returns ``(ids, X)`` — int64 and float64 ndarrays; an empty panel
+    gives zero-length arrays. Follows ``collect_bounded``'s rule: at
+    most ``cap + 1`` rows are collected, and more than ``cap`` raises
+    ``ValueError`` naming ``what`` and ``cap``. A panel that is not a
+    clean fixed-width finite float panel (NULLs, ragged widths,
+    NaN/inf, non-integer ids) raises ``ValueError`` too, and an error
+    while the panel's plan runs propagates. There is no fallback.
+    ``DataFrame.toArrow()`` moves the rows as Arrow record batches
+    (JVM-side columnar serialization) — measured ~1.7× faster than
+    Row-pickling ``collect()`` on a 20k × 64-double panel, and the
+    numpy view of the value buffer is near-free."""
     import numpy as np
     import pyarrow as pa
 
-    tbl = df.select(id_col, vec_col).limit(max_rows + 1).toArrow()
-    if not (0 < tbl.num_rows <= max_rows):
-        return None
+    tbl = df.select(id_col, vec_col).limit(cap + 1).toArrow()
+    if tbl.num_rows > cap:
+        raise ValueError(f"{what}: panel exceeds the driver cap of {cap} rows")
+    if tbl.num_rows == 0:
+        return np.empty(0, np.int64), np.empty((0, 0), np.float64)
     idc = tbl.column(0).combine_chunks()
     vc = tbl.column(1).combine_chunks()
     # A non-integer id would truncate in the int64 cast below (1.5 → 1)
     # and could alias distinct ids.
     if not pa.types.is_integer(idc.type):
-        return None
+        raise ValueError(f"{what}: ids are {idc.type}, not integers")
     if idc.null_count or vc.null_count or vc.values.null_count:
-        return None
-    try:
-        ids = idc.to_numpy().astype(np.int64)
-        off = vc.offsets.to_numpy()
-        widths = np.diff(off)
-        if len(widths) == 0 or widths[0] == 0 or not (
-            widths == widths[0]
-        ).all():
-            return None
-        X = (
-            vc.values.to_numpy(zero_copy_only=False)[off[0] : off[-1]]
-            .astype(np.float64, copy=False)
-            .reshape(len(widths), widths[0])
-        )
-    except (TypeError, ValueError):
-        return None
+        raise ValueError(f"{what}: panel has NULL ids, vectors or elements")
+    off = vc.offsets.to_numpy()
+    widths = np.diff(off)
+    if widths[0] == 0 or not (widths == widths[0]).all():
+        raise ValueError(f"{what}: vectors are empty or of unequal width")
+    ids = idc.to_numpy().astype(np.int64)
+    X = (
+        vc.values.to_numpy(zero_copy_only=False)[off[0] : off[-1]]
+        .astype(np.float64, copy=False)
+        .reshape(len(widths), widths[0])
+    )
     if not np.isfinite(X).all():
-        return None
+        raise ValueError(f"{what}: panel has NaN or infinite elements")
     return ids, X
 
 

@@ -866,10 +866,8 @@ def q253_python_datasource(spark, sf_dir):
     as a first-class table at cluster scale."""
     from ..sources.pydatasource import SyntheticSeriesDataSource
 
-    try:
-        spark.dataSource.register(SyntheticSeriesDataSource)
-    except Exception:
-        pass  # already registered in this session
+    # re-registering in the same session replaces the source (a WARN)
+    spark.dataSource.register(SyntheticSeriesDataSource)
     src = (
         spark.read.format("synthetic_series")
         .option("n", 100000)
@@ -918,10 +916,7 @@ def q257_python_datasink(spark, sf_dir):
 
     from ..sources.pydatasource import JsonlCommitDataSource
 
-    try:
-        spark.dataSource.register(JsonlCommitDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(JsonlCommitDataSource)
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
     out_dir = os.path.join("/tmp", f"grouper_jsonl_sink_{tag}")
     shutil.rmtree(out_dir, ignore_errors=True)

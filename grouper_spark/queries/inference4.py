@@ -26,7 +26,7 @@ import math
 
 from pyspark.sql import Window, functions as F
 
-from ..functions.text import md5_bits
+from ..functions.text import md5_bits, money
 from ..sources import table
 from . import query
 from ..operators.core import collect_bounded, literal_frame
@@ -364,14 +364,10 @@ def a176_cochrane_orcutt(spark, sf_dir):
         .select(
             "rho",
             "b_ols",
-            F.round((F.col("y") - F.col("rho") * F.col("py")) * F.lit(1000.0), 0)
-            .cast("bigint")
-            .alias("yc"),
-            F.round(
-                (F.col("t") - F.col("rho") * (F.col("t") - F.lit(1))) * F.lit(1000.0), 0
-            )
-            .cast("bigint")
-            .alias("xc"),
+            money(F.col("y") - F.col("rho") * F.col("py"), 3).alias("yc"),
+            money(F.col("t") - F.col("rho") * (F.col("t") - F.lit(1)), 3).alias(
+                "xc"
+            ),
         )
     )
     out = star.groupBy("rho", "b_ols").agg(

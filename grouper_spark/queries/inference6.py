@@ -37,6 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from ..functions.text import money
 from ..sources import table
 from . import query
 
@@ -343,14 +344,11 @@ def a574_higuchi_fd(spark, sf_dir):
     ).withColumn("cnt", F.expr("CAST((n - m) div k AS BIGINT)"))
     lk = curve.groupBy("grp", "n", "k").agg(
         F.sum(
-            F.round(
-                (
-                    (F.col("sum_abs") * (F.col("n") - 1)).cast("double")
-                    / (F.col("cnt") * F.col("k") * F.col("k"))
-                )
-                * F.lit(1e9),
-                0,
-            ).cast("bigint")
+            money(
+                (F.col("sum_abs") * (F.col("n") - 1)).cast("double")
+                / (F.col("cnt") * F.col("k") * F.col("k")),
+                9,
+            )
         )
         .cast("bigint")
         .alias("l_fp")

@@ -7,9 +7,9 @@ q39 is the array-function battery (norms / dot products) used by both.
 
 from __future__ import annotations
 
-from pyspark.sql import Window, functions as F
+from pyspark.sql import functions as F
 
-from ..functions.text import md5_bits, money
+from ..functions.text import md5_bits, money, money_sum
 from ..functions.vector import cosine_similarity, dot, l2_norm, sql_double
 from ..operators import ann_topk_bruteforce, ivf_ann, lsh_bucket_ann, lsh_neardup_pairs
 from ..sources import table
@@ -377,10 +377,9 @@ def q107_centroid_outliers(spark, sf_dir):
         ex.join(F.broadcast(cent), ["label", "i"])
         .groupBy("vec_id", "label")
         .agg(
-            (
-                F.sum(money((F.col("x") - F.col("c")) * (F.col("x") - F.col("c")), 6))
-                / F.lit(1000000.0)
-            ).alias("dist2")
+            money_sum(
+                (F.col("x") - F.col("c")) * (F.col("x") - F.col("c")), "dist2", 6
+            )
         )
     )
     return (
@@ -2012,32 +2011,25 @@ def a440_geometric_median(spark, sf_dir):
     iterations from the fixed-point per-dimension mean, with every
     per-(label,dim) term fixed-pointed to BIGINT so the reduction is
     order-independent and a 1000-executor sum bit-matches DuckDB's
-    serial one. The panel the iterations actually need is just the
-    (label, v) rows; when the corpus is driver-bounded (≤100k rows)
-    the whole six-pass loop runs DRIVER-SIDE in numpy (the
-    q249/a448/a191 bounded-state recipe): int64 sums are exact in any
-    order, the distance fold is replayed dim-by-dim in index order,
-    and F.round(double, 0) is replicated by functions.exact's HALF_UP
-    vector replica — bit-identical y, ~20 fewer sequential jobs
-    (driver bench: 6 broadcast builds + 6 checkpoint materializations
-    + 12 AQE shuffle jobs collapsed into one collect + one literal
-    scan). Terminal round(_, 6) stays engine-side. The distributed
-    six-pass loop (one broadcast join + one fused 65-accumulator
-    aggregate per iteration) remains the fallback for a corpus above
-    the bound — at 100 TB: 6 linear scans, no self-join, state is
-    O(labels × dim)."""
+    serial one. The iterations need only the (label, v) rows, which
+    are collected once through ``collect_vector_panel`` (≤100k rows)
+    and iterated DRIVER-SIDE in numpy (the q249/a448/a191
+    bounded-state recipe): int64 sums are exact in any order, the
+    distance fold is replayed dim-by-dim in index order, and
+    F.round(double, 0) is replicated by functions.exact's HALF_UP
+    vector replica — one collect + one literal scan. Terminal
+    round(_, 6) stays engine-side. A corpus above the cap raises
+    ValueError."""
     from ..operators.core import collect_vector_panel
 
     src = table(spark, sf_dir, "embeddings").select(
         "label",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    panel = collect_vector_panel(src, "label", "v", _A440_MAX_ROWS)
-    if panel is not None:
-        out = _a440_driver_exact(spark, *panel)
-        if out is not None:
-            return out
-    return _a440_distributed(spark, src)
+    panel = collect_vector_panel(
+        src, "label", "v", _A440_MAX_ROWS, "a440_geometric_median embeddings"
+    )
+    return _a440_driver_exact(spark, *panel)
 
 
 # driver-side corpus bound for a440: 100k rows × 64 dims ≈ 51 MB of
@@ -2049,9 +2041,8 @@ _A440_MAX_ROWS = 100_000
 def _a440_driver_exact(spark, lab, X):
     """Driver replica of the six Weiszfeld passes on the collected
     (label, vector) panel (clean-shape checks already done by
-    collect_vector_panel). Returns None (→ caller falls back to the
-    distributed loop) when a fixed-point term lands near the int64
-    edge — the relational plan then defines the semantics."""
+    collect_vector_panel). Raises ValueError when a fixed-point term
+    lands near the int64 edge, where the BIGINT cast would overflow."""
     import numpy as np
 
     from ..functions.exact import round0_half_up_vec
@@ -2066,8 +2057,10 @@ def _a440_driver_exact(spark, lab, X):
     # y0: fixed-point per-dimension mean — SUM(CAST(ROUND(x·1e9) AS
     # BIGINT)) per (label, p), then ROUND(s/cnt)·1e-9
     t0 = X * scale
-    if np.abs(t0).max() >= guard:
-        return None
+    if t0.size and np.abs(t0).max() >= guard:
+        raise ValueError(
+            "a440_geometric_median: a fixed-point mean term exceeds 2**62"
+        )
     s0 = np.zeros((n_labels, dim), np.int64)
     np.add.at(s0, li, round0_half_up_vec(t0))
     y = (
@@ -2102,7 +2095,10 @@ def _a440_driver_exact(spark, lab, X):
         if len(idx) and (
             np.abs(tf).max() >= guard or np.abs(df).max() >= guard
         ):
-            return None
+            raise ValueError(
+                "a440_geometric_median: a fixed-point Weiszfeld term"
+                " exceeds 2**62"
+            )
         num = np.zeros((n_labels, dim), np.int64)
         den = np.zeros(n_labels, np.int64)
         np.add.at(num, lm, round0_half_up_vec(tf))
@@ -2111,8 +2107,6 @@ def _a440_driver_exact(spark, lab, X):
             y = (num.astype(np.float64) * 1000.0) / den.astype(
                 np.float64
             )[:, None]
-
-    from ..operators.core import literal_frame
 
     out_rows = [
         (int(uniq[l]), int(p), float(y[l, p]), int(cnt[l]))
@@ -2129,127 +2123,6 @@ def _a440_driver_exact(spark, lab, X):
             "label",
             "p",
             F.round("coord", 6).alias("coord_r"),
-            "n_members",
-        )
-        .orderBy("label", "p")
-    )
-
-
-def _a440_distributed(spark, src):
-    """The distributed six-pass Weiszfeld loop: per iteration,
-    broadcast the 10-row estimate, one row-local distance fold, one
-    fused per-label aggregate carrying all 64 numerator sums AND the
-    denominator (each dim of a label sees exactly the label's row
-    set). The checkpoint before each aggregate is a projection
-    barrier, not a reuse cache: without it CollapseProject folds the
-    interpreted 64-term distance fold into downstream projections and
-    re-evaluates it per consumer (the q104/q145 class)."""
-    from ..operators.core import ensure_parallelism
-
-    e = ensure_parallelism(src).localCheckpoint(eager=False)
-    # Each aggregation level below is ONE 64/65-accumulator
-    # groupBy(label) over the vector column (every per-p sum as its
-    # own accumulator, assembled into the y array in index order) —
-    # the former posexplode → groupBy(label, p) → groupBy(label)
-    # collect_list pair cost TWO shuffles per iteration plus a 64×
-    # row fan-out; the fused form is one map-side-combined exchange of
-    # 10 rows. Identical BIGINT terms in an order-independent sum and
-    # an identical per-element double expression ⇒ bit-identical y.
-    # Expressions are F.expr SQL strings (the a381 plan-construction
-    # lesson: 6 × 65 py4j agg trees otherwise dominate the wall).
-    # The fixture embedding dim, same constant the _LSH_PLANES share.
-    # element_at past the end would return NULL (non-ANSI) and SUM
-    # would silently skip it, so fail LOUDLY instead: rows with any
-    # other width trip the assert below before an aggregate can
-    # swallow them. (Corpora ≤100k rows never reach this code — the
-    # driver replica handles them and itself declines ragged panels.)
-    _dim = 64
-    e = e.select(
-        "label",
-        F.when(
-            F.size("v") == _dim, F.col("v")
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("a440: expected 64-dim embedding, got "),
-                    F.size("v").cast("string"),
-                )
-            )
-        ).alias("v"),
-    )
-    _m0_sums = [
-        F.expr(
-            f"CAST(SUM(CAST(ROUND(element_at(v, {p + 1})"
-            " * CAST(1000000000.0 AS DOUBLE), 0) AS BIGINT))"
-            " AS BIGINT)"
-        ).alias(f"s{p}")
-        for p in range(_dim)
-    ]
-    _m0_y = F.expr(
-        "array("
-        + ", ".join(
-            f"CAST(ROUND(s{p} / cnt, 0) AS BIGINT)"
-            " / CAST(1000000000.0 AS DOUBLE)"
-            for p in range(_dim)
-        )
-        + ")"
-    )
-    y_df = (
-        e.groupBy("label")
-        .agg(*_m0_sums, F.count("*").alias("cnt"))
-        .select("label", _m0_y.alias("y"))
-    )
-    dist_fold = F.sqrt(
-        F.aggregate(
-            F.zip_with("v", "y", lambda x, c: (x - c) * (x - c)),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-    )
-    _num_sums = [
-        F.expr(
-            f"CAST(SUM(CAST(ROUND(element_at(v, {p + 1}) / dist"
-            " * CAST(1000000000.0 AS DOUBLE), 0) AS BIGINT))"
-            " AS BIGINT)"
-        ).alias(f"n{p}")
-        for p in range(_dim)
-    ]
-    # every p of a label aggregates exactly the label's rows, so the
-    # per-label den sum IS the former per-(label,p) one
-    _den_sum = F.expr(
-        "CAST(SUM(CAST(ROUND(CAST(1000000000000.0 AS DOUBLE) / dist,"
-        " 0) AS BIGINT)) AS BIGINT)"
-    ).alias("den")
-    _it_y = F.expr(
-        "array("
-        + ", ".join(
-            f"CAST(n{p} AS DOUBLE) * CAST(1000.0 AS DOUBLE) / den"
-            for p in range(_dim)
-        )
-        + ")"
-    )
-    for _ in range(6):
-        d = (
-            e.join(F.broadcast(y_df), "label")
-            .select("label", "v", dist_fold.alias("dist"))
-            .filter(F.col("dist") > 0)
-            .localCheckpoint(eager=False)
-        )
-        y_df = (
-            d.groupBy("label")
-            .agg(*_num_sums, _den_sum)
-            .select("label", _it_y.alias("y"))
-        )
-    counts = e.groupBy("label").agg(
-        F.count("*").cast("bigint").alias("n_members")
-    )
-    return (
-        y_df.select("label", F.posexplode("y").alias("p", "coord"))
-        .join(counts, "label")
-        .select(
-            "label",
-            F.col("p").cast("int").alias("p"),
-            F.round(F.col("coord"), 6).alias("coord_r"),
             "n_members",
         )
         .orderBy("label", "p")
@@ -2334,35 +2207,26 @@ def a450_lof_panel(spark, sf_dir):
     density). Exact LOF needs 2-hop neighborhoods: three bounded-side
     × corpus sweeps (panel 30 → its neighbors ≤150 → their neighbors
     ≤750), each top-5 by an exact integer (r_fp, id) ranking, then a
-    ≤750-row reach/lrd/LOF tail. When the corpus itself is
-    driver-bounded (≤100k rows) the sweeps run driver-side too (the
-    a440 recipe): the fp distance replays Spark's fold dim-by-dim in
-    index order on the SAME float64s, F.round(·, 0) goes through the
-    functions.exact HALF_UP vector replica, and top-5 is a lexsort on
-    exact (r_fp, cand) integers — bit-identical rows with ONE corpus
-    collect instead of three plan+compile+shuffle rounds (profiled:
-    re-executing a warmed sweep takes 0.09s; a fresh sweep 0.6-0.8s —
-    the wall was per-sweep plan analysis + codegen, not compute). The
-    distributed sweeps remain the fallback above the bound — at
-    100 TB they ride broadcast against the scan, never corpus ×
-    corpus, feeding the same driver tail (≤750 rows at ANY scale; the
-    r10 BHJ-vs-SMJ assembly question is settled by having no
-    assembly joins at all). Terminal round(_, 6) stays engine-side on
-    the literal frame; the corpus-wide variant swaps the brute-force
-    sweep for the LSH/IVF candidate generators (q38/q56) feeding
-    identical reach/lrd algebra."""
+    ≤750-row reach/lrd/LOF tail. The corpus is collected once through
+    ``collect_vector_panel`` (≤100k rows) and the sweeps run
+    driver-side (the a440 recipe): the fp distance folds dim-by-dim in
+    index order on the collected float64s, F.round(·, 0) goes through
+    the functions.exact HALF_UP vector replica, and top-5 is a lexsort
+    on exact (r_fp, cand) integers. Terminal round(_, 6) stays
+    engine-side on the literal frame. A corpus above the cap raises
+    ValueError; a corpus-wide variant would swap the brute-force sweep
+    for the LSH/IVF candidate generators (q38/q56) feeding identical
+    reach/lrd algebra."""
     from ..operators.core import collect_vector_panel
 
     src = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    panel = collect_vector_panel(src, "vec_id", "v", _A450_MAX_ROWS)
-    if panel is not None:
-        out = _a450_driver_exact(spark, *panel)
-        if out is not None:
-            return out
-    return _a450_distributed(spark, src)
+    panel = collect_vector_panel(
+        src, "vec_id", "v", _A450_MAX_ROWS, "a450_lof_panel embeddings"
+    )
+    return _a450_driver_exact(spark, *panel)
 
 
 # driver-side corpus bound for a450 (same rationale as _A440_MAX_ROWS;
@@ -2372,15 +2236,14 @@ _A450_MAX_ROWS = 100_000
 
 def _a450_driver_exact(spark, ids, X):
     """Driver replica of the three top-5 sweeps: exact fp distances,
-    (r_fp, cand) lexsort, id-inequality self-exclusion. Returns None
-    (→ distributed fallback) for duplicate ids or fp terms near the
-    int64 edge."""
+    (r_fp, cand) lexsort, id-inequality self-exclusion. Raises
+    ValueError for duplicate ids or fp terms near the int64 edge."""
     import numpy as np
 
     from ..functions.exact import round0_half_up_vec
 
     if len(np.unique(ids)) != len(ids):
-        return None
+        raise ValueError("a450_lof_panel: embeddings has duplicate vec_ids")
     n, dim = X.shape
     pos = {int(i): k for k, i in enumerate(ids)}
     guard = float(2**62)
@@ -2401,7 +2264,9 @@ def _a450_driver_exact(spark, ids, X):
                 acc += d * d
             rf_f = np.sqrt(acc) * 1000000000.0
             if rf_f.size and np.abs(rf_f).max() >= guard:
-                return None
+                raise ValueError(
+                    "a450_lof_panel: a fixed-point distance exceeds 2**62"
+                )
             rf_c = round0_half_up_vec(rf_f)
             for k, s in enumerate(chunk):
                 m = ids != s
@@ -2414,84 +2279,13 @@ def _a450_driver_exact(spark, ids, X):
 
     pan_ids = [int(i) for i in ids if i < 30]
     tp = sweep(pan_ids, keep_all=True)
-    if tp is None:
-        return None
     tn = sweep({c for (_, c, _, _) in tp}, keep_all=True)
-    if tn is None:
-        return None
     th = sweep({c for (_, c, _, _) in tn}, keep_all=False)
-    if th is None:
-        return None
     return _a450_tail(
         spark,
         tp,
         tn,
         [(s, r) for (s, _, r, _) in th],
-    )
-
-
-def _a450_distributed(spark, src):
-    """The distributed 2-hop pipeline: each sweep broadcasts its
-    bounded source panel against the corpus scan and takes the top 5
-    by the exact (r_fp, cand) ranking (WindowGroupLimit keeps the
-    shuffle at ≤5 rows per source per map task)."""
-    from ..operators.core import ensure_parallelism
-
-    e = ensure_parallelism(src).localCheckpoint(eager=False)
-
-    # Distance stays the zip_with+aggregate fold: an unrolled 64-term
-    # element_at chain A/B-measured as a wash on the panel sweep
-    # (min-of-5 interleaved 0.58s vs 0.57s — the sweeps are join/window
-    # bound, not distance bound), so the simpler certified expression
-    # is kept.
-    r_fp = money(
-        F.sqrt(
-            F.aggregate(
-                F.zip_with("pv", "v", lambda x, c: (x - c) * (x - c)),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            )
-        ),
-        9,
-    )
-
-    def top5(src, keep_all):
-        """src: bounded (id, pv) side, broadcast against the corpus."""
-        w = Window.partitionBy("src").orderBy("r_fp", "cand")
-        d = (
-            e.crossJoin(F.broadcast(src))
-            .filter(F.col("vec_id") != F.col("src"))
-            .select(
-                "src", F.col("vec_id").alias("cand"), r_fp.alias("r_fp")
-            )
-            .withColumn("rn", F.row_number().over(w))
-        )
-        return (
-            d.filter(F.col("rn") <= 5) if keep_all else d.filter(F.col("rn") == 5)
-        ).collect()
-
-    pan = (
-        e.filter(F.col("vec_id") < 30)
-        .limit(30)
-        .select(F.col("vec_id").alias("src"), F.col("v").alias("pv"))
-    )
-    tp = top5(pan, keep_all=True)
-    nbr_ids = sorted({r["cand"] for r in tp})
-    nsrc = e.filter(F.col("vec_id").isin(nbr_ids)).select(
-        F.col("vec_id").alias("src"), F.col("v").alias("pv")
-    )
-    tn = top5(nsrc, keep_all=True)
-    hop_ids = sorted({r["cand"] for r in tn})
-    hsrc = e.filter(F.col("vec_id").isin(hop_ids)).select(
-        F.col("vec_id").alias("src"), F.col("v").alias("pv")
-    )
-    th = top5(hsrc, keep_all=False)
-
-    return _a450_tail(
-        spark,
-        [(r["src"], r["cand"], r["r_fp"], r["rn"]) for r in tp],
-        [(r["src"], r["cand"], r["r_fp"], r["rn"]) for r in tn],
-        [(r["src"], r["r_fp"]) for r in th],
     )
 
 
@@ -2888,103 +2682,51 @@ def a459_kcenter_seeding(spark, sf_dir):
     maximizes what the picks contain; this maximizes how far apart
     they sit — the seeding that fixes k-means' first-8-rows codebook
     (q95) and the standard coreset/diverse-eval-set selector): start
-    from vec 0, then 7 sweeps each embedding the ≤8 chosen vectors as
-    codegen literals against the corpus, taking per-point MIN distance
-    to the set (exact fixed-point BIGINT, a map-side ``least()`` — no
-    crossJoin row fan-out, no corpus-wide shuffle of the vectors) and
-    picking the argmax with (radius DESC, vec_id) determinism via
-    TakeOrdered. The chosen set is ≤8 rows by construction, so the
-    per-sweep driver collect is O(k·dim) — the IVF-centroid pattern.
-    The per-member squared-diff chain adds in index order, exactly the
-    zip_with/aggregate fold it replaces (0.0 + t0 ≡ t0 in IEEE). The
-    radius column IS the covering-radius curve: radius at step k
-    bounds every point's distance to its nearest center by that value
-    — the quantity the 2-approx guarantee speaks about. Each sweep is
-    one scan + a top-1 reduce; the chosen set never exceeds k rows,
-    so 100 TB costs k linear passes (or one pass of the streaming
-    variant). Below a 100k-row corpus the 8 sweeps run DRIVER-SIDE
-    (the a440/a450 recipe: the wall was 7 fresh plan+job rounds, not
-    compute) — the "+" chain is replayed term-by-term in index order,
-    round(·,0) via the HALF_UP vector replica, argmax by exact
-    (-radius, vec_id) ordering; the sweep loop stays as the
-    above-cap fallback."""
-    from ..operators.core import collect_vector_panel, ensure_parallelism
+    from vec 0, then 7 sweeps each taking every point's MIN
+    fixed-point distance to the chosen set and picking the argmax with
+    (radius DESC, vec_id) determinism. The radius column IS the
+    covering-radius curve: radius at step k bounds every point's
+    distance to its nearest center by that value — the quantity the
+    2-approx guarantee speaks about. The corpus is collected once
+    through ``collect_vector_panel`` (≤100k rows) and the sweeps run
+    DRIVER-SIDE (the a440/a450 recipe) — the squared-diff chain adds
+    term-by-term in index order, round(·,0) goes through the HALF_UP
+    vector replica, and the argmax is an exact (-radius, vec_id)
+    ordering. A corpus above the cap raises ValueError."""
+    from ..operators.core import collect_vector_panel
 
     src = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    panel = collect_vector_panel(src, "vec_id", "v", 100_000)
-    if panel is not None:
-        out = _a459_driver_exact(spark, *panel)
-        if out is not None:
-            return out
-
-    e = ensure_parallelism(src).localCheckpoint(eager=False)
-    first = (
-        e.filter(F.col("vec_id") == 0).limit(1).collect()[0]
+    panel = collect_vector_panel(
+        src, "vec_id", "v", 100_000, "a459_kcenter_seeding embeddings"
     )
-    chosen = [(1, first["vec_id"], list(first["v"]), 0)]
-
-    def d_fp_lit(sv):
-        # single SQL string per member (py4j Column chains cost seconds
-        # of driver time per sweep); v[i] is 0-based like F.get, the
-        # "+" chain left-associates like the zip_with/aggregate fold,
-        # CAST('<repr>' AS DOUBLE) round-trips the collected double
-        terms = " + ".join(
-            f"(v[{i}] - {sql_double(c)})"
-            f" * (v[{i}] - {sql_double(c)})"
-            for i, c in enumerate(sv)
-        )
-        return F.expr(
-            f"CAST(round(sqrt({terms}) * 1000000000.0, 0) AS BIGINT)"
-        )
-
-    for j in range(2, 9):
-        ids = [c[1] for c in chosen]
-        mn_fp = F.least(*[d_fp_lit(c[2]) for c in chosen]) if len(
-            chosen
-        ) > 1 else d_fp_lit(chosen[0][2])
-        pick = (
-            e.filter(~F.col("vec_id").isin(ids))
-            .select("vec_id", "v", mn_fp.alias("mn_fp"))
-            .orderBy(F.col("mn_fp").desc(), "vec_id")
-            .limit(1)
-            .collect()[0]
-        )
-        chosen.append(
-            (j, pick["vec_id"], list(pick["v"]), pick["mn_fp"])
-        )
-    out = literal_frame(
-        spark,
-        [(s, vid, rfp) for s, vid, _, rfp in chosen],
-        "step int, vec_id bigint, radius_fp bigint",
-    )
-    return out.select(
-        "step",
-        "vec_id",
-        F.round(F.col("radius_fp") / 1000000000.0, 6).alias("radius_r"),
-    ).orderBy("step")
+    return _a459_driver_exact(spark, *panel)
 
 
 def _a459_driver_exact(spark, ids, X):
     """Driver replica of the 8 Gonzalez sweeps: the per-member "+"
     distance chain replayed term-by-term in index order, HALF_UP via
-    the vector replica, argmax by exact (-min_dist, vec_id). Returns
-    None (→ the distributed sweep loop) for duplicate ids, a corpus
-    the engine path couldn't seed either (no vec 0 / fewer than 8
-    rows), or fp terms near the int64 edge."""
+    the vector replica, argmax by exact (-min_dist, vec_id). Raises
+    ValueError for duplicate ids, a corpus with no vec 0 or fewer than
+    8 rows, or fp terms near the int64 edge."""
     import numpy as np
 
     from ..functions.exact import round0_half_up_vec
-    from ..operators.core import literal_frame
 
     n, dim = X.shape
-    if n < 8 or len(np.unique(ids)) != len(ids):
-        return None
+    if n < 8:
+        raise ValueError(
+            f"a459_kcenter_seeding: embeddings has {n} rows, fewer than 8"
+        )
+    if len(np.unique(ids)) != len(ids):
+        raise ValueError(
+            "a459_kcenter_seeding: embeddings has duplicate vec_ids"
+        )
     zero_pos = np.nonzero(ids == 0)[0]
     if len(zero_pos) != 1:
-        return None
+        raise ValueError("a459_kcenter_seeding: embeddings has no vec_id 0")
     guard = float(2**62)
 
     def d_fp(sv):
@@ -3004,7 +2746,9 @@ def _a459_driver_exact(spark, ids, X):
         sv = X[np.nonzero(ids == chosen[-1][1])[0][0]]
         df_ = d_fp(sv)
         if np.abs(df_).max() >= guard:
-            return None
+            raise ValueError(
+                "a459_kcenter_seeding: a fixed-point distance exceeds 2**62"
+            )
         d_new = round0_half_up_vec(df_)
         mn = d_new if mn is None else np.minimum(mn, d_new)
         m = ~np.isin(ids, list(taken))

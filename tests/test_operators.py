@@ -178,7 +178,8 @@ def test_money_is_the_inline_quantiser(spark, scale):
 
 def _inline_quantisers(root):
     """``F.round(X * <power-of-ten float>, 0).cast("bigint")`` call sites
-    under ``root``: the quantiser ``money(X, k)`` builds, written out."""
+    under ``root``, with the float bare or wrapped in ``F.lit``: the
+    quantiser ``money(X, k)`` builds, written out."""
     import ast
     import math
     from pathlib import Path
@@ -192,6 +193,8 @@ def _inline_quantisers(root):
         )
 
     def power_of_ten(node):
+        if isinstance(node, ast.Call) and is_f(node.func, "lit") and node.args:
+            node = node.args[0]
         if not (isinstance(node, ast.Constant) and isinstance(node.value, float)):
             return False
         return node.value >= 10 and node.value == 10.0 ** round(math.log10(node.value))
@@ -238,9 +241,11 @@ def test_inline_quantiser_scan_sees_every_spelling(tmp_path):
         "d = F.round(x * 100, 0).cast('bigint')\n"  # int literal: another plan
         "e = F.round(x * 110.0, 0).cast('bigint')\n"
         "f = F.round(x, 0).cast('bigint')\n"
+        "g = F.round(x * F.lit(1000.0), 0).cast('bigint')\n"
+        "h = F.round(x * F.lit(1000), 0).cast('bigint')\n"  # int: another plan
     )
     lines = sorted(int(s.rsplit(":", 1)[1]) for s in _inline_quantisers(tmp_path))
-    assert lines == [1, 2, 6]
+    assert lines == [1, 2, 6, 10]
 
 
 def test_sql_double_renders_the_round_trip_literal():

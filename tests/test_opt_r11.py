@@ -1,6 +1,6 @@
 """Round-11 optimization-round tests: the vectorized HALF_UP replica
-and the driver-exact Weiszfeld path must bit-match the engine forms
-they replace."""
+must bit-match the engine's rounding, and the driver-exact vector-panel
+queries (a440, a450, a459) must bit-match their DuckDB oracles."""
 
 from __future__ import annotations
 
@@ -64,70 +64,81 @@ def test_round0_half_up_vec_matches_spark_round(spark):
     assert got_spark == got_vec
 
 
-def _collect_sorted(df):
-    rows = [tuple(r) for r in df.collect()]
-    return sorted(
-        rows,
-        key=lambda t: tuple(
-            (x is None, str(x)) for x in t
-        ),
-    )
+_VECTOR_PANEL_QUERIES = (
+    "a440_geometric_median",
+    "a450_lof_panel",
+    "a459_kcenter_seeding",
+)
 
 
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001",
                                     "/root/testdata/sf0.01"])
-def test_a450_driver_path_bitmatches_distributed(spark, sf_dir):
-    """The numpy sweep replica (driver path) returns row-for-row what
-    the distributed broadcast-sweep pipeline returns."""
-    from pyspark.sql import functions as F
+@pytest.mark.parametrize("name", _VECTOR_PANEL_QUERIES)
+def test_vector_panel_query_matches_oracle(spark, sf_dir, name):
+    """Each driver-exact vector-panel query returns row-for-row,
+    bit-for-bit what its DuckDB oracle returns; a440's rounded
+    coordinates also agree in the sign of zero."""
+    import duckdb
 
     from grouper_spark.queries import load_all
-    from grouper_spark.queries.similarity import _a450_distributed
-    from grouper_spark.sources import table
+    from grouper_spark.sources import TABLES
 
-    registry = load_all()
-    fast = _collect_sorted(registry["a450_lof_panel"].fn(spark, sf_dir))
-    src = table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    slow = _collect_sorted(_a450_distributed(spark, src))
-    assert len(fast) == len(slow) and len(fast) > 0
-    assert fast == slow
+    qdef = load_all()[name]
+    sdf = qdef.fn(spark, sf_dir)
+    cols = sorted(sdf.columns)
+    got = sorted(tuple(r[c] for c in cols) for r in sdf.collect())
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    res = con.execute(qdef.oracle)
+    dcols = [d[0] for d in res.description]
+    assert sorted(dcols) == cols
+    idx = [dcols.index(c) for c in cols]
+    want = sorted(tuple(r[i] for i in idx) for r in res.fetchall())
+    assert len(got) == len(want) and len(got) > 0
+    for a, b in zip(got, want):
+        assert a == b, (a, b)
+    if name == "a440_geometric_median":
+        k = cols.index("coord_r")
+        for a, b in zip(got, want):
+            assert math.copysign(1.0, a[k]) == math.copysign(1.0, b[k])
 
 
 def test_collect_vector_panel_guards(spark):
-    """Over-cap, NULL vectors and ragged widths all return None (the
-    caller's distributed fallback path)."""
+    """Over-cap, NULL vectors, ragged widths and NaN all raise
+    ValueError naming the panel; an empty panel is zero-length."""
     from grouper_spark.operators.core import collect_vector_panel
 
     ok = spark.createDataFrame(
         [(1, [1.0, 2.0]), (2, [3.0, 4.0])], "id bigint, v array<double>"
     )
-    got = collect_vector_panel(ok, "id", "v", 10)
-    assert got is not None
-    ids, X = got
+    ids, X = collect_vector_panel(ok, "id", "v", 10, "ok panel")
     assert ids.tolist() == [1, 2] and X.tolist() == [[1.0, 2.0], [3.0, 4.0]]
-    assert collect_vector_panel(ok, "id", "v", 1) is None  # over cap
+    with pytest.raises(ValueError, match="ok panel.*cap of 1 rows"):
+        collect_vector_panel(ok, "id", "v", 1, "ok panel")
+    ids, X = collect_vector_panel(ok.limit(0), "id", "v", 10, "empty panel")
+    assert ids.shape == (0,) and X.shape == (0, 0)
     bad_null = spark.createDataFrame(
         [(1, [1.0, None])], "id bigint, v array<double>"
     )
-    assert collect_vector_panel(bad_null, "id", "v", 10) is None
+    with pytest.raises(ValueError, match="null panel.*NULL"):
+        collect_vector_panel(bad_null, "id", "v", 10, "null panel")
     ragged = spark.createDataFrame(
         [(1, [1.0, 2.0]), (2, [3.0])], "id bigint, v array<double>"
     )
-    assert collect_vector_panel(ragged, "id", "v", 10) is None
+    with pytest.raises(ValueError, match="ragged panel.*unequal width"):
+        collect_vector_panel(ragged, "id", "v", 10, "ragged panel")
     nan = spark.createDataFrame(
         [(1, [float("nan"), 2.0])], "id bigint, v array<double>"
     )
-    assert collect_vector_panel(nan, "id", "v", 10) is None
+    with pytest.raises(ValueError, match="nan panel.*NaN"):
+        collect_vector_panel(nan, "id", "v", 10, "nan panel")
 
 
 @pytest.mark.parametrize("id_type", ["int", "bigint", "double"])
 def test_collect_vector_panel_id_types(spark, id_type):
     """Integer ids of any width come back unchanged as int64; float ids
-    return None (they would truncate, 1.5 → 1) so the caller falls back
-    to its distributed plan."""
+    raise ValueError (they would truncate, 1.5 → 1)."""
     from grouper_spark.operators.core import collect_vector_panel
 
     ids = [1.5, 2.0] if id_type == "double" else [1, 2]
@@ -135,19 +146,18 @@ def test_collect_vector_panel_id_types(spark, id_type):
         [(ids[0], [1.0, 2.0]), (ids[1], [3.0, 4.0])],
         f"id {id_type}, v array<double>",
     )
-    got = collect_vector_panel(df, "id", "v", 10)
     if id_type == "double":
-        assert got is None
+        with pytest.raises(ValueError, match="not integers"):
+            collect_vector_panel(df, "id", "v", 10, "float-id panel")
         return
-    got_ids, X = got
+    got_ids, X = collect_vector_panel(df, "id", "v", 10, "int-id panel")
     assert got_ids.dtype == "int64" and got_ids.tolist() == [1, 2]
     assert X.tolist() == [[1.0, 2.0], [3.0, 4.0]]
 
 
 def test_collect_vector_panel_raises_on_plan_error(spark):
-    """A panel whose plan fails while it runs raises out of the collect
-    instead of returning None, which would switch the caller to its
-    distributed algorithm and hide the error."""
+    """A panel whose plan fails while it runs raises the plan's own
+    error out of the collect."""
     from pyspark.sql import functions as F
 
     from grouper_spark.operators.core import collect_vector_panel
@@ -159,7 +169,7 @@ def test_collect_vector_panel_raises_on_plan_error(spark):
         .alias("v"),
     )
     with pytest.raises(Exception, match="panel-boom"):
-        collect_vector_panel(df, "id", "v", 10)
+        collect_vector_panel(df, "id", "v", 10, "failing panel")
 
 
 @pytest.mark.parametrize("cap", [5, 6, 100])
@@ -179,42 +189,35 @@ def test_collect_bounded_over_cap_raises(spark):
         collect_bounded(spark.range(5), 4, "five-row panel")
 
 
-@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001",
-                                    "/root/testdata/sf0.01"])
-def test_a459_driver_path_bitmatches_sweeps(spark, sf_dir, monkeypatch):
-    """The numpy Gonzalez replica returns row-for-row what the
-    distributed sweep loop returns (fallback forced by patching the
-    panel collector to decline)."""
-    import grouper_spark.operators.core as core
+def test_over_cap_vector_panel_raises(spark, sf_dir, monkeypatch):
+    """A corpus above a440's driver cap raises instead of switching to
+    another algorithm."""
+    from grouper_spark.queries import load_all, similarity
+
+    monkeypatch.setattr(similarity, "_A440_MAX_ROWS", 5)
+    with pytest.raises(ValueError, match="a440_geometric_median.*cap of 5"):
+        load_all()["a440_geometric_median"].fn(spark, sf_dir)
+
+
+def test_empty_embeddings(spark, sf_dir, tmp_path):
+    """On a 0-row embeddings table a440 and a450 return 0 rows with
+    their usual schema (the oracle's answer too); a459 cannot seed
+    from vec 0 and raises."""
     from grouper_spark.queries import load_all
 
     registry = load_all()
-    fast = _collect_sorted(registry["a459_kcenter_seeding"].fn(spark, sf_dir))
-    monkeypatch.setattr(core, "collect_vector_panel", lambda *a, **k: None)
-    slow = _collect_sorted(registry["a459_kcenter_seeding"].fn(spark, sf_dir))
-    assert len(fast) == 8 and fast == slow
-
-
-@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001",
-                                    "/root/testdata/sf0.01"])
-def test_a440_driver_path_bitmatches_distributed(spark, sf_dir):
-    """The collected-panel Weiszfeld replica returns row-for-row,
-    bit-for-bit what the distributed six-pass loop returns."""
-    from pyspark.sql import functions as F
-
-    from grouper_spark.queries import load_all
-    from grouper_spark.queries.similarity import _a440_distributed
-    from grouper_spark.sources import table
-
-    registry = load_all()
-    fast = _collect_sorted(registry["a440_geometric_median"].fn(spark, sf_dir))
-    src = table(spark, sf_dir, "embeddings").select(
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+    spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(0).write.parquet(
+        str(tmp_path / "embeddings.parquet")
     )
-    slow = _collect_sorted(_a440_distributed(spark, src))
-    assert len(fast) == len(slow) and len(fast) > 0
-    for a, b in zip(fast, slow):
-        assert a == b, (a, b)
-        # bit-identity on the rounded coordinate, not approximate
-        assert math.copysign(1.0, a[2]) == math.copysign(1.0, b[2])
+    empty_dir = str(tmp_path)
+    for name, schema in (
+        ("a440_geometric_median",
+         "struct<label:int,p:int,coord_r:double,n_members:bigint>"),
+        ("a450_lof_panel",
+         "struct<vec_id:bigint,kdist_r:double,lof_r:double>"),
+    ):
+        df = registry[name].fn(spark, empty_dir)
+        assert df.schema.simpleString() == schema
+        assert df.collect() == []
+    with pytest.raises(ValueError, match="a459_kcenter_seeding.*fewer than 8"):
+        registry["a459_kcenter_seeding"].fn(spark, empty_dir)

@@ -147,6 +147,15 @@ def test_q68_approx_percentiles_within_accuracy_bound(spark, sf_dir):
         assert lo90 <= p90 <= hi90, (k, p90, lo90, hi90)
 
 
+def test_q253_runs_twice_in_one_session(spark, sf_dir):
+    """Registering q253's Python data source a second time in the same
+    session replaces it, so a rerun returns the same rows."""
+    fn = REGISTRY["q253_python_datasource"].fn
+    first = sorted(map(tuple, fn(spark, sf_dir).collect()))
+    second = sorted(map(tuple, fn(spark, sf_dir).collect()))
+    assert first and first == second
+
+
 def test_q300_short_docs_do_not_crash_ansi(spark, tmp_path):
     """ADVICE r3 (medium): sequence(1, greatest(size-1, 0)) counts DOWN
     to [1, 0] for <=1-token docs, so ws[1] indexed out of bounds under
