@@ -64,20 +64,10 @@ def test_round0_half_up_vec_matches_spark_round(spark):
     assert got_spark == got_vec
 
 
-_VECTOR_PANEL_QUERIES = (
-    "a440_geometric_median",
-    "a450_lof_panel",
-    "a459_kcenter_seeding",
-)
-
-
-@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001",
-                                    "/root/testdata/sf0.01"])
-@pytest.mark.parametrize("name", _VECTOR_PANEL_QUERIES)
-def test_vector_panel_query_matches_oracle(spark, sf_dir, name):
-    """Each driver-exact vector-panel query returns row-for-row,
-    bit-for-bit what its DuckDB oracle returns; a440's rounded
-    coordinates also agree in the sign of zero."""
+def _assert_matches_oracle(spark, sf_dir, name):
+    """Run registry query ``name`` and its DuckDB oracle over ``sf_dir``
+    and assert the sorted rows are equal, value for value; returns the
+    sorted column names and both row lists."""
     import duckdb
 
     from grouper_spark.queries import load_all
@@ -98,10 +88,38 @@ def test_vector_panel_query_matches_oracle(spark, sf_dir, name):
     assert len(got) == len(want) and len(got) > 0
     for a, b in zip(got, want):
         assert a == b, (a, b)
-    if name == "a440_geometric_median":
-        k = cols.index("coord_r")
-        for a, b in zip(got, want):
-            assert math.copysign(1.0, a[k]) == math.copysign(1.0, b[k])
+    return cols, got, want
+
+
+@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001",
+                                    "/root/testdata/sf0.01"])
+def test_a440_driver_path_bitmatches_distributed(spark, sf_dir):
+    """The collected-panel Weiszfeld replica returns row-for-row,
+    bit-for-bit what the oracle's set-based six-pass loop returns,
+    down to the sign of zero in the rounded coordinate."""
+    cols, got, want = _assert_matches_oracle(
+        spark, sf_dir, "a440_geometric_median"
+    )
+    k = cols.index("coord_r")
+    for a, b in zip(got, want):
+        assert math.copysign(1.0, a[k]) == math.copysign(1.0, b[k])
+
+
+@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001",
+                                    "/root/testdata/sf0.01"])
+def test_a450_driver_path_bitmatches_distributed(spark, sf_dir):
+    """The numpy LOF replica returns row-for-row what the oracle's
+    set-based k-distance / reachability SQL returns."""
+    _assert_matches_oracle(spark, sf_dir, "a450_lof_panel")
+
+
+@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001",
+                                    "/root/testdata/sf0.01"])
+def test_a459_driver_path_bitmatches_sweeps(spark, sf_dir):
+    """The numpy Gonzalez replica returns row-for-row what the oracle's
+    unrolled farthest-point sweeps return: all 8 picks."""
+    _, got, _ = _assert_matches_oracle(spark, sf_dir, "a459_kcenter_seeding")
+    assert len(got) == 8
 
 
 def test_collect_vector_panel_guards(spark):
