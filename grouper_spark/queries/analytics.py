@@ -5007,9 +5007,6 @@ def a422_association_rules(spark, sf_dir):
     )
 
 
-_PL_MIN_DEG = 1
-
-
 @query(
     "a426_powerlaw_fit",
     oracle="""

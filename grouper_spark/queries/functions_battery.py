@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.text import md5_bits, money
-from ..sources import table
+from ..sources import sf_tag, staged_path, table
 from . import query
 
 
@@ -913,12 +913,14 @@ def q257_python_datasink(spark, sf_dir):
     harness; the protocol is the portable part."""
     import os
     import shutil
+    import tempfile
 
     from ..sources.pydatasource import JsonlCommitDataSource
 
     spark.dataSource.register(JsonlCommitDataSource)
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    out_dir = os.path.join("/tmp", f"grouper_jsonl_sink_{tag}")
+    out_dir = os.path.join(
+        tempfile.gettempdir(), f"grouper_jsonl_sink_{sf_tag(sf_dir)}"
+    )
     shutil.rmtree(out_dir, ignore_errors=True)
 
     o = table(spark, sf_dir, "orders").select(
@@ -975,12 +977,9 @@ def q271_orc_roundtrip(spark, sf_dir):
     the engine is format-plural: same plan shape, same exactness, a
     different storage codec."""
     import os
+    import tempfile
 
-    from .versioning import _source_fingerprint
-
-    fp = _source_fingerprint(sf_dir, "orders")
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    path = os.path.join("/tmp", f"grouper_orc_{tag}_{fp}")
+    path = staged_path(tempfile.gettempdir(), "grouper_orc", sf_dir, "orders")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (
             table(spark, sf_dir, "orders")
@@ -1149,8 +1148,7 @@ def a369_csv_escape_roundtrip(spark, sf_dir):
     exists to flag (prefer parquet; this query is the auditor for
     when CSV is imposed)."""
     import os
-
-    from .versioning import _source_fingerprint
+    import tempfile
 
     d = table(spark, sf_dir, "documents")
     tricky = d.select(
@@ -1162,9 +1160,9 @@ def a369_csv_escape_roundtrip(spark, sf_dir):
             F.substring("text", 1, 20),
         ).alias("payload"),
     )
-    fp = _source_fingerprint(sf_dir, "documents")
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    path = os.path.join("/tmp", f"grouper_csvrt_{tag}_{fp}")
+    path = staged_path(
+        tempfile.gettempdir(), "grouper_csvrt", sf_dir, "documents"
+    )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (
             tricky.write.mode("overwrite")

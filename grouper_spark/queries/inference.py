@@ -1,9 +1,9 @@
 """Round-7 statistical-inference battery (a472–a496; ex a004–a028).
 
 Renamed out of the driver-sampler window in round 8 AFTER their r7
-driver certification (CORRECTNESS_r07.json, 25/25 green) — numbers
-a004–a028 are retired, never reused, same convention as a002/a003 →
-a470/a471 (see queries/aliases.py).
+driver certification (25/25 green; tests/certified_names.txt lists
+them) — numbers a004–a028 are retired, never reused, same convention
+as a002/a003 → a470/a471 (see queries/aliases.py).
 
 Classical tests and estimators the monitoring/analytics batteries did
 not yet cover: ordinal effect sizes and association (Cliff's delta,
@@ -4109,11 +4109,6 @@ def a501_intersect_except(spark, sf_dir):
     )
 
 
-_PERIOD_CASE = (
-    "CASE WHEN d <= 10 THEN 1 WHEN d <= 20 THEN 2 ELSE 3 END"
-)
-
-
 @query(
     "a502_page_trend",
     oracle="""
@@ -5781,7 +5776,7 @@ def a513_bowker_symmetry(spark, sf_dir):
         F.col("n").alias("nb"),
     )
     pairs = (
-        a.join(F.broadcast(b), ["i", "j"], "full")
+        a.join(b, ["i", "j"], "full")
         .filter(F.col("i") < F.col("j"))
         .select(
             "i",

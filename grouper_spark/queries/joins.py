@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.text import md5_bits, money, money_sum
-from ..sources import table
+from ..sources import sf_tag, table
 from . import query
 from ._sqlgen import sql_money_sum
 from ..operators.core import literal_frame
@@ -441,7 +441,7 @@ def q165_bucketed_join(spark, sf_dir):
     is semantics-preserving."""
     from ..sources.sinks import write_bucketed
 
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
+    tag = sf_tag(sf_dir)
     lt, ot = f"li_bkt_{tag}", f"ord_bkt_{tag}"
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", money("l_extendedprice").alias("price_cents")

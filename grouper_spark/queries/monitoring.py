@@ -4438,12 +4438,11 @@ def a552_kruskal_wallis(spark, sf_dir):
     )
 
 
-# BH step-up thresholds on the chi-square(df=1)-statistic scale:
-# p = exp(-stat/2) <= i*alpha/m  <=>  stat >= -2*ln(i*alpha/m).
+# BH step-up thresholds for m = 7 tests, on the chi-square(df=1)-statistic
+# scale: p = exp(-stat/2) <= i*alpha/m  <=>  stat >= -2*ln(i*alpha/m).
 # Precomputed in Python and embedded as LITERALS in both plans, so no
 # engine evaluates ln/exp at runtime (libm results are not guaranteed
 # bit-identical across engines; literals are).
-_BH_M = 7
 _BH_THR = (9.883285, 8.49699, 7.68606, 7.110696, 6.664409, 6.299766, 5.991465)
 
 

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import money, token_count
 from ..operators import canonicalize_exact, dedup_clusters
-from ..sources import table
+from ..sources import staged_path, table
 from . import query
 from ..operators.core import literal_frame
 
@@ -155,12 +155,8 @@ def q192_multiformat_federation(spark, sf_dir):
     base = table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    from .versioning import _source_fingerprint
-
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
     # fingerprinted path: a regenerated fixture invalidates the staging
-    fp = _source_fingerprint(sf_dir, "events")
-    root = os.path.join(tempfile.gettempdir(), f"fed_{tag}_{fp}")
+    root = staged_path(tempfile.gettempdir(), "fed", sf_dir, "events")
     pq_dir, csv_dir, json_dir = (
         os.path.join(root, f) for f in ("pq", "csv", "json")
     )

@@ -769,10 +769,11 @@ def q256_date_dimension(spark, sf_dir):
     dimension is SYNTHESIZED in-plan with sequence() over the fact's
     date bounds — day, day-of-week, weekend flag, quarter — then the
     fact left-joins it so zero-order days still report. The dimension
-    is calendar-sized (broadcast, never shuffled) and generation is
-    pure codegen, so at 100 TB this costs one bounds aggregate + one
-    broadcast — the pattern that replaces hand-maintained calendar
-    parquet files. n_days counts dimension rows per group (including
+    is calendar-sized and generation is pure codegen, so at 100 TB this
+    costs one bounds aggregate + one join — the pattern that replaces
+    hand-maintained calendar parquet files. A left join can broadcast
+    only its right side, the fact, so the dimension carries no
+    broadcast hint. n_days counts dimension rows per group (including
     orderless days), proving the left-join direction; revenue stays
     fixed-point exact."""
     o = table(spark, sf_dir, "orders")
@@ -794,8 +795,7 @@ def q256_date_dimension(spark, sf_dir):
         money("o_totalprice").alias("rc"),
     )
     return (
-        F.broadcast(dim)
-        .join(fact, "day", "left")
+        dim.join(fact, "day", "left")
         .groupBy("qtr", "is_weekend")
         .agg(
             F.count_distinct("day").cast("bigint").alias("n_days"),

@@ -600,7 +600,6 @@ def _hyperplanes(n_planes: int = 16, dim: int = 64) -> list[list[float]]:
 
 
 _LSH_PLANES = _hyperplanes()
-_LSH_BAND_BITS = 8  # 2 bands x 8 hyperplanes
 
 
 @query(

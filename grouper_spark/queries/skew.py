@@ -26,10 +26,9 @@ posture — and the oracle encodes the same cap, so the driver's value
 hash certifies capped semantics, not just uncapped ones.
 
 Staging: the skewed corpus is written once per (sf, fixture-version) to
-the warehouse under a ``_source_fingerprint`` path (the
-queries/versioning.py discipline — a regenerated fixture can never be
-served from a stale staged copy); queries read the STAGED parquet, the
-oracles re-derive from ``documents``.
+the warehouse under a ``sources.catalog.staged_path`` (a regenerated
+fixture can never be served from a stale staged copy); queries read the
+STAGED parquet, the oracles re-derive from ``documents``.
 """
 
 from __future__ import annotations
@@ -38,7 +37,7 @@ from pyspark.sql import functions as F
 
 from . import query
 from ..functions.text import md5_bits
-from ..sources import table
+from ..sources import staged_path, table
 
 _VOCAB = 2000  # content-token vocabulary; df per token ~ 12·0.8·n/2000
 _N_CONTENT = 12
@@ -109,12 +108,8 @@ def skewed_docs(spark, sf_dir):
     """Staged skewed corpus: write-once parquet under the warehouse,
     keyed by the documents fixture's fingerprint (stale-copy-proof),
     read back for every capped query."""
-    from .versioning import _source_fingerprint
-
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    fp = _source_fingerprint(sf_dir, "documents")
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    path = f"{wh}/skew_docs_{tag}_{fp}"
+    path = staged_path(wh, "skew_docs", sf_dir, "documents")
     _derived_corpus(spark, sf_dir).coalesce(1).write.mode("ignore").parquet(
         path
     )
@@ -147,7 +142,7 @@ FROM cls GROUP BY doc_class ORDER BY doc_class""",
 )
 def a547_skew_corpus_audit(spark, sf_dir):
     """Staged-skew-corpus integrity audit: reads the STAGED parquet
-    (written under the _source_fingerprint path) and summarizes it per
+    (written under its ``staged_path``) and summarizes it per
     skew class — doc counts, distinct texts, token volume, and an
     order-independent bit_xor content signature of md5(text).  The
     oracle re-derives the corpus from ``documents`` with the identical

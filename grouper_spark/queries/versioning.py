@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from ..functions.text import md5_bits, money
-from ..sources import table
+from ..sources import staged_path, table
 from . import query
 from ..operators.core import literal_frame
 
@@ -411,16 +411,6 @@ def q155_scd2_time_travel(spark, sf_dir):
     )
 
 
-def _source_fingerprint(sf_dir: str, name: str) -> str:
-    """mtime+size tag of a fixture file: staged derived layouts embed it
-    in their path so a regenerated fixture (the driver rewrites them
-    between rounds) can never be served from a stale staged copy."""
-    import os
-
-    st = os.stat(f"{sf_dir.rstrip('/')}/{name}.parquet")
-    return f"{int(st.st_mtime)}_{st.st_size}"
-
-
 def _partitioned_events_path(spark, sf_dir):
     """One-time partitioned layout of events (partition column =
     event_date): the write-once / prune-every-query trade that defines
@@ -428,10 +418,8 @@ def _partitioned_events_path(spark, sf_dir):
     layout step idempotent; readers discover partitions from the
     directory structure. The source fingerprint in the path invalidates
     the layout whenever the fixture regenerates."""
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    fp = _source_fingerprint(sf_dir, "events")
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    path = f"{wh}/events_part_{tag}_{fp}"
+    path = staged_path(wh, "events_part", sf_dir, "events")
     (
         table(spark, sf_dir, "events")
         .withColumn("event_date", F.to_date("ts"))
@@ -916,17 +904,18 @@ def q261_partition_evolution(spark, sf_dir):
     whole directories (PartitionFilters, zero I/O for pre-cutover
     months that were re-laid-out), on the legacy branch it pushes down
     to row groups — and the aggregate is layout-agnostic. The one-time
-    layout build is idempotent per fixture (a _DONE marker, local /tmp
+    layout build is idempotent per fixture (a _DONE marker, the local temp dir
     standing in for object storage); at migration scale this is the
     pattern that lets a 100 TB table cut over incrementally instead of
     atomically."""
     import os
+    import tempfile
 
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
     # the source fingerprint in the path invalidates the staged layout
     # whenever the fixture regenerates between rounds (q189/q190 pattern)
-    fp = _source_fingerprint(sf_dir, "orders")
-    base = os.path.join("/tmp", f"grouper_hybrid_{tag}_{fp}")
+    base = staged_path(
+        tempfile.gettempdir(), "grouper_hybrid", sf_dir, "orders"
+    )
     done = os.path.join(base, "_DONE")
     cutover = "1998-01-01"
     o = table(spark, sf_dir, "orders").select(
@@ -1292,14 +1281,15 @@ def a400_format_footprint_advisor(spark, sf_dir):
     by a unit test. Output is 4 rows at any corpus size; staged files
     key on the fixture fingerprint."""
     import os
+    import tempfile
 
     d = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderpriority",
     )
-    fp = _source_fingerprint(sf_dir, "orders")
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    base = os.path.join("/tmp", f"grouper_fmtadv_{tag}_{fp}")
+    base = staged_path(
+        tempfile.gettempdir(), "grouper_fmtadv", sf_dir, "orders"
+    )
     n_rows = d.count()
 
     jvm = spark.sparkContext._jvm

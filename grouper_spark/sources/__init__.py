@@ -1,11 +1,11 @@
-from .catalog import TABLES, load_tables, register_views, table
+from .catalog import TABLES, sf_tag, staged_path, table
 from .sinks import read_any, write_bucketed, write_partitioned
 
 __all__ = [
     "TABLES",
     "table",
-    "load_tables",
-    "register_views",
+    "sf_tag",
+    "staged_path",
     "read_any",
     "write_partitioned",
     "write_bucketed",

@@ -31,11 +31,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to always broadcast, at any scale factor.
-# region=5, nation=25 rows at every SF; supplier/part grow with SF but stay
-# dimension-sized relative to the fact tables.
-BROADCAST_DIMS = frozenset({"region", "nation"})
-
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
@@ -61,11 +56,16 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
+def sf_tag(sf_dir: str) -> str:
+    """Identifier-safe name of a fixture dir: ``.../sf0.01`` → ``sf0_01``."""
+    return sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
 
 
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
-    """Register all fixture tables as temp views for spark.sql queries."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(prefix + name)
+def staged_path(root: str, prefix: str, sf_dir: str, source: str) -> str:
+    """Where a layout derived from fixture table ``source`` is staged:
+    ``<root>/<prefix>_<sf tag>_<mtime>_<size>``. The source file's mtime
+    and size are in the path, so a regenerated fixture is never served
+    from a stale staged copy."""
+    st = os.stat(f"{sf_dir.rstrip('/')}/{source}.parquet")
+    fingerprint = f"{int(st.st_mtime)}_{st.st_size}"
+    return os.path.join(root, f"{prefix}_{sf_tag(sf_dir)}_{fingerprint}")

@@ -2,8 +2,9 @@
 
 Every registered query must run at sf0.001 with a stable non-empty
 schema; a representative subset is additionally checked against its
-DuckDB oracle here (full-inventory parity lives in
-tools/check_parity.py and the driver's own gate).
+DuckDB oracle here (full-inventory parity lives in tools/census.py,
+whose results are committed as CENSUS_<sf>.json, and in the driver's
+own gate).
 """
 
 from __future__ import annotations

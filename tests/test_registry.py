@@ -3,45 +3,30 @@
 The driver hash-certifies the alphabetically-first 50 registry names
 each round.  These tests pin the round-9 rotation contract from
 queries/aliases.py: the window must be 50 FIRST-TIME names — zero
-re-hashes of anything certified in rounds 1..=_CERTIFIED_THROUGH.
+re-hashes of anything certified in rounds 1..9.
 
-When rotating the window next round, bump ``_CERTIFIED_THROUGH`` (so
-the freshly committed CORRECTNESS_r0N.json counts as spent) and
-re-point queries/aliases.py at the next never-sampled tranche.
+``certified_names.txt`` holds those spent names: every name with a
+green row in the round 1..9 correctness records, plus the de-aliased
+original (``q`` + NNN) of each ``a0NNN`` alias among them.  When
+rotating the window next round, append the names the new round
+certified and re-point queries/aliases.py at the next never-sampled
+tranche.
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import re
 
 from grouper_spark.queries import load_all
 
-_CERTIFIED_THROUGH = 9  # rounds whose CORRECTNESS files are "spent"
-_ROOT = os.path.join(os.path.dirname(__file__), os.pardir)
+_FIXTURE = os.path.join(os.path.dirname(__file__), "certified_names.txt")
 
 
 def _certified_names() -> set[str]:
-    """Names with a green row in any committed CORRECTNESS file
-    through round _CERTIFIED_THROUGH, plus the de-aliased originals."""
-    out: set[str] = set()
-    for path in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r0*.json")):
-        rnd = int(re.search(r"_r0*(\d+)\.json$", path).group(1))
-        if rnd > _CERTIFIED_THROUGH:
-            continue
-        for name, row in json.load(open(path)).items():
-            ok = row.get("hash_match") or (
-                row.get("rows_match") and row.get("err") is None
-            )
-            if not ok:
-                continue
-            out.add(name)
-            m = re.match(r"^a0(\d{3}_.*)$", name)
-            if m:
-                out.add("q" + m.group(1))
-    return out
+    """Names certified in rounds 1..9 (see the module docstring)."""
+    with open(_FIXTURE) as f:
+        return set(f.read().split())
 
 
 def test_window_is_50_first_time_names():

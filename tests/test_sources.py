@@ -9,6 +9,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+from grouper_spark.queries import load_all
 from grouper_spark.sources import read_any, write_partitioned
 from grouper_spark.streaming import shutdown, start, submit
 
@@ -337,3 +338,25 @@ def test_jsonl_sink_second_append_merges_manifest(spark, tmp_path):
     )
     assert back.count() == 120
     assert back.select(F.count_distinct("id")).first()[0] == 120
+
+
+# The queries that stage a per-fixture layout or sink in the local temp
+# dir (streaming replays stage per-run uuid dirs and are not listed), and
+# the prefix of what each stages there.
+_TEMP_STAGERS = {
+    "q192_multiformat_federation": "fed_",
+    "q257_python_datasink": "grouper_jsonl_sink_",
+    "q261_partition_evolution": "grouper_hybrid_",
+    "q271_orc_roundtrip": "grouper_orc_",
+    "a369_csv_escape_roundtrip": "grouper_csvrt_",
+    "a400_format_footprint_advisor": "grouper_fmtadv_",
+}
+
+
+def test_staged_files_land_in_the_temp_dir(spark, sf_dir, tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    registry = load_all()
+    for name, prefix in _TEMP_STAGERS.items():
+        assert registry[name].fn(spark, sf_dir).count() > 0, name
+        staged = [p for p in os.listdir(tmp_path) if p.startswith(prefix)]
+        assert staged, f"{name} staged nothing under the temp dir"

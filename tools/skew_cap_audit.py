@@ -126,7 +126,7 @@ def main() -> int:
     r = subprocess.run(
         [
             sys.executable,
-            "tools/check_parity.py",
+            "tools/census.py",
             sf_dir,
             "a547_skew_corpus_audit",
             "a548_skew_tfidf_capped",

@@ -12,11 +12,11 @@ verbatim, so per-key distributions match the source exactly and every
 fixed-point oracle stays exact.
 
 Output is ONE parquet file per table (DuckDB COPY), laid out exactly
-like a driver fixture dir, so tools/check_parity.py and bench.py run
+like a driver fixture dir, so tools/census.py and bench.py run
 against it unchanged:
 
     python tools/stage_scale10.py            # stage from sf0.1
-    python tools/check_parity.py /root/repo/spark-warehouse/scale10 ...
+    python tools/census.py /root/repo/spark-warehouse/scale10 ...
     SPARK_GRAFT_SF_DIR=/root/repo/spark-warehouse/scale10 python bench.py
 """
 
