@@ -9,7 +9,7 @@ plans vary theirs by a job or two between runs.  Engine and oracle
 seconds go to stdout only.  A run over a subset of names rewrites only
 their lines, so before/after for a change is ``git diff CENSUS_*.json``.
 
-Usage: python tools/census.py [sf_dir] [query ...]    (exits 1 on a FAIL)
+Usage: python tools/census.py sf_dir [query ...]    (exits 1 on a FAIL)
 """
 
 from __future__ import annotations
@@ -136,8 +136,8 @@ def _clear_staging(spark, scratch):
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    sf_dir, *names = sys.argv[1:] or sys.exit(__doc__)
+    only = set(names)
 
     import __spark_entry__ as entry_mod
 

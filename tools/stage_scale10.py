@@ -16,8 +16,8 @@ like a driver fixture dir, so tools/census.py and bench.py run
 against it unchanged:
 
     python tools/stage_scale10.py            # stage from sf0.1
-    python tools/census.py /root/repo/spark-warehouse/scale10 ...
-    SPARK_GRAFT_SF_DIR=/root/repo/spark-warehouse/scale10 python bench.py
+    python tools/census.py spark-warehouse/scale10 ...
+    SPARK_GRAFT_SF_DIR=spark-warehouse/scale10 python bench.py
 """
 
 from __future__ import annotations
