@@ -979,7 +979,9 @@ def q271_orc_roundtrip(spark, sf_dir):
     import os
     import tempfile
 
-    path = staged_path(tempfile.gettempdir(), "grouper_orc", sf_dir, "orders")
+    path = staged_path(
+        tempfile.gettempdir(), "grouper_orc", sf_dir, "orders", version=1
+    )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (
             table(spark, sf_dir, "orders")
@@ -1161,7 +1163,7 @@ def a369_csv_escape_roundtrip(spark, sf_dir):
         ).alias("payload"),
     )
     path = staged_path(
-        tempfile.gettempdir(), "grouper_csvrt", sf_dir, "documents"
+        tempfile.gettempdir(), "grouper_csvrt", sf_dir, "documents", version=1
     )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (

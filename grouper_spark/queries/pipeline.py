@@ -156,7 +156,7 @@ def q192_multiformat_federation(spark, sf_dir):
         "event_id", "event_type", "value"
     )
     # fingerprinted path: a regenerated fixture invalidates the staging
-    root = staged_path(tempfile.gettempdir(), "fed", sf_dir, "events")
+    root = staged_path(tempfile.gettempdir(), "fed", sf_dir, "events", version=1)
     pq_dir, csv_dir, json_dir = (
         os.path.join(root, f) for f in ("pq", "csv", "json")
     )

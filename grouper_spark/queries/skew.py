@@ -109,7 +109,7 @@ def skewed_docs(spark, sf_dir):
     keyed by the documents fixture's fingerprint (stale-copy-proof),
     read back for every capped query."""
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    path = staged_path(wh, "skew_docs", sf_dir, "documents")
+    path = staged_path(wh, "skew_docs", sf_dir, "documents", version=1)
     _derived_corpus(spark, sf_dir).coalesce(1).write.mode("ignore").parquet(
         path
     )

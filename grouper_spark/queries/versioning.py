@@ -419,7 +419,7 @@ def _partitioned_events_path(spark, sf_dir):
     directory structure. The source fingerprint in the path invalidates
     the layout whenever the fixture regenerates."""
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    path = staged_path(wh, "events_part", sf_dir, "events")
+    path = staged_path(wh, "events_part", sf_dir, "events", version=1)
     (
         table(spark, sf_dir, "events")
         .withColumn("event_date", F.to_date("ts"))
@@ -914,7 +914,7 @@ def q261_partition_evolution(spark, sf_dir):
     # the source fingerprint in the path invalidates the staged layout
     # whenever the fixture regenerates between rounds (q189/q190 pattern)
     base = staged_path(
-        tempfile.gettempdir(), "grouper_hybrid", sf_dir, "orders"
+        tempfile.gettempdir(), "grouper_hybrid", sf_dir, "orders", version=1
     )
     done = os.path.join(base, "_DONE")
     cutover = "1998-01-01"
@@ -1288,7 +1288,7 @@ def a400_format_footprint_advisor(spark, sf_dir):
         "o_orderpriority",
     )
     base = staged_path(
-        tempfile.gettempdir(), "grouper_fmtadv", sf_dir, "orders"
+        tempfile.gettempdir(), "grouper_fmtadv", sf_dir, "orders", version=1
     )
     n_rows = d.count()
 

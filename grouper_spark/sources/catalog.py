@@ -61,11 +61,17 @@ def sf_tag(sf_dir: str) -> str:
     return sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
 
 
-def staged_path(root: str, prefix: str, sf_dir: str, source: str) -> str:
+def staged_path(
+    root: str, prefix: str, sf_dir: str, source: str, *, version: int
+) -> str:
     """Where a layout derived from fixture table ``source`` is staged:
-    ``<root>/<prefix>_<sf tag>_<mtime>_<size>``. The source file's mtime
-    and size are in the path, so a regenerated fixture is never served
-    from a stale staged copy."""
+    ``<root>/<prefix>_v<version>_<sf tag>_<mtime>_<size>``. The source
+    file's mtime and size are in the path, so a regenerated fixture is
+    never served from a stale staged copy; ``version`` is the stager's
+    own, bumped whenever what it writes changes, so a layout staged by
+    older code is never served to newer code."""
     st = os.stat(f"{sf_dir.rstrip('/')}/{source}.parquet")
     fingerprint = f"{int(st.st_mtime)}_{st.st_size}"
-    return os.path.join(root, f"{prefix}_{sf_tag(sf_dir)}_{fingerprint}")
+    return os.path.join(
+        root, f"{prefix}_v{version}_{sf_tag(sf_dir)}_{fingerprint}"
+    )

@@ -24,7 +24,7 @@ Spark world. Preserved invariants (SURVEY.md §2.B):
     would leave their promises undelivered forever.)
 7.  Two flush triggers: interval timer OR queue-full.
 8.  Producer backpressure: submit blocks while the queue is full. A
-    blocked submit wakes the dispatcher first, and the drain takes the
+    blocked submit wakes a runner first, and the drain takes the
     queue atomically, so the blocked item lands at the head of the
     NEXT batch — as with the reference's atomic
     ``ArrayBlockingQueue.drainTo``. Under size-only flushing
@@ -35,19 +35,23 @@ Spark world. Preserved invariants (SURVEY.md §2.B):
 9.  Closed-state rejection: submit after close raises
     RuntimeError("Grouper is closed").
 10. Drain-on-shutdown: close() flushes everything already queued.
-11. No pool → batches process on the single dispatcher thread; pool=N →
-    at most N batches in the pool; when all N workers are busy the
-    *dispatcher runs the batch itself* (reference create-thread-pool's
-    SynchronousQueue + CallerRunsPolicy, core.clj:85-97), stalling the
-    drain loop so in-flight batches are bounded at N+1 and overload
-    backpressure propagates to producers. ``pool`` may also be an
-    existing executor instance (reference start! accepts an
-    ExecutorService, core.clj:108-122) — then submission is whatever
-    that executor does, and shutdown() still shuts it down
+11. Bounded in-flight batches. No pool → batches process on the single
+    dispatcher thread. pool=N → N + 1 runners (the dispatcher and N
+    workers) each loop wait → drain → process, so a runner that
+    finishes a batch takes the next one itself, at most N + 1 batches
+    are in flight, and when every runner is busy the queue fills and
+    backpressure reaches producers — the bound of the reference's
+    SynchronousQueue + CallerRunsPolicy pool (core.clj:85-97), where
+    the dispatcher runs a batch itself when every worker is busy. The
+    runners share one interval deadline, reset at each drain, so the
+    flush rate does not grow with N. ``pool`` may also be an existing
+    executor instance (reference start! accepts an ExecutorService,
+    core.clj:108-122) — then the dispatcher alone drains and submission
+    is whatever that executor does, and shutdown() still shuts it down
     (core.clj:64-66 shuts the pool down unconditionally).
 
 Spark integration: ``proc_fn`` is a plain ``seq -> seq`` function
-(reference-style, runs on the dispatcher/pool thread). A
+(reference-style, runs on a runner or executor thread). A
 ``DataFrame -> DataFrame`` batch function goes in through
 ``grouper_spark.streaming.dataframe_proc_fn(spark, fn)``, which hands
 the batch over as ``(idx: long, value)`` rows and maps the returned
@@ -65,7 +69,8 @@ from __future__ import annotations
 
 import queue as _queue
 import threading
-from concurrent.futures import Future, ThreadPoolExecutor
+import time
+from concurrent.futures import Future
 from typing import Any, Callable
 
 __all__ = ["Grouper", "Request", "start", "submit", "shutdown"]
@@ -92,14 +97,14 @@ class Request:
 
 
 class _BoundedFifo:
-    """Minimal bounded FIFO for the submit→dispatch handoff.
+    """Minimal bounded FIFO for the submit→runner handoff.
 
     ``queue.Queue`` pays a ``not_empty.notify()`` inside EVERY put —
-    but this engine's dispatcher never waits on not_empty (it has its
+    but this engine's runners never wait on not_empty (they have their
     own wake condition, woken on queue-full or flush), so that notify
-    was pure per-item overhead on the producer's hot path, and the
-    dispatcher's per-item ``get_nowait`` re-acquired the same mutex N
-    times per drain. This keeps exactly the two operations the engine
+    was pure per-item overhead on the producer's hot path, and a
+    per-item ``get_nowait`` re-acquired the same mutex N times per
+    drain. This keeps exactly the two operations the engine
     needs — put with capacity backpressure, bulk drain under one lock
     acquisition — with identical FIFO order and blocking semantics."""
 
@@ -133,9 +138,6 @@ class _BoundedFifo:
                 self._not_full.notify_all()
         return items
 
-    def empty(self) -> bool:
-        return not self._dq
-
 
 class Grouper:
     """Asynchronous micro-batching engine.
@@ -144,7 +146,7 @@ class Grouper:
     (core.clj:99-136): ``capacity`` (required, bounded queue size),
     ``interval`` (flush period in **milliseconds**, or None for
     size-only flushing), ``pool`` (worker thread count; None processes
-    batches on the dispatcher thread).
+    batches on the dispatcher thread alone).
     """
 
     def __init__(
@@ -176,28 +178,22 @@ class Grouper:
         self._proc_fn = proc_fn
         self._interval_s = None if interval is None else interval / 1000.0
         self._queue = _BoundedFifo(capacity)
-        # pool=N → own a fixed pool with bounded submission: a semaphore
-        # sized to the pool emulates the reference's SynchronousQueue +
-        # CallerRunsPolicy (core.clj:85-97) — no idle worker means the
-        # dispatcher runs the batch itself instead of queueing it, so
-        # in-flight batches (and their buffers) never grow unboundedly.
-        # pool=<executor> → use it as-is (reference ExecutorService path).
-        if is_executor:
-            self._executor = pool
-            self._slots = None
-        elif pool:
-            self._executor = ThreadPoolExecutor(max_workers=pool)
-            self._slots = threading.Semaphore(pool)
-        else:
-            self._executor = None
-            self._slots = None
+        # pool=N → N workers drain alongside the dispatcher (invariant
+        # 11); pool=<executor> → the dispatcher drains and submits to it
+        # (reference ExecutorService path).
+        self._executor = pool if is_executor else None
+        workers = 0 if is_executor or pool is None else pool
         self._running = True
         self._wake = threading.Condition()
         self._notified = False
-        self._dispatcher = threading.Thread(
-            target=self._loop, name="grouper-dispatcher", daemon=True
-        )
-        self._dispatcher.start()
+        self._deadline = time.monotonic() + (self._interval_s or 0.0)
+        self._runners = [
+            threading.Thread(target=self._run, name=name, daemon=True)
+            for name in ["grouper-dispatcher"]
+            + [f"grouper-worker-{i}" for i in range(workers)]
+        ]
+        for t in self._runners:
+            t.start()
 
     # -- public API (submit! / shutdown!, core.clj:138-155) ---------------
 
@@ -211,7 +207,7 @@ class Grouper:
         """Enqueue one item; returns a Future for its result.
 
         Blocks when the queue is full (producer backpressure) after
-        waking the dispatcher for an early size-triggered flush
+        waking a runner for an early size-triggered flush
         (reference: core.clj:39-45).
         """
         if not self._running:
@@ -225,18 +221,19 @@ class Grouper:
         return req.future
 
     def flush(self) -> None:
-        """Wake the dispatcher for an immediate drain (test/ops helper)."""
+        """Wake a runner for an immediate drain (test/ops helper)."""
         self._wake_up()
 
     def shutdown(self) -> None:
         """Graceful drain-then-stop (reference: core.clj:58-66,152-155):
         already-queued items are processed before termination."""
-        if not self._running:
-            return
-        self._running = False
-        while self._dispatcher.is_alive():
-            self._wake_up()
-            self._dispatcher.join(timeout=0.01)
+        with self._wake:
+            if not self._running:
+                return
+            self._running = False
+            self._wake.notify_all()
+        for t in self._runners:
+            t.join()
         if self._executor is not None and hasattr(self._executor, "shutdown"):
             # Unconditional, even for a caller-supplied executor — the
             # reference shuts the pool down either way (core.clj:64-66).
@@ -255,44 +252,40 @@ class Grouper:
         (core.clj:19-24)."""
         return self._running
 
-    # -- dispatcher (core.clj:124-135) -------------------------------------
+    # -- runners (dispatcher loop, core.clj:124-135) ------------------------
 
     def _wake_up(self) -> None:
         with self._wake:
             self._notified = True
-            self._wake.notify_all()
+            self._wake.notify()
 
-    def _sleep(self) -> None:
-        """Wait for the interval, an explicit wake-up, or forever when
-        interval is None (size-only flushing, README.md:94-96)."""
+    def _next_batch(self) -> list[Request]:
+        """Wait for a wake, the shared interval deadline, or shutdown
+        (forever when interval is None: size-only flushing,
+        README.md:94-96), then drain the whole queue, FIFO, under one
+        mutex acquisition. The drain consumes the wake and resets the
+        deadline for every runner, so idle runners never flush on
+        timers of their own."""
         with self._wake:
-            if not self._notified:
-                self._wake.wait(timeout=self._interval_s)
+            while self._running and not self._notified:
+                if self._interval_s is None:
+                    self._wake.wait()
+                elif (left := self._deadline - time.monotonic()) > 0:
+                    self._wake.wait(left)
+                else:
+                    break
             self._notified = False
+            if self._interval_s is not None:
+                self._deadline = time.monotonic() + self._interval_s
+            return self._queue.drain()
 
-    # How long the dispatcher waits for a pool slot before falling back
-    # to running the batch itself. The reference's CallerRunsPolicy runs
-    # inline *immediately* (core.clj:85-97); a short bounded wait keeps
-    # the same invariants — in-flight ≤ pool+1, dispatcher stalls under
-    # overload, backpressure reaches submit() — but lets the pool stay
-    # saturated when batches finish quickly, instead of idling N workers
-    # for the duration of every inline run.
-    _SLOT_WAIT_S = 0.05
-
-    def _loop(self) -> None:
-        # "Should not terminate until queue is empty" (core.clj:124-126).
-        while self._running or not self._queue.empty():
-            self._sleep()
-            # Bulk drain under ONE mutex acquisition instead of one
-            # get_nowait (lock + notify) per item (§4: batch the
-            # boundary); FIFO order, the capacity bound and blocked-
-            # producer wakeups are unchanged.
-            batch = self._queue.drain()
-            if not batch:
-                continue
-            if self._executor is None:
+    def _run(self) -> None:
+        # "Should not terminate until queue is empty" (core.clj:124-126):
+        # after shutdown a runner only stops on an empty drain.
+        while (batch := self._next_batch()) or self._running:
+            if batch and self._executor is None:
                 self._process(batch)
-            elif self._slots is None:
+            elif batch:
                 # user-supplied executor: its own submission policy rules.
                 # It may also reject (e.g. its owner already shut it
                 # down) — deliver the rejection as a value instead of
@@ -302,25 +295,8 @@ class Grouper:
                     self._executor.submit(self._process, batch)
                 except Exception as exc:
                     self._deliver_error(batch, exc)
-            elif self._slots.acquire(timeout=self._SLOT_WAIT_S):
-                try:
-                    self._executor.submit(self._process_release, batch)
-                except Exception as exc:
-                    self._slots.release()
-                    self._deliver_error(batch, exc)
-            else:
-                # CallerRunsPolicy: all workers busy → the dispatcher runs
-                # the batch itself, stalling the drain loop (bounded
-                # in-flight; overload backpressure reaches submit()).
-                self._process(batch)
 
     # -- batch apply (body-fn, core.clj:68-83) ------------------------------
-
-    def _process_release(self, batch: list[Request]) -> None:
-        try:
-            self._process(batch)
-        finally:
-            self._slots.release()
 
     def _process(self, batch: list[Request]) -> None:
         objs = [r.obj for r in batch]

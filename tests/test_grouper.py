@@ -1,10 +1,11 @@
 """The reference's behavioral invariants (SURVEY.md §2.B, items 1-11)
 re-expressed against the Grouper engine's public API.
 
-All tests use interval=None (size-only flush) + explicit flush/shutdown
-so nothing depends on wall-clock timing — deliberately avoiding the
-reference's own FIXME-flagged timing-sensitive test
-(/root/reference/test/grouper/core_test.clj:42).
+All tests but the shared-timer one use interval=None (size-only flush)
++ explicit flush/shutdown so nothing depends on wall-clock timing —
+deliberately avoiding the reference's own FIXME-flagged timing-sensitive
+test (core_test.clj:42). The shared-timer test counts batches against
+the elapsed time, with a 2x margin.
 """
 
 from __future__ import annotations
@@ -417,6 +418,140 @@ def test_pool_saturation_runs_on_dispatcher_and_bounds_inflight():
     assert [f.result(10) for f in futs] == list(range(6))
     g.shutdown()
     assert high_water <= 3  # never more than pool + dispatcher
+
+
+def test_closed_loop_keeps_pool_plus_one_batches_in_flight():
+    """A producer that submits as fast as it can against a slow proc
+    keeps pool + 1 batches running at once, never more, and a worker
+    that finishes a batch drains the next one itself."""
+    pool = 2
+    lock = threading.Lock()
+    inflight = 0
+    high_water = 0
+    runners = []  # the thread that ran each batch, in start order
+    full = threading.Event()
+
+    def proc(xs):
+        nonlocal inflight, high_water
+        with lock:
+            inflight += 1
+            high_water = max(high_water, inflight)
+            runners.append(threading.current_thread().name)
+            if inflight == pool + 1:
+                full.set()
+        full.wait(5)  # the first batches hold until every runner is busy
+        time.sleep(0.02)
+        with lock:
+            inflight -= 1
+        return xs
+
+    with Grouper(proc, capacity=10, interval=None, pool=pool) as g:
+        futs = [g.submit(i) for i in range(200)]
+        g.flush()
+        assert [f.result(10) for f in futs] == list(range(200))
+    assert high_water == pool + 1
+    workers = [n for n in runners if n.startswith("grouper-worker-")]
+    assert max(workers.count(n) for n in set(workers)) >= 2, runners
+
+
+def test_runners_share_one_interval_deadline():
+    """Idle runners flush on one shared timer: a trickle of one item
+    every 5 ms into pool=4, interval=50 gives about one batch per 50 ms,
+    not one per runner per 50 ms (~4x as many once 5 ms batches have
+    put per-runner timers out of step)."""
+    sizes = []
+
+    def proc(xs):
+        sizes.append(len(xs))
+        time.sleep(0.005)
+        return xs
+
+    g = Grouper(proc, capacity=1000, interval=50, pool=4)
+    futs = []
+    t0 = time.monotonic()
+    while time.monotonic() - t0 < 1.0:
+        futs.append(g.submit(len(futs)))
+        time.sleep(0.005)
+    ticks = (time.monotonic() - t0) / 0.05
+    g.shutdown()
+    assert [f.result(5) for f in futs] == list(range(len(futs)))
+    assert sum(sizes) == len(futs)
+    assert ticks / 2 <= len(sizes) <= 1.5 * ticks + 2, (len(sizes), ticks)
+
+
+def test_runner_stress_processes_every_item_once():
+    """More runners than cores, four producers and a 1 µs switch
+    interval: every item is processed exactly once, each future gets its
+    own item's result, and in-flight batches stay within pool + 1."""
+    pool = 8
+    lock = threading.Lock()
+    seen = []
+    inflight = 0
+    high_water = 0
+
+    def proc(xs):
+        nonlocal inflight, high_water
+        with lock:
+            inflight += 1
+            high_water = max(high_water, inflight)
+            seen.extend(xs)
+        with lock:
+            inflight -= 1
+        return [x * 2 for x in xs]
+
+    futs = {}
+
+    def produce(g, k):
+        for i in range(k * 1000, (k + 1) * 1000):
+            futs[i] = g.submit(i)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with Grouper(proc, capacity=7, interval=1, pool=pool) as g:
+            producers = [
+                threading.Thread(target=produce, args=(g, k)) for k in range(4)
+            ]
+            for t in producers:
+                t.start()
+            for t in producers:
+                t.join(60)
+            assert not any(t.is_alive() for t in producers)
+            results = {i: f.result(30) for i, f in futs.items()}
+    finally:
+        sys.setswitchinterval(old)
+    assert results == {i: 2 * i for i in range(4000)}
+    assert sorted(seen) == list(range(4000))
+    assert high_water <= pool + 1
+
+
+@pytest.mark.parametrize("pool", [None, 4, "executor"])
+def test_shutdown_leaves_no_grouper_thread(pool):
+    """pool=N starts the dispatcher plus N workers (the dispatcher alone
+    for no pool or an executor), and shutdown() joins every one of them;
+    a caller's executor is shut down too (core.clj:64-66)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def grouper_threads():
+        return sorted(
+            t.name for t in set(threading.enumerate()) - before
+            if t.name.startswith("grouper-")
+        )
+
+    before = set(threading.enumerate())
+    ex = ThreadPoolExecutor(max_workers=2) if pool == "executor" else None
+    g = make(lambda xs: xs, pool=ex or pool)
+    workers = pool if isinstance(pool, int) else 0
+    assert grouper_threads() == sorted(
+        ["grouper-dispatcher"] + [f"grouper-worker-{i}" for i in range(workers)]
+    )
+    futs = [g.submit(i) for i in range(10)]
+    g.shutdown()
+    assert [f.result(5) for f in futs] == list(range(10))
+    assert grouper_threads() == []
+    if ex is not None:
+        with pytest.raises(RuntimeError):
+            ex.submit(lambda: None)
 
 
 def test_pool_accepts_executor_instance():

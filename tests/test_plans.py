@@ -617,10 +617,29 @@ def test_q254_cascade_single_scan(spark, sf_dir, registry):
     assert plan.count("HashAggregate") >= 5  # partial+final per level
 
 
-def test_q256_dimension_is_broadcast(spark, sf_dir, registry):
+def test_q256_join_needs_no_shuffle(spark, sf_dir, registry):
+    """q256 left-joins the generated calendar to the orders fact. A left
+    outer join can build only its right side, so the fact is broadcast
+    and the calendar streams: no hash or range exchange feeds the join
+    on either side."""
     df = registry["q256_date_dimension"].fn(spark, sf_dir)
-    plan = plan_of(df)
-    assert "BroadcastHashJoin" in plan
+    lines = plan_of(df).splitlines()
+    at = next(i for i, line in enumerate(lines) if "Join" in line)
+    join = lines[at]
+    assert "BroadcastHashJoin" in join and "LeftOuter, BuildRight" in join, join
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    below = []
+    for line in lines[at + 1:]:
+        if depth(line) <= depth(join):
+            break
+        below.append(line)
+    assert not [
+        line for line in below
+        if "Exchange hashpartitioning" in line or "Exchange rangepartitioning" in line
+    ], "\n".join(below)
 
 
 def test_q265_datasheet_single_corpus_scan(spark, sf_dir, registry):

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from grouper_spark.queries import load_all
-from grouper_spark.sources import read_any, write_partitioned
+from grouper_spark.sources import read_any, staged_path, write_partitioned
 from grouper_spark.streaming import shutdown, start, submit
 
 
@@ -360,3 +360,16 @@ def test_staged_files_land_in_the_temp_dir(spark, sf_dir, tmp_path, monkeypatch)
         assert registry[name].fn(spark, sf_dir).count() > 0, name
         staged = [p for p in os.listdir(tmp_path) if p.startswith(prefix)]
         assert staged, f"{name} staged nothing under the temp dir"
+
+
+def test_staged_path_keys_on_the_stager_version(sf_dir, tmp_path):
+    """A stager that bumps its version stages to a new path, so a layout
+    written by older code is never read back by newer code."""
+    root = str(tmp_path)
+    v1 = staged_path(root, "grouper_orc", sf_dir, "orders", version=1)
+    assert v1 == staged_path(root, "grouper_orc", sf_dir, "orders", version=1)
+    assert v1 != staged_path(root, "grouper_orc", sf_dir, "orders", version=2)
+    assert os.path.dirname(v1) == root
+    assert os.path.basename(v1).startswith("grouper_orc_v1_")
+    with pytest.raises(TypeError):
+        staged_path(root, "grouper_orc", sf_dir, "orders")
