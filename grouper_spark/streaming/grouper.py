@@ -63,6 +63,17 @@ This module needs only the standard library: importing it, or the
 ``grouper_spark.streaming`` package, does not import pyspark. Spark is
 imported only when a stream helper, such as ``dataframe_proc_fn``, is
 first accessed.
+
+Each submitted item gets one ``_Future``: a ``concurrent.futures.Future``
+that is its own condition. The stdlib ``Future.__init__`` builds a
+``threading.Condition`` (an RLock, a deque and five bound methods), so a
+submit made 12 GC-tracked objects and a 10,000-item block set off ~160
+collections, one a full one, that stopped every thread for ~50 ms. The
+engine future holds one plain lock and makes a lock for a waiting thread
+only while it waits, so a submit makes 5 and each waiter still wakes on
+its own future alone. ``Request``'s default future is the same type.
+As in the stdlib executors, a drain marks each future running and drops
+the ones already cancelled, so ``proc_fn`` never sees them.
 """
 
 from __future__ import annotations
@@ -70,16 +81,76 @@ from __future__ import annotations
 import queue as _queue
 import threading
 import time
-from concurrent.futures import Future
+from concurrent.futures import Future, _base
 from typing import Any, Callable
 
 __all__ = ["Grouper", "Request", "start", "submit", "shutdown"]
 
 
+class _Future(Future):
+    """A ``Future`` that serves as its own condition (module docstring).
+
+    It sets the state fields ``Future.__init__`` would, without the
+    ``threading.Condition``, and implements the part of the Condition
+    protocol that ``Future`` and ``concurrent.futures.wait`` /
+    ``as_completed`` use: ``with``, ``acquire``, ``release``,
+    ``wait(timeout)`` and ``notify_all``."""
+
+    def __init__(self) -> None:
+        self._condition = self
+        self._lock = threading.Lock()
+        self._sleepers: list | None = None  # one lock per waiting thread
+        self._state = _base.PENDING
+        self._result = None
+        self._exception = None
+        self._waiters: list = []
+        self._done_callbacks: list = []
+
+    def acquire(self, blocking: bool = True, timeout: float = -1) -> bool:
+        return self._lock.acquire(blocking, timeout)
+
+    __enter__ = acquire
+
+    def release(self) -> None:
+        self._lock.release()
+
+    def __exit__(self, *exc) -> None:
+        self._lock.release()
+
+    def wait(self, timeout: float | None = None) -> bool:
+        """``Condition.wait``: called with the lock held; parks on a
+        fresh lock until ``notify_all`` releases it or the timeout
+        passes. True when notified."""
+        sleeper = threading.Lock()
+        sleeper.acquire()
+        if self._sleepers is None:
+            self._sleepers = []
+        self._sleepers.append(sleeper)
+        self._lock.release()
+        try:
+            if timeout is None:
+                woken = sleeper.acquire()
+            elif timeout > 0:
+                woken = sleeper.acquire(True, timeout)
+            else:
+                woken = sleeper.acquire(False)
+        finally:
+            self._lock.acquire()
+        if not woken and sleeper in (self._sleepers or ()):
+            self._sleepers.remove(sleeper)
+        return woken
+
+    def notify_all(self) -> None:
+        sleepers, self._sleepers = self._sleepers, None
+        for sleeper in sleepers or ():
+            sleeper.release()
+
+
 class Request:
     """One submitted item (reference: deftype Request, core.clj:13-17).
 
-    ``future=None`` gives the request a fresh ``Future`` of its own."""
+    ``future=None`` gives the request a fresh engine ``Future`` of its
+    own."""
 
     __slots__ = ("obj", "future", "callback", "errback")
 
@@ -91,7 +162,7 @@ class Request:
         errback: Callable[[BaseException], Any] | None = None,
     ) -> None:
         self.obj = obj
-        self.future = Future() if future is None else future
+        self.future = _Future() if future is None else future
         self.callback = callback
         self.errback = errback
 
@@ -212,7 +283,7 @@ class Grouper:
         """
         if not self._running:
             raise RuntimeError("Grouper is closed")
-        req = Request(obj, Future(), callback, errback)
+        req = Request(obj, _Future(), callback, errback)
         try:
             self._queue.put_nowait(req)
         except _queue.Full:
@@ -283,6 +354,11 @@ class Grouper:
         # "Should not terminate until queue is empty" (core.clj:124-126):
         # after shutdown a runner only stops on an empty drain.
         while (batch := self._next_batch()) or self._running:
+            # Like the stdlib executors: mark each future running, and
+            # drop the cancelled ones before proc_fn sees the batch.
+            batch = [
+                r for r in batch if r.future.set_running_or_notify_cancel()
+            ]
             if batch and self._executor is None:
                 self._process(batch)
             elif batch:

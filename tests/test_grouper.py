@@ -10,11 +10,19 @@ the elapsed time, with a 2x margin.
 
 from __future__ import annotations
 
+import gc
 import os
 import subprocess
 import sys
 import threading
 import time
+from concurrent.futures import (
+    FIRST_COMPLETED,
+    CancelledError,
+    Future,
+    as_completed,
+    wait,
+)
 
 import pytest
 
@@ -640,6 +648,150 @@ def test_request_construction_compat():
         assert (r.obj, r.future, r.callback, r.errback) == ("x", fut, cb, eb)
     assert (Request(0).callback, Request(0).errback) == (None, None)
     assert not hasattr(a, "__dict__")
+
+
+# -- engine futures: stdlib-compatible, one lock each ----------------------
+
+
+def test_cancelled_future_is_dropped_from_its_batch():
+    """Like the stdlib executors: a future cancelled before the drain is
+    dropped, so proc_fn, callbacks and errbacks never see it and the
+    rest of its batch is delivered normally."""
+    seen, cbs, errs = [], [], []
+    with make(lambda xs: seen.append(list(xs)) or [x * 10 for x in xs]) as g:
+        fs = [g.submit(i, callback=cbs.append, errback=errs.append)
+              for i in range(5)]
+        assert fs[1].cancel()
+        g.flush()
+        assert [fs[i].result(5) for i in (0, 2, 3, 4)] == [0, 20, 30, 40]
+    assert fs[1].cancelled()
+    with pytest.raises(CancelledError):
+        fs[1].result(0)
+    assert seen == [[0, 2, 3, 4]]
+    assert cbs == [0, 20, 30, 40] and errs == []
+
+
+def test_engine_future_is_a_stdlib_future():
+    called = []
+    callback_ran = threading.Event()
+
+    def on_done(fut):
+        called.append(fut)
+        callback_ran.set()
+
+    with make(lambda xs: [x + 1 for x in xs]) as g:
+        f = g.submit(1)
+        assert isinstance(f, Future)
+        assert not f.done() and "state=pending" in repr(f)
+        with pytest.raises(TimeoutError):
+            f.result(0.01)
+        with pytest.raises(TimeoutError):
+            f.exception(0)
+        f.add_done_callback(on_done)  # before resolution: runs on delivery
+        g.flush()
+        assert f.result(5) == 2 and f.exception(0) is None and f.done()
+        assert callback_ran.wait(5) and called == [f]
+        f.add_done_callback(called.append)  # after resolution: runs at once
+        assert called == [f, f]
+        assert "state=finished returned int" in repr(f)
+
+
+def test_engine_futures_work_with_wait_and_as_completed():
+    """Three batches of three (capacity 3, one runner per batch), each
+    held at a gate: ``wait`` and ``as_completed`` see them resolve
+    batch by batch."""
+    gates = [threading.Event() for _ in range(3)]
+    batches = []
+
+    def proc(xs):
+        batches.append(list(xs))
+        gates[xs[0] // 3].wait(10)
+        return [x * 2 for x in xs]
+
+    with Grouper(proc, capacity=3, interval=None, pool=2) as g:
+        futs = [g.submit(i) for i in range(9)]
+        g.flush()
+        done, pending = wait(futs, timeout=0.05)
+        assert not done and len(pending) == 9
+        gates[0].set()
+        done, _ = wait(futs, timeout=5, return_when=FIRST_COMPLETED)
+        assert done and done <= set(futs[:3])
+        it = as_completed(futs, timeout=10)
+        for k in range(3):
+            assert {next(it) for _ in range(3)} == set(futs[3 * k:3 * k + 3])
+            if k < 2:
+                gates[k + 1].set()
+        done, pending = wait(futs, timeout=5)
+        assert done == set(futs) and not pending
+        assert [f.result(0) for f in futs] == [2 * i for i in range(9)]
+    assert sorted(batches) == [[0, 1, 2], [3, 4, 5], [6, 7, 8]]
+
+
+def test_submit_allocates_at_most_five_gc_objects():
+    """A submit makes a Request, its future, the future's two lists and
+    one lock; no threading.Condition (12 objects per submit with the
+    stdlib Future, whose churn set off a full collection per block)."""
+    n = 1000
+    futs = [None] * n
+    g = make(lambda xs: xs, capacity=n)
+    try:
+        gc.collect()
+        gc.disable()
+        try:
+            before = len(gc.get_objects())
+            for i in range(n):
+                futs[i] = g.submit(i)
+            after = len(gc.get_objects())
+        finally:
+            gc.enable()
+        g.flush()
+        assert [f.result(5) for f in futs] == list(range(n))
+    finally:
+        g.shutdown()
+    assert (after - before) / n <= 5
+
+
+def test_many_waiters_each_get_their_own_result():
+    """64 threads each loop submit(x).result(5) for about a second with
+    pool 4 and a 1 µs switch interval: every value is its own item's,
+    and no wake is lost. A lost wake leaves its waiter asleep until the
+    timeout, after which result() reads the state and returns the value,
+    so the test times each call."""
+    errors = []
+    counts = [0] * 64
+    stop = time.monotonic() + 1.0
+
+    def client(k):
+        i = 0
+        while time.monotonic() < stop:
+            x = k * 1_000_000 + i
+            t0 = time.monotonic()
+            try:
+                v = g.submit(x).result(5)
+            except Exception as exc:
+                v = exc
+            if v != x + 1 or time.monotonic() - t0 > 4:
+                errors.append((x, v, time.monotonic() - t0))
+                return
+            i += 1
+        counts[k] = i
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with Grouper(lambda xs: [x + 1 for x in xs], capacity=16,
+                     interval=1, pool=4) as g:
+            clients = [threading.Thread(target=client, args=(k,))
+                       for k in range(64)]
+            for t in clients:
+                t.start()
+            for t in clients:
+                t.join(30)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in clients)
+    assert errors == []
+    assert all(c > 0 for c in counts)
 
 
 # -- package surface: the in-process engine never imports pyspark ----------
