@@ -2,6 +2,7 @@ from .vector import cosine_similarity, dot, l2_norm, l2_normalize, unit_fixed
 from .text import (
     md5_bits,
     money,
+    money_units,
     tokens,
     token_count,
     word_ngrams,
@@ -16,6 +17,7 @@ __all__ = [
     "l2_normalize",
     "md5_bits",
     "money",
+    "money_units",
     "tokens",
     "token_count",
     "unit_fixed",

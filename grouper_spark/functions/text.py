@@ -33,6 +33,19 @@ def money_sum(col: Column | str, alias: str, scale: int = 2) -> Column:
     return (F.sum(money(col, scale)) / float(10**scale)).alias(alias)
 
 
+def money_units(col: str, div: int, scale: int = 2) -> Column:
+    """Whole-unit SUM: the exact ``money(col, scale)`` sum, integer-divided
+    once by ``div`` (cents to dollars at 100, to hundreds at 10000).
+    Sub-unit parts of different rows add up before the division, so
+    0.60 + 0.45 gives 1 where truncating each row would give 0. ``col``
+    is SQL text; the DuckDB oracles spell the same sum with ``//``.
+    """
+    s = 10**scale
+    return F.expr(
+        f"CAST(SUM(CAST(ROUND({col} * {s}.0, 0) AS BIGINT)) div {div} AS BIGINT)"
+    )
+
+
 def money_avg(col: Column | str, alias: str, scale: int = 4) -> Column:
     """Order-independent AVG derived from the integer-unit sum."""
     c = money(col, scale)

@@ -6,6 +6,10 @@ integer fixed-point units (order-independent, exact) and divide once at
 the end. ``grouper_spark.functions.text.money(x, k)`` is the Spark half,
 ``round(x * 10^k)`` as BIGINT at any power of ten; these helpers emit
 the SQL half of that contract, ``CAST(ROUND(x * 10^k.0, 0) AS BIGINT)``.
+The whole-unit sum ``functions.text.money_units(x, N)`` (the exact cent
+sum, integer-divided once by N) is the Spark half of the oracles'
+``CAST(SUM(CAST(ROUND(x * 100.0, 0) AS BIGINT)) // N AS BIGINT)``; the
+daily series built on it live in ``queries._series``.
 """
 
 from __future__ import annotations

@@ -33,8 +33,9 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from ..functions.text import md5_bits, money
+from ..functions.text import md5_bits, money, money_units
 from ..sources import table
+from ._series import daily_orders, trend_fit, unit_scaled
 from . import query
 from ..operators.core import collect_bounded, literal_frame
 
@@ -965,27 +966,6 @@ def a478_g_test(spark, sf_dir):
     )
 
 
-def _unit_scaled(daily, *extra):
-    """Adaptive-unit rescale of a (d, y) daily-dollar summary: y //=
-    max(1, mean(y)/3000), so downstream squared/cross moment BIGINT
-    sums keep the same overflow budget at EVERY corpus scale (the
-    full-registry 10x sweep caught a038/a039/a040/a041/a042/a048
-    overflowing on 10x daily magnitudes). The consumers are
-    scale-invariant statistics (t-ratios, F, LM, KS, U1/U2), so the
-    unit cancels; both engines truncate the integer division
-    identically (verified)."""
-    unit = daily.agg(
-        F.expr(
-            "GREATEST(CAST(1 AS BIGINT),"
-            " CAST((CAST(SUM(y) AS BIGINT) div COUNT(*)) div 3000"
-            " AS BIGINT))"
-        ).alias("u")
-    )
-    return daily.crossJoin(F.broadcast(unit)).select(
-        "d", F.expr("CAST(y div u AS BIGINT)").alias("y"), *extra
-    )
-
-
 _DAILY_OLS_SQL = """
 daily0 AS (
   SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
@@ -1052,39 +1032,13 @@ def a479_durbin_watson(spark, sf_dir):
     summary (~2400 rows), never the corpus — at 100 TB only the daily
     aggregate sees data."""
     o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.date_trunc("day", "o_orderdate").cast("date").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("y")
-    )
-    daily = _unit_scaled(daily)
+    daily = daily_orders(o, money_units("o_totalprice", 100).alias("y"))
+    daily = unit_scaled(daily, "y", 3000)
     ts = daily.select(
         "y",
         F.row_number().over(Window.orderBy("d")).cast("bigint").alias("t"),
     )
-    sums = ts.agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("t").cast("bigint").alias("st"),
-        F.sum(F.col("t") * F.col("t")).cast("bigint").alias("st2"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("t") * F.col("y")).cast("bigint").alias("sty"),
-    )
-    b = (
-        F.col("n").cast("double") * F.col("sty")
-        - F.col("st").cast("double") * F.col("sy")
-    ) / (
-        F.col("n").cast("double") * F.col("st2")
-        - F.col("st").cast("double") * F.col("st")
-    )
-    fit = sums.select(
-        b.alias("b"),
-        ((F.col("sy").cast("double") - b * F.col("st")) / F.col("n")).alias(
-            "a"
-        ),
-    )
+    fit = trend_fit(ts)
     resid = ts.crossJoin(F.broadcast(fit)).select(
         "t",
         F.round(
@@ -1149,39 +1103,13 @@ def a480_breusch_pagan(spark, sf_dir):
     from six exact integers. Corpus touched once by the daily
     aggregate; the auxiliary regression runs on the calendar summary."""
     o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.date_trunc("day", "o_orderdate").cast("date").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("y")
-    )
-    daily = _unit_scaled(daily)
+    daily = daily_orders(o, money_units("o_totalprice", 100).alias("y"))
+    daily = unit_scaled(daily, "y", 3000)
     ts = daily.select(
         "y",
         F.row_number().over(Window.orderBy("d")).cast("bigint").alias("t"),
     )
-    sums = ts.agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("t").cast("bigint").alias("st"),
-        F.sum(F.col("t") * F.col("t")).cast("bigint").alias("st2"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("t") * F.col("y")).cast("bigint").alias("sty"),
-    )
-    b = (
-        F.col("n").cast("double") * F.col("sty")
-        - F.col("st").cast("double") * F.col("sy")
-    ) / (
-        F.col("n").cast("double") * F.col("st2")
-        - F.col("st").cast("double") * F.col("st")
-    )
-    fit = sums.select(
-        b.alias("b"),
-        ((F.col("sy").cast("double") - b * F.col("st")) / F.col("n")).alias(
-            "a"
-        ),
-    )
+    fit = trend_fit(ts)
     aux = (
         ts.crossJoin(F.broadcast(fit))
         .select(
@@ -1297,15 +1225,8 @@ def a481_chow_test(spark, sf_dir):
     SSE values and the final ratio. One corpus aggregate to the daily
     summary; segment sums are one more pass over ~2400 rows."""
     o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.date_trunc("day", "o_orderdate").cast("date").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("y")
-    )
-    daily = _unit_scaled(daily)
+    daily = daily_orders(o, money_units("o_totalprice", 100).alias("y"))
+    daily = unit_scaled(daily, "y", 3000)
     ts = daily.select(
         "y",
         F.row_number().over(Window.orderBy("d")).cast("bigint").alias("t"),
@@ -1593,14 +1514,7 @@ def a483_pacf(spark, sf_dir):
     giving bit-identical doubles. At 100 TB only the daily groupBy
     sees data; everything after is a 1-row plan."""
     o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.date_trunc("day", "o_orderdate").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("y")
-    )
+    daily = daily_orders(o, money_units("o_totalprice", 100).alias("y"))
     ts = daily.select(
         "y", F.row_number().over(Window.orderBy("d")).alias("t")
     )
@@ -1736,14 +1650,7 @@ def a484_goertzel_periodogram(spark, sf_dir):
     the daily groupBy; the basis join is a broadcast against a ~2400
     row summary."""
     o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.date_trunc("day", "o_orderdate").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("y")
-    )
+    daily = daily_orders(o, money_units("o_totalprice", 100).alias("y"))
     ts = daily.select(
         "y", F.row_number().over(Window.orderBy("d")).alias("t")
     )
@@ -1831,9 +1738,7 @@ def a485_permutation_entropy(spark, sf_dir):
     At 100 TB the corpus is touched once by the daily count; the
     window pass runs on the ~2400-row summary."""
     o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.date_trunc("day", "o_orderdate").alias("d")
-    ).agg(F.count("*").cast("bigint").alias("y"))
+    daily = daily_orders(o, F.count("*").cast("bigint").alias("y"))
     ts = daily.select(
         "y", F.row_number().over(Window.orderBy("d")).alias("t")
     )
@@ -2556,10 +2461,7 @@ def a490_hodges_lehmann(spark, sf_dir):
         )
         .agg(
             F.least(
-                F.expr(
-                    "CAST(SUM(CAST(ROUND(value * 100.0, 0) AS BIGINT))"
-                    " div 1000 AS BIGINT)"
-                ),
+                money_units("value", 1000),
                 F.lit(5000).cast("bigint"),
             ).alias("v")
         )
@@ -2899,10 +2801,7 @@ def a492_davies_bouldin_ch(spark, sf_dir):
         cent.select(F.posexplode("cv").alias("pos", "x"))
         .groupBy("pos")
         .agg(
-            F.expr(
-                "CAST(SUM(CAST(ROUND(x * 1000000000.0, 0) AS BIGINT))"
-                " AS BIGINT) div 8"
-            ).alias("cb")
+            money_units("x", 8, scale=9).alias("cb")
         )
         .agg(
             F.transform(
@@ -4446,14 +4345,7 @@ def a504_cox_stuart(spark, sf_dir):
     float summation order exists. One corpus touch (daily groupBy);
     the tail unroll is ≤ N/2 ≈ 600 rows off a 1-row bound."""
     o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.date_trunc("day", "o_orderdate").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("y")
-    )
+    daily = daily_orders(o, money_units("o_totalprice", 100).alias("y"))
     ts = daily.select(
         "y", F.row_number().over(Window.orderBy("d")).alias("t")
     )
@@ -4579,14 +4471,7 @@ def a505_kpss(spark, sf_dir):
     The 0.463 flag is the 5% asymptotic critical value. One corpus
     touch; all windows run on the ~2400-row daily summary."""
     o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.date_trunc("day", "o_orderdate").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 10000 AS BIGINT)"
-        ).alias("y")
-    )
+    daily = daily_orders(o, money_units("o_totalprice", 10000).alias("y"))
     ts = daily.select(
         "y", F.row_number().over(Window.orderBy("d")).alias("t")
     )
@@ -4702,15 +4587,8 @@ def a506_adf(spark, sf_dir):
     engines; −2.86 is the 5% Dickey–Fuller critical value (τ_μ). One
     corpus touch; ~2400-row summary windows."""
     o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.date_trunc("day", "o_orderdate").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("y")
-    )
-    daily = _unit_scaled(daily)
+    daily = daily_orders(o, money_units("o_totalprice", 100).alias("y"))
+    daily = unit_scaled(daily, "y", 3000)
     ts = daily.select(
         "y", F.row_number().over(Window.orderBy("d")).alias("t")
     )
@@ -4841,16 +4719,12 @@ def a507_granger_causality(spark, sf_dir):
     At 100 TB: one groupBy touch, ~2400-row lag window, 1-row
     algebra."""
     o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.date_trunc("day", "o_orderdate").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("y"),
+    daily = daily_orders(
+        o,
+        money_units("o_totalprice", 100).alias("y"),
         F.count("*").cast("bigint").alias("x"),
     )
-    daily = _unit_scaled(daily, "x")
+    daily = unit_scaled(daily, "y", 3000)
     ts = daily.select(
         "y", "x", F.row_number().over(Window.orderBy("d")).alias("t")
     )
@@ -4979,38 +4853,12 @@ def a508_breusch_godfrey(spark, sf_dir):
     moments, and LM = n·R² is one readout. One corpus touch;
     summary-sized windows."""
     o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.date_trunc("day", "o_orderdate").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("y")
-    )
-    daily = _unit_scaled(daily)
+    daily = daily_orders(o, money_units("o_totalprice", 100).alias("y"))
+    daily = unit_scaled(daily, "y", 3000)
     ts = daily.select(
         "y", F.row_number().over(Window.orderBy("d")).alias("t")
     )
-    sums = ts.agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("t").cast("bigint").alias("st"),
-        F.sum(F.col("t") * F.col("t")).cast("bigint").alias("st2"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("t") * F.col("y")).cast("bigint").alias("sty"),
-    )
-    b = (
-        F.col("n").cast("double") * F.col("sty")
-        - F.col("st").cast("double") * F.col("sy")
-    ) / (
-        F.col("n").cast("double") * F.col("st2")
-        - F.col("st").cast("double") * F.col("st")
-    )
-    fit = sums.select(
-        b.alias("b"),
-        ((F.col("sy").cast("double") - b * F.col("st")) / F.col("n")).alias(
-            "a"
-        ),
-    )
+    fit = trend_fit(ts)
     resid = ts.crossJoin(F.broadcast(fit)).select(
         "t",
         F.round(F.col("y") - F.col("a") - F.col("b") * F.col("t"), 0)
@@ -5096,38 +4944,12 @@ def a509_white_test(spark, sf_dir):
     bit-identically in both engines. One corpus touch; 1-row
     algebra."""
     o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.date_trunc("day", "o_orderdate").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("y")
-    )
-    daily = _unit_scaled(daily)
+    daily = daily_orders(o, money_units("o_totalprice", 100).alias("y"))
+    daily = unit_scaled(daily, "y", 3000)
     ts = daily.select(
         "y", F.row_number().over(Window.orderBy("d")).alias("t")
     )
-    sums = ts.agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("t").cast("bigint").alias("st"),
-        F.sum(F.col("t") * F.col("t")).cast("bigint").alias("st2"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("t") * F.col("y")).cast("bigint").alias("sty"),
-    )
-    b = (
-        F.col("n").cast("double") * F.col("sty")
-        - F.col("st").cast("double") * F.col("sy")
-    ) / (
-        F.col("n").cast("double") * F.col("st2")
-        - F.col("st").cast("double") * F.col("st")
-    )
-    fit = sums.select(
-        b.alias("b"),
-        ((F.col("sy").cast("double") - b * F.col("st")) / F.col("n")).alias(
-            "a"
-        ),
-    )
+    fit = trend_fit(ts)
     resid = ts.crossJoin(F.broadcast(fit)).select(
         "t",
         F.round(F.col("y") - F.col("a") - F.col("b") * F.col("t"), 0)
@@ -5255,15 +5077,8 @@ def a510_lilliefors(spark, sf_dir):
     (integer max, no float aggregation), and μ̂/σ̂ come from exact
     BIGINT moments. One corpus touch; summary-sized windows."""
     o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.date_trunc("day", "o_orderdate").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("y")
-    )
-    daily = _unit_scaled(daily)
+    daily = daily_orders(o, money_units("o_totalprice", 100).alias("y"))
+    daily = unit_scaled(daily, "y", 3000)
     m = daily.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("y").cast("bigint").alias("sy"),
@@ -6173,15 +5988,8 @@ def a516_theil_u2(spark, sf_dir):
     standard alignment); the two square roots and the ratio run once.
     One corpus touch; ~2400-row summary window."""
     o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.date_trunc("day", "o_orderdate").alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("y")
-    )
-    daily = _unit_scaled(daily)
+    daily = daily_orders(o, money_units("o_totalprice", 100).alias("y"))
+    daily = unit_scaled(daily, "y", 3000)
     ts = daily.select(
         "y", F.row_number().over(Window.orderBy("d")).alias("t")
     )

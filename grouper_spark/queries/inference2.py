@@ -19,8 +19,9 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from ..functions.text import money
+from ..functions.text import money, money_units
 from ..sources import table
+from ._series import daily_orders
 from . import query
 from ..operators.core import literal_frame
 
@@ -33,18 +34,6 @@ _DAILY_SQL = """
               AS BIGINT) AS x
   FROM orders GROUP BY 1
 """
-
-
-def _daily(spark, sf_dir):
-    # multiply-referenced by every consumer's branches (totals,
-    # histogram, windows) — checkpoint so the orders fold plans once
-    o = table(spark, sf_dir, "orders")
-    return o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("x")
-    ).localCheckpoint(eager=False)
 
 
 @query(
@@ -92,7 +81,11 @@ def a527_pettitt_changepoint(spark, sf_dir):
     exp() runs once on the final K. At 100 TB: one orders shuffle on
     the date key, then O(days) work; the ORDER BY-ABS argmax touches
     ~2.4k rows."""
-    daily = _daily(spark, sf_dir)
+    # multiply-referenced by the totals, histogram and window branches:
+    # checkpoint so the orders fold plans once
+    o = table(spark, sf_dir, "orders")
+    x = money_units("o_totalprice", 100).alias("x")
+    daily = daily_orders(o, x).localCheckpoint(eager=False)
     n = daily.agg(F.count("*").cast("bigint").alias("n"))
     hist = daily.groupBy("x").agg(F.count("*").cast("bigint").alias("g"))
     wv = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, -1)
@@ -174,9 +167,9 @@ def a528_buishand_snht(spark, sf_dir):
     nS_k)/(n·s·√n); SNHT T_k = D_k²/(n²s²)·(1/k + 1/(n−k)) maximized
     over k with its argmax date. One orders fold, O(days) windows; sd
     and the divisions are terminal doubles off exact integers."""
-    daily = _daily(spark, sf_dir).select(
-        "d", F.expr("CAST(x div 100 AS BIGINT)").alias("x")
-    )
+    o = table(spark, sf_dir, "orders")
+    x = money_units("o_totalprice", 10000).alias("x")
+    daily = daily_orders(o, x).localCheckpoint(eager=False)
     tot = daily.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("t"),
@@ -275,7 +268,11 @@ def a529_bartels_rank_vn(spark, sf_dir):
     approximation z uses the exact-rational variance 4(n−2)(5n²−2n−9)
     / (5n(n+1)(n−1)²). Histogram + two O(days) windows; no pairwise
     joins. At 100 TB the only corpus-sized stage is the date fold."""
-    daily = _daily(spark, sf_dir)
+    # multiply-referenced by the totals, histogram and window branches:
+    # checkpoint so the orders fold plans once
+    o = table(spark, sf_dir, "orders")
+    x = money_units("o_totalprice", 100).alias("x")
+    daily = daily_orders(o, x).localCheckpoint(eager=False)
     n = daily.agg(F.count("*").cast("bigint").alias("n"))
     hist = daily.groupBy("x").agg(F.count("*").cast("bigint").alias("g"))
     wv = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, -1)
@@ -386,9 +383,9 @@ def a530_yule_walker_ar2(spark, sf_dir):
     r1, r2 and the closed-form φ1 = r1(1−r2)/(1−r1²), φ2 =
     (r2−r1²)/(1−r1²), innovation ratio 1 − φ1r1 − φ2r2 are terminal
     doubles. One date-keyed fold, two LAG windows over ~2.4k rows."""
-    daily = _daily(spark, sf_dir).select(
-        "d", F.expr("CAST(x div 100 AS BIGINT)").alias("x")
-    )
+    o = table(spark, sf_dir, "orders")
+    x = money_units("o_totalprice", 10000).alias("x")
+    daily = daily_orders(o, x).localCheckpoint(eager=False)
     tot = daily.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("t"),
@@ -1361,10 +1358,7 @@ def a537_cooks_distance(spark, sf_dir):
         c.join(o, c.c_custkey == o.o_custkey)
         .groupBy("c_custkey", "c_acctbal")
         .agg(
-            F.expr(
-                "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-                " div 100 AS BIGINT)"
-            ).alias("y")
+            money_units("o_totalprice", 100).alias("y")
         )
         .select(
             "c_custkey",
@@ -1715,10 +1709,7 @@ def a540_herfindahl_concentration(spark, sf_dir):
                 li.l_partkey == F.col("p_partkey"))
         .groupBy("p_type", F.col("l_suppkey").cast("bigint").alias("s"))
         .agg(
-            F.expr(
-                "CAST(SUM(CAST(ROUND(l_extendedprice * (1.0 - l_discount)"
-                " * 100.0, 0) AS BIGINT)) div 100 AS BIGINT)"
-            ).alias("r")
+            money_units("l_extendedprice * (1.0 - l_discount)", 100).alias("r")
         )
     )
     mkt = rev.groupBy("p_type").agg(
@@ -1798,10 +1789,7 @@ def a541_inequality_panel(spark, sf_dir):
     engines. One orders fold, one bounded histogram, one readout."""
     o = table(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("dollars")
+        money_units("o_totalprice", 100).alias("dollars")
     )
     binned = spend.groupBy(
         (F.expr("CAST(dollars div 100 AS BIGINT)") * 100 + 50).alias("x")
@@ -2153,10 +2141,7 @@ def a544_mahalanobis_outliers(spark, sf_dir):
         c.join(o, c.c_custkey == o.o_custkey)
         .groupBy("c_custkey", "c_acctbal")
         .agg(
-            F.expr(
-                "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-                " div 100 AS BIGINT)"
-            ).alias("y")
+            money_units("o_totalprice", 100).alias("y")
         )
         .select(
             "c_custkey",
@@ -2384,10 +2369,7 @@ def a546_elbow_wss(spark, sf_dir):
     the histogram, never the corpus."""
     o = table(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("x")
+        money_units("o_totalprice", 100).alias("x")
     )
     # hist feeds both the range branch and the k-assignment branch;
     # checkpoint so the corpus fold doesn't replan per reference
@@ -2684,10 +2666,7 @@ def a081_iv_wald_estimator(spark, sf_dir):
         c.join(o, c.c_custkey == o.o_custkey)
         .groupBy("c_custkey", "c_nationkey", "c_acctbal")
         .agg(
-            F.expr(
-                "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-                " div 100 AS BIGINT)"
-            ).alias("y")
+            money_units("o_totalprice", 100).alias("y")
         )
         .select(
             (F.col("c_nationkey") % 2).cast("bigint").alias("z"),
@@ -2789,10 +2768,7 @@ def a082_oaxaca_blinder(spark, sf_dir):
         c.join(o, c.c_custkey == o.o_custkey)
         .groupBy("c_custkey", "c_mktsegment", "c_acctbal")
         .agg(
-            F.expr(
-                "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-                " div 100 AS BIGINT)"
-            ).alias("y")
+            money_units("o_totalprice", 100).alias("y")
         )
         .select(
             F.when(F.col("c_mktsegment") == "AUTOMOBILE", 1)
@@ -3118,10 +3094,7 @@ def a084_dbscan_grid(spark, sf_dir):
         c.join(o, c.c_custkey == o.o_custkey)
         .groupBy("c_custkey", "c_acctbal")
         .agg(
-            F.expr(
-                "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-                " div 100 AS BIGINT)"
-            ).alias("y")
+            money_units("o_totalprice", 100).alias("y")
         )
         .select(
             F.round("c_acctbal", 0).cast("bigint").alias("x"), "y"
@@ -3315,10 +3288,7 @@ def a085_gmm_em_1d(spark, sf_dir):
     1-row param frame against the checkpointed histogram."""
     o = table(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("x")
+        money_units("o_totalprice", 100).alias("x")
     )
     rng = spend.agg(
         F.min("x").cast("bigint").alias("lo"),
@@ -3616,10 +3586,7 @@ def a087_hellinger_bhattacharyya(spark, sf_dir):
         c.join(o, c.c_custkey == o.o_custkey)
         .groupBy("c_custkey", "c_nationkey")
         .agg(
-            F.expr(
-                "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-                " div 100 AS BIGINT)"
-            ).alias("x")
+            money_units("o_totalprice", 100).alias("x")
         )
         .select((F.col("c_nationkey") % 2).alias("grp"), "x")
         .localCheckpoint(eager=False)
@@ -4353,10 +4320,7 @@ def a094_morans_i_geary_c(spark, sf_dir):
         c.join(o, c.c_custkey == o.o_custkey)
         .groupBy("c_custkey", "c_acctbal")
         .agg(
-            F.expr(
-                "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-                " div 100 AS BIGINT)"
-            ).alias("y")
+            money_units("o_totalprice", 100).alias("y")
         )
         .select(
             F.round("c_acctbal", 0).cast("bigint").alias("x"), "y"
@@ -4639,8 +4603,8 @@ def a096_backfill_planner(spark, sf_dir):
     aggregate; everything downstream is calendar-sized. At 100 TB:
     one orders fold keyed by date, then O(days)."""
     o = table(spark, sf_dir, "orders")
-    ledger = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.count("*").cast("bigint").alias("n_rows")
+    ledger = daily_orders(
+        o, F.count("*").cast("bigint").alias("n_rows")
     ).localCheckpoint(eager=False)
     bounds = ledger.agg(
         F.min("d").alias("lo"), F.max("d").alias("hi")
@@ -4766,15 +4730,14 @@ def a097_taylor_power_law(spark, sf_dir):
     fold keyed (nation, date), then 25-point work."""
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
-    counts = o.join(
-        c.select("c_custkey", "c_nationkey"),
-        o.o_custkey == F.col("c_custkey"),
-    ).groupBy(
-        F.col("c_nationkey").cast("bigint").alias("g"),
-        F.to_date("o_orderdate").alias("d"),
-    ).agg(F.count("*").cast("bigint").alias("k")).localCheckpoint(
-        eager=False
-    )
+    counts = daily_orders(
+        o.join(
+            c.select("c_custkey", "c_nationkey"),
+            o.o_custkey == F.col("c_custkey"),
+        ),
+        F.count("*").cast("bigint").alias("k"),
+        by=(F.col("c_nationkey").cast("bigint").alias("g"),),
+    ).localCheckpoint(eager=False)
     bounds = o.agg(
         F.min(F.to_date("o_orderdate")).alias("lo"),
         F.max(F.to_date("o_orderdate")).alias("hi"),
@@ -5066,11 +5029,9 @@ def a099_cross_correlation(spark, sf_dir):
     100 TB: one date fold; the lag join is O(days × 15)."""
     o = table(spark, sf_dir, "orders")
     wd = Window.orderBy("d")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 10000 AS BIGINT)"
-        ).alias("rev"),
+    daily = daily_orders(
+        o,
+        money_units("o_totalprice", 10000).alias("rev"),
         F.count("*").cast("bigint").alias("cnt"),
     ).withColumn(
         "t", F.row_number().over(wd).cast("bigint")
@@ -5396,10 +5357,7 @@ def a127_abc_xyz_classification(spark, sf_dir):
     ).agg(
         F.sum(F.round("l_quantity", 0).cast("bigint"))
         .cast("bigint").alias("q"),
-        F.expr(
-            "CAST(SUM(CAST(ROUND(l_extendedprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("rev"),
+        money_units("l_extendedprice", 100).alias("rev"),
     )
     per_part = demand.groupBy("part").agg(
         F.count("*").cast("bigint").alias("n_days"),
@@ -6178,11 +6136,8 @@ def a134_crps_ensemble(spark, sf_dir):
     family reports. At 100 TB: one date fold; O(days·28²) after."""
     o = table(spark, sf_dir, "orders")
     wd = Window.orderBy("d")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 10000 AS BIGINT)"
-        ).alias("x")
+    daily = daily_orders(
+        o, money_units("o_totalprice", 10000).alias("x")
     ).withColumn(
         "t", F.row_number().over(wd).cast("bigint")
     ).localCheckpoint(eager=False)
@@ -6292,11 +6247,8 @@ def a135_winkler_interval_score(spark, sf_dir):
     fold, O(days·28) rank windows partitioned by target day."""
     o = table(spark, sf_dir, "orders")
     wd = Window.orderBy("d")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 10000 AS BIGINT)"
-        ).alias("x")
+    daily = daily_orders(
+        o, money_units("o_totalprice", 10000).alias("x")
     ).withColumn(
         "t", F.row_number().over(wd).cast("bigint")
     ).localCheckpoint(eager=False)
@@ -6396,11 +6348,8 @@ def a136_pit_uniformity(spark, sf_dir):
     one date fold + an O(days·28) band join."""
     o = table(spark, sf_dir, "orders")
     wd = Window.orderBy("d")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 10000 AS BIGINT)"
-        ).alias("x")
+    daily = daily_orders(
+        o, money_units("o_totalprice", 10000).alias("x")
     ).withColumn(
         "t", F.row_number().over(wd).cast("bigint")
     ).localCheckpoint(eager=False)
@@ -6733,10 +6682,7 @@ def a139_distance_correlation(spark, sf_dir):
         .join(o, c.c_custkey == o.o_custkey)
         .groupBy("c_custkey", "c_acctbal")
         .agg(
-            F.expr(
-                "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-                " div 100000 AS BIGINT)"
-            ).alias("y")
+            money_units("o_totalprice", 100000).alias("y")
         )
         .select(
             "c_custkey",
@@ -6971,9 +6917,8 @@ _RET_SQL = """
 def _rets(spark, sf_dir):
     o = table(spark, sf_dir, "orders")
     wd = Window.orderBy("d")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.sum(money("o_totalprice"))
-        .cast("bigint").alias("cents")
+    daily = daily_orders(
+        o, F.sum(money("o_totalprice")).cast("bigint").alias("cents")
     )
     lnd = daily.select(
         "d",
@@ -7302,11 +7247,8 @@ def a143_seasonal_mann_kendall(spark, sf_dir):
     numbering is derived as isodow%7+1 in the oracle (the q256
     gotcha). At 100 TB: one date fold, seven bounded self-joins."""
     o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("x")
+    daily = daily_orders(
+        o, money_units("o_totalprice", 100).alias("x")
     ).select("d", F.dayofweek("d").alias("dow"), "x").localCheckpoint(
         eager=False
     )
@@ -7472,11 +7414,8 @@ def a144_generalized_esd(spark, sf_dir):
     checkpointed 1-row states. At 100 TB: one fold; each round is a
     broadcast re-scan of the day summary."""
     o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 10000 AS BIGINT)"
-        ).alias("x")
+    daily = daily_orders(
+        o, money_units("o_totalprice", 10000).alias("x")
     ).localCheckpoint(eager=True)
     m = daily.agg(
         F.count("*").cast("bigint").alias("n"),

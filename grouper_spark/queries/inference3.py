@@ -21,8 +21,9 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from ..functions.text import md5_bits, money
+from ..functions.text import md5_bits, money, money_units
 from ..sources import table
+from ._series import daily_orders, trend_fit
 from . import query
 from ..operators.core import literal_frame
 
@@ -34,20 +35,6 @@ _DAILY_SQL = """
               AS BIGINT) AS x
   FROM orders GROUP BY 1
 """
-
-
-def _daily(spark, sf_dir):
-    o = table(spark, sf_dir, "orders")
-    return (
-        o.groupBy(F.to_date("o_orderdate").alias("d"))
-        .agg(
-            F.expr(
-                "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-                " div 100 AS BIGINT)"
-            ).alias("x")
-        )
-        .localCheckpoint(eager=False)
-    )
 
 
 @query(
@@ -87,7 +74,9 @@ def a146_diebold_mariano(spark, sf_dir):
     lag-0 variance of d_t from those exact sums, sqrt once on the
     final scalar. At 100 TB: one orders shuffle on the date key, two
     LAGs over the ~2.4k-row daily series, one scalar readout."""
-    daily = _daily(spark, sf_dir)
+    o = table(spark, sf_dir, "orders")
+    x = money_units("o_totalprice", 100).alias("x")
+    daily = daily_orders(o, x).localCheckpoint(eager=False)
     w = Window.orderBy("d")
     lagged = daily.select(
         "x",
@@ -252,7 +241,9 @@ def a148_hampel_filter(spark, sf_dir):
     fewer than 7 neighbors are excluded. At 100 TB: one orders shuffle
     to the daily key, then O(days)·7 window work — the frame is a
     constant 7 elements regardless of corpus scale."""
-    daily = _daily(spark, sf_dir)
+    o = table(spark, sf_dir, "orders")
+    x = money_units("o_totalprice", 100).alias("x")
+    daily = daily_orders(o, x).localCheckpoint(eager=False)
     w7 = Window.orderBy("d").rowsBetween(-3, 3)
     win = daily.select(
         "d",
@@ -1028,7 +1019,9 @@ def a155_spectral_entropy(spark, sf_dir):
     nano-quantized per term. Entropy is normalized by ln(12); the
     dominant period and its share ride along. At 100 TB: one daily
     fold, one broadcast basis join against the ~2.4k-row summary."""
-    daily = _daily(spark, sf_dir)
+    o = table(spark, sf_dir, "orders")
+    x = money_units("o_totalprice", 100).alias("x")
+    daily = daily_orders(o, x).localCheckpoint(eager=False)
     ts = daily.select(
         F.col("x").alias("y"),
         F.row_number().over(Window.orderBy("d")).alias("t"),
@@ -1157,9 +1150,9 @@ def a156_kuiper_test(spark, sf_dir):
     terminal division. The two-term asymptotic p-value (Stephens 1970
     correction) is a fixed-order scalar expression. At 100 TB: one
     orders fold to ~2.4k daily rows, one cumulative window."""
-    daily = table(spark, sf_dir, "orders").groupBy(
-        F.to_date("o_orderdate").alias("d")
-    ).agg(F.count("*").cast("bigint").alias("c"))
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"), F.count("*").cast("bigint").alias("c")
+    )
     bounds = daily.agg(
         F.min("d").alias("d0"),
         (F.datediff(F.max("d"), F.min("d")) + 1).cast("bigint").alias("s"),
@@ -1524,11 +1517,8 @@ def a159_dagostino_k2(spark, sf_dir):
     normalizing transforms. At 100 TB: one daily fold then pure
     scalar math."""
     o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100000 AS BIGINT)"
-        ).alias("x")
+    daily = daily_orders(
+        o, money_units("o_totalprice", 100000).alias("x")
     ).localCheckpoint(eager=False)
     mu = daily.agg(
         F.count("*").cast("bigint").alias("n"),
@@ -1673,15 +1663,10 @@ def a160_theta_forecast(spark, sf_dir):
     mirrors with F.aggregate over the same slice). Sequential per
     group as the math demands, parallel across groups. At 100 TB: one
     (grp, day) fold, one array collect per group (~2.4k elements)."""
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderpriority").alias("grp"),
-        F.to_date("o_orderdate").alias("d"),
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("y")
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"),
+        money_units("o_totalprice", 100).alias("y"),
+        by=(F.col("o_orderpriority").alias("grp"),),
     )
     idx = daily.select(
         "grp",
@@ -1691,26 +1676,7 @@ def a160_theta_forecast(spark, sf_dir):
         .cast("bigint")
         .alias("t"),
     ).localCheckpoint(eager=False)
-    ols = idx.groupBy("grp").agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("t").cast("bigint").alias("st"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("t") * F.col("t")).cast("bigint").alias("stt"),
-        F.sum(F.col("t") * F.col("y")).cast("bigint").alias("sty"),
-    )
-    nD = F.col("n").cast("double")
-    b = (nD * F.col("sty") - F.col("st").cast("double") * F.col("sy")) / (
-        nD * F.col("stt") - F.col("st").cast("double") * F.col("st")
-    )
-    coefs = ols.select(
-        "grp",
-        "n",
-        b.alias("b"),
-        ((F.col("sy").cast("double") - b * F.col("st")) / F.col("n")).alias(
-            "a"
-        ),
-    )
-    zed = idx.join(coefs, "grp").select(
+    zed = idx.join(trend_fit(idx, "grp"), "grp").select(
         "grp",
         "n",
         "a",
@@ -2377,10 +2343,7 @@ def a166_mmd_poly(spark, sf_dir):
         .otherwise("ctrl")
         .alias("arm"),
     ).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(value * 100.0, 0) AS BIGINT))"
-            " div 100000 AS BIGINT)"
-        ).alias("x")
+        money_units("value", 100000).alias("x")
     )
     s = obs.groupBy("arm").agg(
         F.count("*").cast("bigint").alias("n"),

@@ -26,8 +26,9 @@ import math
 
 from pyspark.sql import Window, functions as F
 
-from ..functions.text import md5_bits, money
+from ..functions.text import md5_bits, money, money_units
 from ..sources import table
+from ._series import daily_orders, trend_fit, unit_scaled
 from . import query
 from ..operators.core import collect_bounded, literal_frame
 
@@ -45,23 +46,8 @@ _DAILYV_SQL = """
 """
 
 
-def _dailyv(spark, sf_dir):
-    o = table(spark, sf_dir, "orders")
-    return (
-        o.groupBy(F.to_date("o_orderdate").alias("d"))
-        .agg(
-            F.count("*").cast("bigint").alias("v"),
-            F.expr(
-                "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-                " div 100 AS BIGINT)"
-            ).alias("y"),
-        )
-        .localCheckpoint(eager=False)
-    )
-
-
 # (d, v, yk) with adaptive-unit revenue: yk = y // max(1, mean(y)/3000),
-# the inference.py _unit_scaled discipline. A fixed kilodollar divisor
+# the _series.unit_scaled discipline. A fixed kilodollar divisor
 # put a201/a193's n-cross-multiplied yk moments (n*s22, sx2*sx2) within
 # ~2x of int64 max at the 10x gate; the adaptive unit pins mean(yk) at
 # ~3000 at EVERY corpus scale, so the squared-moment overflow budget is
@@ -76,19 +62,6 @@ daily AS (
   SELECT d, v, CAST(y // u AS BIGINT) AS yk FROM daily0 CROSS JOIN uk
 )
 """
-
-
-def _dailyvk(spark, sf_dir):
-    daily = _dailyv(spark, sf_dir)
-    unit = daily.agg(
-        F.expr(
-            "GREATEST(CAST(1 AS BIGINT),"
-            " (CAST(SUM(y) AS BIGINT) div COUNT(*)) div 3000)"
-        ).alias("u")
-    )
-    return daily.crossJoin(F.broadcast(unit)).select(
-        "d", "v", F.expr("CAST(y div u AS BIGINT)").alias("yk")
-    )
 
 
 @query(
@@ -125,7 +98,9 @@ def a174_savitzky_golay(spark, sf_dir):
     an exact BIGINT; the single division by 21 yields a non-terminating
     decimal, so round(,6) can never land on a half boundary (q326
     tie-break class is structurally impossible)."""
-    daily = _dailyv(spark, sf_dir)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"), F.count("*").cast("bigint").alias("v")
+    ).localCheckpoint(eager=False)
     w = Window.orderBy("d")
     cols = {
         "xm3": F.lag("v", 3).over(w),
@@ -194,7 +169,9 @@ def a175_kz_filter(spark, sf_dir):
     IS the correct shrinking-support boundary; the single terminal
     division by 125 = 5³ is exact to 3 decimal places, so the 6-dp
     round is boundary-safe."""
-    daily = _dailyv(spark, sf_dir)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"), F.count("*").cast("bigint").alias("v")
+    ).localCheckpoint(eager=False)
     w = Window.orderBy("d")
     df = daily.select(
         "d",
@@ -300,41 +277,14 @@ def a176_cochrane_orcutt(spark, sf_dir):
     guard: consumers are scale-invariant), residuals round to exact
     BIGINTs, and the quasi-differenced regressors are 3-dp fixed-point
     so every cross-product sum is exact at any corpus scale."""
-    from .inference import _unit_scaled
-
     o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.to_date(F.date_trunc("day", "o_orderdate")).alias("d")
-    ).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("y")
-    )
-    daily = _unit_scaled(daily)
+    daily = daily_orders(o, money_units("o_totalprice", 100).alias("y"))
+    daily = unit_scaled(daily, "y", 3000)
     w = Window.orderBy("d")
     ts = daily.select(
         "y", F.row_number().over(w).cast("bigint").alias("t")
     ).localCheckpoint(eager=False)
-    sums = ts.agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("t").cast("bigint").alias("st"),
-        F.sum(F.col("t") * F.col("t")).cast("bigint").alias("st2"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("t") * F.col("y")).cast("bigint").alias("sty"),
-    )
-    fit = sums.select(
-        "n",
-        "st",
-        "sy",
-        (
-            (F.col("n").cast("double") * F.col("sty") - F.col("st").cast("double") * F.col("sy"))
-            / (F.col("n").cast("double") * F.col("st2") - F.col("st").cast("double") * F.col("st"))
-        ).alias("b"),
-    ).select(
-        "b",
-        ((F.col("sy").cast("double") - F.col("b") * F.col("st")) / F.col("n")).alias("a"),
-    )
+    fit = trend_fit(ts)
     wt = Window.orderBy("t")
     resid = ts.crossJoin(F.broadcast(fit)).select(
         "t",
@@ -512,7 +462,11 @@ def a178_hoeffding_d(spark, sf_dir):
     dominance counting — run over the DAILY panel, which is
     calendar-bounded (<=2404 rows at every sf), so the pair join is
     O(1) in corpus size and both sides stay exact BIGINTs."""
-    daily = _dailyv(spark, sf_dir)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"),
+        F.count("*").cast("bigint").alias("v"),
+        money_units("o_totalprice", 100).alias("y"),
+    ).localCheckpoint(eager=False)
     ranked = daily.select(
         F.row_number().over(Window.orderBy("v", "d")).cast("bigint").alias("r"),
         F.row_number().over(Window.orderBy("y", "d")).cast("bigint").alias("s"),
@@ -596,7 +550,11 @@ def a179_blomqvist_beta(spark, sf_dir):
     statistic with date tie-break), the q160 exact-median convention,
     so no interpolation ever enters. One corpus fold + one broadcast of
     a 1-row median pair."""
-    daily = _dailyv(spark, sf_dir).localCheckpoint(eager=False)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"),
+        F.count("*").cast("bigint").alias("v"),
+        money_units("o_totalprice", 100).alias("y"),
+    ).localCheckpoint(eager=False)
     n_half = daily.groupBy().agg(
         (((F.count("*") + 1) / 2).cast("bigint") - 1).alias("k")
     )
@@ -1433,7 +1391,9 @@ def a188_ols_leverage_dffits(spark, sf_dir):
     identical text in both engines, each feeding its own terminal
     round(,6) -- no cross-row double folds anywhere. Top-12 days by
     |DFFITS| (tie-break d)."""
-    daily = _dailyv(spark, sf_dir)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"), F.count("*").cast("bigint").alias("v")
+    ).localCheckpoint(eager=False)
     bounds = daily.agg(F.min("d").alias("d0"))
     idx = (
         daily.crossJoin(F.broadcast(bounds))
@@ -1717,7 +1677,7 @@ def a190_bipartite_edge_redundancy(spark, sf_dir):
 # --- Method comparison (a191-a194) ------------------------------------
 # Two "measurements" of daily activity: order volume v and revenue yk —
 # kilodollar (y div 1000) for a191/a194, whose rank/order statistics
-# never square yk, and adaptive-unit (_dailyvk) for a193, whose squared
+# never square yk, and adaptive-unit yk for a193, whose squared
 # moments need scale-invariant int64 headroom. Panel is calendar-bounded
 # either way, so even
 # the Passing-Bablok all-pairs slope stage is <=C(2404,2) ~ 2.9M rows
@@ -1804,9 +1764,11 @@ def a191_passing_bablok(spark, sf_dir):
     import numpy as np
 
     rows = collect_bounded(
-        _dailyv(spark, sf_dir).select(
-            "d", "v", F.expr("CAST(y div 1000 AS BIGINT)").alias("yk")
-        ),
+        daily_orders(
+            table(spark, sf_dir, "orders"),
+            F.count("*").cast("bigint").alias("v"),
+            money_units("o_totalprice", 100000).alias("yk"),
+        ).localCheckpoint(eager=False),
         _PB_MAX_PANEL,
         "a191_passing_bablok day panel",
     )
@@ -2013,10 +1975,16 @@ def a193_lin_ccc(spark, sf_dir):
     (Pearson part) AND location/scale shift (the C_b accuracy factor,
     emitted too). Cross-multiplied by n^2 everything is one exact
     BIGINT fold over the bounded day panel; the revenue side is the
-    adaptive-unit yk (_dailyvk) so the squared moments keep the same
+    adaptive-unit yk (unit_scaled) so the squared moments keep the same
     int64 headroom at every corpus scale; two sqrt calls run once on
     exact integers and every output feeds a terminal round(,6)."""
-    pan = _dailyvk(spark, sf_dir).select("v", "yk")
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"),
+        F.count("*").cast("bigint").alias("v"),
+        money_units("o_totalprice", 100).alias("y"),
+    ).localCheckpoint(eager=False)
+    daily = unit_scaled(daily, "y", 3000, "yk")
+    pan = daily.select("v", "yk")
     s = pan.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("v").cast("bigint").alias("sx"),
@@ -2087,8 +2055,11 @@ def a194_total_deviation_index(spark, sf_dir):
     ppm of days within 10% of mean daily volume. The TDI/coverage pair
     is the method-comparison dual of a193's CCC: 'how big is the
     disagreement' instead of 'how correlated are they'."""
-    daily = _dailyv(spark, sf_dir)
-    pan = daily.select("d", "v", F.expr("CAST(y div 1000 AS BIGINT)").alias("yk"))
+    pan = daily_orders(
+        table(spark, sf_dir, "orders"),
+        F.count("*").cast("bigint").alias("v"),
+        money_units("o_totalprice", 100000).alias("yk"),
+    ).localCheckpoint(eager=False)
     s = pan.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("v").cast("bigint").alias("sv"),
@@ -2711,10 +2682,16 @@ def a201_var1_model(spark, sf_dir):
     (real eigenvalues via the trace/det quadratic when the discriminant
     is nonnegative, modulus sqrt(|det|) for the complex pair). Scalar
     doubles only, every output a terminal round(,6); the revenue side
-    is the adaptive-unit yk (_dailyvk) so the n-cross-multiplied lag
+    is the adaptive-unit yk (unit_scaled) so the n-cross-multiplied lag
     moments keep the same int64 headroom at every corpus scale."""
     w = Window.orderBy("d")
-    pan = _dailyvk(spark, sf_dir).select(
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"),
+        F.count("*").cast("bigint").alias("v"),
+        money_units("o_totalprice", 100).alias("y"),
+    ).localCheckpoint(eager=False)
+    daily = unit_scaled(daily, "y", 3000, "yk")
+    pan = daily.select(
         "d",
         "v",
         "yk",
@@ -2838,7 +2815,9 @@ def a202_poincare_sd(spark, sf_dir):
     from one LEAD over the bounded day panel; diff/sum moments are
     exact BIGINTs, the sqrts are scalar, every output a terminal
     round(,6)."""
-    daily = _dailyv(spark, sf_dir)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"), F.count("*").cast("bigint").alias("v")
+    ).localCheckpoint(eager=False)
     w = Window.orderBy("d")
     pan = daily.select("v", F.lead("v").over(w).alias("vn")).filter(
         F.col("vn").isNotNull()
@@ -2934,7 +2913,11 @@ def a203_transfer_entropy(spark, sf_dir):
     per cell on exact integer count ratios, each term is nano-quantized
     to BIGINT micro BEFORE the cross-cell sum (a155/a186 discipline),
     and the single terminal division feeds round(,6)."""
-    daily = _dailyv(spark, sf_dir).localCheckpoint(eager=False)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"),
+        F.count("*").cast("bigint").alias("v"),
+        money_units("o_totalprice", 100).alias("y"),
+    ).localCheckpoint(eager=False)
     n_all = daily.agg(F.count("*").cast("bigint").alias("n_all"))
     mv = (
         daily.crossJoin(F.broadcast(n_all))
@@ -3048,7 +3031,9 @@ def a204_recurrence_quantification(spark, sf_dir):
     (<=C(2404,2) rows at any corpus scale); the diagonal test is an
     exact (i+1, j+1) self-join of the recurrent-pair set; eps and all
     tallies are exact integers."""
-    daily = _dailyv(spark, sf_dir)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"), F.count("*").cast("bigint").alias("v")
+    ).localCheckpoint(eager=False)
     pan = daily.select(
         "v", F.row_number().over(Window.orderBy("d")).alias("i")
     ).localCheckpoint(eager=False)
@@ -3161,7 +3146,9 @@ def a205_seasonal_strength(spark, sf_dir):
     floor-normalized to ppm-of-mean-volume BIGINTs (det7*1e6 //
     (7*vbar) etc.) BEFORE the moment sums -- scale-free by
     construction, identical floors in both engines."""
-    daily = _dailyv(spark, sf_dir)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"), F.count("*").cast("bigint").alias("v")
+    ).localCheckpoint(eager=False)
     w7 = Window.orderBy("d").rowsBetween(-3, 3)
     ma = daily.select(
         "d",
@@ -3277,7 +3264,9 @@ def a206_allan_variance(spark, sf_dir):
     partial tail blocks are dropped exactly (c = tau); block-sum diffs
     are an equi-join on bk+1; the fold is exact BIGINT with one
     terminal division per tau."""
-    daily = _dailyv(spark, sf_dir)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"), F.count("*").cast("bigint").alias("v")
+    ).localCheckpoint(eager=False)
     bounds = daily.agg(F.min("d").alias("d0"))
     idx = daily.crossJoin(F.broadcast(bounds)).select(
         "v", F.datediff("d", "d0").cast("bigint").alias("t")

@@ -31,9 +31,11 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from ..functions.text import money_units
 from ..sources import table
+from ._series import adaptive_unit, daily_orders, unit_scaled
 from . import query
-from .inference4 import _DAILYV_SQL, _DAILYVK_SQL, _dailyv, _dailyvk
+from .inference4 import _DAILYV_SQL, _DAILYVK_SQL
 from ..operators.core import collect_bounded, literal_frame
 
 
@@ -113,7 +115,9 @@ def a208_siegel_repeated_medians(spark, sf_dir):
     import numpy as np
 
     rows = collect_bounded(
-        _dailyv(spark, sf_dir).select("d", "v"),
+        daily_orders(
+            table(spark, sf_dir, "orders"), F.count("*").cast("bigint").alias("v")
+        ).localCheckpoint(eager=False),
         _SIEGEL_MAX_PANEL,
         "a208_siegel_repeated_medians day panel",
     )
@@ -211,7 +215,9 @@ def a211_process_capability(spark, sf_dir):
     calendar-bounded day panel; two sqrt calls run once on exact
     integers; degenerate zero-moving-range fixtures emit 0 (guard on
     both engines)."""
-    daily = _dailyv(spark, sf_dir)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"), F.count("*").cast("bigint").alias("v")
+    ).localCheckpoint(eager=False)
     mrp = daily.select(
         "v",
         F.abs(F.col("v") - F.lag("v").over(Window.orderBy("d"))).alias("mr"),
@@ -335,7 +341,9 @@ def a215_hinge_trend(spark, sf_dir):
     built from exact BIGINT moments and solved in closed form (Cramer's
     rule) with doubles only at the terminal scalar stage; R^2 comes
     from the regression identity SSE = Syy - b'X'y."""
-    daily = _dailyv(spark, sf_dir)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"), F.count("*").cast("bigint").alias("v")
+    ).localCheckpoint(eager=False)
     pan = daily.select(
         "v",
         (F.row_number().over(Window.orderBy("d")) - 1)
@@ -476,7 +484,9 @@ def a224_heidke_peirce_skill(spark, sf_dir):
     two window lags over the bounded day panel; everything downstream
     is exact BIGINT cross-multiplication with terminal round(,6).
     Zero-diff days count as 'down' (documented tie rule)."""
-    daily = _dailyv(spark, sf_dir)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"), F.count("*").cast("bigint").alias("v")
+    ).localCheckpoint(eager=False)
     w = Window.orderBy("d")
     dirs = daily.select(
         F.expr(
@@ -596,7 +606,9 @@ def a209_loess_grid(spark, sf_dir):
     panel is calendar-bounded so the grid x panel fan-out is <= 24 x
     2404 rows at ANY corpus scale. Headroom: wq*u*v <= 1e6*600*v stays
     inside int64 through sf1e4 daily volumes."""
-    daily = _dailyv(spark, sf_dir)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"), F.count("*").cast("bigint").alias("v")
+    ).localCheckpoint(eager=False)
     pan = daily.select(
         "v",
         F.row_number().over(Window.orderBy("d")).cast("bigint").alias("t"),
@@ -702,13 +714,15 @@ def a210_kde_epanechnikov(spark, sf_dir):
     (4h^2), a [0, 750000]-scaled weight), and the density is an exact
     nano-unit ratio with no per-row transcendental anywhere. Volumes
     are RATIO-rescaled to mean 3000 (vs = v*3000*n // sum(v) — unlike
-    the divide-only _unit_scaled this also scales sparse small-sf
+    the divide-only unit_scaled this also scales sparse small-sf
     volumes UP, so the grid never degenerates to zero-width steps)
     keeping h^2 arithmetic inside int64 at every corpus scale;
     bandwidth h = range/8, grid = 32 equal steps. The histogram cousins
     (q77, q120 equidepth, a461 v-optimal) bin counts; this is the
     smoothed-density member of that family."""
-    daily = _dailyv(spark, sf_dir)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"), F.count("*").cast("bigint").alias("v")
+    ).localCheckpoint(eager=False)
     uk = daily.agg(
         F.count("*").cast("bigint").alias("nd"),
         F.sum("v").cast("bigint").alias("sv"),
@@ -835,15 +849,7 @@ def a213_james_stein(spark, sf_dir):
             ).alias("cents"),
         )
     )
-    uk = base.agg(
-        F.expr(
-            "GREATEST(CAST(1 AS BIGINT),"
-            " (CAST(SUM(cents) AS BIGINT) div COUNT(*)) div 3000)"
-        ).alias("u")
-    )
-    vals = base.crossJoin(F.broadcast(uk)).select(
-        "n_name", F.expr("CAST(cents div u AS BIGINT)").alias("val")
-    )
+    vals = unit_scaled(base, "cents", 3000, "val")
     grp = vals.groupBy("n_name").agg(
         F.count("*").cast("bigint").alias("n_i"),
         F.sum("val").cast("bigint").alias("sv"),
@@ -969,7 +975,9 @@ def a228_ransac_line(spark, sf_dir):
     predicate verbatim, so both engines select the identical point set.
     Complements Siegel (a208) and Theil–Sen (a565): RANSAC tolerates
     arbitrarily gross outliers as long as half the panel is clean."""
-    daily = _dailyv(spark, sf_dir)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"), F.count("*").cast("bigint").alias("v")
+    ).localCheckpoint(eager=False)
     pan = daily.select(
         "v",
         F.row_number().over(Window.orderBy("d")).cast("bigint").alias("t"),
@@ -1593,12 +1601,7 @@ def a222_bullwhip_effect(spark, sf_dir):
     shp = base.groupBy(F.col("sm").alias("m")).agg(
         F.sum("qc").cast("bigint").alias("q")
     )
-    uk = dem.agg(
-        F.expr(
-            "GREATEST(CAST(1 AS BIGINT),"
-            " (CAST(SUM(q) AS BIGINT) div COUNT(*)) div 30000)"
-        ).alias("u")
-    )
+    uk = adaptive_unit(dem, "q", 30000)
     pan = (
         dem.select(F.col("m"), F.col("q").alias("dq0"))
         .join(shp.select(F.col("m"), F.col("q").alias("sq0")), "m")
@@ -3792,7 +3795,10 @@ def a235_lomb_scargle(spark, sf_dir):
     panel is calendar-bounded (≤2404 rows at ANY corpus scale), so the
     trig stage is scale-constant; only the one groupBy building the
     panel sees the corpus."""
-    daily = _dailyvk(spark, sf_dir)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"), money_units("o_totalprice", 100).alias("y")
+    ).localCheckpoint(eager=False)
+    daily = unit_scaled(daily, "y", 3000, "yk")
     scal = daily.agg(
         F.min("d").alias("d0"),
         F.count("*").cast("bigint").alias("n"),
@@ -3968,7 +3974,12 @@ def a236_adstock_transform(spark, sf_dir):
     rows at ANY scale); both adstock and raw volume are unit-rescaled
     by exact data-dependent divisors (the a038-class discipline) so the
     correlation moments keep int64 headroom at every corpus scale."""
-    daily = _dailyvk(spark, sf_dir)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"),
+        F.count("*").cast("bigint").alias("v"),
+        money_units("o_totalprice", 100).alias("y"),
+    ).localCheckpoint(eager=False)
+    daily = unit_scaled(daily, "y", 3000, "yk")
     pan = daily.select(
         "yk",
         "v",
@@ -4340,7 +4351,9 @@ def a239_turning_points_test(spark, sf_dir):
     non-turns, deterministically in both engines. One bounded-panel
     window pass; the count and n are exact BIGINTs with one terminal
     sqrt."""
-    daily = _dailyv(spark, sf_dir)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"), F.count("*").cast("bigint").alias("v")
+    ).localCheckpoint(eager=False)
     w = Window.orderBy("d")
     seq = daily.select(
         "v",
@@ -4420,7 +4433,10 @@ def a240_cusum_squares_break(spark, sf_dir):
     multiplied deviation |S_k·n − k·S_n| (no division before the
     terminal scaling), tie-broken to the earliest day; squares of the
     a038-unit-scaled yk keep int64 headroom at every corpus scale."""
-    daily = _dailyvk(spark, sf_dir)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"), money_units("o_totalprice", 100).alias("y")
+    ).localCheckpoint(eager=False)
+    daily = unit_scaled(daily, "y", 3000, "yk")
     seq = daily.select(
         "d",
         F.expr("CAST(yk * yk AS BIGINT)").alias("sq"),

@@ -37,8 +37,9 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from ..functions.text import money
+from ..functions.text import money, money_units
 from ..sources import table
+from ._series import daily_orders, unit_scaled
 from . import query
 
 # Per-event-type daily count series: the calendar-bounded panel every
@@ -468,18 +469,8 @@ def a575_dfa_alpha(spark, sf_dir):
     so slope = (y3−y1)/(2h)) with the logs evaluated once per scalar.
     Outputs the exact milli-fixed fluctuation sums plus alpha."""
     o = table(spark, sf_dir, "orders")
-    daily0 = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.count("*").cast("bigint").alias("v")
-    )
-    uk = daily0.agg(
-        F.greatest(
-            F.lit(1),
-            F.expr("(CAST(SUM(v) AS BIGINT) div COUNT(*)) div 30"),
-        ).alias("u")
-    )
-    daily = daily0.crossJoin(F.broadcast(uk)).select(
-        "d", F.expr("CAST(v div u AS BIGINT)").alias("c")
-    )
+    daily = daily_orders(o, F.count("*").cast("bigint").alias("v"))
+    daily = unit_scaled(daily, "v", 30, "c")
     wcum = Window.orderBy("d").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -760,22 +751,12 @@ def a577_engle_granger(spark, sf_dir):
     clear int64 at any corpus scale. gamma is a raw exact ratio; the
     ADF t emits after one sqrt per corpus."""
     o = table(spark, sf_dir, "orders")
-    daily0 = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
+    daily = daily_orders(
+        o,
         F.count("*").cast("bigint").alias("v"),
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("y"),
+        money_units("o_totalprice", 100).alias("y"),
     )
-    uk = daily0.agg(
-        F.greatest(
-            F.lit(1),
-            F.expr("(CAST(SUM(y) AS BIGINT) div COUNT(*)) div 3000"),
-        ).alias("u")
-    )
-    daily = daily0.crossJoin(F.broadcast(uk)).select(
-        "d", "v", F.expr("CAST(y div u AS BIGINT)").alias("yk")
-    ).localCheckpoint(eager=False)
+    daily = unit_scaled(daily, "y", 3000, "yk").localCheckpoint(eager=False)
     s1 = daily.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("v").cast("bigint").alias("sv"),
@@ -1357,21 +1338,10 @@ def a582_max_drawdown(spark, sf_dir):
     overflow at any scale), and the single sqrt feeds a terminal
     round(x, 6). Revenue rides the a201 adaptive kilodollar unit."""
     o = table(spark, sf_dir, "orders")
-    daily0 = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("y")
+    daily = daily_orders(
+        o, money_units("o_totalprice", 100).alias("y")
     ).localCheckpoint(eager=False)
-    uk = daily0.agg(
-        F.greatest(
-            F.lit(1),
-            F.expr("(CAST(SUM(y) AS BIGINT) div COUNT(*)) div 3000"),
-        ).alias("u")
-    )
-    daily = daily0.crossJoin(F.broadcast(uk)).select(
-        "d", F.expr("CAST(y div u AS BIGINT)").alias("yk")
-    )
+    daily = unit_scaled(daily, "y", 3000, "yk")
     wrun = Window.orderBy("d").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -1446,22 +1416,10 @@ def a583_var_es(spark, sf_dir):
     the order statistic is a deterministic row_number pick
     (tie-broken by day), and ES is a raw exact-BIGINT ratio."""
     o = table(spark, sf_dir, "orders")
-    daily0 = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 100 AS BIGINT)"
-        ).alias("y")
+    daily = daily_orders(
+        o, money_units("o_totalprice", 100).alias("y")
     ).localCheckpoint(eager=False)
-    uk = daily0.agg(
-        F.greatest(
-            F.lit(1),
-            F.expr("(CAST(SUM(y) AS BIGINT) div COUNT(*)) div 3000"),
-        ).alias("u")
-    )
-    daily = daily0.crossJoin(F.broadcast(uk)).select(
-        "d", F.expr("CAST(y div u AS BIGINT)").alias("yk")
-    )
-    w = Window.orderBy("d")
+    daily = unit_scaled(daily, "y", 3000, "yk")
     rets = daily.select(
         "d",
         F.expr(

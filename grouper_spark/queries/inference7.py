@@ -21,7 +21,7 @@ SAME per-step expressions through a recursive CTE (the a585 Viterbi
 recipe).
 
 Overflow budget: the per-type daily count series is unit-rescaled
-(ck = c // max(1, mean(c)//500), the _dailyvk discipline with a 500
+(ck = c // max(1, mean(c)//500), the unit_scaled discipline with a 500
 target) so mean(ck) ∈ [500, 1000) at EVERY corpus scale; a593's
 largest moment (Σq·y with |q| ≤ 1624 on a 30-day panel) stays below
 1e8 — scale-invariant headroom of many orders of magnitude.
@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from ..sources import table
+from ._series import unit_scaled
 from . import query
 
 # ---------------------------------------------------------------------------
@@ -73,20 +74,10 @@ def _tdk(spark, sf_dir):
         F.col("event_type").alias("grp"),
         F.date_trunc("day", "ts").cast("date").alias("d"),
     ).agg(F.count("*").cast("bigint").alias("c"))
-    unit = daily0.agg(
-        F.expr(
-            "GREATEST(CAST(1 AS BIGINT),"
-            " (CAST(SUM(c) AS BIGINT) div COUNT(*)) div 500)"
-        ).alias("u")
-    )
     w = Window.partitionBy("grp").orderBy("d")
     return (
-        daily0.crossJoin(F.broadcast(unit))
-        .select(
-            "grp",
-            F.row_number().over(w).cast("bigint").alias("k"),
-            F.expr("CAST(c div u AS BIGINT)").alias("y"),
-        )
+        unit_scaled(daily0, "c", 500, "y")
+        .select("grp", F.row_number().over(w).cast("bigint").alias("k"), "y")
         # ≤150-row panel referenced by the moment aggregate and the
         # per-row orthogonal-polynomial join: checkpoint so Catalyst
         # doesn't replan the corpus count aggregate once per reference.

@@ -34,9 +34,11 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from ..functions.text import money_units
 from ..sources import table
+from ._series import daily_orders, unit_scaled
 from . import query
-from .inference4 import _DAILYVK_SQL, _dailyvk
+from .inference4 import _DAILYVK_SQL
 from .inference7 import _TDK_SQL, _tdk
 
 # ---------------------------------------------------------------------------
@@ -96,12 +98,15 @@ def a601_mincer_zarnowitz(spark, sf_dir):
     yet be systematically improvable). The joint F uses the exact
     identity that Σ(a−f)² IS the restricted SSE under (0,1):
     F = ((Σ(a−f)² − SSE)/2)/(SSE/(m−2)). All seven moments are exact
-    BIGINTs of the _dailyvk panel (adaptive unit pins the squared-
+    BIGINTs of the unit-scaled panel (adaptive unit pins the squared-
     moment budget at every corpus scale); the closed-form α, β, SSE
     and F run in scalar doubles on identical exact inputs, guarded
     for degenerate variance, terminal round(x, 6). One corpus fold;
     the regression sees ≤2.4k rows at any sf."""
-    daily = _dailyvk(spark, sf_dir)
+    daily = daily_orders(
+        table(spark, sf_dir, "orders"), money_units("o_totalprice", 100).alias("y")
+    ).localCheckpoint(eager=False)
+    daily = unit_scaled(daily, "y", 3000, "yk")
     w = Window.orderBy("d")
     pair = daily.select(
         F.col("yk").alias("a"), F.lag("yk").over(w).alias("f")
@@ -226,10 +231,7 @@ def a602_hoover_palma(spark, sf_dir):
     over the customer-count-sized summary."""
     o = table(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(
-        F.expr(
-            "CAST(SUM(CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT))"
-            " div 10000 AS BIGINT)"
-        ).alias("x")
+        money_units("o_totalprice", 10000).alias("x")
     )
     wr = Window.orderBy("x", "o_custkey")
     wall = Window.partitionBy()

@@ -13,6 +13,8 @@ import inspect
 import json
 import os
 import re
+import subprocess
+import sys
 
 import pytest
 
@@ -92,3 +94,20 @@ def test_one_changed_literal_changes_the_hash(spark, sf_dir, duck):
     assert (line["rows"], line["columns"]) == (want["rows"], want["columns"])
     assert line["hash"] != want["hash"]
     assert line["status"] == "FAIL"
+
+
+def test_an_unknown_name_is_rejected_before_the_session_starts(sf_dir):
+    path = os.path.join(ROOT, f"CENSUS_{os.path.basename(sf_dir)}.json")
+    with open(path, "rb") as f:
+        before = f.read()
+    run = subprocess.run(
+        [sys.executable, os.path.join(ROOT, "tools", "census.py"), sf_dir,
+         "q01_pricing_summary", "no_such_query"],
+        cwd=ROOT, capture_output=True, text=True, timeout=300,
+    )
+    assert run.returncode != 0
+    assert "no_such_query" in run.stderr
+    assert "q01_pricing_summary" not in run.stderr
+    assert run.stdout == ""
+    with open(path, "rb") as f:
+        assert f.read() == before

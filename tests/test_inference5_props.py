@@ -34,9 +34,17 @@ def row(spark, sf_dir):
 
 @pytest.fixture(scope="module")
 def daily(spark, sf_dir):
-    from grouper_spark.queries.inference4 import _dailyv
+    from pyspark.sql import functions as F
 
-    rows = _dailyv(spark, sf_dir).orderBy("d").collect()
+    from grouper_spark.functions.text import money_units
+    from grouper_spark.queries._series import daily_orders
+    from grouper_spark.sources import table
+
+    rows = daily_orders(
+        table(spark, sf_dir, "orders"),
+        F.count("*").cast("bigint").alias("v"),
+        money_units("o_totalprice", 100).alias("y"),
+    ).orderBy("d").collect()
     return [(r["d"], r["v"], r["y"]) for r in rows]
 
 

@@ -45,9 +45,21 @@ def panel(spark, sf_dir):
 
 @pytest.fixture(scope="module")
 def dailyvk(spark, sf_dir):
-    from grouper_spark.queries.inference4 import _dailyvk
+    # Daily whole-dollar revenue in the adaptive unit, recomputed here:
+    # yk = y // max(1, mean(y) // 3000) with the mean by floor division.
+    from grouper_spark.functions.text import money_units
+    from grouper_spark.queries._series import daily_orders
+    from grouper_spark.sources import table
 
-    return [r["yk"] for r in _dailyvk(spark, sf_dir).orderBy("d").collect()]
+    ys = [
+        r["y"]
+        for r in daily_orders(
+            table(spark, sf_dir, "orders"),
+            money_units("o_totalprice", 100).alias("y"),
+        ).orderBy("d").collect()
+    ]
+    u = max(1, (sum(ys) // len(ys)) // 3000)
+    return [y // u for y in ys]
 
 
 def _ols_sse(xs, ys):

@@ -14,10 +14,6 @@ from grouper_spark.sources import read_any, staged_path, write_partitioned
 from grouper_spark.streaming import shutdown, start, submit
 
 
-def _tmp(name):
-    return os.path.join(tempfile.gettempdir(), f"src-test-{name}-{uuid.uuid4().hex}")
-
-
 @pytest.fixture()
 def small_df(spark):
     return spark.createDataFrame(
@@ -27,16 +23,16 @@ def small_df(spark):
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "csv", "json", "orc"])
-def test_format_roundtrip(spark, small_df, fmt):
-    path = _tmp(fmt)
+def test_format_roundtrip(spark, small_df, fmt, tmp_path):
+    path = str(tmp_path / fmt)
     small_df.write.format(fmt).option("header", "true").save(path)
     back = read_any(spark, path, fmt)
     assert back.count() == 3
     assert {r["tag"] for r in back.collect()} == {"a", "b", "c"}
 
 
-def test_write_partitioned_prunes(spark, small_df):
-    path = _tmp("part")
+def test_write_partitioned_prunes(spark, small_df, tmp_path):
+    path = str(tmp_path / "part")
     write_partitioned(small_df, path, ["day"])
     assert os.path.isdir(os.path.join(path, "day=2024-01-01"))
     back = read_any(spark, path).filter(F.col("day") == "2024-01-01")
@@ -80,17 +76,17 @@ def test_write_bucketed_join_skips_shuffle(spark):
         spark.sql(f"DROP TABLE IF EXISTS {n2}")
 
 
-def test_text_source_roundtrip(spark):
-    path = _tmp("text")
+def test_text_source_roundtrip(spark, tmp_path):
+    path = str(tmp_path / "text")
     spark.createDataFrame([("line one",), ("line two",)], ["value"]).write.text(path)
     back = spark.read.text(path)
     assert {r["value"] for r in back.collect()} == {"line one", "line two"}
 
 
-def test_jsonl_roundtrip_preserves_nested(spark):
+def test_jsonl_roundtrip_preserves_nested(spark, tmp_path):
     # JSON-lines with a nested struct column — the interchange format a
     # curation pipeline emits for downstream tokenizer jobs
-    path = _tmp("jsonl")
+    path = str(tmp_path / "jsonl")
     df = spark.createDataFrame(
         [(1, {"lang": "en", "score": 0.5}), (2, {"lang": "fr", "score": 0.9})],
         "doc_id long, meta struct<lang:string, score:double>",
@@ -101,12 +97,12 @@ def test_jsonl_roundtrip_preserves_nested(spark):
     assert rows == {(1, "en"), (2, "fr")}
 
 
-def test_binaryfile_source_reads_payloads(spark):
+def test_binaryfile_source_reads_payloads(spark, tmp_path):
     # binaryFile is the ingestion path for image/audio payloads: opaque
     # bytes + metadata columns, no decode on read
     import os as _os
 
-    path = _tmp("binary")
+    path = str(tmp_path / "binary")
     _os.makedirs(path)
     for name, payload in [("a.bin", b"\x00\x01"), ("b.bin", b"\xff")]:
         with open(_os.path.join(path, name), "wb") as fh:
@@ -116,10 +112,10 @@ def test_binaryfile_source_reads_payloads(spark):
     assert got == {("a.bin", b"\x00\x01"), ("b.bin", b"\xff")}
 
 
-def test_merge_schema_evolution(spark):
+def test_merge_schema_evolution(spark, tmp_path):
     """Schema evolution across file generations: a later write adds a
     column; mergeSchema reads the union schema with nulls backfilled."""
-    path = _tmp("evolve")
+    path = str(tmp_path / "evolve")
     spark.createDataFrame([(1, "a")], ["id", "tag"]).write.parquet(path)
     spark.createDataFrame([(2, "b", 9.5)], ["id", "tag", "score"]).write.mode(
         "append"
@@ -130,13 +126,13 @@ def test_merge_schema_evolution(spark):
     assert rows[1] is None and rows[2] == 9.5
 
 
-def test_max_records_per_file_bounds_file_size(spark):
+def test_max_records_per_file_bounds_file_size(spark, tmp_path):
     """maxRecordsPerFile caps output file row counts — the knob that
     keeps downstream scan parallelism healthy when a stage's output
     partitioning would otherwise produce a few huge files."""
     import glob
 
-    path = _tmp("maxrec")
+    path = str(tmp_path / "maxrec")
     spark.range(1000).coalesce(1).write.option(
         "maxRecordsPerFile", 100
     ).parquet(path)
@@ -145,8 +141,8 @@ def test_max_records_per_file_bounds_file_size(spark):
     assert spark.read.parquet(path).count() == 1000
 
 
-def test_zstd_compression_roundtrip(spark):
-    path = _tmp("zstd")
+def test_zstd_compression_roundtrip(spark, tmp_path):
+    path = str(tmp_path / "zstd")
     spark.range(100).withColumn("v", F.col("id") * 2).write.option(
         "compression", "zstd"
     ).parquet(path)

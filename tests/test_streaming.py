@@ -13,8 +13,8 @@ from grouper_spark.streaming import grouper_process_stream
 
 
 @pytest.fixture()
-def source_dir(spark):
-    d = os.path.join(tempfile.gettempdir(), f"gs-test-src-{uuid.uuid4().hex}")
+def source_dir(spark, tmp_path):
+    d = str(tmp_path / "src")
     spark.createDataFrame(
         [(i, f"item{i}") for i in range(20)], ["id", "payload"]
     ).repartition(4).write.parquet(d)
@@ -37,8 +37,8 @@ def test_stream_ok_path(spark, source_dir):
     assert out.select("batch_id").distinct().count() > 1
 
 
-def test_stream_error_as_value(spark, source_dir):
-    result_dir = os.path.join(tempfile.gettempdir(), f"gs-test-res-{uuid.uuid4().hex}")
+def test_stream_error_as_value(spark, source_dir, tmp_path):
+    result_dir = str(tmp_path / "res")
 
     def bad_proc(df):
         raise ValueError("boom")
@@ -56,13 +56,13 @@ def test_stream_error_as_value(spark, source_dir):
     assert all(e["status"] == "error" and "boom" in e["error"] for e in errs)
 
 
-def test_stream_execution_time_failure_dead_letters(spark, source_dir):
+def test_stream_execution_time_failure_dead_letters(spark, source_dir, tmp_path):
     """proc_fn that builds a VALID lazy plan but fails only when executed
     (a raising UDF) must still dead-letter, not raise
     StreamingQueryException — the write action is inside the try."""
     from pyspark.sql.types import StringType
 
-    result_dir = os.path.join(tempfile.gettempdir(), f"gs-test-res-{uuid.uuid4().hex}")
+    result_dir = str(tmp_path / "res")
 
     @F.udf(returnType=StringType())
     def exploding(payload):
@@ -87,7 +87,7 @@ def test_stream_execution_time_failure_dead_letters(spark, source_dir):
     assert glob.glob(os.path.join(result_dir, "*.parquet")) == []
 
 
-def test_stateful_running_sum_state_accumulates(spark):
+def test_stateful_running_sum_state_accumulates(spark, tmp_path):
     from grouper_spark.streaming import stateful_running_sum
 
     import glob
@@ -96,7 +96,7 @@ def test_stateful_running_sum_state_accumulates(spark):
     # Stage two files with explicit contents (both containing key 1) so
     # key-1 state provably spans micro-batches; staggered mtimes pin the
     # batch order.
-    src = os.path.join(tempfile.gettempdir(), f"gs-state-{uuid.uuid4().hex}")
+    src = str(tmp_path / "state")
     f1 = spark.createDataFrame([(1, 100), (1, 200), (2, 50)], "user_id long, cents long")
     f2 = spark.createDataFrame([(1, 300), (2, 50)], "user_id long, cents long")
     f1.coalesce(1).write.mode("append").parquet(src)
@@ -121,7 +121,7 @@ def test_stateful_running_sum_state_accumulates(spark):
     assert len(emitted) > len(final)
 
 
-def test_checkpoint_resume_exactly_once(spark):
+def test_checkpoint_resume_exactly_once(spark, tmp_path):
     """Restarting an availableNow stream on the SAME checkpoint must not
     reprocess committed batches — the exactly-once contract the 100 TB
     path relies on for restarts."""
@@ -130,8 +130,8 @@ def test_checkpoint_resume_exactly_once(spark):
     src = stage_stream_source(
         spark.createDataFrame([(i, i * 10) for i in range(8)], "id long, v long"), 2
     )
-    ckpt = os.path.join(tempfile.gettempdir(), f"gs-ckpt-{uuid.uuid4().hex}")
-    out = os.path.join(tempfile.gettempdir(), f"gs-out-{uuid.uuid4().hex}")
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
     schema = spark.read.parquet(src).schema
 
     def run_once():
@@ -175,15 +175,15 @@ def test_processing_time_trigger_drains(spark):
     assert all(r["status"] == "ok" and r["doubled"] == r["v"] * 2 for r in rows)
 
 
-def test_dead_letter_survives_reserved_column_names(spark):
+def test_dead_letter_survives_reserved_column_names(spark, tmp_path):
     """A source whose payload already has a `status` column must still
     dead-letter cleanly (colliding payload columns get prefixed) — the
     error handler must never itself crash on duplicate columns."""
-    src = os.path.join(tempfile.gettempdir(), f"gs-test-src-{uuid.uuid4().hex}")
+    src = str(tmp_path / "src")
     spark.createDataFrame(
         [(i, "pending") for i in range(4)], ["id", "status"]
     ).write.parquet(src)
-    result_dir = os.path.join(tempfile.gettempdir(), f"gs-test-res-{uuid.uuid4().hex}")
+    result_dir = str(tmp_path / "res")
 
     def bad_proc(df):
         raise ValueError("boom")

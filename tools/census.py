@@ -9,7 +9,8 @@ plans vary theirs by a job or two between runs.  Engine and oracle
 seconds go to stdout only.  A run over a subset of names rewrites only
 their lines, so before/after for a change is ``git diff CENSUS_*.json``.
 
-Usage: python tools/census.py sf_dir [query ...]    (exits 1 on a FAIL)
+Usage: python tools/census.py sf_dir [query ...]
+(exits 1 on a FAIL, 2 on an unknown name before Spark starts)
 """
 
 from __future__ import annotations
@@ -142,6 +143,10 @@ def main() -> int:
     import __spark_entry__ as entry_mod
 
     qs = entry_mod.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown query names: {' '.join(unknown)}", file=sys.stderr)
+        return 2
     oracles = entry_mod.oracle_sql()
     path = os.path.join(ROOT, f"CENSUS_{os.path.basename(sf_dir.rstrip('/'))}.json")
     table = {}
