@@ -15,6 +15,7 @@ from pyspark.sql import Window, functions as F
 from ..operators import cooccurrence_pairs
 from ..functions.text import md5_bits, money
 from ..sources import table
+from ._cohorts import churn_panel, recency_score
 from . import query
 from ..operators.core import literal_frame
 
@@ -2041,28 +2042,8 @@ def q285_brier_decomposition(spark, sf_dir):
     doubles are deterministic per bin; the SUM must not depend on bin
     order); bins and totals are two tiny aggregates over the per-user
     summary."""
-    ev = table(spark, sf_dir, "events")
-    cutoff = F.lit("2024-01-20").cast("date")
-    horizon = F.lit("2024-01-30").cast("date")
-    day = F.col("ts").cast("date")
-    feat = (
-        ev.filter(day <= cutoff)
-        .groupBy("user_id")
-        .agg(F.datediff(cutoff, F.max(day)).cast("bigint").alias("recency"))
-    )
-    horizon_active = (
-        ev.filter(
-            (day > cutoff)
-            & (day <= horizon)
-            & (F.col("event_type") == "purchase")
-        )
-        .select("user_id")
-        .distinct()
-        .withColumn("active", F.lit(1))
-    )
-    subj = feat.join(horizon_active, "user_id", "left").select(
-        F.least(F.lit(10).cast("bigint"), F.col("recency")).alias("bin"),
-        F.col("active").isNull().cast("int").alias("churned"),
+    subj = churn_panel(table(spark, sf_dir, "events")).select(
+        recency_score().alias("bin"), "churned"
     )
     bins = subj.groupBy("bin").agg(
         F.count("*").cast("bigint").alias("nk"),
@@ -2158,28 +2139,8 @@ def q286_roc_auc(spark, sf_dir):
     ranking skill."""
     from pyspark.sql import Window
 
-    ev = table(spark, sf_dir, "events")
-    cutoff = F.lit("2024-01-20").cast("date")
-    horizon = F.lit("2024-01-30").cast("date")
-    day = F.col("ts").cast("date")
-    feat = (
-        ev.filter(day <= cutoff)
-        .groupBy("user_id")
-        .agg(F.datediff(cutoff, F.max(day)).cast("bigint").alias("recency"))
-    )
-    horizon_active = (
-        ev.filter(
-            (day > cutoff)
-            & (day <= horizon)
-            & (F.col("event_type") == "purchase")
-        )
-        .select("user_id")
-        .distinct()
-        .withColumn("active", F.lit(1))
-    )
-    subj = feat.join(horizon_active, "user_id", "left").select(
-        F.least(F.lit(10).cast("bigint"), F.col("recency")).alias("score"),
-        F.col("active").isNull().cast("int").alias("y"),
+    subj = churn_panel(table(spark, sf_dir, "events")).select(
+        recency_score().alias("score"), F.col("churned").alias("y")
     )
     vals = subj.groupBy("score").agg(
         F.count("*").cast("bigint").alias("t"),
@@ -2371,28 +2332,8 @@ def q289_threshold_sweep(spark, sf_dir):
     rather than a divide-by-zero. Completes the model-eval suite:
     q285 calibration, q286 ranking, q288 graded ranking, this the
     decision layer."""
-    ev = table(spark, sf_dir, "events")
-    cutoff = F.lit("2024-01-20").cast("date")
-    horizon = F.lit("2024-01-30").cast("date")
-    day = F.col("ts").cast("date")
-    feat = (
-        ev.filter(day <= cutoff)
-        .groupBy("user_id")
-        .agg(F.datediff(cutoff, F.max(day)).cast("bigint").alias("recency"))
-    )
-    horizon_active = (
-        ev.filter(
-            (day > cutoff)
-            & (day <= horizon)
-            & (F.col("event_type") == "purchase")
-        )
-        .select("user_id")
-        .distinct()
-        .withColumn("active", F.lit(1))
-    )
-    subj = feat.join(horizon_active, "user_id", "left").select(
-        F.least(F.lit(10).cast("bigint"), F.col("recency")).alias("score"),
-        F.col("active").isNull().cast("int").alias("y"),
+    subj = churn_panel(table(spark, sf_dir, "events")).select(
+        recency_score().alias("score"), F.col("churned").alias("y")
     )
     ths = spark.range(1, 11).select(F.col("id").cast("bigint").alias("threshold"))
     sel = F.col("score") >= F.col("threshold")

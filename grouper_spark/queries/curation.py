@@ -27,6 +27,7 @@ from ..functions.text import (
     word_shingles,
 )
 from ..sources import table
+from ._cohorts import CHURN_CUTOFF, churn_panel
 from . import query
 from ..operators.core import collect_bounded, literal_frame
 
@@ -1501,38 +1502,14 @@ def q267_churn_labels(spark, sf_dir):
     set), both collapsing to user-cardinality before the label join;
     output is the per-class profile a modeler sanity-checks before
     training."""
-    ev = table(spark, sf_dir, "events")
-    cutoff = F.lit("2024-01-20").cast("date")
-    horizon = F.lit("2024-01-30").cast("date")
-    day = F.col("ts").cast("date")
-    feat = (
-        ev.filter(day <= cutoff)
-        .groupBy("user_id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_events_pre"),
-            F.sum((F.col("event_type") == "purchase").cast("int"))
-            .cast("bigint")
-            .alias("n_purchases_pre"),
-            F.datediff(cutoff, F.max(day)).cast("bigint").alias(
-                "recency_days"
-            ),
-            F.sum((day > cutoff).cast("int"))
-            .cast("bigint")
-            .alias("n_leaks"),
-        )
-    )
-    horizon_active = (
-        ev.filter(
-            (day > cutoff)
-            & (day <= horizon)
-            & (F.col("event_type") == "purchase")
-        )
-        .select("user_id")
-        .distinct()
-        .withColumn("active", F.lit(1))
-    )
-    labels = feat.join(horizon_active, "user_id", "left").withColumn(
-        "churned", F.col("active").isNull().cast("int")
+    after_cutoff = F.col("ts").cast("date") > F.lit(CHURN_CUTOFF).cast("date")
+    labels = churn_panel(
+        table(spark, sf_dir, "events"),
+        F.count("*").cast("bigint").alias("n_events_pre"),
+        F.sum((F.col("event_type") == "purchase").cast("int"))
+        .cast("bigint")
+        .alias("n_purchases_pre"),
+        F.sum(after_cutoff.cast("int")).cast("bigint").alias("n_leaks"),
     )
     return (
         labels.groupBy("churned")
@@ -1545,7 +1522,7 @@ def q267_churn_labels(spark, sf_dir):
                 F.sum("n_purchases_pre").cast("double") / F.count("*"), 6
             ).alias("mean_purchases_pre_r"),
             F.round(
-                F.sum("recency_days").cast("double") / F.count("*"), 6
+                F.sum("recency").cast("double") / F.count("*"), 6
             ).alias("mean_recency_r"),
             F.sum("n_leaks").cast("bigint").alias("n_leaks"),
         )

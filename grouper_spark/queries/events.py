@@ -15,6 +15,7 @@ from ..functions.text import md5_bits, money, money_sum
 from ..operators import sessionize
 from ..sources import table
 from . import query
+from ._cohorts import at_risk, km_ln_micro, signups, time_to_purchase
 from ._sqlgen import sql_money_sum
 from ..operators.core import literal_frame
 
@@ -906,84 +907,23 @@ def q245_kaplan_meier(spark, sf_dir):
     standard convention). surv_ln_micro is the engine-exact artifact;
     survival_r is its 4-dp exp for humans. At 100 TB the event log never
     survives past the per-user aggregate."""
-    from pyspark.sql import Window
-
     e = table(spark, sf_dir, "events")
-    base = e.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).alias(
-            "s_ts"
-        ),
-        F.max("ts").alias("last_ts"),
-    )
-    signed = base.filter(F.col("s_ts").isNotNull()).localCheckpoint(
-        eager=False
-    )
-    conv = (
-        signed.join(
-            e.filter(F.col("event_type") == "purchase").select(
-                "user_id", F.col("ts").alias("pts")
-            ),
-            "user_id",
-        )
-        .filter(F.col("pts") >= F.col("s_ts"))
-        .groupBy("user_id")
-        .agg(F.min("pts").alias("p_ts"))
-    )
-    day = 86400000000
-    subj = signed.join(conv, "user_id", "left").select(
-        F.when(
-            F.col("p_ts").isNotNull(),
-            F.expr(f"(unix_micros(p_ts) - unix_micros(s_ts)) div {day}"),
-        )
-        .otherwise(
-            F.expr(f"(unix_micros(last_ts) - unix_micros(s_ts)) div {day}")
-        )
-        .cast("bigint")
-        .alias("t_days"),
-        F.when(F.col("p_ts").isNotNull(), 1).otherwise(0).alias("ev"),
-    )
+    signed = signups(e).localCheckpoint(eager=False)
+    subj = time_to_purchase(signed, e)
     tt = subj.groupBy("t_days").agg(
         F.sum("ev").cast("bigint").alias("n_events"),
         F.sum(1 - F.col("ev")).cast("bigint").alias("n_censored"),
     )
-    w_all = Window.orderBy("t_days").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    w_prior = Window.orderBy("t_days").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
     w_cum = Window.orderBy("t_days").rowsBetween(Window.unboundedPreceding, 0)
-    both = F.col("n_events") + F.col("n_censored")
     risk = tt.select(
         "t_days",
         "n_events",
         "n_censored",
-        (
-            F.sum(both).over(w_all)
-            - F.coalesce(F.sum(both).over(w_prior), F.lit(0))
-        )
-        .cast("bigint")
-        .alias("n_at_risk"),
+        at_risk(F.col("n_events") + F.col("n_censored")).alias("n_at_risk"),
     )
-    # d == n at the final event time would be ln(0): the survival curve
-    # hits exactly zero there — encode it as a -99 ln sentinel (exp -> 0
-    # at any rounding) identically in both engines.
-    ln_micro = (
-        F.when(
-            (F.col("n_events") > 0)
-            & (F.col("n_events") < F.col("n_at_risk")),
-            money(
-                F.log(
-                    1.0
-                    - F.col("n_events").cast("double") / F.col("n_at_risk")
-                ),
-                6,
-            ),
-        )
-        .when(F.col("n_events") > 0, F.lit(-99000000).cast("bigint"))
-        .otherwise(F.lit(0).cast("bigint"))
+    terms = risk.withColumn(
+        "ln_micro", km_ln_micro(F.col("n_events"), F.col("n_at_risk"))
     )
-    terms = risk.withColumn("ln_micro", ln_micro)
     cum = F.sum("ln_micro").over(w_cum).cast("bigint")
     return terms.select(
         "t_days",
@@ -1508,49 +1448,13 @@ def q301_logrank_test(spark, sf_dir):
     the same exclusive-prefix windows as q245), then one chi-square.
     All corpus-sized work is the two user-keyed aggregates; the test
     itself runs on the day summary."""
-    from pyspark.sql import Window
-
     ev = table(spark, sf_dir, "events")
     arm = (
         md5_bits(F.concat(F.lit("lr|"), F.col("user_id").cast("string")), 8)
         % 2
     ).cast("int")
-    base = ev.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).alias(
-            "s_ts"
-        ),
-        F.max("ts").alias("last_ts"),
-    )
-    signed = (
-        base.filter(F.col("s_ts").isNotNull())
-        .withColumn("arm", arm)
-        .localCheckpoint(eager=False)
-    )
-    conv = (
-        signed.join(
-            ev.filter(F.col("event_type") == "purchase").select(
-                "user_id", F.col("ts").alias("pts")
-            ),
-            "user_id",
-        )
-        .filter(F.col("pts") >= F.col("s_ts"))
-        .groupBy("user_id")
-        .agg(F.min("pts").alias("p_ts"))
-    )
-    day = 86400000000
-    subj = signed.join(conv, "user_id", "left").select(
-        "arm",
-        F.when(
-            F.col("p_ts").isNotNull(),
-            F.expr(f"(unix_micros(p_ts) - unix_micros(s_ts)) div {day}"),
-        )
-        .otherwise(
-            F.expr(f"(unix_micros(last_ts) - unix_micros(s_ts)) div {day}")
-        )
-        .cast("bigint")
-        .alias("t_days"),
-        F.when(F.col("p_ts").isNotNull(), 1).otherwise(0).alias("ev"),
-    )
+    signed = signups(ev).withColumn("arm", arm).localCheckpoint(eager=False)
+    subj = time_to_purchase(signed, ev, "arm")
     tt = subj.groupBy("t_days").agg(
         F.sum("ev").cast("bigint").alias("d"),
         F.sum(F.when(F.col("arm") == 1, F.col("ev")).otherwise(0))
@@ -1559,28 +1463,12 @@ def q301_logrank_test(spark, sf_dir):
         F.count("*").cast("bigint").alias("leave_all"),
         F.sum("arm").cast("bigint").alias("leave_1"),
     )
-    w_all = Window.orderBy("t_days").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    w_prior = Window.orderBy("t_days").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
     risk = tt.select(
         "t_days",
         "d",
         "d1",
-        (
-            F.sum("leave_all").over(w_all)
-            - F.coalesce(F.sum("leave_all").over(w_prior), F.lit(0))
-        )
-        .cast("bigint")
-        .alias("n"),
-        (
-            F.sum("leave_1").over(w_all)
-            - F.coalesce(F.sum("leave_1").over(w_prior), F.lit(0))
-        )
-        .cast("bigint")
-        .alias("n1"),
+        at_risk("leave_all").alias("n"),
+        at_risk("leave_1").alias("n1"),
     ).filter(F.col("d") > 0)
     nd = F.col("n").cast("double")
     e1 = F.col("d").cast("double") * F.col("n1") / nd

@@ -35,6 +35,7 @@ from pyspark.sql import Window, functions as F
 
 from ..functions.text import md5_bits, money, money_units
 from ..sources import table
+from ._cohorts import risk_table, signups, time_to_purchase
 from ._series import daily_orders, trend_fit, unit_scaled
 from . import query
 from ..operators.core import collect_bounded, literal_frame
@@ -2110,68 +2111,9 @@ def a488_nelson_aalen_rmst(spark, sf_dir):
     purchase-events semi-aggregate; all windows run on the
     event-time summary (hundreds of rows)."""
     ev = table(spark, sf_dir, "events")
-    base = ev.groupBy("user_id").agg(
-        F.min(
-            F.when(F.col("event_type") == "signup", F.col("ts"))
-        ).alias("s_ts"),
-        F.max("ts").alias("last_ts"),
-    )
-    signed = base.filter(F.col("s_ts").isNotNull())
-    conv = (
-        signed.join(
-            ev.filter(F.col("event_type") == "purchase").select(
-                "user_id", F.col("ts").alias("p_raw")
-            ),
-            "user_id",
-        )
-        .filter(F.col("p_raw") >= F.col("s_ts"))
-        .groupBy("user_id")
-        .agg(F.min("p_raw").alias("p_ts"))
-    )
-    subj = signed.join(conv, "user_id", "left").select(
-        F.when(
-            F.col("p_ts").isNotNull(),
-            F.expr(
-                "(unix_micros(p_ts) - unix_micros(s_ts))"
-                " div 86400000000"
-            ),
-        )
-        .otherwise(
-            F.expr(
-                "(unix_micros(last_ts) - unix_micros(s_ts))"
-                " div 86400000000"
-            )
-        )
-        .cast("bigint")
-        .alias("t_days"),
-        F.when(F.col("p_ts").isNotNull(), 1).otherwise(0).alias("ev"),
-    )
-    tt = subj.groupBy("t_days").agg(
-        F.sum("ev").cast("bigint").alias("d"),
-        F.count("*").cast("bigint").alias("m"),
-    )
-    wall = Window.orderBy("t_days").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    risk = tt.select(
-        "t_days",
-        "d",
-        (
-            F.sum("m").over(
-                Window.orderBy(F.lit(1)).rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            )
-            - F.coalesce(F.sum("m").over(wall), F.lit(0))
-        )
-        .cast("bigint")
-        .alias("n_at_risk"),
-    )
-    haz = risk.filter(F.col("d") > 0).select(
-        "t_days",
-        F.expr(
-            "(2000000 * d + n_at_risk) div (2 * n_at_risk)"
-        ).alias("h_micro"),
+    subj = time_to_purchase(signups(ev), ev)
+    haz = risk_table(subj).filter(F.col("d") > 0).select(
+        "t_days", F.expr("(2000000 * d + n) div (2 * n)").alias("h_micro")
     )
     wc = Window.orderBy("t_days").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -7189,7 +7131,7 @@ def a525_matthews_corrcoef(spark, sf_dir):
         ]
     )
     tp, fp = F.col("tp").cast("double"), F.col("fp").cast("double")
-    fn, tn = F.col("fn").cast("double"), F.col("tn").cast("double")
+    tn = F.col("tn").cast("double")
     all_margins = (
         (F.col("tp") + F.col("fp") > 0)
         & (F.col("tp") + F.col("fn") > 0)

@@ -21,6 +21,16 @@ from pyspark.sql import Window, functions as F
 
 from ..functions.text import money, money_units
 from ..sources import table
+from ._cohorts import (
+    KM_LN_ZERO,
+    at_risk,
+    days_since_signup,
+    first_purchase,
+    km_ln_micro,
+    risk_table,
+    signups,
+    time_to_purchase,
+)
 from ._series import daily_orders
 from . import query
 from ..operators.core import literal_frame
@@ -639,15 +649,7 @@ def a532_aalen_johansen(spark, sf_dir):
     100 TB: two user-keyed folds of events; every window runs on the
     ≤31-row day summary (the fixture's event horizon)."""
     ev = table(spark, sf_dir, "events")
-    base = ev.groupBy("user_id").agg(
-        F.min(
-            F.when(F.col("event_type") == "signup", F.col("ts"))
-        ).alias("s_ts"),
-        F.max("ts").alias("last_ts"),
-    )
-    signed = base.filter(F.col("s_ts").isNotNull()).localCheckpoint(
-        eager=False
-    )
+    signed = signups(ev).localCheckpoint(eager=False)
     firsts = (
         signed.join(
             ev.filter(F.col("event_type").isin("purchase", "error"))
@@ -668,13 +670,10 @@ def a532_aalen_johansen(spark, sf_dir):
     is_p = F.col("p_ts").isNotNull() & (
         F.col("e_ts").isNull() | (F.col("p_ts") <= F.col("e_ts"))
     )
-    day = lambda c: F.expr(  # noqa: E731
-        f"(unix_micros({c}) - unix_micros(s_ts)) div 86400000000"
-    )
     subj = signed.join(firsts, "user_id", "left").select(
-        F.when(is_p, day("p_ts"))
-        .when(F.col("e_ts").isNotNull(), day("e_ts"))
-        .otherwise(day("last_ts"))
+        F.when(is_p, days_since_signup("p_ts"))
+        .when(F.col("e_ts").isNotNull(), days_since_signup("e_ts"))
+        .otherwise(days_since_signup("last_ts"))
         .cast("bigint")
         .alias("t_days"),
         F.when(is_p, 1)
@@ -697,24 +696,9 @@ def a532_aalen_johansen(spark, sf_dir):
     wcur = Window.orderBy("t_days").rowsBetween(
         Window.unboundedPreceding, 0
     )
-    risk = tt.select(
-        "t_days",
-        "d1",
-        "d2",
-        (
-            F.sum("m").over(Window.partitionBy())
-            - F.coalesce(F.sum("m").over(wall), F.lit(0))
-        ).cast("bigint").alias("n"),
-    )
-    d_tot = F.col("d1") + F.col("d2")
+    risk = tt.select("t_days", "d1", "d2", at_risk("m").alias("n"))
     lnterms = risk.withColumn(
-        "ln_micro",
-        F.when(
-            (d_tot > 0) & (d_tot < F.col("n")),
-            money(F.log(1.0 - d_tot.cast("double") / F.col("n")), 6),
-        )
-        .when(d_tot > 0, F.lit(-99000000).cast("bigint"))
-        .otherwise(F.lit(0).cast("bigint")),
+        "ln_micro", km_ln_micro(F.col("d1") + F.col("d2"), F.col("n"))
     )
     sprev = lnterms.select(
         "t_days",
@@ -832,61 +816,10 @@ def a533_km_greenwood_ci(spark, sf_dir):
     is clamped to [0, 1]. At 100 TB the corpus never survives past
     the per-user fold; windows run on the ≤31-row day summary."""
     ev = table(spark, sf_dir, "events")
-    base = ev.groupBy("user_id").agg(
-        F.min(
-            F.when(F.col("event_type") == "signup", F.col("ts"))
-        ).alias("s_ts"),
-        F.max("ts").alias("last_ts"),
-    )
-    signed = base.filter(F.col("s_ts").isNotNull()).localCheckpoint(
-        eager=False
-    )
-    conv = (
-        signed.join(
-            ev.filter(F.col("event_type") == "purchase").select(
-                "user_id", F.col("ts").alias("p_raw")
-            ),
-            "user_id",
-        )
-        .filter(F.col("p_raw") >= F.col("s_ts"))
-        .groupBy("user_id")
-        .agg(F.min("p_raw").alias("p_ts"))
-    )
-    subj = signed.join(conv, "user_id", "left").select(
-        F.when(
-            F.col("p_ts").isNotNull(),
-            F.expr(
-                "(unix_micros(p_ts) - unix_micros(s_ts))"
-                " div 86400000000"
-            ),
-        )
-        .otherwise(
-            F.expr(
-                "(unix_micros(last_ts) - unix_micros(s_ts))"
-                " div 86400000000"
-            )
-        )
-        .cast("bigint")
-        .alias("t_days"),
-        F.when(F.col("p_ts").isNotNull(), 1).otherwise(0).alias("ev"),
-    )
-    tt = subj.groupBy("t_days").agg(
-        F.sum("ev").cast("bigint").alias("d"),
-        F.count("*").cast("bigint").alias("m"),
-    )
-    wall = Window.orderBy("t_days").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
+    signed = signups(ev).localCheckpoint(eager=False)
+    risk = risk_table(time_to_purchase(signed, ev))
     wcur = Window.orderBy("t_days").rowsBetween(
         Window.unboundedPreceding, 0
-    )
-    risk = tt.select(
-        "t_days",
-        "d",
-        (
-            F.sum("m").over(Window.partitionBy())
-            - F.coalesce(F.sum("m").over(wall), F.lit(0))
-        ).cast("bigint").alias("n"),
     )
     dd = F.col("d").cast("double")
     nn = F.col("n").cast("double")
@@ -894,13 +827,7 @@ def a533_km_greenwood_ci(spark, sf_dir):
         "t_days",
         "d",
         "n",
-        F.when(
-            (F.col("d") > 0) & (F.col("d") < F.col("n")),
-            money(F.log(1.0 - dd / F.col("n")), 6),
-        )
-        .when(F.col("d") > 0, F.lit(-99000000).cast("bigint"))
-        .otherwise(F.lit(0).cast("bigint"))
-        .alias("ln_micro"),
+        km_ln_micro(F.col("d"), F.col("n")).alias("ln_micro"),
         F.when(F.col("d") == 0, F.lit(0).cast("bigint"))
         .when(
             F.col("d") < F.col("n"),
@@ -1375,7 +1302,6 @@ def a537_cooks_distance(spark, sf_dir):
         F.sum(F.col("x") * F.col("y")).cast("bigint").alias("sxy"),
         F.sum(F.col("y") * F.col("y")).cast("bigint").alias("syy"),
     )
-    nd = F.col("n").cast("double")
     sxd = F.col("sx").cast("double")
     syd = F.col("sy").cast("double")
     sxx_c = F.col("sxx").cast("double") - sxd * F.col("sx") / F.col("n")
@@ -2158,7 +2084,6 @@ def a544_mahalanobis_outliers(spark, sf_dir):
         F.sum(F.col("x") * F.col("y")).cast("bigint").alias("sxy"),
         F.sum(F.col("y") * F.col("y")).cast("bigint").alias("syy"),
     )
-    nd = F.col("n").cast("double")
     cov = m.select(
         "n",
         "sx",
@@ -2913,71 +2838,13 @@ def a083_weibull_plot_fit(spark, sf_dir):
     integer guards. At 100 TB: inherits the q245 scale shape — the
     corpus dies at the per-user fold."""
     ev = table(spark, sf_dir, "events")
-    base = ev.groupBy("user_id").agg(
-        F.min(
-            F.when(F.col("event_type") == "signup", F.col("ts"))
-        ).alias("s_ts"),
-        F.max("ts").alias("last_ts"),
-    )
-    signed = base.filter(F.col("s_ts").isNotNull()).localCheckpoint(
-        eager=False
-    )
-    conv = (
-        signed.join(
-            ev.filter(F.col("event_type") == "purchase").select(
-                "user_id", F.col("ts").alias("p_raw")
-            ),
-            "user_id",
-        )
-        .filter(F.col("p_raw") >= F.col("s_ts"))
-        .groupBy("user_id")
-        .agg(F.min("p_raw").alias("p_ts"))
-    )
-    subj = signed.join(conv, "user_id", "left").select(
-        F.when(
-            F.col("p_ts").isNotNull(),
-            F.expr(
-                "(unix_micros(p_ts) - unix_micros(s_ts))"
-                " div 86400000000"
-            ),
-        )
-        .otherwise(
-            F.expr(
-                "(unix_micros(last_ts) - unix_micros(s_ts))"
-                " div 86400000000"
-            )
-        )
-        .cast("bigint")
-        .alias("t_days"),
-        F.when(F.col("p_ts").isNotNull(), 1).otherwise(0).alias("ev"),
-    )
-    tt = subj.groupBy("t_days").agg(
-        F.sum("ev").cast("bigint").alias("d"),
-        F.count("*").cast("bigint").alias("m"),
-    )
-    wall = Window.orderBy("t_days").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
+    signed = signups(ev).localCheckpoint(eager=False)
+    risk = risk_table(time_to_purchase(signed, ev))
     wcur = Window.orderBy("t_days").rowsBetween(
         Window.unboundedPreceding, 0
     )
-    risk = tt.select(
-        "t_days",
-        "d",
-        (
-            F.sum("m").over(Window.partitionBy())
-            - F.coalesce(F.sum("m").over(wall), F.lit(0))
-        ).cast("bigint").alias("n"),
-    )
     lnterms = risk.select(
-        "t_days",
-        F.when(
-            (F.col("d") > 0) & (F.col("d") < F.col("n")),
-            money(F.log(1.0 - F.col("d").cast("double") / F.col("n")), 6),
-        )
-        .when(F.col("d") > 0, F.lit(-99000000).cast("bigint"))
-        .otherwise(F.lit(0).cast("bigint"))
-        .alias("ln_micro"),
+        "t_days", km_ln_micro(F.col("d"), F.col("n")).alias("ln_micro")
     )
     km = lnterms.select(
         "t_days",
@@ -2986,7 +2853,7 @@ def a083_weibull_plot_fit(spark, sf_dir):
     pts = km.filter(
         (F.col("t_days") >= 1)
         & (F.col("lsum") < 0)
-        & (F.col("lsum") > -99000000)
+        & (F.col("lsum") > KM_LN_ZERO)
     ).select(
         money(F.log(F.col("t_days").cast("double")), 6).alias("x_fp"),
         money(F.log(-(F.col("lsum").cast("double") / 1e6)), 6).alias("y_fp"),
@@ -5900,30 +5767,13 @@ def a132_harrell_c_index(spark, sf_dir):
     times with a strict < comparability rule). Higher-clicks-converts-
     faster shows as C > 0.5."""
     ev = table(spark, sf_dir, "events")
-    base = ev.groupBy("user_id").agg(
-        F.min(
-            F.when(F.col("event_type") == "signup", F.col("ts"))
-        ).alias("s_ts"),
-        F.max("ts").alias("last_ts"),
-        F.sum(
-            F.when(F.col("event_type") == "click", 1).otherwise(0)
-        ).cast("bigint").alias("clicks"),
+    clicks = F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
+    signed = (
+        signups(ev, clicks.cast("bigint").alias("clicks"))
+        .filter(F.col("user_id") < _CIDX_PANEL)
+        .localCheckpoint(eager=False)
     )
-    signed = base.filter(
-        F.col("s_ts").isNotNull() & (F.col("user_id") < _CIDX_PANEL)
-    ).localCheckpoint(eager=False)
-    conv = (
-        signed.join(
-            ev.filter(F.col("event_type") == "purchase").select(
-                "user_id", F.col("ts").alias("p_raw")
-            ),
-            "user_id",
-        )
-        .filter(F.col("p_raw") >= F.col("s_ts"))
-        .groupBy("user_id")
-        .agg(F.min("p_raw").alias("p_ts"))
-    )
-    subj = signed.join(conv, "user_id", "left").select(
+    subj = signed.join(first_purchase(signed, ev), "user_id", "left").select(
         "user_id",
         "clicks",
         F.when(
@@ -7422,7 +7272,6 @@ def a144_generalized_esd(spark, sf_dir):
         F.sum("x").cast("bigint").alias("s"),
         F.sum(F.col("x") * F.col("x")).cast("bigint").alias("ss"),
     ).localCheckpoint(eager=True)
-    removed = []
     rows = []
     remaining = daily
     for i in range(1, _ESD_ROUNDS + 1):

@@ -1308,7 +1308,6 @@ def a157_cucconi_test(spark, sf_dir):
     cent-sums). Σc·dr² ≤ 4N³ stays exact through sf1. At 100 TB: one
     events fold, one value-histogram window — no pairwise work."""
     dranks = _drank(spark, sf_dir)
-    nn1 = F.col("nn") + 1
     s = dranks.groupBy("n1").agg(
         F.max("n2").alias("n2"),
         F.max("nn").alias("nn"),

@@ -33,6 +33,7 @@ from pyspark.sql import Window, functions as F
 
 from ..functions.text import money_units
 from ..sources import table
+from ._cohorts import churn_panel, recency_score
 from ._series import adaptive_unit, daily_orders, unit_scaled
 from . import query
 from .inference4 import _DAILYV_SQL, _DAILYVK_SQL
@@ -3651,35 +3652,9 @@ def a234_spiegelhalter_z(spark, sf_dir):
     denominator·10⁴ = Σ nk(10−2·bin)²·bin(10−bin), and the 100/√10⁴
     factors cancel so z = num_i/√den_i with one terminal sqrt. One
     corpus groupBy to per-user recency, one 11-row aggregate."""
-    ev = table(spark, sf_dir, "events")
-    cutoff = F.lit("2024-01-20").cast("date")
-    horizon = F.lit("2024-01-30").cast("date")
-    day = F.col("ts").cast("date")
-    feat = (
-        ev.filter(day <= cutoff)
-        .groupBy("user_id")
-        .agg(
-            F.datediff(cutoff, F.max(day)).cast("bigint").alias("recency")
-        )
-    )
-    horizon_active = (
-        ev.filter(
-            (day > cutoff)
-            & (day <= horizon)
-            & (F.col("event_type") == "purchase")
-        )
-        .select("user_id")
-        .distinct()
-        .withColumn("active", F.lit(1))
-    )
     bins = (
-        feat.join(horizon_active, "user_id", "left")
-        .select(
-            F.least(F.lit(10).cast("bigint"), F.col("recency")).alias(
-                "bin"
-            ),
-            F.col("active").isNull().cast("int").alias("churned"),
-        )
+        churn_panel(table(spark, sf_dir, "events"))
+        .select(recency_score().alias("bin"), "churned")
         .groupBy("bin")
         .agg(
             F.count("*").cast("bigint").alias("nk"),

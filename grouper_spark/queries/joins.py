@@ -979,7 +979,6 @@ def q262_bloom_fpr_audit(spark, sf_dir):
             *[pos("l_orderkey", s).alias(f"p{s}") for s in range(_BF_PROBES)],
         )
     )
-    passed = None
     cur = probes
     for s in range(_BF_PROBES):
         hit = bits.withColumnRenamed("pos", f"p{s}").withColumn(

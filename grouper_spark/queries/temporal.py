@@ -1121,7 +1121,6 @@ def q295_exponential_fit_gof(spark, sf_dir):
     from pyspark.sql import Window
 
     ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gaps = (
         ev.select(
             F.expr(

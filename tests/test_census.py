@@ -69,7 +69,13 @@ def test_table_names_are_the_registry_and_lines_match_the_schema(path):
 
 @pytest.mark.parametrize(
     "name",
-    ["q01_pricing_summary", "q02_filter_predicates", "q123_hll_sketch_merge"],
+    [
+        "q01_pricing_summary",
+        "q02_filter_predicates",
+        "q123_hll_sketch_merge",
+        "q245_kaplan_meier",
+        "q267_churn_labels",
+    ],
 )
 def test_fresh_census_reproduces_the_committed_line(spark, sf_dir, duck, name):
     fn = entry_mod.queries()[name]
